@@ -9,14 +9,14 @@ object Dialect {
     * a letter, digit, `_`, or `.` — so `my_datediff(...)` and
     * `t.date_diff` are user identifiers, never rewritten.
     */
-  private def wordStart(s: String, i: Int): Boolean = {
+  private[graft] def wordStart(s: String, i: Int): Boolean = {
     if (i == 0) return true
     val c = s.charAt(i - 1)
     !Character.isLetterOrDigit(c) && c != '_' && c != '.'
   }
 
-  /** Full DuckDB-dialect → Spark-SQL text rewrite, applied by the
-    * Gateway before parsing (SURVEY.md §3.5). String literals and quoted
+  /** Full DuckDB-dialect → Spark-SQL text rewrite, applied once per
+    * statement by GraftSqlParser (SURVEY.md §3.5). String literals and quoted
     * identifiers are never rewritten. Handles:
     *   - `QUALIFY pred`  →  subquery + WHERE (no Spark QUALIFY)
     *   - `a // b`        →  `a div b` (integer floor division)
@@ -26,8 +26,7 @@ object Dialect {
     *     (reference smoke query, /root/reference/main.go:77)
     */
   private val passes: Seq[String => String] = Seq(
-    rewriteDollarQuotes, // FIRST: later scanners assume '…' string syntax
-    rewriteEscapeStrings, // e'…' folded to plain literals while still raw
+    foldLiterals, // FIRST: later scanners assume '…' string syntax
     normalizeWs, rewriteBlob, rewriteBitCasts, rewriteArrayTypeSuffix,
     rewriteTrailingCommas, rewriteEmptyGroupBy,
     rewriteBraceLiterals, rewriteArrayCtor, rewriteBrackets,
@@ -58,9 +57,9 @@ object Dialect {
     * Escape PROCESSING exists only in e'…' strings, which
     * rewriteEscapeStrings has already decoded by now.
     *
-    * NOT idempotent, so it is not a `passes` member: Gateway pre-rewrites
-    * statements and the injected parser rewrites them again — this runs
-    * exactly once, in GraftSqlParser, immediately before Spark's lexer.
+    * NOT idempotent, so it is not a `passes` member (`rewrite` output
+    * keeps DuckDB's raw literals): it runs exactly once, in
+    * GraftSqlParser, after `rewrite` and immediately before Spark's lexer.
     */
   private[graft] def rawifyLiterals(sql: String): String = {
     if (sql.indexOf('\\') < 0) return sql
@@ -107,18 +106,13 @@ object Dialect {
     sb.toString
   }
 
-  /** DuckDB/Postgres dollar-quoted strings: `$$…$$` / `$tag$…$tag$` →
-    * standard quoted literals with '' doubling. Runs FIRST — every
-    * other pass's opacity scanner only understands '…' syntax, so a
-    * dollar-quoted body containing quotes or keywords would otherwise
-    * desynchronize them. `$1`/`$name` prepared-statement params don't
-    * match (no closing `$`).
+  /** Dollar-quoted (`$$…$$`) and escape (`e'…'`) strings folded to
+    * plain '…' literals, while the text is still raw: the first rewrite
+    * step. The gateway runs it too before its own scans and the
+    * placeholder binder, since consumeOpaque knows only '…' syntax.
     */
-  /** Gateway's PREPARE capture normalizes dollar quotes before the
-    * placeholder binder ever sees the text.
-    */
-  private[engine] def normalizeDollarQuotes(sql: String): String =
-    rewriteDollarQuotes(sql)
+  private[engine] def foldLiterals(sql: String): String =
+    rewriteEscapeStrings(rewriteDollarQuotes(sql))
 
   /** DuckDB/Postgres escape strings `e'a\nb'`: ONLY this literal form
     * processes backslash escapes — ordinary '…' literals are RAW in
@@ -191,6 +185,13 @@ object Dialect {
   private def isHexDigit(c: Char): Boolean =
     (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
 
+  /** DuckDB/Postgres dollar-quoted strings: `$$…$$` / `$tag$…$tag$` →
+    * standard quoted literals with '' doubling. Runs FIRST — every
+    * other pass's opacity scanner only understands '…' syntax, so a
+    * dollar-quoted body containing quotes or keywords would otherwise
+    * desynchronize them. `$1`/`$name` prepared-statement params don't
+    * match (no closing `$`).
+    */
   private val dollarOpenRe = """\$([A-Za-z_][A-Za-z_0-9]*)?\$""".r
   private def rewriteDollarQuotes(sql: String): String = {
     if (!sql.contains("$")) return sql
@@ -2523,22 +2524,70 @@ object Dialect {
     end
   }
 
-  /** Scan positions outside string literals, quoted identifiers, and SQL
-    * comments (all copied verbatim via consumeOpaque).
+  /** The front end's one forward scanner: walk `sql` from `from`,
+    * skipping string literals, quoted identifiers and comments
+    * (consumeOpaque), and call `f(i, depth)` at every other position,
+    * `depth` being the number of `(` opened since `from` and not yet
+    * closed before `i`. `f` returns `i` to step one char, a larger index
+    * to skip what it consumed, or a negative value to stop. Returns the
+    * index `f` stopped at, or -1 at the end of the text. `$$…$$` and
+    * `e'…'` strings must be folded first (foldLiterals).
     */
-  private def scanOutsideLiterals(sql: String)(f: (Int, StringBuilder) => Int): String = {
-    val sb = new StringBuilder
-    var i = 0
+  private[graft] def scanCode(sql: String, from: Int = 0)(f: (Int, Int) => Int): Int = {
+    var i = from
+    var depth = 0
     while (i < sql.length) {
-      val opaque = consumeOpaque(sql, i, sb)
+      val opaque = consumeOpaque(sql, i, null)
       if (opaque > i) i = opaque
       else {
-        val advanced = f(i, sb)
-        if (advanced > i) i = advanced
-        else { sb.append(sql.charAt(i)); i += 1 }
+        val next = f(i, depth)
+        if (next < 0) return i
+        if (next > i) i = next
+        else {
+          val c = sql.charAt(i)
+          if (c == '(') depth += 1 else if (c == ')') depth -= 1
+          i += 1
+        }
       }
     }
+    -1
+  }
+
+  /** scanCode's copying form: rebuild `sql`, copying literals, quoted
+    * identifiers and comments verbatim. `f(i, sb)` either returns an
+    * index past `i` after appending its replacement for the text it
+    * consumed to `sb`, or any other value to copy the char at `i`.
+    */
+  private[graft] def scanOutsideLiterals(sql: String)(
+      f: (Int, StringBuilder) => Int): String = {
+    val sb = new StringBuilder
+    var last = 0 // sql[last, i) is not yet copied
+    scanCode(sql) { (i, _) =>
+      sb.underlying.append(sql, last, i)
+      val next = f(i, sb)
+      last = if (next > i) next else i
+      last
+    }
+    if (last < sql.length) sb.underlying.append(sql, last, sql.length)
     sb.toString
+  }
+
+  /** True when keyword `kw` (case-insensitive) stands as a whole word at
+    * `i` — not part of an identifier, a qualified name or a longer word.
+    */
+  private[graft] def keywordAt(sql: String, i: Int, kw: String): Boolean = {
+    val end = i + kw.length
+    sql.regionMatches(true, i, kw, 0, kw.length) && wordStart(sql, i) &&
+      (end >= sql.length ||
+        !(Character.isLetterOrDigit(sql.charAt(end)) || sql.charAt(end) == '_'))
+  }
+
+  /** End of the identifier-like word (letters, digits, `_`) at `i`. */
+  private[graft] def wordEnd(sql: String, i: Int): Int = {
+    var j = i
+    while (j < sql.length &&
+      (Character.isLetterOrDigit(sql.charAt(j)) || sql.charAt(j) == '_')) j += 1
+    j
   }
 
   /** DuckDB 1.1 `query_table('name')` → the named relation (SURVEY

@@ -16,9 +16,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - each Gateway owns a cloned `newSession()` so SET state is
   *    per-client, not shared process-wide (main.go:41,113-116).
   *
-  * DuckDB-dialect compatibility: Dialect.rewrite text shims (QUALIFY,
-  * `//`, GLOB, `->>`) + Functions.register name shims, so DuckDB SQL in
-  * the reference's test surface runs unchanged.
+  * DuckDB-dialect compatibility: the session's parser (GraftExtensions)
+  * applies the Dialect.rewrite text shims (QUALIFY, `//`, GLOB, `->>`)
+  * once per statement, + Functions.register name shims, so DuckDB SQL
+  * in the reference's test surface runs unchanged. This class handles
+  * only the statements Spark cannot parse at all, on the pre-parse text.
   */
 final class Gateway private (val session: SparkSession, readOnly: Boolean) {
 
@@ -74,7 +76,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     extState(key) = (loaded, true)
     Gateway.publishExtensionsView(session, extState.toSeq.map {
       case (n, (l, i)) => (n, l, i) })
-    session.sql("SELECT true AS Success").limit(0)
+    success
   }
 
   private def loadExtension(name: String): DataFrame = extState.synchronized {
@@ -88,7 +90,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     extState(key) = (true, true)
     Gateway.publishExtensionsView(session, extState.toSeq.map {
       case (n, (l, i)) => (n, l, i) })
-    session.sql("SELECT true AS Success").limit(0)
+    success
   }
   private val pivotRe =
     ("""(?is)^PIVOT\s+([\w.]+)\s+ON\s+([\w.]+)\s+USING\s+(.+?)""" +
@@ -102,8 +104,29 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
   private val attachRe =
     """(?is)ATTACH\s+'(\w+)'\s*\(\s*TYPE\s+AIRPORT\s*,\s*location\s+'([^']+)'\s*\)\s*;?\s*""".r
 
+  /** DuckDB's empty `Success BOOLEAN` result of a statement that
+    * returns no rows. */
+  private def success: DataFrame = session.sql("SELECT true AS Success").limit(0)
+
+  /** Register `df` as a temp view under the session lock, analyze
+    * `head <view> tail` (which inlines the view's plan) and drop the
+    * view again: the statement tail runs over a DataFrame result.
+    */
+  private def queryOver(df: DataFrame, tail: String,
+      head: String = "SELECT * FROM"): DataFrame = session.synchronized {
+    val tmp = s"__graft_view_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+    df.createOrReplaceTempView(tmp)
+    try {
+      val out = session.sql(s"$head $tmp $tail")
+      out.queryExecution.assertAnalyzed()
+      out
+    } finally session.catalog.dropTempView(tmp)
+  }
+
   def sql(text: String): DataFrame = {
-    val preVar = text.trim
+    // fold `$$…$$` and `e'…'` strings first: every scan below
+    // (Dialect.scanCode) knows only plain '…' literals
+    val preVar = Dialect.foldLiterals(text.trim)
     // DuckDB 1.1 session variables (SURVEY §5.3): SET VARIABLE
     // evaluates its expression EAGERLY through the full pipeline and
     // stores the result as SQL literal text; getvariable('x') is then
@@ -117,17 +140,17 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
           throw new GatewayException(
             s"SET VARIABLE: expression must yield exactly one row, got ${rows.length}")
         sessionVars.put(name.toLowerCase, Gateway.varLiteral(rows.head.get(0)))
-        return session.sql("SELECT true AS Success").limit(0)
+        return success
       case Gateway.resetVarRe(name) =>
         sessionVars.remove(name.toLowerCase)
-        return session.sql("SELECT true AS Success").limit(0)
+        return success
       case _ =>
     }
     // current_query() reports the ORIGINAL text (pre variable
     // expansion), matching DuckDB's statement-text semantics
     val trimmed = Dialect.substituteCurrentQuery(
       Dialect.substituteGetVariable(preVar,
-        n => Option(sessionVars.get(n.toLowerCase))), preVar)
+        n => Option(sessionVars.get(n.toLowerCase))), text.trim)
     secretStatement(trimmed) match {
       case Some(props) => return applySecret(props)
       case None =>
@@ -153,7 +176,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     // so rejecting it was a needless divergence (GapProbe5 residual).
     trimmed match {
       case txnRe(_*) | maintRe(_*) =>
-        return session.sql("SELECT true AS Success").limit(0)
+        return success
       case showAllTablesRe() =>
         return this.sql("SELECT * FROM duckdb_tables")
       // DuckDB SHOW TABLES is a single 'name' column (Spark's native
@@ -186,17 +209,14 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     // read-only classification applies to the BOUND statement.
     trimmed match {
       case prepareRe(name, body) =>
-        // normalize dollar-quoted literals NOW: the binder runs before
-        // the dialect pipeline and would read `$$v$$` as a `$v` param
-        prepared.put(name.toLowerCase,
-          Dialect.normalizeDollarQuotes(body.trim))
-        return session.sql("SELECT true AS Success").limit(0)
+        prepared.put(name.toLowerCase, body.trim)
+        return success
       case executeRe(name, argText) =>
         return this.sql(bindPrepared(name, Option(argText)))
       case deallocRe(name) =>
         if (prepared.remove(name.toLowerCase) == null)
           throw new GatewayException(s"prepared statement not found: $name")
-        return session.sql("SELECT true AS Success").limit(0)
+        return success
       case _ =>
     }
     // CREATE/DROP MACRO — session-scoped like CREATE VIEW (D6), so the
@@ -204,11 +224,11 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     trimmed match {
       case createMacroRe(name, params, table, body) =>
         defineMacro(name, params, table != null, body)
-        return session.sql("SELECT true AS Success").limit(0)
+        return success
       case dropMacroRe(name) =>
         if (macros.remove(name.toLowerCase).isEmpty)
           throw new GatewayException(s"macro not found: $name")
-        return session.sql("SELECT true AS Success").limit(0)
+        return success
       case _ =>
     }
     val expanded = expandColumnsExpr(expandMacros(trimmed))
@@ -229,16 +249,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
         var df = this.sql(left).unionByName(
           this.sql(rightBody), allowMissingColumns = true)
         if (!keepAll) df = df.distinct()
-        if (tail.isEmpty) return df
-        return session.synchronized {
-          val tmp = s"__graft_ubn_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-          df.createOrReplaceTempView(tmp)
-          try {
-            val out = session.sql(s"SELECT * FROM $tmp $tail")
-            out.queryExecution.assertAnalyzed()
-            out
-          } finally session.catalog.dropTempView(tmp)
-        }
+        return if (tail.isEmpty) df else queryOver(df, tail)
       case None =>
     }
     // DuckDB `SUMMARIZE t` (T7 of SURVEY §2.9) → per-column stats in
@@ -292,13 +303,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
             case "parquet_kv_metadata" => parquetKvMetaDf(need)
             case _ => parquetMetadataDf(need)
           }
-          val tmp = s"graft_tvf_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-          df.createOrReplaceTempView(tmp)
-          try {
-            val out = session.sql(s"$head $tmp $tail")
-            out.queryExecution.assertAnalyzed()
-            return out
-          } finally session.catalog.dropTempView(tmp)
+          return queryOver(df, tail, head)
         case _ =>
       }
     }
@@ -331,16 +336,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       if (using.trim.toLowerCase.startsWith("count")) df = df.na.fill(0L)
       val tailText = Seq(Option(orderBy), Option(limit)).flatten
         .map(_.trim).mkString(" ")
-      if (tailText.isEmpty) return df
-      session.synchronized {
-        val tmp = s"__graft_pivot_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-        df.createOrReplaceTempView(tmp)
-        try {
-          val out = session.sql(s"SELECT * FROM $tmp $tailText")
-          out.queryExecution.assertAnalyzed() // view plan inlined here
-          out
-        } finally session.catalog.dropTempView(tmp)
-      }
+      if (tailText.isEmpty) df else queryOver(df, tailText)
     }
     expanded match {
       case pivotRe(tbl, onCol, using, groupBy, orderBy, limit) =>
@@ -379,16 +375,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
           .filter(col(valueCol).isNotNull)
         val tailText = Seq(Option(orderBy), Option(limit)).flatten
           .map(_.trim).mkString(" ")
-        if (tailText.isEmpty) return df
-        return session.synchronized {
-          val tmp = s"__graft_unpivot_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-          df.createOrReplaceTempView(tmp)
-          try {
-            val out = session.sql(s"SELECT * FROM $tmp $tailText")
-            out.queryExecution.assertAnalyzed()
-            out
-          } finally session.catalog.dropTempView(tmp)
-        }
+        return if (tailText.isEmpty) df else queryOver(df, tailText)
       case _ =>
     }
     // `ATTACH 'name' (TYPE AIRPORT, location 'grpc://host:port')` — the
@@ -455,16 +442,18 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
           s"read-only gateway: statement rejected (${up.takeWhile(_ != ' ')})")
       }
     }
-    val rewritten = Dialect.rewrite(rewriteFileReads(expanded))
+    // the session's parser (GraftSqlParser) applies Dialect.rewrite; the
+    // routing below reads the pre-parse text
+    val stmt = rewriteFileReads(expanded)
     // WITH RECURSIVE … UNION (bare): DuckDB-dialect dedup recursion.
     // Spark 4.1's native recursive CTE covers only UNION ALL, so the
     // bare-UNION shape routes through the engine's semi-naive fixpoint
     // (Recursive.fixpoint — identical semantics: each round's working
     // table is the new distinct rows). UNION ALL recursion falls
     // through to the native path untouched.
-    if (RecursiveSql.isRecursive(rewritten)) {
+    if (RecursiveSql.isRecursive(stmt)) {
       val parsed =
-        try RecursiveSql.parse(rewritten)
+        try RecursiveSql.parse(stmt)
         catch { case _: IllegalArgumentException => None }
       parsed match {
         case Some(p) if RecursiveSql.needsFixpoint(p) =>
@@ -482,7 +471,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     // rows). Inherently two-pass (DuckDB materializes and counts
     // internally too): run the body, count, limit. The count is one
     // aggregate job, not a collect.
-    pctLimitRe.findFirstMatchIn(rewritten) match {
+    pctLimitRe.findFirstMatchIn(stmt) match {
       case Some(m) =>
         val base = session.sql(m.group(1).trim)
         base.queryExecution.assertAnalyzed()
@@ -490,7 +479,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
         return base.limit(math.min(math.max(0L, k), Int.MaxValue.toLong).toInt)
       case None =>
     }
-    val df = session.sql(rewritten)
+    val df = session.sql(stmt)
     df.queryExecution.assertAnalyzed() // structured failure before execution
     df
   }
@@ -680,17 +669,17 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
               val litRe = """'((?:[^']|'')*)'""".r
               // splitCallArgs tracks parens but not {}/[]: re-merge args
               // the columns={'a':'T','b':'U'} struct and ['p1','p2']
-              // list forms split at their inner commas (quote-aware
-              // balance count)
+              // list forms split at their inner commas (balance count
+              // outside literals)
               def braceBalance(s: String): Int = {
-                var d = 0; var i = 0; var inQ = false
-                while (i < s.length) {
-                  val c = s.charAt(i)
-                  if (inQ) { if (c == '\'') inQ = false }
-                  else if (c == '\'') inQ = true
-                  else if (c == '{' || c == '[') d += 1
-                  else if (c == '}' || c == ']') d -= 1
-                  i += 1
+                var d = 0
+                Dialect.scanCode(s) { (i, _) =>
+                  s.charAt(i) match {
+                    case '{' | '[' => d += 1
+                    case '}' | ']' => d -= 1
+                    case _ =>
+                  }
+                  i
                 }
                 d
               }
@@ -962,32 +951,26 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
   }
 
   /** Substitute `args` for `params` in `body` at identifier boundaries,
-    * outside string literals; each value is parenthesized (textual
+    * outside literals and comments; each value is parenthesized (textual
     * macro hygiene, same effect as DuckDB's expression binding).
     */
   private def substituteParams(
       body: String, bind: Map[String, String]): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < body.length) {
+    Dialect.scanOutsideLiterals(body) { (i, sb) =>
       val c = body.charAt(i)
-      if (c == '\'' || c == '"') {
-        var j = i + 1
-        while (j < body.length && body.charAt(j) != c) j += 1
-        sb.append(body.substring(i, math.min(j + 1, body.length)))
-        i = j + 1
-      } else if (c.isLetter || c == '_') {
-        var j = i
-        while (j < body.length &&
-          (body.charAt(j).isLetterOrDigit || body.charAt(j) == '_')) j += 1
+      if (!(c.isLetter || c == '_')) i
+      else {
+        val j = Dialect.wordEnd(body, i)
         val word = body.substring(i, j)
         sb.append(bind.get(word.toLowerCase).map(v => s"($v)").getOrElse(word))
-        i = j
-      } else { sb.append(c); i += 1 }
+        j
+      }
     }
-    sb.toString
   }
 
+  /** Expand macro calls outside literals and comments: one call per
+    * pass, each pass rescanning the result, at most 16 passes.
+    */
   private def expandMacros(sql: String): String = {
     if (macros.isEmpty) return sql
     var cur = sql
@@ -996,56 +979,51 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     while (changed && depth < 16) {
       changed = false
       depth += 1
-      var i = 0
-      var out: String = null
-      while (i < cur.length && out == null) {
-        val c = cur.charAt(i)
-        if (c == '\'' || c == '"') {
-          var j = i + 1
-          while (j < cur.length && cur.charAt(j) != c) j += 1
-          i = j + 1
-        } else if ((c.isLetter || c == '_') &&
-            (i == 0 || !(cur.charAt(i - 1).isLetterOrDigit ||
-              cur.charAt(i - 1) == '_' || cur.charAt(i - 1) == '.'))) {
-          var j = i
-          while (j < cur.length &&
-            (cur.charAt(j).isLetterOrDigit || cur.charAt(j) == '_')) j += 1
-          val word = cur.substring(i, j).toLowerCase
-          macros.get(word) match {
-            case Some(m) if j < cur.length && {
-                var k = j
-                while (k < cur.length && cur.charAt(k).isWhitespace) k += 1
-                k < cur.length && cur.charAt(k) == '(' } =>
-              var k = j
-              while (cur.charAt(k) != '(') k += 1
-              Dialect.splitCallArgsPublic(cur, k) match {
-                case Some((args, end)) =>
-                  val (named, pos) = args.map(_.trim).filter(_.nonEmpty)
-                    .partition(_.matches("(?s)\\w+\\s*:=.*"))
-                  require(pos.length == m.positional.length,
-                    s"macro $word expects ${m.positional.length} positional " +
-                      s"argument(s), got ${pos.length}")
-                  val namedBind = named.map { a =>
-                    val Array(k0, v0) = a.split(":=", 2)
-                    (k0.trim.toLowerCase, v0.trim)
-                  }.toMap
-                  val bind =
-                    m.positional.map(_.toLowerCase).zip(pos).toMap ++
-                      m.defaults.map { case (k0, dflt) =>
-                        k0.toLowerCase -> namedBind.getOrElse(k0.toLowerCase, dflt)
-                      }.toMap
-                  val bodyExpanded = substituteParams(m.body, bind)
-                  out = cur.substring(0, i) + "(" + bodyExpanded + ")" +
-                    cur.substring(end)
-                case None => i = j
-              }
-            case _ => i = j
+      val text = cur
+      Dialect.scanCode(text) { (i, _) =>
+        val c = text.charAt(i)
+        if (!((c.isLetter || c == '_') && Dialect.wordStart(text, i))) i
+        else {
+          val j = Dialect.wordEnd(text, i)
+          val word = text.substring(i, j).toLowerCase
+          val call = macros.get(word).flatMap { m =>
+            var k = j
+            while (k < text.length && text.charAt(k).isWhitespace) k += 1
+            if (k < text.length && text.charAt(k) == '(')
+              Dialect.splitCallArgsPublic(text, k).map(m -> _)
+            else None
           }
-        } else i += 1
+          call match {
+            case Some((m, (args, end))) =>
+              cur = text.substring(0, i) + "(" + expandCall(word, m, args) +
+                ")" + text.substring(end)
+              changed = true
+              -1
+            case None => j
+          }
+        }
       }
-      if (out != null) { cur = out; changed = true }
     }
     cur
+  }
+
+  /** One macro call's body with its arguments bound. */
+  private def expandCall(word: String, m: SqlMacro, args: Seq[String]): String = {
+    val (named, pos) = args.map(_.trim).filter(_.nonEmpty)
+      .partition(_.matches("(?s)\\w+\\s*:=.*"))
+    require(pos.length == m.positional.length,
+      s"macro $word expects ${m.positional.length} positional " +
+        s"argument(s), got ${pos.length}")
+    val namedBind = named.map { a =>
+      val Array(k0, v0) = a.split(":=", 2)
+      (k0.trim.toLowerCase, v0.trim)
+    }.toMap
+    val bind =
+      m.positional.map(_.toLowerCase).zip(pos).toMap ++
+        m.defaults.map { case (k0, dflt) =>
+          k0.toLowerCase -> namedBind.getOrElse(k0.toLowerCase, dflt)
+        }.toMap
+    substituteParams(m.body, bind)
   }
 
   // ---- COLUMNS() star expression -------------------------------------
@@ -1115,28 +1093,12 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       sql.substring(fromAt)
   }
 
-  /** First depth-0 keyword occurrence outside literals. */
-  private def topLevelKeywordIndex(sql: String, kw: String): Int = {
-    var depth = 0
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"') {
-        var j = i + 1
-        while (j < sql.length && sql.charAt(j) != c) j += 1
-        i = j + 1
-      } else {
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && sql.regionMatches(true, i, kw, 0, kw.length) &&
-            (i == 0 || !sql.charAt(i - 1).isLetterOrDigit) &&
-            (i + kw.length >= sql.length ||
-              !sql.charAt(i + kw.length).isLetterOrDigit)) return i
-        i += 1
-      }
+  /** First depth-0 occurrence of any of `kws` outside literals and
+    * comments, or -1. */
+  private def topLevelKeywordIndex(sql: String, kws: String*): Int =
+    Dialect.scanCode(sql) { (i, depth) =>
+      if (depth == 0 && kws.exists(Dialect.keywordAt(sql, i, _))) -1 else i
     }
-    -1
-  }
 
   // ---- PRAGMA / SHOW <table> -----------------------------------------
   private val pragmaRe =
@@ -1273,56 +1235,25 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
   private val unionByNameRe = """(?i)^UNION\s+(ALL\s+)?BY\s+NAME\b""".r
 
   private def splitUnionByName(sql: String): Option[(String, String, Boolean)] = {
-    var depth = 0
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"') {
-        var j = i + 1
-        while (j < sql.length && sql.charAt(j) != c) j += 1
-        i = j + 1
-      } else {
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && (c == 'U' || c == 'u') &&
-            (i == 0 || !sql.charAt(i - 1).isLetterOrDigit)) {
-          unionByNameRe.findPrefixMatchOf(sql.substring(i)) match {
-            case Some(m) =>
-              return Some((sql.substring(0, i).trim,
-                sql.substring(i + m.end).trim, m.group(1) != null))
-            case None =>
-          }
-        }
-        i += 1
+    var out: Option[(String, String, Boolean)] = None
+    Dialect.scanCode(sql) { (i, depth) =>
+      if (depth != 0 || !Dialect.keywordAt(sql, i, "UNION")) i
+      else unionByNameRe.findPrefixMatchOf(sql.substring(i)) match {
+        case Some(m) =>
+          out = Some((sql.substring(0, i).trim,
+            sql.substring(i + m.end).trim, m.group(1) != null))
+          -1
+        case None => i
       }
     }
-    None
+    out
   }
 
   /** Split a trailing top-level `ORDER BY …` / `LIMIT …` off a query
     * body (so it can re-apply over a combined DataFrame).
     */
   private def splitTopLevelTail(sql: String): (String, String) = {
-    var depth = 0
-    var i = 0
-    var cut = -1
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"') {
-        var j = i + 1
-        while (j < sql.length && sql.charAt(j) != c) j += 1
-        i = j + 1
-      } else {
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && cut < 0 &&
-            (i == 0 || !sql.charAt(i - 1).isLetterOrDigit)) {
-          if (sql.regionMatches(true, i, "ORDER", 0, 5) ||
-              sql.regionMatches(true, i, "LIMIT", 0, 5)) cut = i
-        }
-        i += 1
-      }
-    }
+    val cut = topLevelKeywordIndex(sql, "ORDER", "LIMIT")
     if (cut < 0) (sql, "") else (sql.substring(0, cut).trim, sql.substring(cut).trim)
   }
 
@@ -1370,7 +1301,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       props.get("url_style").foreach(v =>
         set("fs.s3a.path.style.access", (v.toLowerCase == "path").toString))
     }
-    session.sql("SELECT true AS Success").limit(0)
+    success
   }
 
   /** Result schema without executing — the fix for the reference's
@@ -1439,58 +1370,60 @@ object Gateway {
   }
 
   /** Substitute prepared-statement placeholders with argument SQL text,
-    * outside string literals: `$1`-style positionals, `$name` named
-    * parameters, and `?` in left-to-right order. Each value is
+    * outside literals and comments: `$1`-style positionals, `$name`
+    * named parameters, and `?` in left-to-right order. Each value is
     * parenthesized (textual binding hygiene, like macro expansion).
     * Shared by EXECUTE and the Flight prepared-statement path.
     */
   private[graft] def bindPlaceholders(
-      body: String,
+      text: String,
       positional: Seq[String],
-      named: Map[String, String]): String = {
-    val sb = new StringBuilder
-    var i = 0
-    var qmark = 0
-    def positionalAt(n: Int, what: String): String = {
-      if (n < 1 || n > positional.length)
+      named: Map[String, String]): String =
+    bindWith(text, named) { (n, what) =>
+      if (n > positional.length)
         throw new GatewayException(
           s"prepared statement expects parameter $what but EXECUTE " +
             s"supplied ${positional.length} argument(s)")
-      s"(${positional(n - 1)})"
+      positional(n - 1)
     }
-    while (i < body.length) {
+
+  /** The Flight pre-bind schema probe: every positional placeholder
+    * bound to NULL.
+    */
+  private[graft] def bindNulls(text: String): String =
+    bindWith(text, Map.empty)((_, _) => "NULL")
+
+  /** bindPlaceholders' scan: `positional(n, what)` gives the value of
+    * positional placeholder n >= 1 (`what` is its text, `$n` or `?`).
+    */
+  private def bindWith(text: String, named: Map[String, String])(
+      positional: (Int, String) => String): String = {
+    val body = Dialect.foldLiterals(text)
+    var qmark = 0
+    def positionalAt(n: Int, what: String): String = {
+      if (n < 1)
+        throw new GatewayException(s"invalid prepared statement parameter $what")
+      positional(n, what)
+    }
+    Dialect.scanOutsideLiterals(body) { (i, sb) =>
       val c = body.charAt(i)
-      if (c == '\'' || c == '"') {
-        var j = i + 1
-        while (j < body.length && body.charAt(j) != c) j += 1
-        sb.append(body.substring(i, math.min(j + 1, body.length)))
-        i = j + 1
-      } else if (c == '$' && i + 1 < body.length &&
-          body.charAt(i + 1).isDigit) {
-        var j = i + 1
-        while (j < body.length && body.charAt(j).isDigit) j += 1
-        sb.append(positionalAt(body.substring(i + 1, j).toInt,
-          body.substring(i, j)))
-        i = j
-      } else if (c == '$' && i + 1 < body.length &&
-          (body.charAt(i + 1).isLetter || body.charAt(i + 1) == '_')) {
-        var j = i + 1
-        while (j < body.length &&
-          (body.charAt(j).isLetterOrDigit || body.charAt(j) == '_')) j += 1
-        val name = body.substring(i + 1, j).toLowerCase
-        named.get(name) match {
-          case Some(v) => sb.append(s"($v)")
-          case None => throw new GatewayException(
-            s"prepared statement parameter $$$name was not supplied")
-        }
-        i = j
-      } else if (c == '?') {
-        qmark += 1
-        sb.append(positionalAt(qmark, "?"))
-        i += 1
-      } else { sb.append(c); i += 1 }
+      val next = if (i + 1 < body.length) body.charAt(i + 1) else ' '
+      val (end, value) =
+        if (c == '?') { qmark += 1; (i + 1, positionalAt(qmark, "?")) }
+        else if (c == '$' && next.isDigit) {
+          var j = i + 1
+          while (j < body.length && body.charAt(j).isDigit) j += 1
+          val what = body.substring(i, j)
+          (j, positionalAt(what.tail.toIntOption.getOrElse(0), what))
+        } else if (c == '$' && (next.isLetter || next == '_')) {
+          val j = Dialect.wordEnd(body, i + 1)
+          val name = body.substring(i + 1, j).toLowerCase
+          (j, named.getOrElse(name, throw new GatewayException(
+            s"prepared statement parameter $$$name was not supplied")))
+        } else (i, "")
+      if (end > i) sb.append(s"($value)")
+      end
     }
-    sb.toString
   }
 
   /** Catalog introspection views named after DuckDB's table functions
@@ -1728,17 +1661,22 @@ object Gateway {
     }
   }
 
-  /** Open a gateway over a cloned session (isolated SET/temp-view state),
-    * register the fixture tables + dialect shims, then run the optional
-    * init script — the reference's `-init` hook (main.go:32,107-111),
-    * with per-statement error capture instead of silent prints.
-    */
   /** Conf listing remote Flight endpoints (`host:port`, comma-separated)
     * a CLIENT is allowed to ATTACH. Operator-set only: ReadOnlyGuard
     * rejects SET/RESET of spark.graft.* keys in read-only sessions.
     */
   val attachAllowKey = "spark.graft.attach.allow"
 
+  /** Open a gateway over a cloned session (isolated SET/temp-view state),
+    * register the fixture tables + dialect shims, then run the optional
+    * init script — the reference's `-init` hook (main.go:32,107-111),
+    * with per-statement error capture instead of silent prints.
+    *
+    * `spark` must be built with `spark.sql.extensions=
+    * graft.engine.GraftExtensions`: its parser (GraftSqlParser) is the
+    * only place the DuckDB dialect (Dialect.rewrite) is applied, so on a
+    * plain session dialect statements reach Spark's parser untranslated.
+    */
   def open(
       spark: SparkSession,
       dataDir: String,

@@ -11,12 +11,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * (SparkSessionExtensions.injectParser), so every SQL entry point —
   * `spark.sql`, the Gateway, and Thrift/JDBC client sessions that never
   * pass through Gateway.sql — gets the same text rewrites (QUALIFY,
-  * `//`, GLOB, `->>`, catalog table functions; Dialect.rewrite).
+  * `//`, GLOB, `->>`, catalog table functions; Dialect.rewrite), once.
   *
   * Activate with
   * `spark.sql.extensions=graft.engine.GraftExtensions` (config-only, the
-  * standard Catalyst extension mechanism), or rely on Gateway/Serve
-  * which install it.
+  * standard Catalyst extension mechanism) when building the session;
+  * graft.Serve does. Gateway.open requires it and does not install it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -453,16 +453,17 @@ class GraftSqlParser(
     delegate: ParserInterface,
     session: Option[org.apache.spark.sql.SparkSession] = None)
   extends ParserInterface {
+  // rawifyLiterals LAST and exactly once (it is not idempotent):
+  // restores DuckDB's raw-literal semantics against Spark's lexer
+  private def toSpark(sqlText: String): String =
+    Dialect.rawifyLiterals(Dialect.rewrite(sqlText))
   override def parsePlan(sqlText: String): LogicalPlan = {
-    // rawifyLiterals LAST and exactly once (it is not idempotent):
-    // restores DuckDB's raw-literal semantics against Spark's lexer
-    val plan = delegate.parsePlan(
-      Dialect.rawifyLiterals(Dialect.rewrite(sqlText)))
+    val plan = delegate.parsePlan(toSpark(sqlText))
     if (ReadOnlyGuard.active(session)) ReadOnlyGuard.enforce(plan)
     plan
   }
   override def parseQuery(sqlText: String): LogicalPlan =
-    delegate.parseQuery(Dialect.rawifyLiterals(Dialect.rewrite(sqlText)))
+    delegate.parseQuery(toSpark(sqlText))
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)
   override def parseTableIdentifier(sqlText: String): TableIdentifier =
@@ -477,4 +478,18 @@ class GraftSqlParser(
     delegate.parseDataType(sqlText)
   override def parseRoutineParam(sqlText: String): StructType =
     delegate.parseRoutineParam(sqlText)
+}
+
+object GraftSqlParser {
+
+  /** `session.sql(sqlText)` through the dialect parser, also on a session
+    * built without GraftExtensions (Verify's and Bench's sessions).
+    */
+  def sql(session: org.apache.spark.sql.SparkSession,
+      sqlText: String): org.apache.spark.sql.DataFrame =
+    session.sessionState.sqlParser match {
+      case _: GraftSqlParser => session.sql(sqlText)
+      case plain => org.apache.spark.sql.GraftPlans.ofRows(
+        session, new GraftSqlParser(plain).parsePlan(sqlText))
+    }
 }

@@ -19,9 +19,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * One self-referencing CTE is supported (the common linear-recursion
   * shape); statements whose recursion is UNION ALL, or with no
   * self-reference at all, are NOT handled here — the caller passes them
-  * to Spark's native path. The scanner tracks single-/double-quote
-  * state and paren depth, so literals containing `UNION` or parens
-  * can't derail the split.
+  * to Spark's native path. The split runs on Dialect.scanCode, which
+  * skips literals, quoted identifiers and comments and tracks paren
+  * depth, so none of those can derail it on `UNION` or a paren.
   */
 object RecursiveSql {
 
@@ -61,28 +61,17 @@ object RecursiveSql {
         sql.substring(start, i)
       }
     }
-    // scan from an opening paren to its match, honoring quotes
+    // scan from an opening paren to its match
     def parenBlock(): String = {
       skipWs()
       require(i < n && sql(i) == '(', s"expected '(' at $i")
-      val start = i + 1
-      var depth = 1; var sq = false; var dq = false
-      i += 1
-      while (i < n && depth > 0) {
-        val c = sql(i)
-        if (sq) { if (c == '\'') sq = false }
-        else if (dq) { if (c == '"') dq = false }
-        else c match {
-          case '\'' => sq = true
-          case '"' => dq = true
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ =>
-        }
-        i += 1
+      val close = Dialect.scanCode(sql, i) { (j, depth) =>
+        if (depth == 1 && sql(j) == ')') -1 else j
       }
-      require(depth == 0, "unbalanced parens in WITH RECURSIVE")
-      sql.substring(start, i - 1)
+      require(close > i, "unbalanced parens in WITH RECURSIVE")
+      val body = sql.substring(i + 1, close)
+      i = close + 1
+      body
     }
     val ctes = scala.collection.mutable.ArrayBuffer.empty[Cte]
     var more = true
@@ -110,33 +99,19 @@ object RecursiveSql {
     */
   private[engine] def unionBranches(body: String): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var sq = false; var dq = false
-    var i = 0; var last = 0
-    val n = body.length
-    while (i < n) {
-      val c = body(i)
-      if (sq) { if (c == '\'') sq = false; i += 1 }
-      else if (dq) { if (c == '"') dq = false; i += 1 }
-      else c match {
-        case '\'' => sq = true; i += 1
-        case '"' => dq = true; i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case 'U' | 'u' if depth == 0 && body.regionMatches(true, i, "UNION", 0, 5) &&
-            (i == 0 || !body(i - 1).isLetterOrDigit && body(i - 1) != '_') &&
-            (i + 5 >= n || !body(i + 5).isLetterOrDigit && body(i + 5) != '_') =>
-          // peek past whitespace for ALL — that's a branch-internal union
-          var j = i + 5
-          while (j < n && body(j).isWhitespace) j += 1
-          if (body.regionMatches(true, j, "ALL", 0, 3) &&
-              (j + 3 >= n || !body(j + 3).isLetterOrDigit && body(j + 3) != '_')) {
-            i = j + 3
-          } else {
-            out += body.substring(last, i)
-            i += 5
-            last = i
-          }
-        case _ => i += 1
+    var last = 0
+    Dialect.scanCode(body) { (i, depth) =>
+      if (depth != 0 || !Dialect.keywordAt(body, i, "UNION")) i
+      else {
+        // peek past whitespace for ALL — that's a branch-internal union
+        var j = i + 5
+        while (j < body.length && body(j).isWhitespace) j += 1
+        if (Dialect.keywordAt(body, j, "ALL")) j + 3
+        else {
+          out += body.substring(last, i)
+          last = i + 5
+          last
+        }
       }
     }
     out += body.substring(last)

@@ -52,26 +52,6 @@ final class FlightServer(gateway: Gateway, port: Int) {
   private val preparedStmts =
     new java.util.concurrent.ConcurrentHashMap[String, PreparedEntry]()
 
-  /** Placeholder count = max($N) and/or number of `?`, outside quotes. */
-  private def placeholderCount(q: String): Int = {
-    var i = 0; var maxD = 0; var qs = 0
-    while (i < q.length) {
-      val c = q.charAt(i)
-      if (c == '\'' || c == '"') {
-        var j = i + 1
-        while (j < q.length && q.charAt(j) != c) j += 1
-        i = j + 1
-      } else if (c == '$' && i + 1 < q.length && q.charAt(i + 1).isDigit) {
-        var j = i + 1
-        while (j < q.length && q.charAt(j).isDigit) j += 1
-        maxD = math.max(maxD, q.substring(i + 1, j).toInt)
-        i = j
-      } else if (c == '?') { qs += 1; i += 1 }
-      else i += 1
-    }
-    math.max(maxD, qs)
-  }
-
   /** Resolve a prepared handle to executable SQL: bound params if the
     * client DoPut them, else NULLs (the pre-bind GetFlightInfo schema
     * probe).
@@ -80,10 +60,9 @@ final class FlightServer(gateway: Gateway, port: Int) {
     val key = new String(handle, "UTF-8")
     val entry = Option(preparedStmts.get(key)).getOrElse(
       throw new GatewayException(s"unknown prepared statement handle: $key"))
-    val params =
-      if (entry.params.nonEmpty) entry.params
-      else Seq.fill(placeholderCount(entry.query))("NULL")
-    Gateway.bindPlaceholders(entry.query, params, Map.empty)
+    if (entry.params.nonEmpty)
+      Gateway.bindPlaceholders(entry.query, entry.params, Map.empty)
+    else Gateway.bindNulls(entry.query)
   }
 
   /** Bound port after start (differs from the requested when port=0). */
@@ -107,7 +86,8 @@ final class FlightServer(gateway: Gateway, port: Int) {
       reqBytes: Array[Byte], obs: StreamObserver[Array[Byte]]): Unit =
     respond(obs) {
       val desc = FlightDescriptor.fromBytes(reqBytes)
-      metaDf(desc.cmd) match {
+      val any = anyOf(desc.cmd)
+      metaDf(any) match {
         case Some(df) =>
           // metadata tickets round-trip the command bytes themselves
           FlightInfo(
@@ -116,7 +96,7 @@ final class FlightServer(gateway: Gateway, port: Int) {
             endpoints = Seq(FlightEndpoint(Ticket(desc.cmd))),
             totalRecords = -1L, totalBytes = -1L).toBytes
         case None =>
-          val (query, isSqlInfo) = parseCommand(desc.cmd)
+          val (query, isSqlInfo) = parseCommand(any, desc.cmd)
           val schemaBytes =
             if (isSqlInfo) ipcSchema(gateway.sqlInfo)
             else ipcSchema(gateway.sql(query)) // analyzed only — never executed
@@ -136,8 +116,9 @@ final class FlightServer(gateway: Gateway, port: Int) {
       reqBytes: Array[Byte], obs: StreamObserver[Array[Byte]]): Unit =
     respond(obs) {
       val desc = FlightDescriptor.fromBytes(reqBytes)
-      val df = metaDf(desc.cmd).getOrElse {
-        val (query, isSqlInfo) = parseCommand(desc.cmd)
+      val any = anyOf(desc.cmd)
+      val df = metaDf(any).getOrElse {
+        val (query, isSqlInfo) = parseCommand(any, desc.cmd)
         if (isSqlInfo) gateway.sqlInfo else gateway.sql(query)
       }
       SchemaResult(ipcSchema(df)).toBytes
@@ -161,7 +142,7 @@ final class FlightServer(gateway: Gateway, port: Int) {
         try {
           if (chunks == null) {
             val ticketBytes = Ticket.fromBytes(reqBytes).ticket
-            chunks = metaDf(ticketBytes) match {
+            chunks = metaDf(anyOf(ticketBytes)) match {
               case Some(df) =>
                 org.apache.spark.sql.GraftArrow.stream(df, 10000).filterNot(isEos)
               case None =>
@@ -213,17 +194,17 @@ final class FlightServer(gateway: Gateway, port: Int) {
       case e: Throwable => obs.onError(toStatus(e).asRuntimeException())
     }
 
-  /** One-element server stream (DoAction results). */
-  private def respondStream(obs: StreamObserver[Array[Byte]])(f: => Array[Byte]): Unit =
-    respond(obs)(f)
+  /** The Flight SQL `Any` command in descriptor or ticket bytes, or None
+    * for raw SQL bytes from a plain Flight client.
+    */
+  private def anyOf(bytes: Array[Byte]): Option[AnyMsg] =
+    try Some(AnyMsg.fromBytes(bytes))
+    catch { case _: Exception => None }
 
   /** Descriptor.cmd → (sql, isSqlInfo): a proper Flight SQL Any-wrapped
-    * command, or raw SQL bytes from a plain Flight client.
+    * command (`any`, decoded once by the caller), or raw SQL bytes.
     */
-  private def parseCommand(cmd: Array[Byte]): (String, Boolean) = {
-    val any =
-      try Some(AnyMsg.fromBytes(cmd))
-      catch { case _: Exception => None }
+  private def parseCommand(any: Option[AnyMsg], cmd: Array[Byte]): (String, Boolean) =
     any match {
       case Some(a) if a.typeUrl == StatementQueryUrl =>
         // sqlText also honors the Go flightsql driver's pack-the-SQL-
@@ -238,22 +219,18 @@ final class FlightServer(gateway: Gateway, port: Int) {
           false)
       case _ => (new String(cmd, "UTF-8"), false)
     }
-  }
 
   // ---- Flight SQL catalog metadata commands ---------------------------
 
-  /** The DataFrame for a Flight SQL catalog metadata command, if the
-    * bytes are one (ADBC's GetObjects path: CommandGetCatalogs /
+  /** The DataFrame for a Flight SQL catalog metadata command, if `any`
+    * is one (ADBC's GetObjects path: CommandGetCatalogs /
     * GetDbSchemas / GetTables / GetTableTypes). Column names and order
     * follow the Flight SQL spec schemas. Backed by the LIVE
     * duckdb_tables view, so DDL is visible like every other surface.
     * Used for both the descriptor cmd and the ticket — metadata tickets
     * round-trip the command bytes.
     */
-  private def metaDf(cmd: Array[Byte]): Option[org.apache.spark.sql.DataFrame] = {
-    val any =
-      try Some(AnyMsg.fromBytes(cmd))
-      catch { case _: Exception => return None }
+  private def metaDf(any: Option[AnyMsg]): Option[org.apache.spark.sql.DataFrame] = {
     val sess = gateway.session
     // The injected parser (Dialect.rawifyLiterals) makes '…' literals
     // RAW on every sess.sql entry point — backslashes are literal
@@ -363,7 +340,7 @@ final class FlightServer(gateway: Gateway, port: Int) {
     val action = Action.fromBytes(reqBytes)
     action.actionType match {
       case "CreatePreparedStatement" =>
-        respondStream(obs) {
+        respond(obs) {
           val req = ActionCreatePreparedStatementRequest.fromBytes(
             AnyMsg.fromBytes(action.body).value)
           val handle = java.util.UUID.randomUUID.toString
@@ -379,7 +356,7 @@ final class FlightServer(gateway: Gateway, port: Int) {
               handle.getBytes("UTF-8"), datasetSchema).toBytes).toBytes).toBytes
         }
       case "ClosePreparedStatement" =>
-        respondStream(obs) {
+        respond(obs) {
           val req = ActionClosePreparedStatementRequest.fromBytes(
             AnyMsg.fromBytes(action.body).value)
           preparedStmts.remove(new String(req.handle, "UTF-8"))
@@ -408,10 +385,7 @@ final class FlightServer(gateway: Gateway, port: Int) {
       override def onNext(v: Array[Byte]): Unit = if (!failed) {
         val data = FlightData.fromBytes(v)
         data.descriptor.foreach { d =>
-          val cmdAny =
-            try Some(AnyMsg.fromBytes(d.cmd))
-            catch { case _: Exception => None }
-          cmdAny match {
+          anyOf(d.cmd) match {
             case Some(a) if a.typeUrl == PreparedStatementQueryUrl =>
               val key = new String(
                 CommandPreparedStatementQuery.fromBytes(a.value).handle, "UTF-8")

@@ -417,11 +417,11 @@ object FunctionQueries {
         |FROM docs GROUP BY g ORDER BY g ASC NULLS LAST""".stripMargin
     // unlike the sibling f_json_* (pure registry shims), this text
     // carries DIALECT SYNTAX (`::JSON`, TRY_CAST AS JSON) — the
-    // isolated session's .sql sees raw Spark SQL, so apply the Gateway's
-    // text rewrite here; the oracle gets the original DuckDB text
+    // isolated session may lack the dialect parser, so parse through
+    // it explicitly; the oracle gets the same DuckDB text
     graft.engine.Q("f_json_group", (s, dir) =>
-      graft.engine.Functions.isolated(s, dir, "events")
-        .sql(graft.engine.Dialect.rewrite(sqlText)),
+      graft.engine.GraftSqlParser.sql(
+        graft.engine.Functions.isolated(s, dir, "events"), sqlText),
       Some(sqlText))
   }
 

@@ -23,8 +23,9 @@ object GraftArrow {
   def stream(df: Dataset[Row], maxRecordsPerBatch: Int): Iterator[Array[Byte]] = {
     val classic = df.asInstanceOf[ClassicDataFrame]
     // toArrowBatchRdd sizes batches from the session conf — honor the
-    // caller's request (gateway sessions are per-client, so this is
-    // client-scoped state)
+    // caller's request. This is session-wide state: graft.Serve shares
+    // one gateway session across all Flight clients and Thrift's
+    // singleSession, and every served caller asks for 10000 rows.
     classic.sparkSession.conf.set(
       "spark.sql.execution.arrow.maxRecordsPerBatch", maxRecordsPerBatch.toString)
     val batches = classic.toArrowBatchRdd.toLocalIterator

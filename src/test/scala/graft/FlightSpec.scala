@@ -257,4 +257,77 @@ class FlightSpec extends AnyFunSuite {
       assert(r.rows.map(_(2).toString) == Seq("bs\\vw9"), r.rows)
     } finally gw.sql("DROP VIEW `bs\\vw9`").collect()
   }
+
+  /** CreatePreparedStatement over raw gRPC; the descriptor that names
+    * the new handle (the Go driver's call shape). */
+  private def prepare(channel: org.sparkproject.connect.grpc.Channel,
+      sql: String): FlightProto.FlightDescriptor = {
+    import FlightProto._
+    import org.sparkproject.connect.grpc.CallOptions
+    import org.sparkproject.connect.grpc.stub.ClientCalls
+    val create = Action("CreatePreparedStatement", AnyMsg(
+      CreatePreparedStatementRequestUrl,
+      ActionCreatePreparedStatementRequest(sql).toBytes).toBytes)
+    val created = ClientCalls.blockingServerStreamingCall(channel,
+      FlightServer.Methods.doAction, CallOptions.DEFAULT, create.toBytes).next()
+    val handle = ActionCreatePreparedStatementResult.fromBytes(
+      AnyMsg.fromBytes(ActionResult.fromBytes(created).body).value).handle
+    FlightDescriptor(FlightDescriptor.CMD, AnyMsg(
+      PreparedStatementQueryUrl, CommandPreparedStatementQuery(handle).toBytes).toBytes)
+  }
+
+  test("Flight SQL prepared statement: a ? in a -- comment is not a placeholder") {
+    // CreatePreparedStatement, DoPut bind, GetFlightInfo, DoGet on raw
+    // gRPC; DuckDB 1.0 answers 7
+    import FlightProto._
+    import org.sparkproject.connect.grpc.CallOptions
+    import org.sparkproject.connect.grpc.netty.NettyChannelBuilder
+    import org.sparkproject.connect.grpc.stub.{ClientCalls, StreamObserver}
+    val channel = NettyChannelBuilder.forAddress("localhost", server.boundPort)
+      .usePlaintext().build()
+    try {
+      val desc = prepare(channel, "SELECT ? AS a -- why?")
+      // bind p1 = 7: one Arrow schema message + one record batch
+      val params = org.apache.spark.sql.GraftArrow
+        .stream(spark.sql("SELECT CAST(7 AS BIGINT) AS p1"), 10000)
+        .filterNot(FlightServer.isEos).map(FlightServer.splitIpc).toSeq
+      val put = scala.concurrent.Promise[Unit]()
+      val upload = ClientCalls.asyncBidiStreamingCall(
+        channel.newCall(FlightServer.Methods.doPut, CallOptions.DEFAULT),
+        new StreamObserver[Array[Byte]] {
+          override def onNext(v: Array[Byte]): Unit = ()
+          override def onError(t: Throwable): Unit = put.tryFailure(t)
+          override def onCompleted(): Unit = put.trySuccess(())
+        })
+      params.zipWithIndex.foreach { case ((header, body), i) =>
+        upload.onNext(FlightData(header, body,
+          if (i == 0) Some(desc) else None).toBytes)
+      }
+      upload.onCompleted()
+      scala.concurrent.Await.result(put.future,
+        scala.concurrent.duration.Duration(60, "s"))
+      val info = FlightInfo.fromBytes(ClientCalls.blockingUnaryCall(channel,
+        FlightServer.Methods.getFlightInfo, CallOptions.DEFAULT, desc.toBytes))
+      val r = client.doGet(info)
+      assert(r.columns == Seq("a") && r.rows.map(_.head.toString) == Seq("7"), r.rows)
+    } finally channel.shutdownNow()
+  }
+
+  test("Flight SQL prepared statement: $0 fails the NULL-bound schema probe") {
+    // placeholders number from 1; the unbound GetFlightInfo must answer
+    // with an error, not bind without end
+    import org.sparkproject.connect.grpc.CallOptions
+    import org.sparkproject.connect.grpc.netty.NettyChannelBuilder
+    import org.sparkproject.connect.grpc.stub.ClientCalls
+    val channel = NettyChannelBuilder.forAddress("localhost", server.boundPort)
+      .usePlaintext().build()
+    try {
+      val desc = prepare(channel, "SELECT $0 AS a")
+      val e = intercept[org.sparkproject.connect.grpc.StatusRuntimeException](
+        ClientCalls.blockingUnaryCall(channel, FlightServer.Methods.getFlightInfo,
+          CallOptions.DEFAULT.withDeadlineAfter(60, java.util.concurrent.TimeUnit.SECONDS),
+          desc.toBytes))
+      assert(e.getMessage.contains("$0"), e.getMessage)
+    } finally channel.shutdownNow()
+  }
 }

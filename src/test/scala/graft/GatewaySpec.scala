@@ -2133,4 +2133,57 @@ class GatewaySpec extends AnyFunSuite {
     assert(one("SELECT row_to_json(ROW(1,'x'))") == """{"":1,"":"x"}""")
     assert(one("SELECT json(ROW(1,ROW(2,'y')))") == """{"":1,"":{"":2,"":"y"}}""")
   }
+
+  // ---- comments, $$ and e'…' strings in the pre-parse text ---------
+  // The gateway's own scans (placeholders, UNION BY NAME, recursive
+  // CTEs) skip comments like literals; answers pinned against DuckDB 1.0.
+
+  test("PREPARE: a ? inside a -- comment is not a placeholder") {
+    gw.sql("PREPARE pcomment AS SELECT ? AS a -- why?").collect()
+    try assert(gw.sql("EXECUTE pcomment(7)").collect().map(_.get(0).toString)
+      .toSeq == Seq("7"))
+    finally gw.sql("DEALLOCATE pcomment").collect()
+  }
+
+  test("WITH RECURSIVE … UNION: an apostrophe in a comment keeps the fixpoint path") {
+    val rows = gw.sql(
+      """WITH RECURSIVE r(n) AS (
+        |  SELECT 1 -- don't stop at the seed
+        |  UNION
+        |  SELECT n + 1 FROM r WHERE n < 3)
+        |SELECT n FROM r ORDER BY n""".stripMargin).collect()
+    assert(rows.map(_.getInt(0)).toSeq == Seq(1, 2, 3))
+  }
+
+  test("UNION BY NAME: an apostrophe in a comment does not hide the split") {
+    val rows = gw.sql(
+      "SELECT 1 AS a -- it's\nUNION BY NAME SELECT 2 AS a ORDER BY a").collect()
+    assert(rows.map(_.getInt(0)).toSeq == Seq(1, 2))
+  }
+
+  test("WITH RECURSIVE … UNION: $$…$$ strings are folded before the CTE split") {
+    // the $$ body holds a quote and a paren, and the comment an
+    // unbalanced paren: the split needs both folding and comment skipping
+    val rows = gw.sql(
+      """WITH RECURSIVE r(n, s) AS (
+        |  SELECT 1, $$it's (x)$$ -- seed row (n = 1
+        |  UNION
+        |  SELECT n + 1, s || '!' FROM r WHERE n < 3)
+        |SELECT n, s FROM r ORDER BY n""".stripMargin).collect()
+    assert(rows.map(r => (r.getInt(0), r.getString(1))).toSeq ==
+      Seq((1, "it's (x)"), (2, "it's (x)!"), (3, "it's (x)!!")))
+  }
+
+  test("WITH RECURSIVE … UNION: e'…' strings are folded before the CTE split") {
+    // \' ends no literal inside an e-string; its unbalanced paren must
+    // not reach the split
+    val rows = gw.sql(
+      """WITH RECURSIVE r(n, s) AS (
+        |  SELECT 1, e'it\'s (x'
+        |  UNION
+        |  SELECT n + 1, s FROM r WHERE n < 3)
+        |SELECT n, s FROM r ORDER BY n""".stripMargin).collect()
+    assert(rows.map(r => (r.getInt(0), r.getString(1))).toSeq ==
+      Seq((1, "it's (x"), (2, "it's (x"), (3, "it's (x")))
+  }
 }
