@@ -28,35 +28,15 @@ object Probe {
     sys.env.get("PROBE_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
     })
-    // per-stage profile (PROBE_STAGES=1): stage wall + task count +
-    // cumulative executor run time, printed per completed stage of the
-    // LAST run — names where a query's time actually goes
+    // per-stage profile (PROBE_STAGES=1): one line per completed stage
+    // of each query's LAST run, then its task-metric sums — names where
+    // a query's time actually goes
     val profile = sys.env.get("PROBE_STAGES").contains("1")
-    @volatile var listening = false
-    if (profile) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          if (listening) {
-            val si = sc.stageInfo
-            val wall = (for {
-              a <- si.completionTime; b <- si.submissionTime
-            } yield (a - b) / 1e3).getOrElse(-1.0)
-            val tm = si.taskMetrics
-            System.err.println(
-              f"[probe-stage] id=${si.stageId}%4d tasks=${si.numTasks}%4d " +
-                f"wall=$wall%7.3fs run=${tm.executorRunTime / 1e3}%7.3fs " +
-                f"cpu=${tm.executorCpuTime / 1e9}%7.3fs " +
-                f"in=${tm.inputMetrics.bytesRead / 1024}%6dKB " +
-                f"sr=${tm.shuffleReadMetrics.totalBytesRead / 1024}%6dKB " +
-                f"sw=${tm.shuffleWriteMetrics.bytesWritten / 1024}%6dKB " +
-                f"${si.name.take(40)} :: ${si.rddInfos.flatMap(_.scope).map(_.name).distinct.mkString(">").take(180)}")
-          }
-      })
+    val metrics = new graft.engine.TaskMetricsListener
+    if (profile) spark.sparkContext.addSparkListener(metrics)
     names.foreach { name =>
-      listening = false
       (1 to 3).foreach { i =>
-        if (profile && i == 3) listening = true
+        if (i == 3) metrics.reset()
         val t0 = System.nanoTime()
         graft.engine.CacheOnce.scoped {
           SparkEntry.queries(name)(spark, sfDir)
@@ -66,6 +46,10 @@ object Probe {
           s"(cacheOnce live=${graft.engine.CacheOnce.liveCount} " +
           s"thrash=${graft.engine.CacheOnce.thrashCount.get} " +
           s"keys=${graft.engine.CacheOnce.thrashKeys})")
+      }
+      if (profile) {
+        metrics.stageLines.foreach(l => System.err.println(s"[probe-stage] $l"))
+        System.err.println(s"[probe-stage] $name: ${metrics.sums}")
       }
       if (sys.env.get("PROBE_RDDS").contains("1"))
         spark.sparkContext.getRDDStorageInfo.foreach { ri =>

@@ -29,28 +29,7 @@ object ProbeHnsw {
     spark.sparkContext.setLogLevel("WARN")
     graft.engine.Tables.register(spark, dir)
 
-    val spill = new java.util.concurrent.atomic.AtomicLong
-    val shuffle = new java.util.concurrent.atomic.AtomicLong
-    val peak = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val mt = te.taskMetrics
-        if (mt != null) {
-          spill.addAndGet(mt.diskBytesSpilled)
-          shuffle.addAndGet(mt.shuffleWriteMetrics.bytesWritten)
-          peak.getAndAccumulate(mt.peakExecutionMemory, math.max)
-        }
-      }
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val i = sc.stageInfo
-        val cpu = Option(i.taskMetrics).map(_.executorCpuTime / 1e9).getOrElse(-1.0)
-        val run = Option(i.taskMetrics).map(_.executorRunTime / 1e3).getOrElse(-1.0)
-        System.err.println(f"[stage] ${i.stageId}%3d tasks=${i.numTasks}%4d " +
-          f"run=${run}%8.1fs cpu=${cpu}%8.1fs  ${i.name.takeWhile(_ != '(')}")
-      }
-    }
+    val listener = new graft.engine.TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
     val df = graft.llm.SimilarityOps
       .labelKnnHnsw(spark, exactBelow, m, efC, efS, shardThreshold, shardProbes)
@@ -59,8 +38,8 @@ object ProbeHnsw {
     val n = df.count()
     spark.sparkContext.removeSparkListener(listener)
     System.err.println(f"[probe] hnsw query: ${(System.nanoTime() - t1) / 1e9}%.1fs " +
-      f"rows=$n spill=${spill.get / 1e9}%.1fGB " +
-      f"shuffle=${shuffle.get / 1e6}%.0fMB peakTask=${peak.get / 1e6}%.0fMB")
+      s"rows=$n ${listener.sums}")
+    listener.stageLines.foreach(l => System.err.println(s"[stage] $l"))
     val nEmb = spark.table("embeddings").count()
     def edges(d: org.apache.spark.sql.DataFrame) =
       graft.engine.CacheOnce.scoped {

@@ -64,29 +64,7 @@ object ProbeKnn {
     System.err.println(s"[probe] candidate pairs (incl self): $pairs")
 
     // full query with stage metrics
-    val spill = new java.util.concurrent.atomic.AtomicLong
-    val shuffle = new java.util.concurrent.atomic.AtomicLong
-    val peak = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          spill.addAndGet(m.diskBytesSpilled)
-          shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          peak.getAndAccumulate(m.peakExecutionMemory, math.max)
-        }
-      }
-      // stage-level attribution: which stage eats the wall
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val i = sc.stageInfo
-        val cpu = Option(i.taskMetrics).map(_.executorCpuTime / 1e9).getOrElse(-1.0)
-        val run = Option(i.taskMetrics).map(_.executorRunTime / 1e3).getOrElse(-1.0)
-        System.err.println(f"[stage] ${i.stageId}%3d tasks=${i.numTasks}%4d " +
-          f"run=${run}%8.1fs cpu=${cpu}%8.1fs  ${i.name.takeWhile(_ != '(')}")
-      }
-    }
+    val listener = new graft.engine.TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
     val sym = !sys.env.contains("PROBE_NOSYM")
     // persisted: the recall phase reuses THIS graph instead of
@@ -99,8 +77,8 @@ object ProbeKnn {
     val n = df.count()
     spark.sparkContext.removeSparkListener(listener)
     System.err.println(f"[probe] query: ${(System.nanoTime() - t1) / 1e9}%.1fs " +
-      f"rows=$n spill=${spill.get / 1e9}%.1fGB " +
-      f"shuffle=${shuffle.get / 1e6}%.0fMB peakTask=${peak.get / 1e6}%.0fMB")
+      s"rows=$n ${listener.sums}")
+    listener.stageLines.foreach(l => System.err.println(s"[stage] $l"))
     // recall@3 vs the sampled exact reference at THIS config
     val nEmb = emb.count()
     def edges(d: org.apache.spark.sql.DataFrame) =

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{avg, broadcast, col, count, element_at, lit, sqrt, sum, when}
-import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 /** Empirical scale evidence for the heavy operator families (the
   * round-7 carry-over mandate): run them against a ScaleGen corpus —
@@ -35,26 +33,6 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
   * the corpus first with ScaleGen.
   */
 object ScaleBench {
-
-  /** Task-metric sums since the last reset (listener-fed). */
-  private final class Metrics extends SparkListener {
-    val shufRead = new LongAdder
-    val shufWrite = new LongAdder
-    val spill = new LongAdder
-    val peakMem = new AtomicLong(0L)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        shufRead.add(m.shuffleReadMetrics.totalBytesRead)
-        shufWrite.add(m.shuffleWriteMetrics.bytesWritten)
-        spill.add(m.memoryBytesSpilled + m.diskBytesSpilled)
-        peakMem.getAndAccumulate(m.peakExecutionMemory, math.max)
-      }
-    }
-    def reset(): Unit = {
-      shufRead.reset(); shufWrite.reset(); spill.reset(); peakMem.set(0L)
-    }
-  }
 
   final case class Row(name: String, rows: Long, wallSec: Double,
     shufReadMB: Double, shufWriteMB: Double, spillMB: Double,
@@ -181,7 +159,7 @@ object ScaleBench {
   def run(spark: SparkSession, dir: String,
       queries: Seq[String] = heavy,
       invariants: Boolean = true): Seq[Row] = {
-    val metrics = new Metrics
+    val metrics = new graft.engine.TaskMetricsListener
     spark.sparkContext.addSparkListener(metrics)
     graft.engine.Tables.register(spark, dir)
     // every row prints as it lands (stderr): a crash mid-run (the r17

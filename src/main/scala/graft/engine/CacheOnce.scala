@@ -31,11 +31,11 @@ import org.apache.spark.sql.DataFrame
   * (`pq:codes:<dir>`, IVF centroids), so a serving session that
   * registers many roots over weeks would accumulate one live entry per
   * (root, artifact) forever. The map is therefore LRU-bounded at
-  * `MaxEntries` (default 128, `SPARK_GRAFT_CACHE_ENTRIES` overrides —
-  * raised from 64 in r15: the keyed population grew to ~26 call sites,
-  * many per-dataset, and a bench run holds TWO datasets live (the
-  * sf0.001 warm dir + the served fixture), putting the working set
-  * near the old cap; entries are MB-scale at fixture SF):
+  * `MaxEntries` (128 — raised from 64 in r15: the keyed population
+  * grew to ~26 call sites, many per-dataset, and a bench run holds
+  * TWO datasets live (the sf0.001 warm dir + the served fixture),
+  * putting the working set near the old cap; entries are MB-scale at
+  * fixture SF):
   * inserting past the cap evicts + unpersists the least-recently-USED
   * entry. 64 is ~5× the whole suite's key population, so the bench and
   * any single-dataset serving session never evict; only multi-root
@@ -73,8 +73,7 @@ object CacheOnce {
     */
   private[graft] val thrashKeys: java.util.Set[String] =
     ConcurrentHashMap.newKeySet[String]()
-  private[graft] val MaxEntries: Int =
-    sys.env.getOrElse("SPARK_GRAFT_CACHE_ENTRIES", "128").toInt
+  private[graft] val MaxEntries: Int = 128
 
   /** Live entry count — the bound the spec pins. */
   private[graft] def liveCount: Int = live.size()

@@ -48,7 +48,7 @@ object Dialect {
 
   /** DuckDB string literals are RAW (standard SQL): '\d' is
     * backslash+d, never an escape — Spark's default lexer would
-    * silently eat the backslash from every client regex (GapProbe14
+    * silently eat the backslash from every client regex (probe batch 14
     * found regexp_extract matching nothing where DuckDB matches).
     * Doubling each backslash inside plain '…' literals makes Spark's
     * unescaping restore the raw content, while `''` doubling keeps its
@@ -2551,6 +2551,17 @@ object Dialect {
       }
     }
     -1
+  }
+
+  /** `sql` without its leading whitespace and comments (a leading
+    * literal or quoted identifier stays: only comments are dropped).
+    */
+  private[graft] def dropLeadingComments(sql: String): String = {
+    var i = 0
+    while (i < sql.length && (sql.charAt(i).isWhitespace ||
+        sql.startsWith("--", i) || sql.startsWith("/*", i)))
+      i = if (sql.charAt(i).isWhitespace) i + 1 else consumeOpaque(sql, i, null)
+    sql.substring(i)
   }
 
   /** scanCode's copying form: rebuild `sql`, copying literals, quoted

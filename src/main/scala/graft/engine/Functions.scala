@@ -53,7 +53,7 @@ object Functions {
   /** strftime with the C-library specifiers Spark's proleptic
     * date_format REFUSES as patterns (the week-based family) computed
     * as expressions, everything else as date_format runs. C semantics
-    * verified against DuckDB 1.0 (GapProbe14):
+    * verified against DuckDB 1.0 (probe batch 14):
     *  %W/%U = weeks since Jan 1 counting from the first Monday/Sunday
     *  (zero-padded 2), %u ISO weekday 1-7, %w weekday 0-6 Sunday=0,
     *  %V ISO week, %G ISO year (year of the week's Thursday), and the
@@ -699,7 +699,7 @@ object Functions {
     // the JSON). Spark structs accept empty/duplicate field names.
     "row" -> (a => CreateNamedStruct(
       a.flatMap(e => Seq(Literal(""), e)))),
-    // list-family aliases surfaced by GapProbe8 (BIGINT results, like
+    // list-family aliases surfaced by probe batch 8 (BIGINT results, like
     // DuckDB's len family)
     "array_concat" -> (a => nullSkippingListConcat(a)),
     "array_length" -> {
@@ -1448,14 +1448,14 @@ object Functions {
     */
   private val overrides: Seq[(String, PartialFunction[Seq[Expression], Expression])] = Seq(
     // DuckDB log(x) is LOG BASE 10 (Spark's 1-arg log is ln — a silent
-    // VALUE divergence, caught by GapProbe6); 2-arg log(b, x) agrees
+    // VALUE divergence, caught by probe batch 6); 2-arg log(b, x) agrees
     "log" -> {
       case Seq(x) => Log10(x)
       case Seq(b, x) => Logarithm(b, x)
     },
     // DuckDB dayname/monthname return FULL names ('Saturday', 'June');
     // Spark 4's builtins abbreviate ('Sat', 'Jun') — a silent value
-    // divergence caught by GapProbe13
+    // divergence caught by probe batch 13
     // DuckDB hash() is UBIGINT (64-bit); Spark's builtin is a 32-bit
     // INT — match the TYPE (unsigned 64-bit via the DECIMAL(20,0)
     // carrier, xxhash64 kernel). VALUES are engine-defined on both
@@ -1633,7 +1633,7 @@ object Functions {
     },
     // DuckDB factorial returns HUGEINT (21!..33! are values, not the
     // NULL Spark's BIGINT builtin degrades to) — DECIMAL(38,0) carrier,
-    // same as every other HUGEINT in the dialect (GapProbe6 residual)
+    // same as every other HUGEINT in the dialect (probe batch 6 residual)
     "factorial" -> {
       case Seq(x) => graft.engine.expressions.Factorial38(
         Cast(x, org.apache.spark.sql.types.LongType))
@@ -1803,7 +1803,7 @@ object Functions {
       case Seq(x, n) => StringRepeat(x, n)
     },
     // DuckDB regexp_replace: flagless replaces the FIRST match only
-    // (Spark's builtin replaces all — GapProbe14 caught the value
+    // (Spark's builtin replaces all — probe batch 14 caught the value
     // divergence); the options string adds g/i/s/m/n/p/l/c, and
     // replacement backrefs use RE2 `\1` syntax. All of it lives in the
     // RegexOps kernel (StaticInvoke, codegen-resident, memoized

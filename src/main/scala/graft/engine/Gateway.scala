@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.matching.Regex
 
 /** The serving surface: SQL-string in → DataFrame / Arrow batches out,
   * mirroring the reference's DoGet contract
@@ -123,10 +124,24 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     } finally session.catalog.dropTempView(tmp)
   }
 
+  /** The read-only gateway's first gate, on the statement's leading
+    * keyword (past comments and any opening parentheses, as in
+    * `(SELECT …) UNION ALL (SELECT …)`); ReadOnlyGuard still checks the
+    * parsed plan.
+    */
+  private def requireReadOnly(stmt: String): Unit = if (readOnly) {
+    val up = Dialect.dropLeadingComments(stmt)
+      .dropWhile(c => c == '(' || c.isWhitespace).toUpperCase
+    if (!readOnlyAllowed.exists(up.startsWith))
+      throw new GatewayException(
+        s"read-only gateway: statement rejected (${up.takeWhile(_ != ' ')})")
+  }
+
   def sql(text: String): DataFrame = {
     // fold `$$…$$` and `e'…'` strings first: every scan below
-    // (Dialect.scanCode) knows only plain '…' literals
-    val preVar = Dialect.foldLiterals(text.trim)
+    // (Dialect.scanCode) knows only plain '…' literals. Then drop leading
+    // comments, so the anchored routes below see the statement's first word
+    val preVar = Dialect.dropLeadingComments(Dialect.foldLiterals(text.trim))
     // DuckDB 1.1 session variables (SURVEY §5.3): SET VARIABLE
     // evaluates its expression EAGERLY through the full pipeline and
     // stores the result as SQL literal text; getvariable('x') is then
@@ -173,7 +188,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     // like DuckDB read-only sessions. CHECKPOINT included: DuckDB 1.0
     // runs it successfully on a read-only database (nothing to flush,
     // empty `Success BOOLEAN` relation — verified against the oracle),
-    // so rejecting it was a needless divergence (GapProbe5 residual).
+    // so rejecting it was a needless divergence (probe batch 5).
     trimmed match {
       case txnRe(_*) | maintRe(_*) =>
         return success
@@ -435,13 +450,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
         return Seq((name, location)).toDF("attached", "location")
       case _ =>
     }
-    if (readOnly) {
-      val up = expanded.toUpperCase
-      if (!readOnlyAllowed.exists(up.startsWith)) {
-        throw new GatewayException(
-          s"read-only gateway: statement rejected (${up.takeWhile(_ != ' ')})")
-      }
-    }
+    requireReadOnly(expanded)
     // the session's parser (GraftSqlParser) applies Dialect.rewrite; the
     // routing below reads the pre-parse text
     val stmt = rewriteFileReads(expanded)
@@ -457,12 +466,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
         catch { case _: IllegalArgumentException => None }
       parsed match {
         case Some(p) if RecursiveSql.needsFixpoint(p) =>
-          if (readOnly) {
-            val up = p.outer.toUpperCase
-            if (!readOnlyAllowed.exists(up.startsWith))
-              throw new GatewayException(
-                s"read-only gateway: statement rejected (${up.takeWhile(_ != ' ')})")
-          }
+          requireReadOnly(p.outer)
           return RecursiveSql.run(session, p)
         case _ => // native parser handles it (or reports the real error)
       }
@@ -647,96 +651,95 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       })
     }
 
-  private def rewriteFileReads(sql: String): String = {
-    // read_xxx(…) calls: full argument split (options carry nested
-    // ['lists'] and {'structs'} a [^)]* regex mis-scans)
-    val viaFn = {
-      val out = new StringBuilder
-      var last = 0
-      val ms = readFnHeadRe.findAllMatchIn(sql).toSeq
-      for (m <- ms) {
-        if (m.start >= last) {
-          Dialect.splitCallArgsPublic(sql, m.end) match {
-            case Some((args, end)) if args.nonEmpty =>
-              val kind = Option(m.group(2)).getOrElse("parquet")
-                .toLowerCase match {
-                case "csv_auto" | "csv" => "csv"
-                case "json_auto" | "json" | "ndjson_auto" | "ndjson" => "json"
-                case "text" => "text"
-                case "blob" => "blob"
-                case _ => "parquet" // read_parquet and the parquet_scan alias
-              }
-              val litRe = """'((?:[^']|'')*)'""".r
-              // splitCallArgs tracks parens but not {}/[]: re-merge args
-              // the columns={'a':'T','b':'U'} struct and ['p1','p2']
-              // list forms split at their inner commas (balance count
-              // outside literals)
-              def braceBalance(s: String): Int = {
-                var d = 0
-                Dialect.scanCode(s) { (i, _) =>
-                  s.charAt(i) match {
-                    case '{' | '[' => d += 1
-                    case '}' | ']' => d -= 1
-                    case _ =>
-                  }
-                  i
-                }
-                d
-              }
-              val merged = args.foldLeft(List.empty[String]) { (acc, a) =>
-                acc match {
-                  case h :: t if braceBalance(h) > 0 => (h + "," + a) :: t
-                  case _ => a :: acc
-                }
-              }.reverse
-              val paths = {
-                val a0 = merged.head.trim
-                if (a0.startsWith("["))
-                  litRe.findAllMatchIn(a0).map(_.group(1)).toSeq
-                else litRe.findPrefixMatchOf(a0).map(_.group(1)).toSeq
-              }
-              val optRe = """(?s)^\s*([A-Za-z_]+)\s*=\s*(.*)$""".r
-              val opts = merged.tail.flatMap {
-                case optRe(k, v) => Some(k.toLowerCase -> v.trim)
-                case _ => None
-              }
-              if (paths.isEmpty || opts.length != merged.tail.length) {
-                // non-literal path or unrecognized arg shape: leave the
-                // call text as-is (it will surface a resolution error
-                // naming the function, not silently mis-read)
-                out.append(sql.substring(last, end)); last = end
-              } else {
-                out.append(sql.substring(last, m.start))
-                out.append(s"${m.group(1)} ${fileView(paths, Some(kind), opts)}")
-                last = end
-              }
-            case _ => // not a call — leave untouched
-          }
-        }
+  /** File reads and FROM-position table functions → registered views.
+    * Each route matches only where FROM/JOIN stands in code, never
+    * inside a literal or a comment.
+    */
+  private def rewriteFileReads(sql: String): String =
+    Dialect.scanOutsideLiterals(sql) { (i, sb) =>
+      if (!Dialect.keywordAt(sql, i, "FROM") && !Dialect.keywordAt(sql, i, "JOIN")) i
+      else {
+        val rest = sql.subSequence(i, sql.length)
+        def route(re: Regex)(f: Regex.Match => String): Option[Int] =
+          re.findPrefixMatchOf(rest).map { m => sb.append(f(m)); i + m.end }
+        readFnHeadRe.findPrefixMatchOf(rest).flatMap(m => readCall(sql, i, m, sb))
+          // glob('pattern') table function: one `file` column, driver-side
+          // Hadoop FS listing (works for local paths and any configured
+          // remote FS), memoized per pattern like the file views
+          .orElse(route(globFnRe)(m => s"${m.group(1)} ${globView(m.group(2))}"))
+          // FROM pragma_version() → the registered one-row view
+          .orElse(route(pragmaVersionFnRe)(m => s"${m.group(1)} graft_pragma_version"))
+          // FROM repeat('s', n): n rows of 's', column named by the value
+          // (DuckDB's repeat table function — r10 audit)
+          .orElse(route(repeatFnRe) { m =>
+            val s = m.group(2)
+            val colName = s.replace("''", "'").replace("`", "")
+            s"${m.group(1)} (SELECT '$s' AS `$colName` FROM range(${m.group(3)}))"
+          })
+          .orElse(route(fileFromRe)(m =>
+            s"${m.group(1)} ${fileView(Seq(m.group(2)), None, Nil)}"))
+          .getOrElse(i)
       }
-      out.append(sql.substring(last)).toString
     }
-    // glob('pattern') table function: one `file` column, driver-side
-    // Hadoop FS listing (works for local paths and any configured
-    // remote FS), memoized per pattern like the file views
-    val viaGlob = globFnRe.replaceAllIn(viaFn, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"${m.group(1)} ${globView(m.group(2))}"))
-    // FROM pragma_version() → the registered one-row view
-    val viaPragma = pragmaVersionFnRe.replaceAllIn(viaGlob,
-      m => s"${m.group(1)} graft_pragma_version")
-    // FROM repeat('s', n): n rows of 's', column named by the value
-    // (DuckDB's repeat table function — r10 audit)
-    val viaRepeat = repeatFnRe.replaceAllIn(viaPragma, m => {
-      val s = m.group(2)
-      val colName = s.replace("''", "'").replace("`", "")
-      java.util.regex.Matcher.quoteReplacement(
-        s"${m.group(1)} (SELECT '$s' AS `$colName` FROM range(${m.group(3)}))")
-    })
-    fileFromRe.replaceAllIn(viaRepeat, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"${m.group(1)} ${fileView(Seq(m.group(2)), None, Nil)}"))
-  }
+
+  /** A `read_xxx(…)` call whose head `m` matched at `i`: full argument
+    * split (options carry nested ['lists'] and {'structs'} a [^)]*
+    * regex mis-scans). Appends the view (or, for a non-literal path or
+    * an unrecognized argument shape, the call text as-is: it will
+    * surface a resolution error naming the function, not silently
+    * mis-read) and returns the index past the call; None when the head
+    * is not a call.
+    */
+  private def readCall(sql: String, i: Int, m: Regex.Match,
+      sb: StringBuilder): Option[Int] =
+    Dialect.splitCallArgsPublic(sql, i + m.end).collect {
+      case (args, end) if args.nonEmpty =>
+        val kind = Option(m.group(2)).getOrElse("parquet").toLowerCase match {
+          case "csv_auto" | "csv" => "csv"
+          case "json_auto" | "json" | "ndjson_auto" | "ndjson" => "json"
+          case "text" => "text"
+          case "blob" => "blob"
+          case _ => "parquet" // read_parquet and the parquet_scan alias
+        }
+        val litRe = """'((?:[^']|'')*)'""".r
+        // splitCallArgs tracks parens but not {}/[]: re-merge args
+        // the columns={'a':'T','b':'U'} struct and ['p1','p2']
+        // list forms split at their inner commas (balance count
+        // outside literals)
+        def braceBalance(s: String): Int = {
+          var d = 0
+          Dialect.scanCode(s) { (j, _) =>
+            s.charAt(j) match {
+              case '{' | '[' => d += 1
+              case '}' | ']' => d -= 1
+              case _ =>
+            }
+            j
+          }
+          d
+        }
+        val merged = args.foldLeft(List.empty[String]) { (acc, a) =>
+          acc match {
+            case h :: t if braceBalance(h) > 0 => (h + "," + a) :: t
+            case _ => a :: acc
+          }
+        }.reverse
+        val paths = {
+          val a0 = merged.head.trim
+          if (a0.startsWith("["))
+            litRe.findAllMatchIn(a0).map(_.group(1)).toSeq
+          else litRe.findPrefixMatchOf(a0).map(_.group(1)).toSeq
+        }
+        val optRe = """(?s)^\s*([A-Za-z_]+)\s*=\s*(.*)$""".r
+        val opts = merged.tail.flatMap {
+          case optRe(k, v) => Some(k.toLowerCase -> v.trim)
+          case _ => None
+        }
+        if (paths.isEmpty || opts.length != merged.tail.length)
+          sb.append(sql.substring(i, end))
+        else sb.append(s"${m.group(1)} ${fileView(paths, Some(kind), opts)}")
+        end
+    }
 
   /** Parquet footer introspection (DuckDB's parquet_schema/metadata
     * family, r10 audit): a bounded driver-side footer read of the NAMED

@@ -69,10 +69,8 @@ object Tables {
         // relations), 32-task stages of 5-9 s cumulative task time fell
         // to 2-task stages of ~0.2 s, steady-state 2.76 s → 1.45 s.
         // Scale-neutral: AQE sizes partitions by bytes either way.
-        // SPARK_GRAFT_CACHED_AQE=false restores the Spark default.
         spark.conf.set(
-          "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-          sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"))
+          "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         names.foreach { n => load(spark, dir, n).createOrReplaceTempView(n) }
         current.put(spark, dir)
       }

@@ -6,7 +6,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * printable ASCII bytes pass through literally EXCEPT backslash and
   * single-quote; every other byte — controls, 0x7F+, multi-byte UTF-8 —
   * renders as `\xHH` with uppercase hex. Verified byte-for-byte against
-  * DuckDB 1.0 (GapProbe13: `\x5C`/`\x27` escape, space literal, `é` →
+  * DuckDB 1.0 (probe batch 13: `\x5C`/`\x27` escape, space literal, `é` →
   * `\xC3\xA9`). Invoked from the BlobVarcharCast resolution rule via
   * StaticInvoke, so the cast stays inside whole-stage codegen.
   */

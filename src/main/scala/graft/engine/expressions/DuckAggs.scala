@@ -262,7 +262,7 @@ case class MadAgg(
 
 /** DuckDB `json_group_structure(j)`: the unified `json_structure` of
   * every value in the group. Semantics pinned against DuckDB 1.0
-  * (GapProbe sweeps): SQL NULL rows contribute the `"NULL"` type (a
+  * (dialect probe sweeps): SQL NULL rows contribute the `"NULL"` type (a
   * single-NULL group answers `"NULL"`, not SQL NULL), the NULL type
   * absorbs into anything, numerics widen UBIGINT<BIGINT<DOUBLE, objects
   * merge keys in first-seen order, array elements unify, any other

@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
   * as static methods invoked from Catalyst `StaticInvoke` shims in
   * [[graft.engine.Functions]] — codegen-friendly, no UDF registry.
   *
-  * Semantics pinned against DuckDB 1.x (see GapProbe7):
+  * Semantics pinned against DuckDB 1.x (see probe batch 7):
   *  - json_type: OBJECT/ARRAY/VARCHAR/BOOLEAN/DOUBLE/NULL, integers
   *    split into UBIGINT (>= 0) vs BIGINT (< 0)
   *  - json_structure: leaves become type-name strings; array elements

@@ -5,7 +5,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** DuckDB-semantics regexp_replace: flagless replaces the FIRST match
   * only (Spark's builtin always replaces all — a silent value
-  * divergence, GapProbe14); the options string adds 'g' (global), 'i'
+  * divergence, probe batch 14); the options string adds 'g' (global), 'i'
   * (case-insensitive), 's' (dot matches newline), 'm'/'n'/'p'
   * (multiline), 'l' (literal pattern), 'c' (explicit case-sensitive,
   * the default). Replacement backreferences use DuckDB/RE2 `\1` syntax

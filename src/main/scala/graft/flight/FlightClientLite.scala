@@ -108,14 +108,11 @@ final case class FlightResult(
 
 object FlightResult {
 
-  /** Re-join FlightData (header, body) pairs into an IPC stream and read
-    * it back with the stock arrow reader.
-    */
   /** One FlightData re-framed as an encapsulated IPC message:
     * continuation marker + LE metadata length + header + body — the
     * exact inverse of FlightServer.splitIpc. Shared by the result
-    * decoder below and the remote-catalog reader so the framing can
-    * never skew between them.
+    * decoder below, the remote-catalog reader and the server's DoPut
+    * parameter decode so the framing can never skew between them.
     */
   def encapsulate(d: FlightProto.FlightData): Array[Byte] = {
     // IPC spec: the body must start on an 8-byte boundary, and the
@@ -137,10 +134,13 @@ object FlightResult {
     out.toByteArray
   }
 
+  /** Re-join FlightData (header, body) pairs into an IPC stream and read
+    * it back with the stock arrow reader.
+    */
   def fromFlightData(datas: Seq[FlightProto.FlightData]): FlightResult = {
     val baos = new java.io.ByteArrayOutputStream()
     datas.foreach(d => baos.write(encapsulate(d)))
-    baos.write(Array[Byte](-1, -1, -1, -1, 0, 0, 0, 0)) // EOS
+    baos.write(org.apache.spark.sql.GraftArrow.EOS)
     val alloc = new RootAllocator()
     val reader = new ArrowStreamReader(
       new java.io.ByteArrayInputStream(baos.toByteArray), alloc)

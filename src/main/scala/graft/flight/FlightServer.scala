@@ -428,7 +428,7 @@ final class FlightServer(gateway: Gateway, port: Int) {
     */
   private def decodeParamLiterals(messages: Seq[FlightData]): Seq[String] = {
     import org.apache.spark.sql.{GraftArrow => GA}
-    val encapsulated = messages.map(m => encapsulate(m.dataHeader, m.dataBody))
+    val encapsulated = messages.map(FlightResult.encapsulate)
       .filterNot(isEos)
     if (encapsulated.isEmpty)
       throw new GatewayException(
@@ -621,28 +621,9 @@ object FlightServer {
     (header, body)
   }
 
-  /** Inverse of [[splitIpc]]: rebuild an IPC-encapsulated message from
-    * FlightData's (metadata, body) halves — continuation marker, int32
-    * LE metadata length (8-byte padded), metadata, padding, body.
-    */
-  def encapsulate(header: Array[Byte], body: Array[Byte]): Array[Byte] = {
-    val pad = (8 - (header.length % 8)) % 8
-    val bb = ByteBuffer.allocate(8 + header.length + pad + body.length)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(-1)
-    bb.putInt(header.length + pad)
-    bb.put(header)
-    bb.position(bb.position() + pad)
-    bb.put(body)
-    bb.array()
-  }
-
   /** An IPC end-of-stream marker (continuation + zero length): Flight
     * signals completion via gRPC, not an EOS message.
     */
   def isEos(chunk: Array[Byte]): Boolean =
-    chunk.length == 8 && {
-      val bb = ByteBuffer.wrap(chunk).order(ByteOrder.LITTLE_ENDIAN)
-      bb.getInt() == -1 && bb.getInt() == 0
-    }
+    java.util.Arrays.equals(chunk, org.apache.spark.sql.GraftArrow.EOS)
 }

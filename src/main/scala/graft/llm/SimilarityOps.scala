@@ -1019,9 +1019,7 @@ object SimilarityOps {
     // old 128 pin was only re-validated down to 32-wide on a 32-core
     // host, so a smaller-core deployment keeps at least that validated
     // spread instead of trusting the per-key-buffering argument alone.
-    // Env override for re-sweeps.
-    val P = sys.env.get("SPARK_GRAFT_KNN_PARTS").flatMap(_.toIntOption)
-      .getOrElse(math.max(32, s.sparkContext.defaultParallelism))
+    val P = math.max(32, s.sparkContext.defaultParallelism)
     val pairs = a.repartition(P, col("label"), col("cb"))
       .join(b.repartition(P, col("lb"), col("nbc")),
         col("label") === col("lb") && col("cb") === col("nbc") &&
@@ -1084,18 +1082,16 @@ object SimilarityOps {
     * path pays (1 + [[CoarseGroupProbes]])·√nlists per row. At or
     * below the threshold brute is both absolutely faster and bit-exact
     * with the declared queries' oracles (every fixture constant sits
-    * far below it). Env-tunable for sweeps.
+    * far below it).
     */
-  private[graft] val CoarseAssignAbove: Int =
-    sys.env.getOrElse("SPARK_GRAFT_COARSE_ASSIGN_ABOVE", "1024").toInt
+  private[graft] val CoarseAssignAbove: Int = 1024
 
   /** Group-probe width for the coarse assignment — the measured
     * equality knob (CoarseAssignSpec pins the rate vs brute; gProbes =
     * G is provably exact). 8 of ⌈√nlists⌉ groups ≈ 21% of groups at
     * the 1414-list tier.
     */
-  private[graft] val CoarseGroupProbes: Int =
-    sys.env.getOrElse("SPARK_GRAFT_COARSE_PROBES", "8").toInt
+  private[graft] val CoarseGroupProbes: Int = 8
 
   /** Recall-targeted probe width (r17 VERDICT wrong-#3): the ingest
     * face's DEFAULT nprobe previously tracked a fixed probe SHARE
@@ -1273,9 +1269,7 @@ object SimilarityOps {
     // as labelKnn's P — see OPTIMIZATION_r18.md); per-task buffering is
     // bounded by the per-list membership, not P. Floored at 32 (r19,
     // ADVICE) — same validated-spread rationale as labelKnn's P.
-    // Env override re-sweeps.
-    val P = sys.env.get("SPARK_GRAFT_KNN_PARTS").flatMap(_.toIntOption)
-      .getOrElse(math.max(32, s.sparkContext.defaultParallelism))
+    val P = math.max(32, s.sparkContext.defaultParallelism)
     // SYMMETRIC candidate emission (r12): a matched ordered pair
     // a→b (home(b) ∈ probes(a)) costs ONE dot product but certifies
     // BOTH edges of the unordered pair — per-vector coverage becomes

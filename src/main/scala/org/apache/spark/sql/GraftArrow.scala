@@ -12,7 +12,7 @@ object GraftArrow {
   /** Arrow IPC end-of-stream marker: continuation bytes + zero length —
     * readers on persistent connections need it to detect result end.
     */
-  private val EOS: Array[Byte] =
+  val EOS: Array[Byte] =
     Array(0xff.toByte, 0xff.toByte, 0xff.toByte, 0xff.toByte, 0, 0, 0, 0)
 
   /** Serialize a DataFrame result as an Arrow IPC stream: schema message

@@ -101,6 +101,11 @@ class FlightSpec extends AnyFunSuite {
     assert(e.getMessage.contains("PERMISSION_DENIED"))
   }
 
+  test("DoGet: a statement behind a leading comment is served, not rejected") {
+    val r = client.doGetSql("/* tag */ SELECT 1 AS a")
+    assert(r.rows.map(_.head.toString) == Seq("1"))
+  }
+
   test("invalid SQL surfaces INVALID_ARGUMENT, not a broken stream") {
     val e = intercept[Exception](client.doGetSql("SELECT FROM WHERE"))
     assert(e.getMessage.contains("INVALID_ARGUMENT") ||

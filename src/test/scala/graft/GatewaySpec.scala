@@ -1805,7 +1805,7 @@ class GatewaySpec extends AnyFunSuite {
   test("round-8: CHECKPOINT succeeds as a read-only no-op, like DuckDB") {
     // DuckDB 1.0 on a read_only database RUNS CHECKPOINT (empty
     // `Success BOOLEAN` relation — nothing to flush); rejecting it was
-    // a divergence (GapProbe5 residual)
+    // a divergence (probe batch 5 residual)
     for (stmt <- Seq("CHECKPOINT", "FORCE CHECKPOINT", "CHECKPOINT;")) {
       val df = gw.sql(stmt)
       assert(df.columns.toSeq == Seq("Success"))
@@ -2185,5 +2185,22 @@ class GatewaySpec extends AnyFunSuite {
         |SELECT n, s FROM r ORDER BY n""".stripMargin).collect()
     assert(rows.map(r => (r.getInt(0), r.getString(1))).toSeq ==
       Seq((1, "it's (x"), (2, "it's (x"), (3, "it's (x")))
+  }
+
+  test("a leading comment or parenthesis does not hide the statement's first word") {
+    def ints(q: String) = gw.sql(q).collect().map(_.getInt(0)).toSeq
+    assert(ints("/* tag */ SELECT 1 AS a") == Seq(1))
+    assert(ints("-- lead\nSELECT 1 AS a") == Seq(1))
+    assert(ints("(SELECT 1 AS a) UNION ALL (SELECT 2 AS a)").sorted == Seq(1, 2))
+    // the engine reports its own version: only that it runs is pinned
+    assert(gw.sql("/* c */ PRAGMA version").collect().length == 1)
+    // and the read-only gate still sees a write behind a comment
+    assertThrows[GatewayException](gw.sql("/* c */ DROP TABLE nation"))
+  }
+
+  test("file-read routes skip FROM and JOIN inside comments") {
+    def ints(q: String) = gw.sql(q).collect().map(_.getInt(0)).toSeq
+    assert(ints("SELECT 1 AS a -- FROM 'missing.parquet'") == Seq(1))
+    assert(ints("SELECT 1 AS a /* JOIN read_csv('missing.csv') */") == Seq(1))
   }
 }
