@@ -352,7 +352,7 @@ object Bench {
     // (q9/q21/j6_ineq class) so they no longer start in the LAST wave.
     val heavyFirst = Seq(
       "dd_", "tx_span_", "pipe_span_", "pipe_compact", "t6_recursive_", "a4_", "a9_", "a10_", "a14_", "tx_lang_",
-      "q9_", "q21_", "j6_ineq", "q2_", "tx_decontaminate", "tx_dup_coverage",
+      "q9_", "q21_", "j6_ineq_join", "q2_", "tx_decontaminate", "tx_dup_coverage",
       "w5_", "w6_", "w4_", "w3_", "w1_", "w7_", "w2_", "w8_",
       "f_datetime", "nn_", "q5_", "j1_", "t3_", "t4_", "tx_boilerplate")
     def costClass(n: String): Int = {

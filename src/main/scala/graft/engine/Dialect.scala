@@ -27,7 +27,7 @@ object Dialect {
     */
   private val passes: Seq[String => String] = Seq(
     foldLiterals, // FIRST: later scanners assume '…' string syntax
-    normalizeWs, rewriteBlob, rewriteBitCasts, rewriteArrayTypeSuffix,
+    normalizeWs, rewriteBlob, rewriteArrayTypeSuffix,
     rewriteTrailingCommas, rewriteEmptyGroupBy,
     rewriteBraceLiterals, rewriteArrayCtor, rewriteBrackets,
     rewriteNamedArgCalls, rewriteIgnoreNulls,
@@ -40,7 +40,7 @@ object Dialect {
     rewritePercentileDisc, rewriteStarModifiers,
     rewriteDistinctOn, rewriteAsOf, rewriteExcludeFrames, rewriteGroupsFrame,
     rewriteQualify, rewriteCatalogFns,
-    rewriteDateDiff, rewriteJsonCastType, rewriteCastTypes, rewriteFetchFirst,
+    rewriteDateDiff, rewriteCastCalls, rewriteCastTypes, rewriteFetchFirst,
     rewriteQueryTable, rewriteFillWindow, rewriteIcuCollate)
 
   def rewrite(sql: String): String =
@@ -227,43 +227,18 @@ object Dialect {
   private val trailingCommaStops = Set(
     "FROM", "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT",
     "WINDOW", "QUALIFY", "UNION", "EXCEPT", "INTERSECT")
-  private def rewriteTrailingCommas(sql: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    var changed = false
-    while (i < sql.length) {
-      val opaque = consumeOpaque(sql, i, sb)
-      if (opaque > i) i = opaque
-      else if (sql.charAt(i) == ',') {
+  private def rewriteTrailingCommas(sql: String): String =
+    scanOutsideLiterals(sql) { (i, _) =>
+      if (sql.charAt(i) != ',') i
+      else {
         // peek past whitespace and comments only (a string literal
         // after a comma is a REAL next element)
-        var j = i + 1
-        var moved = true
-        while (moved) {
-          moved = false
-          while (j < sql.length && sql.charAt(j).isWhitespace) { j += 1; moved = true }
-          if (j < sql.length &&
-              (sql.startsWith("--", j) || sql.startsWith("/*", j))) {
-            val o = consumeOpaque(sql, j, null)
-            if (o > j) { j = o; moved = true }
-          }
-        }
-        val atStop =
-          j >= sql.length || ")]};".contains(sql.charAt(j)) || {
-            val w = new StringBuilder
-            var k = j
-            while (k < sql.length &&
-                (sql.charAt(k).isLetter || sql.charAt(k) == '_')) {
-              w.append(sql.charAt(k)); k += 1
-            }
-            trailingCommaStops.contains(w.toString.toUpperCase)
-          }
-        if (atStop) { changed = true; i += 1 } // drop the comma
-        else { sb.append(','); i += 1 }
-      } else { sb.append(sql.charAt(i)); i += 1 }
+        val j = skipBlank(sql, i + 1)
+        val atStop = j >= sql.length || ")]};".contains(sql.charAt(j)) ||
+          trailingCommaStops.contains(sql.substring(j, wordEnd(sql, j)).toUpperCase)
+        if (atStop) i + 1 else i // i + 1 with nothing appended drops the comma
+      }
     }
-    if (changed) sb.toString else sql
-  }
 
   /** DuckDB `GROUP BY ()` (the empty grouping set → one global group)
     * → Spark's `GROUP BY GROUPING SETS (())`.
@@ -288,40 +263,28 @@ object Dialect {
     * Only fires straight after a `*`, so the replace() function and
     * window EXCLUDE frames are untouched.
     */
-  private def rewriteStarModifiers(sql: String): String = {
-    val up = sql.toUpperCase
-    var i = 0
-    while (i < sql.length) {
-      val opaque = consumeOpaque(sql, i, null)
-      if (opaque > i) i = opaque
-      else {
-        val afterStar = {
-          var k = i - 1
-          while (k >= 0 && sql.charAt(k).isWhitespace) k -= 1
-          k >= 0 && sql.charAt(k) == '*'
-        }
-        if (afterStar && wordStart(sql, i) && up.startsWith("EXCLUDE", i)) {
-          return rewriteStarModifiers(
-            sql.substring(0, i) + "EXCEPT" + sql.substring(i + 7))
-        } else if (afterStar && wordStart(sql, i) && up.startsWith("REPLACE", i)) {
-          splitCallArgs(sql, i + 7) match {
-            case Some((args, end)) =>
-              val parts = args.map { a =>
-                val asAt = a.toUpperCase.lastIndexOf(" AS ")
-                require(asAt >= 0, s"* REPLACE entry needs AS: $a")
-                (a.substring(asAt + 4).trim, a.trim)
-              }
-              val except = parts.map(_._1).mkString("EXCEPT (", ", ", ")")
-              val appended = parts.map(_._2).mkString(", ")
-              return rewriteStarModifiers(
-                sql.substring(0, i) + except + ", " + appended + sql.substring(end))
-            case None => i += 7
-          }
-        } else i += 1
+  private def rewriteStarModifiers(sql: String): String =
+    scanOutsideLiterals(sql) { (i, sb) =>
+      def afterStar = {
+        var k = i - 1
+        while (k >= 0 && sql.charAt(k).isWhitespace) k -= 1
+        k >= 0 && sql.charAt(k) == '*'
       }
+      if (keywordAt(sql, i, "EXCLUDE") && afterStar) { sb.append("EXCEPT"); i + 7 }
+      else if (keywordAt(sql, i, "REPLACE") && afterStar) splitCallArgs(sql, i + 7) match {
+        case Some((args, end)) =>
+          val parts = args.map { a =>
+            val asAt = a.toUpperCase.lastIndexOf(" AS ")
+            require(asAt >= 0, s"* REPLACE entry needs AS: $a")
+            (a.substring(asAt + 4).trim, a.trim)
+          }
+          sb.append(parts.map(_._1).mkString("EXCEPT (", ", ", "), "))
+            .append(rewriteStarModifiers(parts.map(_._2).mkString(", ")))
+          end
+        case None => i
+      }
+      else i
     }
-    sql
-  }
 
   /** PostgreSQL/DuckDB `SELECT DISTINCT ON (keys) list … [ORDER BY o]`:
     * first row per key group in the query's order →
@@ -336,7 +299,7 @@ object Dialect {
     * nesting depth, innermost scope first (same discipline as QUALIFY).
     */
   private def rewriteDistinctOn(sql: String): String = {
-    val at = indexOfAnyDepth(sql, "DISTINCT ON")
+    val at = indexOfCode(sql, "DISTINCT ON", anyDepth = true)
     if (at < 0) return sql
     val (s0, e0) = scopeBounds(sql, at)
     val scope = sql.substring(s0, e0)
@@ -351,18 +314,18 @@ object Dialect {
         // strip "DISTINCT ON (...)" from the scope
         val base = scope.substring(0, rel) + scope.substring(afterKeys)
         // split off the trailing ORDER BY / LIMIT tail (top level)
-        val obAt = indexOfTopLevel(base, " ORDER BY ")
-        val limAt = indexOfTopLevel(base, " LIMIT ")
+        val obAt = indexOfCode(base, " ORDER BY ")
+        val limAt = indexOfCode(base, " LIMIT ")
         val tailAt = Seq(obAt, limAt).filter(_ >= 0).sorted.headOption.getOrElse(base.length)
         val head = base.substring(0, tailAt)
         val tail = base.substring(tailAt)
         val orderList =
           if (obAt >= 0) {
             val afterOb = base.substring(obAt + " ORDER BY ".length)
-            val stop = indexOfTopLevel(afterOb, " LIMIT ")
+            val stop = indexOfCode(afterOb, " LIMIT ")
             (if (stop >= 0) afterOb.substring(0, stop) else afterOb).trim
           } else keys.mkString(", ")
-        val fromAt = indexOfTopLevel(head, " FROM ")
+        val fromAt = indexOfCode(head, " FROM ")
         require(fromAt >= 0, "DISTINCT ON: no FROM clause in scope")
         val inner = head.substring(0, fromAt) +
           s", row_number() OVER (PARTITION BY ${keys.mkString(", ")} " +
@@ -399,19 +362,12 @@ object Dialect {
     var guard = 0
     while (guard < 64) {
       guard += 1
-      var open = -1
-      var close = -1
-      var i = 0
-      while (i < cur.length && close < 0) {
-        val opq = consumeOpaque(cur, i, null)
-        if (opq > i) i = opq
-        else {
-          cur.charAt(i) match {
-            case '{' => open = i
-            case '}' if open >= 0 => close = i
-            case _ =>
-          }
-          i += 1
+      var open = -1 // the innermost `{` before the first `}`
+      val close = scanCode(cur) { (i, _) =>
+        cur.charAt(i) match {
+          case '{' => open = i; i
+          case '}' if open >= 0 => -1
+          case _ => i
         }
       }
       if (close < 0) return cur
@@ -422,7 +378,7 @@ object Dialect {
         wordStart(cur, p - 2) && !cur.charAt(p - 2).isDigit
       val start = if (isMap) p - 2 else open
       val pairs = splitTopLevel(inner, ',').filter(_.trim.nonEmpty).map { pair =>
-        val ci = indexOfTopLevelChar(pair, ':')
+        val ci = indexOfCode(pair, ":")
         require(ci > 0, s"brace literal: missing ':' in '$pair'")
         val k = pair.substring(0, ci).trim
         val v = pair.substring(ci + 1).trim
@@ -435,51 +391,6 @@ object Dialect {
         ")" + cur.substring(close + 1)
     }
     cur
-  }
-
-  /** Split on `sep` at depth 0 (parens/brackets; quotes opaque). */
-  private def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var last = 0
-    var i = 0
-    while (i < s.length) {
-      val opq = consumeOpaque(s, i, null)
-      if (opq > i) i = opq
-      else {
-        s.charAt(i) match {
-          case '(' | '[' | '{' => depth += 1
-          case ')' | ']' | '}' => depth -= 1
-          case c if c == sep && depth == 0 =>
-            out += s.substring(last, i); last = i + 1
-          case _ =>
-        }
-        i += 1
-      }
-    }
-    out += s.substring(last)
-    out.result()
-  }
-
-  /** First depth-0 occurrence of `c` (skipping `::` when c == ':'). */
-  private def indexOfTopLevelChar(s: String, c: Char): Int = {
-    var depth = 0
-    var i = 0
-    while (i < s.length) {
-      val opq = consumeOpaque(s, i, null)
-      if (opq > i) i = opq
-      else {
-        val ch = s.charAt(i)
-        if (ch == '(' || ch == '[' || ch == '{') depth += 1
-        else if (ch == ')' || ch == ']' || ch == '}') depth -= 1
-        else if (ch == c && depth == 0) {
-          if (c == ':' && i + 1 < s.length && s.charAt(i + 1) == ':') i += 1
-          else return i
-        }
-        i += 1
-      }
-    }
-    -1
   }
 
   /** DuckDB sampling → Spark TABLESAMPLE:
@@ -548,22 +459,7 @@ object Dialect {
           }
           if (!valid(op) || !isSub) i
           else {
-            // matching close paren
-            var depth = 0
-            var e = m
-            var end = -1
-            while (e < sql.length && end < 0) {
-              val opq = consumeOpaque(sql, e, null)
-              if (opq > e) e = opq
-              else {
-                sql.charAt(e) match {
-                  case '(' => depth += 1
-                  case ')' => depth -= 1; if (depth == 0) end = e
-                  case _ =>
-                }
-                e += 1
-              }
-            }
+            val end = closerOf(sql, m)
             if (end < 0) i
             else {
               val sub = sql.substring(m + 1, end)
@@ -627,12 +523,12 @@ object Dialect {
     * DuckDB's `\xHH` escapes decoded (Spark strings don't interpret
     * them); other `::BLOB` / `AS BLOB)` casts map to the BINARY type.
     */
-  private val blobLitRe = """(?i)'((?:[^']|'')*)'\s*::\s*BLOB\b""".r
+  private val blobLitRe = """'((?:[^']|'')*)'\s*""".r
+  private val blobCastRe = """(?i)^::\s*BLOB\b""".r
   private val blobLitCastRe =
     """(?i)CAST\s*\(\s*'((?:[^']|'')*)'\s+AS\s+BLOB\s*\)""".r
   // typed-literal form BLOB '…' (probe-19: Spark has no BLOB literal)
   private val blobTypedLitRe = """(?i)BLOB\s+'((?:[^']|'')*)'""".r
-  private val hexEscRe = """(?i)\\x([0-9a-f]{2})""".r
 
   private def literalToHex(lit: String): String = {
     val sb = new StringBuilder
@@ -655,174 +551,35 @@ object Dialect {
     sb.toString
   }
 
-  private def rewriteBlob(sql: String): String = {
-    // hand scan, NOT whole-string replaceAll: a `'…'::BLOB` shape inside
-    // a quoted identifier or comment must survive verbatim (the
-    // literal-safety property pins this). A string literal directly
-    // followed by ::BLOB IS the rewrite target, so the quote position
-    // tries the blob-literal match BEFORE consuming the literal opaquely.
-    val sb = new StringBuilder
-    val up = sql.toUpperCase
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'') {
-        blobLitRe.findPrefixMatchOf(sql.substring(i)) match {
-          case Some(m) =>
-            sb.append(s"unhex('${literalToHex(m.group(1))}')"); i += m.end
-          case None => i = consumeOpaque(sql, i, sb)
+  private def rewriteBlob(sql: String): String =
+    scanOutsideLiterals(sql) { (i, sb) =>
+      def unhexAt(re: scala.util.matching.Regex): Int =
+        re.findPrefixMatchOf(sql.substring(i)) match {
+          case Some(m) => sb.append(s"unhex('${literalToHex(m.group(1))}')"); i + m.end
+          case None => i
         }
-      } else if (c == '"' || sql.startsWith("--", i) || sql.startsWith("/*", i)) {
-        i = consumeOpaque(sql, i, sb)
-      } else if (up.startsWith("CAST", i) && wordStart(sql, i)) {
-        blobLitCastRe.findPrefixMatchOf(sql.substring(i)) match {
-          case Some(m) =>
-            sb.append(s"unhex('${literalToHex(m.group(1))}')"); i += m.end
-          case None => sb.append(c); i += 1
-        }
-      } else if (up.startsWith("BLOB", i) && wordStart(sql, i)) {
-        blobTypedLitRe.findPrefixMatchOf(sql.substring(i)) match {
-          case Some(m) =>
-            sb.append(s"unhex('${literalToHex(m.group(1))}')"); i += m.end
-          case None => sb.append(c); i += 1
-        }
-      } else if (sql.startsWith("::", i)) {
-        """(?i)^::\s*BLOB\b""".r.findPrefixMatchOf(sql.substring(i)) match {
-          case Some(m) => sb.append("::BINARY"); i += m.end
-          case None => sb.append(c); i += 1
-        }
-      } else if (up.startsWith("AS", i) && wordStart(sql, i)) {
+      if (sql.startsWith("::", i)) blobCastRe.findPrefixMatchOf(sql.substring(i)) match {
+        case Some(m) =>
+          // a string literal operand folds to its bytes
+          val emitted = sb.toString
+          val start = operandBefore(emitted, emitted.length)
+          blobLitRe.unapplySeq(if (start < 0) "" else emitted.substring(start)) match {
+            case Some(Seq(lit)) =>
+              sb.setLength(start); sb.append(s"unhex('${literalToHex(lit)}')")
+            case _ => sb.append("::BINARY")
+          }
+          i + m.end
+        case None => i
+      }
+      else if (keywordAt(sql, i, "CAST")) unhexAt(blobLitCastRe)
+      else if (keywordAt(sql, i, "BLOB")) unhexAt(blobTypedLitRe)
+      else if (keywordAt(sql, i, "AS"))
         """(?i)^AS\s+BLOB\s*\)""".r.findPrefixMatchOf(sql.substring(i)) match {
-          case Some(m) => sb.append("AS BINARY)"); i += m.end
-          case None => sb.append(c); i += 1
+          case Some(m) => sb.append("AS BINARY)"); i + m.end
+          case None => i
         }
-      } else { sb.append(c); i += 1 }
+      else i
     }
-    sb.toString
-  }
-
-  /** DuckDB BIT (bitstring) casts — `e::BIT` and `CAST(e AS BIT)` →
-    * `graft_bit(e)` (Functions kernel; the engine's BIT representation
-    * is a '0'/'1' STRING, SURVEY §1.4). Spark has no BIT type name, so
-    * the cast must become a call; the `::` operand is recovered by a
-    * bounded left scan over the primary expression (literal, number,
-    * dotted identifier, or balanced group with a call-name prefix) —
-    * an unrecognized shape is left for the parser to diagnose.
-    */
-  private def rewriteBitCasts(sql: String): String = {
-    val up = sql.toUpperCase
-    var i = 0
-    while (i < sql.length) {
-      val opq = consumeOpaque(sql, i, null)
-      if (opq > i) i = opq
-      else if (sql.startsWith("::", i)) {
-        var k = i + 2
-        while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-        var j = k
-        while (j < sql.length && (sql.charAt(j).isLetterOrDigit ||
-          sql.charAt(j) == '_')) j += 1
-        if (sql.substring(k, j).equalsIgnoreCase("BIT") &&
-            (j >= sql.length || sql.charAt(j) != '(')) {
-          val start = operandStart(sql, i)
-          if (start >= 0)
-            return rewriteBitCasts(sql.substring(0, start) + "graft_bit(" +
-              sql.substring(start, i) + ")" + sql.substring(j))
-          else i = j
-        } else i = j.max(i + 2)
-      } else if ((up.startsWith("TRY_CAST", i) || up.startsWith("CAST", i)) &&
-          wordStart(sql, i)) {
-        val nameLen = if (up.startsWith("TRY_CAST", i)) 8 else 4
-        var k = i + nameLen
-        while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-        if (k < sql.length && sql.charAt(k) == '(') {
-          splitCallArgs(sql, k) match {
-            case Some((_, end)) =>
-              val body = sql.substring(k + 1, end - 1)
-              """(?is)^(.*)\bAS\s+BIT\s*$""".r.findFirstMatchIn(body) match {
-                case Some(m) =>
-                  return rewriteBitCasts(sql.substring(0, i) +
-                    s"graft_bit(${m.group(1).trim})" + sql.substring(end))
-                case None => i = k + 1 // scan inside for nested casts
-              }
-            case None => i += nameLen
-          }
-        } else i += nameLen
-      } else i += 1
-    }
-    sql
-  }
-
-  // Backward jump over a block comment: `closeSlash` sits on the '/' of
-  // a star-slash terminator — returns the index of the '/' opening the
-  // matching slash-star, or -1 when unterminated. Keeps backward operand
-  // scans from counting brackets/quotes INSIDE comments: a bracket-
-  // bearing comment in a call argument list, followed by ::BIT, must
-  // still recover the full call as the cast operand.
-  private def blockCommentOpener(sql: String, closeSlash: Int): Int = {
-    var j = closeSlash - 2
-    while (j > 0) {
-      if (sql.charAt(j) == '*' && sql.charAt(j - 1) == '/') return j - 1
-      j -= 1
-    }
-    -1
-  }
-
-  /** Start of the primary expression ending just before `pos` (the
-    * operand of a postfix `::` cast); -1 when the shape isn't one the
-    * scan recognizes.
-    */
-  private def operandStart(sql: String, pos: Int): Int = {
-    var k = pos - 1
-    while (k >= 0 && sql.charAt(k).isWhitespace) k -= 1
-    if (k < 0) return -1
-    sql.charAt(k) match {
-      case q @ ('\'' | '"') =>
-        var j = k - 1
-        var open = -1
-        while (open < 0 && j >= 0) {
-          if (sql.charAt(j) == q) {
-            if (j - 1 >= 0 && sql.charAt(j - 1) == q) j -= 2 // '' = escaped
-            else open = j
-          } else j -= 1
-        }
-        open
-      case ')' | ']' =>
-        var depth = 0
-        var j = k
-        var inQ: Char = 0
-        while (j >= 0) {
-          val c = sql.charAt(j)
-          if (inQ != 0) { if (c == inQ) inQ = 0 }
-          else if (c == '/' && j > 0 && sql.charAt(j - 1) == '*') {
-            // end of a block comment: its content is opaque
-            val opener = blockCommentOpener(sql, j)
-            if (opener < 0) return -1
-            j = opener
-          }
-          else c match {
-            case ')' | ']' => depth += 1
-            case '(' | '[' =>
-              depth -= 1
-              if (depth == 0) {
-                var h = j - 1
-                while (h >= 0 && (sql.charAt(h).isLetterOrDigit ||
-                  sql.charAt(h) == '_' || sql.charAt(h) == '.')) h -= 1
-                return h + 1
-              }
-            case '\'' | '"' => inQ = c
-            case _ =>
-          }
-          j -= 1
-        }
-        -1
-      case c if c.isLetterOrDigit || c == '_' =>
-        var j = k
-        while (j >= 0 && (sql.charAt(j).isLetterOrDigit ||
-          sql.charAt(j) == '_' || sql.charAt(j) == '.')) j -= 1
-        j + 1
-      case _ => -1
-    }
-  }
 
   /** DuckDB FROM-position table functions Spark lacks:
     * `FROM generate_series(…)` and `FROM unnest(list)` become inline
@@ -885,59 +642,40 @@ object Dialect {
     */
   private val namedArgFns =
     Seq("STRUCT_PACK", "STRUCT_INSERT", "UNNEST", "UNION_VALUE")
-  private def rewriteNamedArgCalls(sql: String): String = {
-    val up = sql.toUpperCase
-    var i = 0
-    while (i < sql.length) {
-      val opaque = consumeOpaque(sql, i, null)
-      if (opaque > i) i = opaque
-      else {
-        val hit = namedArgFns.find(n => up.startsWith(n, i) && wordStart(sql, i) && {
-          var k = i + n.length
-          while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-          k < sql.length && sql.charAt(k) == '('
-        })
-        hit match {
-          case Some(n) =>
-            val open = sql.indexOf('(', i + n.length)
-            splitCallArgs(sql, open) match {
-              case Some((args, end))
-                  if args.exists(_.matches("(?s)\\s*\\w+\\s*:=.*")) =>
-                def pair(a: String): String = a.split(":=", 2) match {
-                  case Array(k, v) if k.trim.matches("[A-Za-z_][A-Za-z0-9_]*") =>
-                    s"'${k.trim}', ${v.trim}"
-                  case _ => throw new GatewayException(
-                    s"${n.toLowerCase}: argument `${a.trim}` is not of the " +
-                      "form name := value")
-                }
-                val call = n match {
-                  case "STRUCT_PACK" =>
-                    s"named_struct(${args.map(_.trim).map(pair).mkString(", ")})"
-                  case "STRUCT_INSERT" =>
-                    s"struct_insert(${args.head.trim}, " +
-                      s"${args.tail.map(_.trim).map(pair).mkString(", ")})"
-                  case "UNION_VALUE" =>
-                    s"union_value(${args.map(_.trim).map(pair).mkString(", ")})"
-                  case "UNNEST" =>
-                    val (rec, rest) = args.map(_.trim)
-                      .partition(_.matches("(?is)recursive\\s*:=\\s*true\\s*"))
-                    if (rec.isEmpty) null
-                    // graft_rec defers the flatten-vs-inline choice to
-                    // the DuckUnnest resolution rule (type-dependent:
-                    // list-of-list flattens, list-of-struct inlines)
-                    else s"unnest(graft_rec(${rest.mkString(", ")}))"
-                }
-                if (call == null) i = end
-                else return rewriteNamedArgCalls(
-                  sql.substring(0, i) + call + sql.substring(end))
-              case _ => i += n.length
-            }
-          case None => i += 1
+  private def rewriteNamedArgCalls(sql: String): String =
+    scanOutsideLiterals(sql) { (i, sb) =>
+      val call = keywordIn(sql, i, namedArgFns).flatMap { n =>
+        val withNamedArgs = splitCallArgs(sql, i + n.length)
+          .filter(_._1.exists(_.matches("(?s)\\s*\\w+\\s*:=.*")))
+        withNamedArgs.flatMap { case (args0, end) =>
+          val args = args0.map(a => rewriteNamedArgCalls(a).trim)
+          def pair(a: String): String = a.split(":=", 2) match {
+            case Array(k, v) if k.trim.matches("[A-Za-z_][A-Za-z0-9_]*") =>
+              s"'${k.trim}', ${v.trim}"
+            case _ => throw new GatewayException(
+              s"${n.toLowerCase}: argument `$a` is not of the form name := value")
+          }
+          (n match {
+            case "STRUCT_PACK" => Some(s"named_struct(${args.map(pair).mkString(", ")})")
+            case "STRUCT_INSERT" =>
+              Some(s"struct_insert(${args.head}, ${args.tail.map(pair).mkString(", ")})")
+            case "UNION_VALUE" => Some(s"union_value(${args.map(pair).mkString(", ")})")
+            case _ => // UNNEST
+              val (rec, rest) =
+                args.partition(_.matches("(?is)recursive\\s*:=\\s*true\\s*"))
+              // graft_rec defers the flatten-vs-inline choice to the
+              // DuckUnnest resolution rule (type-dependent: list-of-list
+              // flattens, list-of-struct inlines)
+              if (rec.isEmpty) None
+              else Some(s"unnest(graft_rec(${rest.mkString(", ")}))")
+          }).map(c => (c, end))
         }
       }
+      call match {
+        case Some((c, end)) => sb.append(c); end
+        case None => i
+      }
     }
-    sql
-  }
 
   /** DuckDB accepts `lag(x IGNORE NULLS)` with the null treatment
     * INSIDE the parens; Spark wants it after: `lag(x) IGNORE NULLS`.
@@ -947,96 +685,21 @@ object Dialect {
       "FIRST", "LAST", "LAG", "LEAD")
   private val nullTreatTailRe =
     """(?is)^(.*?)\s+(IGNORE|RESPECT)\s+NULLS\s*$""".r
-  private def rewriteIgnoreNulls(sql: String): String = {
-    val up = sql.toUpperCase
-    var i = 0
-    while (i < sql.length) {
-      val opaque = consumeOpaque(sql, i, null)
-      if (opaque > i) i = opaque
-      else {
-        val hit = ignoreNullsFns.find(n => up.startsWith(n, i) && wordStart(sql, i) && {
-          var k = i + n.length
-          while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-          k < sql.length && sql.charAt(k) == '('
-        })
-        hit match {
-          case Some(n) =>
-            val open = sql.indexOf('(', i + n.length)
-            splitCallArgs(sql, open) match {
-              case Some((args, end)) if args.nonEmpty &&
-                  nullTreatTailRe.findFirstMatchIn(args.last).isDefined =>
-                val m = nullTreatTailRe.findFirstMatchIn(args.last).get
-                val newArgs = (args.init :+ m.group(1)).mkString(", ")
-                return rewriteIgnoreNulls(
-                  sql.substring(0, i) + s"$n($newArgs) ${m.group(2).toUpperCase} NULLS" +
-                    sql.substring(end))
-              case _ => i += n.length
-            }
-          case None => i += 1
+  private def rewriteIgnoreNulls(sql: String): String =
+    scanOutsideLiterals(sql) { (i, sb) =>
+      val call = keywordIn(sql, i, ignoreNullsFns).flatMap { n =>
+        splitCallArgs(sql, i + n.length).flatMap { case (args, end) =>
+          nullTreatTailRe.findFirstMatchIn(args.last).map { m =>
+            val newArgs = rewriteIgnoreNulls((args.init :+ m.group(1)).mkString(", "))
+            (s"$n($newArgs) ${m.group(2).toUpperCase} NULLS", end)
+          }
         }
       }
-    }
-    sql
-  }
-
-  /** The primary expression starting at i0 (ws-skipped): signed number,
-    * string literal, parenthesized expression, or identifier chain with
-    * an optional call — returns the end index (exclusive).
-    */
-  private def forwardPrimary(sql: String, i0: Int): Int = {
-    var i = i0
-    // leading whitespace AND block comments are operand prelude
-    // (`2 ** /* c */ 3` — the comment is opaque, like the backward scans)
-    var skipped = true
-    while (skipped) {
-      skipped = false
-      while (i < sql.length && sql.charAt(i).isWhitespace) { i += 1; skipped = true }
-      if (sql.startsWith("/*", i)) {
-        val close = sql.indexOf("*/", i + 2)
-        if (close >= 0) { i = close + 2; skipped = true }
+      call match {
+        case Some((c, end)) => sb.append(c); end
+        case None => i
       }
     }
-    if (i >= sql.length) return i0
-    if (sql.charAt(i) == '-' || sql.charAt(i) == '+') i += 1
-    if (i >= sql.length) return i0
-    def balanced(from: Int): Int = {
-      var j = from
-      var depth = 0
-      while (j < sql.length) {
-        sql.charAt(j) match {
-          case '\'' =>
-            j += 1
-            while (j < sql.length && sql.charAt(j) != '\'') j += 1
-          case '(' => depth += 1
-          case ')' =>
-            depth -= 1
-            if (depth == 0) return j + 1
-          case _ =>
-        }
-        j += 1
-      }
-      from
-    }
-    sql.charAt(i) match {
-      case '(' => balanced(i)
-      case '\'' =>
-        var j = i + 1
-        while (j < sql.length && sql.charAt(j) != '\'') j += 1
-        j + 1
-      case c if c.isDigit =>
-        var j = i
-        while (j < sql.length && (sql.charAt(j).isDigit || sql.charAt(j) == '.')) j += 1
-        j
-      case c if c.isLetter || c == '_' =>
-        var j = i
-        while (j < sql.length && (sql.charAt(j).isLetterOrDigit ||
-          sql.charAt(j) == '_' || sql.charAt(j) == '.')) j += 1
-        var k = j
-        while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-        if (k < sql.length && sql.charAt(k) == '(') balanced(k) else j
-      case _ => i0
-    }
-  }
 
   /** DuckDB power operators: `a ** b` and `a ^ b` → `power(a, b)`.
     * Spark would PARSE `^` fine — as bitwise xor — so leaving it alone
@@ -1047,19 +710,14 @@ object Dialect {
     scanOutsideLiterals(sql) { (i, sb) =>
       val w = if (sql.startsWith("**", i)) 2
         else if (sql.charAt(i) == '^') 1 else 0
-      if (w == 0) i
-      else backtrackPrimary(sb) match {
-        case Some(start) =>
-          val rEnd = forwardPrimary(sql, i + w)
-          if (rEnd <= i + w) i
-          else {
-            val left = sb.substring(start)
-            val right = sql.substring(i + w, rEnd).trim
-            sb.setLength(start)
-            sb.append(s"power($left, $right)")
-            rEnd
-          }
-        case None => i
+      val rEnd = if (w == 0) -1 else operandAfter(sql, i + w)
+      val start = if (rEnd < 0) -1 else operandBefore(sb)
+      if (start < 0) i
+      else {
+        val left = sb.substring(start)
+        sb.setLength(start)
+        sb.append(s"power($left, ${sql.substring(i + w, rEnd).trim})")
+        rEnd
       }
     }
 
@@ -1217,7 +875,7 @@ object Dialect {
     * callers leave the loud parser error).
     */
   private def windowOrderKeysOf(specClean: String): Option[Seq[String]] = {
-    val obIdx = indexOfTopLevel(specClean, " ORDER BY ") match {
+    val obIdx = indexOfCode(specClean, " ORDER BY ") match {
       case -1 =>
         if ("""(?is)^\s*ORDER\s+BY\s.*""".r.matches(specClean)) 0 else -1
       case i => i
@@ -1226,7 +884,7 @@ object Dialect {
     val afterOb = specClean.substring(obIdx)
       .replaceAll("""(?is)^\s*ORDER\s+BY\s+""", "")
     val frameIdx = Seq(" ROWS ", " RANGE ", " GROUPS ")
-      .map(k => indexOfTopLevel(afterOb, k)).filter(_ >= 0)
+      .map(k => indexOfCode(afterOb, k)).filter(_ >= 0)
       .sorted.headOption.getOrElse(afterOb.length)
     val keys = splitTopLevel(afterOb.substring(0, frameIdx), ',')
       .map(_.trim)
@@ -1255,8 +913,8 @@ object Dialect {
                 (m + 4 >= sql.length ||
                   !(sql.charAt(m + 4).isLetterOrDigit ||
                     sql.charAt(m + 4) == '_')))) i
-            else backtrackPrimary(sb) match {
-              case Some(start) =>
+            else operandBefore(sb) match {
+              case start if start >= 0 =>
                 val callText = sb.substring(start).trim
                 val open = callText.indexOf('(')
                 val fn = if (open > 0) callText.substring(0, open).trim else ""
@@ -1303,7 +961,7 @@ object Dialect {
                           Some(over.substring(1, over.length - 1))
                         else None
                       val exIdx = innerSpec
-                        .map(s => indexOfTopLevel(s, " EXCLUDE ")).getOrElse(-1)
+                        .map(s => indexOfCode(s, " EXCLUDE ")).getOrElse(-1)
                       val exParsed: Option[(String, String, Seq[String])] =
                         if (exIdx < 0) None
                         else innerSpec.flatMap { spec =>
@@ -1385,7 +1043,7 @@ object Dialect {
                     case None => i
                   }
                 } else i
-              case None => i
+              case _ => i
             }
           case _ => i
         }
@@ -1414,8 +1072,8 @@ object Dialect {
     scanOutsideLiterals(sql) { (i, sb) =>
       if (sql.charAt(i) != '@') i
       else {
-        val end = forwardPrimary(sql, i + 1)
-        if (end <= i + 1) i
+        val end = operandAfter(sql, i + 1)
+        if (end < 0) i
         else { sb.append(s"abs(${sql.substring(i + 1, end).trim})"); end }
       }
     }
@@ -1432,14 +1090,8 @@ object Dialect {
     scanOutsideLiterals(sql) { (i, sb) =>
       if (sql.charAt(i) != '!' ||
           (i + 1 < sql.length && "=!~".indexOf(sql.charAt(i + 1)) >= 0)) i
-      else backtrackPrimary(sb) match {
-        case Some(start) =>
-          val operand = sb.substring(start)
-          sb.setLength(start)
-          sb.append(s"factorial($operand)")
-          i + 1
-        case None => i
-      }
+      else if (wrapOperandBefore(sb, "factorial")) i + 1
+      else i
     }
 
   /** DuckDB fixed/list array type suffixes in cast positions — `x::T[3]`
@@ -1496,7 +1148,7 @@ object Dialect {
     "UBIGINT" -> "DECIMAL(20,0)", "UINTEGER" -> "BIGINT",
     "USMALLINT" -> "INT", "UTINYINT" -> "SMALLINT",
     "LOGICAL" -> "BOOLEAN")
-  private val castBodyTypeRe = """(?is)^(.*\bAS\s+)(\w+)\s*$""".r
+  private val castBodyRe = """(?is)^(.*)\b(AS\s+)(\w+)\s*$""".r
 
   /** The CAST body with string literals, quoted identifiers, and SQL
     * comments blanked to spaces — LENGTH-PRESERVING, so a regex match
@@ -1508,195 +1160,100 @@ object Dialect {
     */
   private def maskOpaque(s: String): String = {
     val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val o = consumeOpaque(s, i, null)
-      if (o > i) { var j = i; while (j < o) { sb.append(' '); j += 1 }; i = o }
-      else { sb.append(s.charAt(i)); i += 1 }
+    scanCode(s) { (i, _) =>
+      while (sb.length < i) sb.append(' ')
+      sb.append(s.charAt(i))
+      i
     }
+    while (sb.length < s.length) sb.append(' ')
     sb.toString
   }
 
-  private def rewriteCastTypes(sql: String): String = {
-    val up = sql.toUpperCase
-    var i = 0
-    while (i < sql.length) {
-      val opaque = consumeOpaque(sql, i, null)
-      if (opaque > i) i = opaque
-      else if (sql.startsWith("::", i)) {
+  /** (start, end) of the type name after the `::` at `i`. */
+  private def castTypeAt(sql: String, i: Int): (Int, Int) = {
+    var k = i + 2
+    while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
+    (k, wordEnd(sql, k))
+  }
+
+  /** A `CAST(` / `TRY_CAST(` call at `i`: (is TRY_CAST, index of its
+    * `(`, the body between the parens, index past the `)`).
+    */
+  private def castCallAt(sql: String, i: Int): Option[(Boolean, Int, String, Int)] = {
+    val isTry = keywordAt(sql, i, "TRY_CAST")
+    if (!isTry && !keywordAt(sql, i, "CAST")) None
+    else {
+      var k = i + (if (isTry) 8 else 4)
+      while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
+      splitCallArgs(sql, k).map { case (_, end) =>
+        (isTry, k, sql.substring(k + 1, end - 1), end)
+      }
+    }
+  }
+
+  private def rewriteCastTypes(sql: String): String =
+    scanOutsideLiterals(sql) { (i, sb) =>
+      if (sql.startsWith("::", i)) {
         // `x::type` is native Spark syntax — only the TYPE NAME after
         // `::` needs mapping (always a type position, never a column)
-        var k = i + 2
-        while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-        var j = k
-        while (j < sql.length && (sql.charAt(j).isLetterOrDigit ||
-          sql.charAt(j) == '_')) j += 1
-        val word = sql.substring(k, j).toUpperCase
-        castTypeMap.get(word) match {
+        val (k, j) = castTypeAt(sql, i)
+        castTypeMap.get(sql.substring(k, j).toUpperCase) match {
           case Some(t) if j >= sql.length || sql.charAt(j) != '(' =>
-            return rewriteCastTypes(
-              sql.substring(0, k) + t + sql.substring(j))
-          case _ => i = j.max(i + 2)
+            sb.append(sql.substring(i, k)).append(t); j
+          case _ => i
         }
-      } else if ((up.startsWith("TRY_CAST", i) || up.startsWith("CAST", i)) &&
-          wordStart(sql, i)) {
-        val nameLen = if (up.startsWith("TRY_CAST", i)) 8 else 4
-        var k = i + nameLen
-        while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-        if (k < sql.length && sql.charAt(k) == '(') {
-          splitCallArgs(sql, k) match {
-            case Some((_, end)) =>
-              val body = sql.substring(k + 1, end - 1)
-              // match on the opaque-blanked mask (same length), rebuild
-              // from the ORIGINAL body by position — the regex must
-              // never see comment/literal text
-              castBodyTypeRe.findFirstMatchIn(maskOpaque(body)).flatMap(m =>
-                castTypeMap.get(m.group(2).toUpperCase)
-                  .map(t => body.substring(0, m.end(1)) + t)) match {
-                case Some(nb) =>
-                  return rewriteCastTypes(
-                    sql.substring(0, k + 1) + nb + sql.substring(end - 1))
-                case None => i = k + 1 // scan inside for nested casts
-              }
-            case None => i += nameLen
+      } else castCallAt(sql, i) match {
+        case Some((_, open, body, end)) =>
+          // match on the opaque-blanked mask (same length), rebuild
+          // from the ORIGINAL body by position — the regex must never
+          // see comment/literal text
+          castBodyRe.findFirstMatchIn(maskOpaque(body)).flatMap(m =>
+            castTypeMap.get(m.group(3).toUpperCase)
+              .map(t => body.substring(0, m.end(2)) + t)) match {
+            case Some(nb) =>
+              sb.append(sql.substring(i, open + 1)).append(rewriteCastTypes(nb)).append(')')
+              end
+            case None => i // scan inside for nested casts
           }
-        } else i += nameLen
-      } else i += 1
-    }
-    sql
-  }
-
-  /** DuckDB JSON type casts: `x::JSON` and `[TRY_]CAST(x AS JSON)` →
-    * `graft_json_cast(x)` — a VARCHAR validates (malformed input errors
-    * like DuckDB's cast) and keeps its ORIGINAL text (`::JSON` does NOT
-    * canonicalize — pinned: `' {"b" : 2} '::JSON` keeps its spacing,
-    * unlike `json()`); non-string types serialize through the `json()`
-    * builder. TRY_CAST wraps in `try()` for its NULL-on-malformed
-    * contract. The `::`-form LHS backtrack covers identifier chains,
-    * string literals, and balanced `()`/`[]` groups (with any call-name
-    * prefix) — a group containing a quote bails to the loud native
-    * unsupported-type error rather than risk mis-scanning a literal.
-    */
-  private val castBodyJsonRe = """(?is)^(.*)\bAS\s+JSON\s*$""".r
-  private def rewriteJsonCastType(sql: String): String = {
-    val up = sql.toUpperCase
-    var i = 0
-    while (i < sql.length) {
-      val opaque = consumeOpaque(sql, i, null)
-      if (opaque > i) i = opaque
-      else if ((up.startsWith("TRY_CAST", i) || up.startsWith("CAST", i)) &&
-          wordStart(sql, i)) {
-        val isTry = up.startsWith("TRY_CAST", i)
-        val nameLen = if (isTry) 8 else 4
-        var k = i + nameLen
-        while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-        if (k < sql.length && sql.charAt(k) == '(') {
-          splitCallArgs(sql, k) match {
-            case Some((_, end)) =>
-              val body = sql.substring(k + 1, end - 1)
-              // mask-matched for the same reason as castBodyTypeRe: an
-              // `AS JSON` inside a trailing line comment must not
-              // trigger the rewrite (ADVICE r12)
-              castBodyJsonRe.findFirstMatchIn(maskOpaque(body)) match {
-                case Some(m) =>
-                  val inner = body.substring(0, m.end(1))
-                  val repl =
-                    if (isTry) s"try(graft_json_cast($inner))"
-                    else s"graft_json_cast($inner)"
-                  return rewriteJsonCastType(
-                    sql.substring(0, i) + repl + sql.substring(end))
-                case None => i = k + 1 // scan inside for nested casts
-              }
-            case None => i += nameLen
-          }
-        } else i += nameLen
-      } else if (sql.startsWith("::", i)) {
-        var k = i + 2
-        while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-        var j = k
-        while (j < sql.length && (sql.charAt(j).isLetterOrDigit ||
-          sql.charAt(j) == '_')) j += 1
-        val isJson = sql.substring(k, j).equalsIgnoreCase("JSON") &&
-          (j >= sql.length || (sql.charAt(j) != '(' && sql.charAt(j) != '['))
-        val lhsStart = if (isJson) jsonCastLhsStart(sql, i) else -1
-        if (lhsStart >= 0) {
-          return rewriteJsonCastType(
-            sql.substring(0, lhsStart) + "graft_json_cast(" +
-              sql.substring(lhsStart, i) + ")" + sql.substring(j))
-        } else i = j.max(i + 2)
-      } else i += 1
-    }
-    sql
-  }
-
-  /** Start index of the primary expression ending just before `end`
-    * (the `::` position), or -1 when unrecognized: trailing balanced
-    * `()`/`[]` groups (matched by a FORWARD scan from 0 with
-    * consumeOpaque, so literals/comments inside a group never
-    * mis-balance), then an identifier/dotted chain or a string literal.
-    */
-  private def jsonCastLhsStart(sql: String, end: Int): Int = {
-    var k = end
-    while (k > 0 && sql.charAt(k - 1).isWhitespace) k -= 1
-    // balanced trailing groups: f(x)::, (a + 'b')::, arr[i]::
-    var sawGroup = false
-    while (k > 0 && (sql.charAt(k - 1) == ')' || sql.charAt(k - 1) == ']')) {
-      val start = groupOpenPos(sql, k - 1)
-      if (start < 0) return -1
-      k = start
-      sawGroup = true
-    }
-    if (k > 0 && sql.charAt(k - 1) == '\'' && !sawGroup) {
-      // string literal LHS (only when not preceded by a group)
-      var q = k - 2
-      while (q >= 0) {
-        if (sql.charAt(q) == '\'') {
-          if (q > 0 && sql.charAt(q - 1) == '\'') q -= 2 // '' escape
-          else return q
-        } else q -= 1
-      }
-      -1
-    } else {
-      var q = k
-      while (q > 0 && (Character.isLetterOrDigit(sql.charAt(q - 1)) ||
-        sql.charAt(q - 1) == '_' || sql.charAt(q - 1) == '.')) q -= 1
-      // an expression-TERMINATING keyword is not a primary: `CASE …
-      // END::JSON` must not wrap only `END` (parenthesize instead)
-      if (q < k && sql.substring(q, k).equalsIgnoreCase("END")) -1
-      else if (q < k) q
-      else if (sawGroup) k // bare (expr) group with no name prefix
-      else -1
-    }
-  }
-
-  /** Open position of the `()`/`[]` group whose CLOSER sits at
-    * `closeIdx`, found by a forward scan (consumeOpaque skips
-    * literals/comments, so brackets inside them never count); -1 when
-    * `closeIdx` is not a tracked closer (e.g. inside an unterminated
-    * construct).
-    */
-  private def groupOpenPos(sql: String, closeIdx: Int): Int = {
-    val stack = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var i = 0
-    while (i <= closeIdx) {
-      val opaque = consumeOpaque(sql, i, null)
-      if (opaque > i) i = opaque
-      else {
-        val c = sql.charAt(i)
-        if (c == '(' || c == '[') stack += i
-        else if (c == ')' || c == ']') {
-          if (stack.isEmpty) return -1
-          val open = stack.remove(stack.length - 1)
-          val matches = (c == ')' && sql.charAt(open) == '(') ||
-            (c == ']' && sql.charAt(open) == '[')
-          if (!matches) return -1
-          if (i == closeIdx) return open
-        }
-        i += 1
+        case None => i
       }
     }
-    -1
-  }
+
+  /** DuckDB casts to types Spark lacks become calls, one per type:
+    *  - BIT → `graft_bit` (Functions kernel; the engine's BIT
+    *    representation is a '0'/'1' STRING, SURVEY §1.4);
+    *  - JSON → `graft_json_cast`: a VARCHAR validates (malformed input
+    *    errors like DuckDB's cast) and keeps its ORIGINAL text (`::JSON`
+    *    does NOT canonicalize — pinned: `' {"b" : 2} '::JSON` keeps its
+    *    spacing, unlike `json()`); other types serialize through `json()`.
+    * `x::T` wraps the operand before `::` (operandBefore; a shape it
+    * does not know is left for the parser to diagnose) and
+    * `[TRY_]CAST(x AS T)` its body, matched on maskOpaque. TRY_CAST
+    * wraps the call in `try()` for its NULL-on-bad-input contract.
+    */
+  private val castCalls = Map("BIT" -> "graft_bit", "JSON" -> "graft_json_cast")
+  private def rewriteCastCalls(sql: String): String =
+    scanOutsideLiterals(sql) { (i, sb) =>
+      if (sql.startsWith("::", i)) {
+        val (k, j) = castTypeAt(sql, i)
+        castCalls.get(sql.substring(k, j).toUpperCase) match {
+          case Some(fn) if (j >= sql.length || "([".indexOf(sql.charAt(j)) < 0) &&
+              wrapOperandBefore(sb, fn) => j
+          case _ => i
+        }
+      } else castCallAt(sql, i) match {
+        case Some((isTry, _, body, end)) =>
+          castBodyRe.findFirstMatchIn(maskOpaque(body)).flatMap(m =>
+            castCalls.get(m.group(3).toUpperCase).map { fn =>
+              val call = s"$fn(${rewriteCastCalls(body.substring(0, m.end(1)))})"
+              if (isTry) s"try($call)" else call
+            }) match {
+            case Some(call) => sb.append(call); end
+            case None => i // scan inside for nested casts
+          }
+        case None => i
+      }
+    }
 
   /** `TIMESTAMPTZ` type name → Spark's `TIMESTAMP_LTZ` (literals and
     * `::` casts both).
@@ -1725,8 +1282,8 @@ object Dialect {
       if (!wordStart(sql, i)) i
       else atTzRe.findPrefixMatchOf(sql.substring(i)) match {
         case Some(m) =>
-          backtrackPrimary(sb) match {
-            case Some(s0) =>
+          operandBefore(sb) match {
+            case s0 if s0 >= 0 =>
               var start = s0
               var k = start
               while (k > 0 && sb.charAt(k - 1).isWhitespace) k -= 1
@@ -1739,7 +1296,7 @@ object Dialect {
               sb.setLength(start)
               sb.append(s"to_utc_timestamp($prim, ${m.group(1)})")
               i + m.end
-            case None => i
+            case _ => i
           }
         case None => i
       }
@@ -1773,143 +1330,122 @@ object Dialect {
       } else i
     }
 
-  private def rewriteAggOrderBy(sql: String): String = {
-    val up = sql.toUpperCase
-    val names =
-      Seq("ARRAY_AGG", "STRING_AGG", "LIST_AGG", "LISTAGG", "GROUP_CONCAT",
-        // order-INSENSITIVE aggregates: DuckDB tolerates (and ignores)
-        // an ORDER BY clause on these — the clause is dropped
-        "COUNT", "SUM", "AVG", "MIN", "MAX", "BOOL_AND", "BOOL_OR",
-        "BIT_AND", "BIT_OR", "BIT_XOR",
-        "FIRST", "LAST",
-        // DuckDB any_value(x ORDER BY y) = first in that order
-        "ANY_VALUE",
-        // DuckDB list(x ORDER BY y) — the paren check keeps LIST from
-        // capturing LIST_AGG(, and plain list(x) stays on the
-        // list→collect_list shim
-        "LIST")
-    var i = 0
-    while (i < sql.length) {
-      val opaque = consumeOpaque(sql, i, null)
-      if (opaque > i) i = opaque
-      else {
-        val hit = names.find(n => up.startsWith(n, i) && wordStart(sql, i) &&
-          i + n.length < sql.length && {
-            var k = i + n.length
-            while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-            k < sql.length && sql.charAt(k) == '('
-          })
-        hit match {
-          case Some(n) =>
-            splitCallArgs(sql, i + n.length) match {
-              // a multi-key ORDER BY splits across the comma-separated
-              // args (fuzz-found: string_agg(v, sep ORDER BY k1, k2)
-              // arrived as args [v, "sep ORDER BY k1", "k2"]) — locate
-              // the FIRST arg carrying the clause; everything after it
-              // belongs to the key list
-              case Some((args, end)) if args.exists(a =>
-                  indexOfTopLevel(a, " ORDER BY ") >= 0) =>
-                val obIdx = args.indexWhere(a =>
-                  indexOfTopLevel(a, " ORDER BY ") >= 0)
-                val obArg = args(obIdx)
-                val ob = indexOfTopLevel(obArg, " ORDER BY ")
-                val valueHead = obArg.substring(0, ob).trim
-                val key = (obArg.substring(ob + " ORDER BY ".length)
-                  +: args.drop(obIdx + 1)).mkString(",").trim
-                val isString =
-                  Set("STRING_AGG", "LIST_AGG", "LISTAGG", "GROUP_CONCAT")(n)
-                val isFirstLast =
-                  n == "FIRST" || n == "LAST" || n == "ANY_VALUE"
-                val value = if (obIdx > 0) args.head.trim else valueHead
-                val sep =
-                  if (isString && obIdx > 0) valueHead
-                  else "','" // DuckDB string_agg default separator
-                // each key carries its own ASC/DESC
-                val keyParts = splitTopLevel(key, ',').map(_.trim)
-                val parsed = keyParts.map { k =>
-                  val up = k.toUpperCase
-                  if (up.endsWith(" DESC")) (k.dropRight(5).trim, true)
-                  else if (up.endsWith(" ASC")) (k.dropRight(4).trim, false)
-                  else (k, false)
-                }
-                val hasNulls = key.toUpperCase.endsWith(" FIRST") ||
-                  key.toUpperCase.endsWith(" LAST")
-                val orderInsensitive = Set("COUNT", "SUM", "AVG", "MIN",
-                  "MAX", "BOOL_AND", "BOOL_OR", "BIT_AND", "BIT_OR",
-                  "BIT_XOR")(n)
-                if (orderInsensitive) {
-                  // drop the clause (and any trailing key args): the
-                  // result is order-independent, DuckDB just accepts it
-                  val keptArgs = (args.take(obIdx) :+ valueHead)
-                    .mkString(", ")
-                  return rewriteAggOrderBy(
-                    sql.substring(0, i) + s"$n($keptArgs)" +
-                      sql.substring(end))
-                } else if (hasNulls || parsed.isEmpty) {
-                  i += n.length // NULLS spec: leave for the native parser
-                } else if (isFirstLast) {
-                  // first(x ORDER BY keys) = value at the min composite
-                  // key (struct natural ordering is lexicographic);
-                  // last / DESC flips — mixed directions have no
-                  // min_by/max_by form, leave those
-                  if (parsed.map(_._2).distinct.sizeIs > 1) i += n.length
-                  else {
-                    val allDesc = parsed.head._2
-                    val fn = if ((n == "LAST") != allDesc) "max_by" else "min_by"
-                    val k0 =
-                      if (parsed.sizeIs == 1) parsed.head._1
-                      else parsed.map(_._1).mkString("struct(", ", ", ")")
-                    // DuckDB any_value(x ORDER BY y) SKIPS NULL x (first
-                    // non-NULL in order), unlike first/last which keep
-                    // the value at the extreme key even when NULL —
-                    // null out the KEY for NULL values so min_by/max_by
-                    // (which ignore NULL keys) skip those rows
-                    val k =
-                      if (n == "ANY_VALUE")
-                        s"(CASE WHEN ($value) IS NULL THEN NULL ELSE $k0 END)"
-                      else k0
-                    return rewriteAggOrderBy(
-                      sql.substring(0, i) + s"$fn($value, $k)" +
-                        sql.substring(end))
-                  }
-                } else {
-                  val allAsc = parsed.forall(!_._2)
-                  val singleDesc = parsed.sizeIs == 1 && parsed.head._2
-                  val sorted =
-                    if (parsed.sizeIs == 1 && parsed.head._1 == value) {
-                      val rev = if (singleDesc) ", false" else ""
-                      s"sort_array(collect_list($value)$rev)"
-                    } else {
-                      val fields = parsed.zipWithIndex
-                        .map { case ((k, _), j) => s"$k AS k$j" }
-                        .mkString(", ")
-                      val cmp =
-                        if (allAsc) "" // struct natural order = lexicographic
-                        else {
-                          // comparator chain: per-key direction (DESC
-                          // returns 1 on l<r so smaller sorts later)
-                          val arms = parsed.zipWithIndex.flatMap {
-                            case ((_, d), j) =>
-                              val (lt, gt) = if (d) (1, -1) else (-1, 1)
-                              Seq(s"WHEN l.k$j < r.k$j THEN $lt",
-                                s"WHEN l.k$j > r.k$j THEN $gt")
-                          }.mkString(" ")
-                          s", (l, r) -> CASE $arms ELSE 0 END"
-                        }
-                      s"transform(array_sort(collect_list(struct($fields, $value AS v))$cmp), s -> s.v)"
-                    }
-                  val call =
-                    if (isString) s"array_join($sorted, $sep)" else sorted
-                  return rewriteAggOrderBy(
-                    sql.substring(0, i) + call + sql.substring(end))
-                }
-              case _ => i += n.length
-            }
-          case None => i += 1
+  private val orderedAggFns =
+    Seq("ARRAY_AGG", "STRING_AGG", "LIST_AGG", "LISTAGG", "GROUP_CONCAT",
+      // order-INSENSITIVE aggregates: DuckDB tolerates (and ignores)
+      // an ORDER BY clause on these — the clause is dropped
+      "COUNT", "SUM", "AVG", "MIN", "MAX", "BOOL_AND", "BOOL_OR",
+      "BIT_AND", "BIT_OR", "BIT_XOR",
+      "FIRST", "LAST",
+      // DuckDB any_value(x ORDER BY y) = first in that order
+      "ANY_VALUE",
+      // DuckDB list(x ORDER BY y) — plain list(x) stays on the
+      // list→collect_list shim
+      "LIST")
+
+  private def rewriteAggOrderBy(sql: String): String =
+    scanOutsideLiterals(sql) { (i, sb) =>
+      keywordIn(sql, i, orderedAggFns).flatMap { n =>
+        splitCallArgs(sql, i + n.length).flatMap { case (args, end) =>
+          orderedAggCall(n, args).map(c => (c, end))
         }
+      } match {
+        case Some((call, end)) => sb.append(rewriteAggOrderBy(call)); end
+        case None => i
       }
     }
-    sql
+
+  /** The Spark form of aggregate `n` called with `args` when they carry
+    * an ORDER BY clause; None to leave the call to the native parser.
+    */
+  private def orderedAggCall(n: String, args: Seq[String]): Option[String] = {
+    // a multi-key ORDER BY splits across the comma-separated args
+    // (fuzz-found: string_agg(v, sep ORDER BY k1, k2) arrived as args
+    // [v, "sep ORDER BY k1", "k2"]) — locate the FIRST arg carrying the
+    // clause; everything after it belongs to the key list
+    val obIdx = args.indexWhere(a => indexOfCode(a, " ORDER BY ") >= 0)
+    if (obIdx < 0) return None
+    val obArg = args(obIdx)
+    val ob = indexOfCode(obArg, " ORDER BY ")
+    val valueHead = obArg.substring(0, ob).trim
+    val key = (obArg.substring(ob + " ORDER BY ".length)
+      +: args.drop(obIdx + 1)).mkString(",").trim
+    val isString =
+      Set("STRING_AGG", "LIST_AGG", "LISTAGG", "GROUP_CONCAT")(n)
+    val isFirstLast =
+      n == "FIRST" || n == "LAST" || n == "ANY_VALUE"
+    val value = if (obIdx > 0) args.head.trim else valueHead
+    val sep =
+      if (isString && obIdx > 0) valueHead
+      else "','" // DuckDB string_agg default separator
+    // each key carries its own ASC/DESC
+    val keyParts = splitTopLevel(key, ',').map(_.trim)
+    val parsed = keyParts.map { k =>
+      val up = k.toUpperCase
+      if (up.endsWith(" DESC")) (k.dropRight(5).trim, true)
+      else if (up.endsWith(" ASC")) (k.dropRight(4).trim, false)
+      else (k, false)
+    }
+    val hasNulls = key.toUpperCase.endsWith(" FIRST") ||
+      key.toUpperCase.endsWith(" LAST")
+    val orderInsensitive = Set("COUNT", "SUM", "AVG", "MIN",
+      "MAX", "BOOL_AND", "BOOL_OR", "BIT_AND", "BIT_OR",
+      "BIT_XOR")(n)
+    if (orderInsensitive) {
+      // drop the clause (and any trailing key args): the result is
+      // order-independent, DuckDB just accepts it
+      Some(s"$n(${(args.take(obIdx) :+ valueHead).mkString(", ")})")
+    } else if (hasNulls || parsed.isEmpty) {
+      None // NULLS spec: leave for the native parser
+    } else if (isFirstLast) {
+      // first(x ORDER BY keys) = value at the min composite key (struct
+      // natural ordering is lexicographic); last / DESC flips — mixed
+      // directions have no min_by/max_by form, leave those
+      if (parsed.map(_._2).distinct.sizeIs > 1) None
+      else {
+        val allDesc = parsed.head._2
+        val fn = if ((n == "LAST") != allDesc) "max_by" else "min_by"
+        val k0 =
+          if (parsed.sizeIs == 1) parsed.head._1
+          else parsed.map(_._1).mkString("struct(", ", ", ")")
+        // DuckDB any_value(x ORDER BY y) SKIPS NULL x (first non-NULL in
+        // order), unlike first/last which keep the value at the extreme
+        // key even when NULL — null out the KEY for NULL values so
+        // min_by/max_by (which ignore NULL keys) skip those rows
+        val k =
+          if (n == "ANY_VALUE")
+            s"(CASE WHEN ($value) IS NULL THEN NULL ELSE $k0 END)"
+          else k0
+        Some(s"$fn($value, $k)")
+      }
+    } else {
+      val allAsc = parsed.forall(!_._2)
+      val singleDesc = parsed.sizeIs == 1 && parsed.head._2
+      val sorted =
+        if (parsed.sizeIs == 1 && parsed.head._1 == value) {
+          val rev = if (singleDesc) ", false" else ""
+          s"sort_array(collect_list($value)$rev)"
+        } else {
+          val fields = parsed.zipWithIndex
+            .map { case ((k, _), j) => s"$k AS k$j" }
+            .mkString(", ")
+          val cmp =
+            if (allAsc) "" // struct natural order = lexicographic
+            else {
+              // comparator chain: per-key direction (DESC returns 1 on
+              // l<r so smaller sorts later)
+              val arms = parsed.zipWithIndex.flatMap {
+                case ((_, d), j) =>
+                  val (lt, gt) = if (d) (1, -1) else (-1, 1)
+                  Seq(s"WHEN l.k$j < r.k$j THEN $lt",
+                    s"WHEN l.k$j > r.k$j THEN $gt")
+              }.mkString(" ")
+              s", (l, r) -> CASE $arms ELSE 0 END"
+            }
+          s"transform(array_sort(collect_list(struct($fields, $value AS v))$cmp), s -> s.v)"
+        }
+      Some(if (isString) s"array_join($sorted, $sep)" else sorted)
+    }
   }
 
   /** `expr FOR var IN list [IF cond]` (already bracket-rewritten) →
@@ -1918,16 +1454,16 @@ object Dialect {
     * x>1]` = [3,4].
     */
   private def comprehension(content: String): Option[String] = {
-    val forAt = indexOfTopLevel(content, " FOR ")
+    val forAt = indexOfCode(content, " FOR ")
     if (forAt < 0) return None
     val head = content.substring(0, forAt).trim
     val rest = content.substring(forAt + 5)
-    val inAt = indexOfTopLevel(rest, " IN ")
+    val inAt = indexOfCode(rest, " IN ")
     if (inAt < 0) return None
     val v = rest.substring(0, inAt).trim
     if (!v.matches("\\w+")) return None
     val tail = rest.substring(inAt + 4)
-    val ifAt = indexOfTopLevel(tail, " IF ")
+    val ifAt = indexOfCode(tail, " IF ")
     val (listPart, cond) =
       if (ifAt < 0) (tail.trim, None)
       else (tail.substring(0, ifAt).trim, Some(tail.substring(ifAt + 4).trim))
@@ -1939,10 +1475,9 @@ object Dialect {
   }
 
   /** Keywords a `[` can directly follow in literal (not subscript)
-    * position. An identifier/')'/']' before `[` means subscript
-    * (`arr[1]` — valid Spark, untouched); these words, operators,
-    * commas, and open-parens mean a DuckDB list literal `[1,2]`, which
-    * Spark's parser lacks → rewritten to `array(1,2)`.
+    * position. An operand before `[` means subscript (`arr[1]`); these
+    * words, operators, commas, and open-parens mean a DuckDB list
+    * literal `[1,2]`, which Spark's parser lacks → `array(1,2)`.
     */
   private val bracketLiteralKeywords = Set(
     "SELECT", "WHERE", "AND", "OR", "NOT", "IN", "ON", "WHEN", "THEN",
@@ -1960,184 +1495,59 @@ object Dialect {
     * Known divergence: DuckDB map subscript returns a single-element
     * LIST; element_at returns the value directly.
     */
-  private def rewriteBrackets(sql: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      val opaque = consumeOpaque(sql, i, out)
-      if (opaque > i) i = opaque
+  private def rewriteBrackets(sql: String): String =
+    scanOutsideLiterals(sql) { (i, out) =>
+      val end = if (sql.charAt(i) == '[') closerOf(sql, i) else -1
+      if (end < 0) i // not a bracket, or unbalanced: pass through
       else {
-        val c = sql.charAt(i)
-        if (c == '[') {
-          // find the matching ']' (quote/nesting aware)
-          var depth = 0
-          var j = i
-          var end = -1
-          while (end < 0 && j < sql.length) {
-            val op2 = consumeOpaque(sql, j, null)
-            if (op2 > j) j = op2
-            else {
-              sql.charAt(j) match {
-                case '[' => depth += 1
-                case ']' => depth -= 1; if (depth == 0) end = j
-                case _ =>
-              }
-              j += 1
-            }
-          }
-          if (end < 0) { out.append(c); i += 1 } // unbalanced: pass through
-          else {
-            val content = rewriteBrackets(sql.substring(i + 1, end))
-            if (bracketIsLiteral(out)) {
-              // DuckDB list comprehension `[expr FOR v IN list [IF cond]]`
-              // → transform(filter(list, v -> cond), v -> expr)
-              comprehension(content) match {
-                case Some(c) => out.append(c)
-                case None => out.append("array(").append(content).append(')')
-              }
-            } else {
-              backtrackPrimary(out) match {
-                case Some(st) =>
-                  val lhs = out.substring(st)
-                  out.setLength(st)
-                  val colonAt = topLevelColon(content)
-                  if (colonAt < 0) {
-                    // graft_subscript: polymorphic over string/list/map
-                    // (expressions/SubscriptAny — element_at semantics
-                    // for collections, 1-based char pick for strings)
-                    out.append(s"graft_subscript($lhs, ${content.trim})")
-                  } else {
-                    val a0 = content.substring(0, colonAt).trim
-                    val rest = content.substring(colonAt + 1)
-                    val colon2 = topLevelColon(rest)
-                    val a = if (a0.isEmpty) "1" else a0
-                    if (colon2 >= 0) {
-                      // stepped slice `l[a:b:s]` (negative steps walk
-                      // backward) → the 4-arg list_slice shim
-                      val b0 = rest.substring(0, colon2).trim
-                      val s0 = rest.substring(colon2 + 1).trim
-                      val b = if (b0.isEmpty) s"len($lhs)" else b0
-                      out.append(s"list_slice($lhs, $a, $b, $s0)")
-                    } else {
-                      val b0 = rest.trim
-                      // graft_slice: 1-based stop-inclusive, polymorphic
-                      // over string/list (expressions/SliceAny)
-                      if (b0.isEmpty)
-                        out.append(s"graft_slice($lhs, $a, len($lhs))")
-                      else out.append(s"graft_slice($lhs, $a, $b0)")
-                    }
-                  }
-                case None => // unrecognized primary: pass through
-                  out.append('[').append(content).append(']')
-              }
-            }
-            i = end + 1
+        val content = rewriteBrackets(sql.substring(i + 1, end))
+        val emitted = out.toString
+        val st = operandBefore(emitted, emitted.length)
+        val keywordBefore = st >= 0 && {
+          val w = wordEnd(emitted, st)
+          skipBlank(emitted, w) == emitted.length &&
+            bracketLiteralKeywords(emitted.substring(st, w).toUpperCase)
+        }
+        if (st < 0 || keywordBefore) {
+          // DuckDB list comprehension `[expr FOR v IN list [IF cond]]`
+          // → transform(filter(list, v -> cond), v -> expr)
+          comprehension(content) match {
+            case Some(c) => out.append(c)
+            case None => out.append("array(").append(content).append(')')
           }
         } else {
-          out.append(c)
-          i += 1
-        }
-      }
-    }
-    out.toString
-  }
-
-  /** Index of the first top-level ':' in a subscript body; -1 if none. */
-  private def topLevelColon(s: String): Int = {
-    var depth = 0
-    var i = 0
-    while (i < s.length) {
-      val opaque = consumeOpaque(s, i, null)
-      if (opaque > i) i = opaque
-      else {
-        s.charAt(i) match {
-          case '(' | '[' => depth += 1
-          case ')' | ']' => depth -= 1
-          case ':' if depth == 0 => return i
-          case _ =>
-        }
-        i += 1
-      }
-    }
-    -1
-  }
-
-  /** In already-emitted (well-formed) text, find the start of the
-    * trailing primary expression a subscript binds to: an identifier
-    * chain, a string literal, or a ')'-terminated call/paren group
-    * (with its function name). None when the tail isn't recognizable.
-    */
-  private def backtrackPrimary(out: StringBuilder): Option[Int] = {
-    var k = out.length
-    while (k > 0 && out.charAt(k - 1).isWhitespace) k -= 1
-    if (k == 0) return None
-    def quoteOpener(close: Int): Int = {
-      var q = close - 1
-      while (q >= 0) {
-        if (out.charAt(q) == '\'') {
-          if (q > 0 && out.charAt(q - 1) == '\'') q -= 2 else return q
-        } else q -= 1
-      }
-      -1
-    }
-    out.charAt(k - 1) match {
-      case '\'' =>
-        val open = quoteOpener(k - 1)
-        if (open >= 0) Some(open) else None
-      case ')' =>
-        var depth = 0
-        var p = k - 1
-        var start = -1
-        while (start < 0 && p >= 0) {
-          out.charAt(p) match {
-            case '\'' => p = quoteOpener(p) // jump over the literal
-            case '/' if p > 0 && out.charAt(p - 1) == '*' =>
-              // block comment end: jump to its opener (comment content
-              // is opaque — brackets inside must not count)
-              p = blockCommentOpener(out.toString, p)
-              if (p < 0) return None
-            case ')' => depth += 1
-            case '(' => depth -= 1; if (depth == 0) start = p
-            case _ =>
+          val lhs = emitted.substring(st)
+          out.setLength(st)
+          val colonAt = indexOfCode(content, ":")
+          if (colonAt < 0) {
+            // graft_subscript: polymorphic over string/list/map
+            // (expressions/SubscriptAny — element_at semantics for
+            // collections, 1-based char pick for strings)
+            out.append(s"graft_subscript($lhs, ${content.trim})")
+          } else {
+            val a0 = content.substring(0, colonAt).trim
+            val rest = content.substring(colonAt + 1)
+            val colon2 = indexOfCode(rest, ":")
+            val a = if (a0.isEmpty) "1" else a0
+            if (colon2 >= 0) {
+              // stepped slice `l[a:b:s]` (negative steps walk backward)
+              // → the 4-arg list_slice shim
+              val b0 = rest.substring(0, colon2).trim
+              val s0 = rest.substring(colon2 + 1).trim
+              val b = if (b0.isEmpty) s"len($lhs)" else b0
+              out.append(s"list_slice($lhs, $a, $b, $s0)")
+            } else {
+              val b0 = rest.trim
+              // graft_slice: 1-based stop-inclusive, polymorphic over
+              // string/list (expressions/SliceAny)
+              if (b0.isEmpty) out.append(s"graft_slice($lhs, $a, len($lhs))")
+              else out.append(s"graft_slice($lhs, $a, $b0)")
+            }
           }
-          p -= 1
         }
-        if (start < 0) None
-        else {
-          // include the call's function name / qualifier chain
-          var q = start
-          while (q > 0 && (Character.isLetterOrDigit(out.charAt(q - 1)) ||
-            out.charAt(q - 1) == '_' || out.charAt(q - 1) == '.')) q -= 1
-          Some(q)
-        }
-      case c if Character.isLetterOrDigit(c) || c == '_' =>
-        var q = k
-        while (q > 0 && (Character.isLetterOrDigit(out.charAt(q - 1)) ||
-          out.charAt(q - 1) == '_' || out.charAt(q - 1) == '.')) q -= 1
-        Some(q)
-      case _ => None
+        end + 1
+      }
     }
-  }
-
-  /** Literal-vs-subscript judgment from the text already emitted: look
-    * back over the previous token.
-    */
-  private def bracketIsLiteral(out: StringBuilder): Boolean = {
-    var k = out.length - 1
-    while (k >= 0 && out.charAt(k).isWhitespace) k -= 1
-    if (k < 0) return true // statement start
-    val c = out.charAt(k)
-    if (c == ')' || c == ']' || c == '\'' || c == '"') return false // subscript/slice
-    if (!Character.isLetterOrDigit(c) && c != '_') return true // operator/comma/paren
-    // identifier or keyword: read the word back
-    val wEnd = k
-    while (k >= 0 && (Character.isLetterOrDigit(out.charAt(k)) || out.charAt(k) == '_'))
-      k -= 1
-    // a qualified name (x.y[) is always a subscript
-    if (k >= 0 && out.charAt(k) == '.') return false
-    val word = out.substring(k + 1, wEnd + 1).toUpperCase
-    bracketLiteralKeywords.contains(word)
-  }
 
   /** DuckDB `ASOF [LEFT] JOIN rel alias ON cond` (reached by the
     * reference at /root/reference/main.go:229) → a correlated lateral
@@ -2159,29 +1569,11 @@ object Dialect {
     * real error message.
     */
   private def rewriteAsOf(sql: String): String = {
-    val up = sql.toUpperCase
-    // locate the keyword outside literals/comments, word-bounded
-    var at = -1
-    var scan = 0
-    while (at < 0 && scan < sql.length) {
-      val opaque = consumeOpaque(sql, scan, null)
-      if (opaque > scan) scan = opaque
-      else {
-        if (up.startsWith("ASOF", scan) && wordStart(sql, scan) &&
-            (scan + 4 >= sql.length || { val c = sql.charAt(scan + 4)
-              !Character.isLetterOrDigit(c) && c != '_' }))
-          at = scan
-        scan += 1
-      }
-    }
+    val at = scanCode(sql) { (i, _) => if (keywordAt(sql, i, "ASOF")) -1 else i }
     if (at < 0) return sql
     var i = at + 4
     def skipWs(): Unit = { while (i < sql.length && sql.charAt(i).isWhitespace) i += 1 }
-    def word(w: String): Boolean =
-      up.startsWith(w, i) && (i + w.length >= sql.length || {
-        val c = sql.charAt(i + w.length)
-        !Character.isLetterOrDigit(c) && c != '_'
-      })
+    def word(w: String): Boolean = keywordAt(sql, i, w)
     skipWs()
     val isLeft = word("LEFT")
     if (isLeft) { i += 4; skipWs() }
@@ -2190,20 +1582,8 @@ object Dialect {
     // right relation: balanced paren block or dotted identifier
     val relStart = i
     if (i < sql.length && sql.charAt(i) == '(') {
-      var depth = 0
-      var done = false
-      while (!done && i < sql.length) {
-        val opaque = consumeOpaque(sql, i, null)
-        if (opaque > i) i = opaque
-        else {
-          sql.charAt(i) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) done = true
-            case _ =>
-          }
-          i += 1
-        }
-      }
+      val close = closerOf(sql, i)
+      i = if (close < 0) sql.length else close + 1
     } else {
       while (i < sql.length && (sql.charAt(i).isLetterOrDigit ||
         sql.charAt(i) == '_' || sql.charAt(i) == '.')) i += 1
@@ -2224,31 +1604,23 @@ object Dialect {
     val stops = Seq("WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "WINDOW",
       "UNION", "INTERSECT", "EXCEPT", "QUALIFY", "JOIN", "LEFT", "RIGHT",
       "FULL", "INNER", "CROSS", "NATURAL", "ASOF", "SEMI", "ANTI", "OFFSET")
-    var depth = 0
-    var condEnd = -1
-    while (condEnd < 0 && i < sql.length) {
-      val opaque = consumeOpaque(sql, i, null)
-      if (opaque > i) i = opaque
-      else {
-        val c = sql.charAt(i)
-        if (c == '(') { depth += 1; i += 1 }
-        else if (c == ')') {
-          if (depth == 0) condEnd = i else { depth -= 1; i += 1 }
-        } else if (c == ';' && depth == 0) condEnd = i
-        else if (depth == 0 && wordStart(sql, i) && stops.exists { w =>
-          word(w) && {
-            // `left(x, 1)` the function and `right.col` the qualifier
-            // are NOT clause boundaries — require the keyword to stand
-            // alone (next non-space char is not '(' or '.')
-            var k = i + w.length
-            while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-            k >= sql.length || (sql.charAt(k) != '(' && sql.charAt(k) != '.')
-          }
-        }) condEnd = i
-        else i += 1
-      }
+    val condEnd = scanCode(sql, condStart) { (j, depth) =>
+      val c = sql.charAt(j)
+      if (depth == 0 && (c == ')' || c == ';' || stops.exists { w =>
+        keywordAt(sql, j, w) && {
+          // `left(x, 1)` the function and `right.col` the qualifier are
+          // NOT clause boundaries — require the keyword to stand alone
+          // (next non-space char is not '(' or '.')
+          var k = j + w.length
+          while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
+          k >= sql.length || (sql.charAt(k) != '(' && sql.charAt(k) != '.')
+        }
+      })) -1
+      else j
+    } match {
+      case -1 => sql.length
+      case e => e
     }
-    if (condEnd < 0) condEnd = sql.length
     val cond = sql.substring(condStart, condEnd).trim
     if (cond.isEmpty) return sql
     // the ts inequality conjunct → ORDER BY expr + direction
@@ -2267,49 +1639,27 @@ object Dialect {
   private def asofOrder(cond: String, alias: String): Option[String] = {
     // split top-level AND conjuncts, outside literals
     val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val up = cond.toUpperCase
-    var depth = 0
-    var i = 0
     var last = 0
-    while (i < cond.length) {
-      val opaque = consumeOpaque(cond, i, null)
-      if (opaque > i) i = opaque
-      else {
-        val c = cond.charAt(i)
-        if (c == '(') { depth += 1; i += 1 }
-        else if (c == ')') { depth -= 1; i += 1 }
-        else if (depth == 0 && up.startsWith("AND", i) && wordStart(cond, i) &&
-          (i + 3 >= cond.length || { val c = cond.charAt(i + 3)
-            !Character.isLetterOrDigit(c) && c != '_' })) {
-          parts += cond.substring(last, i)
-          i += 3
-          last = i
-        } else i += 1
-      }
+    scanCode(cond) { (i, depth) =>
+      if (depth == 0 && keywordAt(cond, i, "AND")) {
+        parts += cond.substring(last, i)
+        last = i + 3
+        last
+      } else i
     }
     parts += cond.substring(last)
     val refRe = ("""(?i)(?<![\w"])""" + java.util.regex.Pattern.quote(alias) + """\.""").r
     parts.iterator.map(_.trim).flatMap { p =>
       // first top-level comparison operator that is not (in)equality
-      var depth = 0
-      var j = 0
-      var found: Option[(String, Int)] = None
-      while (found.isEmpty && j < p.length) {
-        val opaque = consumeOpaque(p, j, null)
-        if (opaque > j) j = opaque
-        else {
-          val c = p.charAt(j)
-          if (c == '(') depth += 1
-          else if (c == ')') depth -= 1
-          else if (depth == 0 && (c == '<' || c == '>')) {
-            val two = p.substring(j, math.min(j + 2, p.length))
-            if (two != "<>") found = Some(
-              (if (two == ">=" || two == "<=") two else c.toString, j))
-          }
-          j += 1
-        }
+      val pos = scanCode(p) { (j, depth) =>
+        if (p.startsWith("<>", j)) j + 2
+        else if (depth == 0 && "<>".indexOf(p.charAt(j)) >= 0) -1
+        else j
       }
-      found.flatMap { case (op, pos) =>
+      Option.when(pos >= 0) {
+        val two = p.substring(pos, math.min(pos + 2, p.length))
+        (if (two == ">=" || two == "<=") two else p.charAt(pos).toString, pos)
+      }.flatMap { case (op, pos) =>
         val lhs = p.substring(0, pos).trim
         val rhs = p.substring(pos + op.length).trim
         val rightIsSmaller = op.startsWith(">") // A > B: B is smaller
@@ -2348,45 +1698,6 @@ object Dialect {
     }
     // nested date_diff calls in the rewritten args: fixpoint (bounded)
     if (out != sql) rewriteDateDiff(out) else out
-  }
-
-  /** If position `open` points at the whitespace/`(` of a call, return
-    * (top-level comma-split args, index just past the closing paren).
-    * Literal- and paren-aware.
-    */
-  /** Engine-internal access for Gateway's macro expansion. */
-  private[engine] def splitCallArgsPublic(
-      sql: String, open: Int): Option[(Seq[String], Int)] =
-    splitCallArgs(sql, open)
-
-  /** Engine-internal access for Gateway's COLUMNS() expansion. */
-  private[engine] def splitTopLevelPublic(s: String, sep: Char): Seq[String] =
-    splitTopLevel(s, sep)
-
-  private def splitCallArgs(sql: String, open: Int): Option[(Seq[String], Int)] = {
-    var i = open
-    while (i < sql.length && sql.charAt(i).isWhitespace) i += 1
-    if (i >= sql.length || sql.charAt(i) != '(') return None
-    i += 1
-    val args = scala.collection.mutable.Buffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    while (i < sql.length) {
-      val opaque = consumeOpaque(sql, i, cur)
-      if (opaque > i) i = opaque
-      else {
-        sql.charAt(i) match {
-          case '(' => depth += 1; cur.append('(')
-          case ')' =>
-            if (depth == 0) { args += cur.toString; return Some((args.toSeq, i + 1)) }
-            depth -= 1; cur.append(')')
-          case ',' if depth == 0 => args += cur.toString; cur.clear()
-          case c => cur.append(c)
-        }
-        i += 1
-      }
-    }
-    None
   }
 
   private val catalogFnRe =
@@ -2435,49 +1746,20 @@ object Dialect {
     * otherwise read it as a subscript of an identifier named ARRAY.
     * Nested constructors handled by recursing on the bracket body.
     */
-  private def rewriteArrayCtor(sql: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      val opaque = consumeOpaque(sql, i, sb)
-      if (opaque > i) i = opaque
-      else if (wordStart(sql, i) &&
-          sql.regionMatches(true, i, "ARRAY", 0, 5) && {
-            var k = i + 5
-            while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-            k < sql.length && sql.charAt(k) == '['
-          }) {
-        var k = i + 5
-        while (sql.charAt(k) != '[') k += 1
-        // matching close bracket, literal- and nesting-aware
-        var depth = 0
-        var j = k
-        var close = -1
-        while (j < sql.length && close < 0) {
-          val op = consumeOpaque(sql, j, null)
-          if (op > j) j = op
-          else {
-            sql.charAt(j) match {
-              case '[' | '(' => depth += 1
-              case ']' | ')' =>
-                depth -= 1
-                if (depth == 0) close = j
-              case _ =>
-            }
-            j += 1
-          }
-        }
-        if (close < 0) { sb.append(sql.charAt(i)); i += 1 }
-        else {
-          sb.append("array(")
-            .append(rewriteArrayCtor(sql.substring(k + 1, close)))
-            .append(")")
-          i = close + 1
-        }
-      } else { sb.append(sql.charAt(i)); i += 1 }
+  private def rewriteArrayCtor(sql: String): String =
+    scanOutsideLiterals(sql) { (i, sb) =>
+      var k = i + 5
+      while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
+      val close =
+        if (keywordAt(sql, i, "ARRAY") && k < sql.length && sql.charAt(k) == '[')
+          closerOf(sql, k)
+        else -1
+      if (close < 0) i
+      else {
+        sb.append("array(").append(rewriteArrayCtor(sql.substring(k + 1, close))).append(")")
+        close + 1
+      }
     }
-    sb.toString
-  }
 
   /** Collapse whitespace runs to single spaces outside literals so the
     * keyword scanners below see a canonical form (newlines before
@@ -2527,11 +1809,12 @@ object Dialect {
   /** The front end's one forward scanner: walk `sql` from `from`,
     * skipping string literals, quoted identifiers and comments
     * (consumeOpaque), and call `f(i, depth)` at every other position,
-    * `depth` being the number of `(` opened since `from` and not yet
-    * closed before `i`. `f` returns `i` to step one char, a larger index
-    * to skip what it consumed, or a negative value to stop. Returns the
-    * index `f` stopped at, or -1 at the end of the text. `$$…$$` and
-    * `e'…'` strings must be folded first (foldLiterals).
+    * `depth` being the number of brackets — `(`, `[` and `{` alike —
+    * opened since `from` and not yet closed before `i`. `f` returns `i`
+    * to step one char, a larger index to skip what it consumed, or a
+    * negative value to stop. Returns the index `f` stopped at, or -1 at
+    * the end of the text. `$$…$$` and `e'…'` strings must be folded
+    * first (foldLiterals).
     */
   private[graft] def scanCode(sql: String, from: Int = 0)(f: (Int, Int) => Int): Int = {
     var i = from
@@ -2544,8 +1827,11 @@ object Dialect {
         if (next < 0) return i
         if (next > i) i = next
         else {
-          val c = sql.charAt(i)
-          if (c == '(') depth += 1 else if (c == ')') depth -= 1
+          sql.charAt(i) match {
+            case '(' | '[' | '{' => depth += 1
+            case ')' | ']' | '}' => depth -= 1
+            case _ =>
+          }
           i += 1
         }
       }
@@ -2553,24 +1839,193 @@ object Dialect {
     -1
   }
 
-  /** `sql` without its leading whitespace and comments (a leading
-    * literal or quoted identifier stays: only comments are dropped).
+  /** The first index at or after `i` that is neither whitespace nor
+    * inside a comment.
     */
-  private[graft] def dropLeadingComments(sql: String): String = {
-    var i = 0
+  private def skipBlank(sql: String, i0: Int): Int = {
+    var i = i0
     while (i < sql.length && (sql.charAt(i).isWhitespace ||
         sql.startsWith("--", i) || sql.startsWith("/*", i)))
       i = if (sql.charAt(i).isWhitespace) i + 1 else consumeOpaque(sql, i, null)
-    sql.substring(i)
+    i
   }
+
+  /** `sql` without its leading whitespace and comments (a leading
+    * literal or quoted identifier stays: only comments are dropped).
+    */
+  private[graft] def dropLeadingComments(sql: String): String =
+    sql.substring(skipBlank(sql, 0))
+
+  /** Index of the bracket closing the one opened at `open`, or -1. */
+  private def closerOf(sql: String, open: Int): Int =
+    scanCode(sql, open) { (i, depth) =>
+      if (depth == 1 && ")]}".indexOf(sql.charAt(i)) >= 0) -1 else i
+    }
+
+  /** First index of `needle` (case-insensitive) in code — outside
+    * literals, quoted identifiers and comments — at bracket depth 0, or
+    * at any depth when `anyDepth`; -1 if absent. A `::` cast is one
+    * token, so the needle ":" never matches half of it.
+    */
+  private def indexOfCode(sql: String, needle: String,
+      anyDepth: Boolean = false): Int =
+    scanCode(sql) { (i, depth) =>
+      if (sql.startsWith("::", i)) i + 2
+      else if ((anyDepth || depth == 0) &&
+          sql.regionMatches(true, i, needle, 0, needle.length)) -1
+      else i
+    }
+
+  /** Split on `sep` at bracket depth 0. */
+  private[engine] def splitTopLevel(s: String, sep: Char): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    var last = 0
+    scanCode(s) { (i, depth) =>
+      if (depth == 0 && s.charAt(i) == sep) {
+        out += s.substring(last, i); last = i + 1
+      }
+      i
+    }
+    out += s.substring(last)
+    out.result()
+  }
+
+  /** If position `open` points at the whitespace/`(` of a call, return
+    * (its arguments split at depth-0 commas, index just past the
+    * closing paren).
+    */
+  private[engine] def splitCallArgs(sql: String, open: Int): Option[(Seq[String], Int)] = {
+    var o = open
+    while (o < sql.length && sql.charAt(o).isWhitespace) o += 1
+    if (o >= sql.length || sql.charAt(o) != '(') return None
+    val args = Seq.newBuilder[String]
+    var last = o + 1
+    val close = scanCode(sql, o) { (i, depth) =>
+      if (depth != 1) i
+      else sql.charAt(i) match {
+        case ',' => args += sql.substring(last, i); last = i + 1; i
+        case ')' | ']' | '}' => -1
+        case _ => i
+      }
+    }
+    if (close < 0) None
+    else {
+      args += sql.substring(last, close)
+      Some((args.result(), close + 1))
+    }
+  }
+
+  private def isWordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
+
+  /** Start of the operand that ends just before `end`, whitespace and
+    * comments between the two skipped; -1 when none ends there. An
+    * operand is a run of directly adjacent pieces — words (names,
+    * numbers), `.`, string literals, quoted identifiers and bracket
+    * groups — so `t."a"`, `'it''s'`, `1.5`, `(a + b)` and `f(x)[2]` are
+    * each one operand. A lone `END` is not one (it closes a CASE). One
+    * forward scanCode pass from 0 finds it, so brackets inside literals
+    * and comments never count.
+    */
+  private def operandBefore(text: String, end: Int): Int = {
+    var start = -1 // the current level's trailing run of pieces…
+    var last = -1  // …and the index just past its last piece
+    var outer = List.empty[(Int, Int, Int)] // per open bracket: (start, last, open)
+    def piece(s: Int, e: Int): Unit = {
+      if (s != last) start = s
+      last = e
+    }
+    var next = 0 // text[next, i) was skipped by scanCode: a literal or comment
+    def skipped(i: Int): Unit = {
+      if (i > next && (text.charAt(next) == '\'' || text.charAt(next) == '"'))
+        piece(next, i)
+      next = i
+    }
+    scanCode(text) { (i, _) =>
+      if (i > end) -1
+      else {
+        skipped(i)
+        if (i == end) -1
+        else {
+          text.charAt(i) match {
+            case c if isWordChar(c) || c == '.' => piece(i, i + 1)
+            case '(' | '[' | '{' =>
+              outer = (start, last, i) :: outer; start = -1; last = -1
+            case ')' | ']' | '}' if outer.nonEmpty =>
+              val (s, l, open) = outer.head
+              outer = outer.tail; start = s; last = l
+              piece(open, i + 1)
+            case c if c.isWhitespace =>
+            case _ => start = -1; last = -1
+          }
+          next = i + 1
+          i
+        }
+      }
+    }
+    if (next < end) skipped(end)
+    if (start >= 0 && last - start == 3 &&
+        text.regionMatches(true, start, "END", 0, 3)) -1
+    else start
+  }
+
+  /** operandBefore at the end of the text emitted so far. */
+  private def operandBefore(out: StringBuilder): Int = operandBefore(out.toString, out.length)
+
+  /** Wrap the operand at the end of `out` as `fn(operand)`; false when
+    * none ends there.
+    */
+  private def wrapOperandBefore(out: StringBuilder, fn: String): Boolean = {
+    val start = operandBefore(out)
+    if (start >= 0) {
+      val operand = out.substring(start)
+      out.setLength(start)
+      out.append(s"$fn($operand)")
+    }
+    start >= 0
+  }
+
+  /** End (exclusive) of the operand that starts at `from` past
+    * whitespace, comments and an optional sign; -1 when none starts
+    * there. The same operand shapes as operandBefore.
+    */
+  private def operandAfter(text: String, from: Int): Int = {
+    var s = skipBlank(text, from)
+    if (s < text.length && (text.charAt(s) == '-' || text.charAt(s) == '+')) s += 1
+    var last = s // the operand so far is text[s, last)
+    var next = s // text[next, i) was skipped by scanCode: a literal or comment
+    def skipped(i: Int): Unit =
+      if (i > next && next == last &&
+          (text.charAt(next) == '\'' || text.charAt(next) == '"')) last = i
+    val stop = scanCode(text, s) { (i, depth) =>
+      if (depth > 0) {
+        if (depth == 1 && ")]}".indexOf(text.charAt(i)) >= 0) {
+          last = i + 1; next = i + 1
+        }
+        i
+      } else {
+        skipped(i)
+        val c = text.charAt(i)
+        if (i != last) -1
+        else if (isWordChar(c) || c == '.') { last = i + 1; next = i + 1; i }
+        else if ("([{".indexOf(c) >= 0) i // a group: `last` moves at its closer
+        else -1
+      }
+    }
+    if (stop < 0) skipped(text.length)
+    if (last > s) last else -1
+  }
+
+  /** scanOutsideLiterals's callback. A plain `(Int, StringBuilder) =>
+    * Int` would box the index on every character of every pass.
+    */
+  private[graft] trait CodeStep { def apply(i: Int, sb: StringBuilder): Int }
 
   /** scanCode's copying form: rebuild `sql`, copying literals, quoted
     * identifiers and comments verbatim. `f(i, sb)` either returns an
     * index past `i` after appending its replacement for the text it
     * consumed to `sb`, or any other value to copy the char at `i`.
     */
-  private[graft] def scanOutsideLiterals(sql: String)(
-      f: (Int, StringBuilder) => Int): String = {
+  private[graft] def scanOutsideLiterals(sql: String)(f: CodeStep): String = {
     val sb = new StringBuilder
     var last = 0 // sql[last, i) is not yet copied
     scanCode(sql) { (i, _) =>
@@ -2588,10 +2043,15 @@ object Dialect {
     */
   private[graft] def keywordAt(sql: String, i: Int, kw: String): Boolean = {
     val end = i + kw.length
-    sql.regionMatches(true, i, kw, 0, kw.length) && wordStart(sql, i) &&
+    wordStart(sql, i) && sql.regionMatches(true, i, kw, 0, kw.length) &&
       (end >= sql.length ||
         !(Character.isLetterOrDigit(sql.charAt(end)) || sql.charAt(end) == '_'))
   }
+
+  /** The first of `kws` that stands as a whole word at `i`. */
+  private def keywordIn(sql: String, i: Int, kws: Seq[String]): Option[String] =
+    if (!wordStart(sql, i) || !sql.charAt(i).isLetter) None
+    else kws.find(keywordAt(sql, i, _))
 
   /** End of the identifier-like word (letters, digits, `_`) at `i`. */
   private[graft] def wordEnd(sql: String, i: Int): Int = {
@@ -2646,13 +2106,13 @@ object Dialect {
           else splitCallArgs(sql, m + 4) match {
             case Some((specParts, specEnd)) =>
               val spec = specParts.mkString(",")
-              val obIdx = indexOfTopLevel(spec, " ORDER BY ") match {
+              val obIdx = indexOfCode(spec, " ORDER BY ") match {
                 case -1 =>
                   if ("""(?is)^\s*ORDER\s+BY\s.*""".r.matches(spec)) 0 else -1
                 case x => x
               }
               val hasFrame = Seq(" ROWS ", " RANGE ", " GROUPS ")
-                .exists(f => indexOfTopLevel(spec, f) >= 0)
+                .exists(f => indexOfCode(spec, f) >= 0)
               if (obIdx < 0 || hasFrame) i
               else {
                 val afterOb = spec.substring(obIdx)
@@ -2712,8 +2172,6 @@ object Dialect {
     * text as a literal (the registry cannot see the statement). Single
     * pass; the substituted literal is opaque to later scans. */
   private val currentQueryRe = """(?is)^CURRENT_QUERY\s*\(\s*\)""".r
-  def substituteCurrentQuery(sql: String): String =
-    substituteCurrentQuery(sql, sql)
 
   /** `original` is the statement text to REPORT — DuckDB returns the
     * text as the user typed it, so the gateway passes the pre-
@@ -2868,66 +2326,35 @@ object Dialect {
     * LHS can never be a lambda parameter, so those chains always
     * rewrite.
     */
-  private def rewriteJsonArrows(sql: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      val opaque = consumeOpaque(sql, i, out)
-      if (opaque > i) i = opaque
-      else if (sql.startsWith("->", i)) {
-        // backtrack the emitted text for the LHS (identifier or the
-        // string literal consumeOpaque already copied)
-        var k = out.length
-        while (k > 0 && out.charAt(k - 1).isWhitespace) k -= 1
-        var lhsStart = -1
-        if (k > 0 && out.charAt(k - 1) == '\'') {
-          var q = k - 2
-          var open = -1
-          while (open < 0 && q >= 0) {
-            if (out.charAt(q) == '\'') {
-              if (q > 0 && out.charAt(q - 1) == '\'') q -= 2 // '' escape
-              else open = q
-            } else q -= 1
-          }
-          if (open >= 0) lhsStart = open
-        } else {
-          var q = k
-          while (q > 0 && (Character.isLetterOrDigit(out.charAt(q - 1)) ||
-            out.charAt(q - 1) == '_' || out.charAt(q - 1) == '.')) q -= 1
-          if (q < k) lhsStart = q
+  private def rewriteJsonArrows(sql: String): String =
+    scanOutsideLiterals(sql) { (i, out) =>
+      // forward-parse the arrow steps
+      val steps = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      var j = i
+      var more = sql.startsWith("->", i)
+      while (more) {
+        arrowStepRe.findPrefixMatchOf(sql.substring(j)) match {
+          case Some(m) => steps += ((m.group(1), m.group(2))); j += m.end
+          case None => more = false
         }
-        // forward-parse the arrow steps
-        val steps = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        var j = i
-        var more = lhsStart >= 0
-        while (more) {
-          arrowStepRe.findPrefixMatchOf(sql.substring(j)) match {
-            case Some(m) => steps += ((m.group(1), m.group(2))); j += m.end
-            case None => more = false
-          }
+      }
+      val lhsStart = if (steps.isEmpty) -1 else operandBefore(out)
+      val literalLhs = lhsStart >= 0 && out.charAt(lhsStart) == '\''
+      if (lhsStart < 0 || !(literalLhs || steps.last._1 == "->>")) i
+      else {
+        var expr = out.substring(lhsStart)
+        out.setLength(lhsStart)
+        steps.foreach { case (op, seg) =>
+          val path = if (seg.startsWith("$")) seg else "$." + seg
+          // `->` keeps the JSON-text form (DuckDB JSON type: '"x"',
+          // '[1,2]'); only `->>` unquotes to VARCHAR
+          val fn = if (op == "->>") "get_json_object" else "json_extract"
+          expr = s"$fn($expr, '$path')"
         }
-        val literalLhs = lhsStart >= 0 && out.charAt(lhsStart) == '\''
-        val rewritable = steps.nonEmpty && (literalLhs || steps.last._1 == "->>")
-        if (rewritable) {
-          var expr = out.substring(lhsStart, k)
-          out.setLength(lhsStart)
-          steps.foreach { case (op, seg) =>
-            val path = if (seg.startsWith("$")) seg else "$." + seg
-            // `->` keeps the JSON-text form (DuckDB JSON type: '"x"',
-            // '[1,2]'); only `->>` unquotes to VARCHAR
-            val fn = if (op == "->>") "get_json_object" else "json_extract"
-            expr = s"$fn($expr, '$path')"
-          }
-          out.append(expr)
-          i = j
-        } else { out.append(sql.charAt(i)); i += 1 }
-      } else {
-        out.append(sql.charAt(i))
-        i += 1
+        out.append(expr)
+        j
       }
     }
-    out.toString
-  }
 
   /** `SELECT <list> FROM … QUALIFY pred [tail]` →
     * `SELECT * EXCEPT (__q) FROM (SELECT <list>, (pred) AS __q FROM …)
@@ -2964,18 +2391,18 @@ object Dialect {
     var searchFrom = 0
     while (guard < 512) {
       guard += 1
-      val rel = indexOfAnyDepth(cur.substring(searchFrom), " WINDOW ")
+      val rel = indexOfCode(cur.substring(searchFrom), " WINDOW ", anyDepth = true)
       if (rel < 0) return cur
       val wi = searchFrom + rel
       val (s0, e0) = scopeBounds(cur, wi)
       val scope = cur.substring(s0, e0)
       val wiS = wi - s0
-      if (indexOfTopLevel(scope, " WINDOW ") != wiS) { searchFrom = wi + 1 }
+      if (indexOfCode(scope, " WINDOW ") != wiS) { searchFrom = wi + 1 }
       else {
         val rest = scope.substring(wiS + " WINDOW ".length)
         val tailIdx = Seq(" ORDER BY ", " LIMIT ", " OFFSET ",
           " UNION ", " INTERSECT ", " EXCEPT ")
-          .map(k => indexOfTopLevel(rest, k)).filter(_ >= 0)
+          .map(k => indexOfCode(rest, k)).filter(_ >= 0)
           .sorted.headOption.getOrElse(rest.length)
         val defs = splitTopLevel(rest.substring(0, tailIdx), ',')
           .map(p => windowDefRe.findFirstMatchIn(p.trim)
@@ -2990,7 +2417,7 @@ object Dialect {
               """\b""").r
           val needsInline =
             ds.exists { case (_, spec) =>
-              indexOfTopLevel(spec, " EXCLUDE ") >= 0 ||
+              indexOfCode(spec, " EXCLUDE ") >= 0 ||
                 """(?is).*\bGROUPS\s+(BETWEEN|UNBOUNDED|CURRENT|\d).*"""
                   .r.matches(spec)
             } || (("""(?is).*\bFILTER\s*\(.*""".r.matches(head)) &&
@@ -3029,7 +2456,7 @@ object Dialect {
     var cur = sql
     var guard = 0
     while (guard < 512) {
-      val qi = indexOfAnyDepth(cur, " QUALIFY ")
+      val qi = indexOfCode(cur, " QUALIFY ", anyDepth = true)
       if (qi < 0) return cur
       val (s0, e0) = scopeBounds(cur, qi)
       cur = cur.substring(0, s0) +
@@ -3040,53 +2467,36 @@ object Dialect {
     cur
   }
 
-  /** Bounds of the innermost parenthesized scope containing `pos`:
-    * (start-after-'(', index-of-matching-')') — or the whole string when
-    * `pos` sits at depth 0. Literal-aware.
+  /** Bounds of the innermost bracketed scope containing `pos`:
+    * (start-after-the-opener, index-of-its-closer) — or the whole string
+    * when `pos` sits at depth 0.
     */
   private def scopeBounds(sql: String, pos: Int): (Int, Int) = {
-    var stack = List.empty[Int]
-    var i = 0
-    var start = 0
-    while (i < pos) {
-      val opaque = consumeOpaque(sql, i, null)
-      if (opaque > i) i = opaque
+    var opens = List.empty[Int] // open brackets before `pos`, innermost first
+    scanCode(sql) { (i, _) =>
+      if (i >= pos) -1
       else {
         sql.charAt(i) match {
-          case '(' => stack = i :: stack
-          case ')' => if (stack.nonEmpty) stack = stack.tail
+          case '(' | '[' | '{' => opens = i :: opens
+          case ')' | ']' | '}' => if (opens.nonEmpty) opens = opens.tail
           case _ =>
         }
-        i += 1
+        i
       }
     }
-    start = stack.headOption.map(_ + 1).getOrElse(0)
-    if (stack.isEmpty) return (0, sql.length)
-    // find the ')' matching the open paren at stack.head
-    var depth = 0
-    i = pos
-    while (i < sql.length) {
-      val opaque = consumeOpaque(sql, i, null)
-      if (opaque > i) i = opaque
-      else {
-        sql.charAt(i) match {
-          case '(' => depth += 1
-          case ')' =>
-            if (depth == 0) return (start, i)
-            depth -= 1
-          case _ =>
-        }
-        i += 1
-      }
+    opens.headOption match {
+      case None => (0, sql.length)
+      case Some(open) =>
+        val close = closerOf(sql, open)
+        (open + 1, if (close < 0) sql.length else close)
     }
-    (start, sql.length)
   }
 
   /** Single-scope QUALIFY rewrite; `sql` is one SELECT scope (QUALIFY at
     * its depth 0).
     */
   private def rewriteQualifyScope(sql: String): String = {
-    val qi = indexOfTopLevel(sql, " QUALIFY ")
+    val qi = indexOfCode(sql, " QUALIFY ")
     if (qi < 0) return sql
     // head = everything before QUALIFY; find tail start (ORDER BY/LIMIT/
     // set-op at top level after the predicate)
@@ -3094,13 +2504,13 @@ object Dialect {
     val rest = sql.substring(qi + " QUALIFY ".length)
     val tailIdx = Seq(" ORDER BY ", " LIMIT ", " OFFSET ",
       " UNION ", " INTERSECT ", " EXCEPT ")
-      .map(k => indexOfTopLevel(rest, k)).filter(_ >= 0)
+      .map(k => indexOfCode(rest, k)).filter(_ >= 0)
       .sorted.headOption.getOrElse(rest.length)
     val pred = rest.substring(0, tailIdx).trim
     val tail = rest.substring(tailIdx)
     // inject `, (pred) AS __q` at the end of the head's select list =
     // just before its top-level FROM
-    val fi = indexOfTopLevel(head, " FROM ")
+    val fi = indexOfCode(head, " FROM ")
     require(fi >= 0, "QUALIFY rewrite: no FROM clause found")
     val withQ = head.substring(0, fi) + s", ($pred) AS __q" + head.substring(fi)
     s"SELECT * EXCEPT (__q) FROM ($withQ) WHERE __q$tail"
@@ -3162,7 +2572,7 @@ object Dialect {
     var searchFrom = 0
     while (searchFrom < sql.length) {
       val ei = {
-        val idx = indexOfAnyDepth(sql.substring(searchFrom), " EXCLUDE ")
+        val idx = indexOfCode(sql.substring(searchFrom), " EXCLUDE ", anyDepth = true)
         if (idx < 0) return None else searchFrom + idx
       }
       searchFrom = ei + 1
@@ -3171,7 +2581,7 @@ object Dialect {
         val beforeParen = sql.substring(0, sb0 - 1)
         val spec = sql.substring(sb0, se0)
         val overM = """(?is)^(.*?)\bOVER\s*$""".r.findFirstMatchIn(beforeParen)
-        val exIdx = indexOfTopLevel(spec, " EXCLUDE ")
+        val exIdx = indexOfCode(spec, " EXCLUDE ")
         if (overM.isDefined && exIdx >= 0) {
           excludeModeRe.findFirstMatchIn(spec.substring(exIdx)) match {
             case None => // not a frame EXCLUDE (e.g. inside a subexpr) — skip
@@ -3202,7 +2612,7 @@ object Dialect {
       while (k >= 0 && sql.charAt(k).isWhitespace) k -= 1
       k - 3 // start of the OVER word ("OVER" is 4 chars ending at k)
     }
-    val aggStart = operandStart(sql, overStart)
+    val aggStart = operandBefore(sql, overStart)
     if (aggStart < 0) return None
     val aggText = sql.substring(aggStart, overStart).trim
     val (fn, arg) = aggCallRe.findFirstMatchIn(aggText) match {
@@ -3212,7 +2622,7 @@ object Dialect {
     if (!Set("SUM", "COUNT", "AVG").contains(fn)) return None
     if (arg.toUpperCase.startsWith("DISTINCT")) return None
     // spec anatomy
-    val obIdx = indexOfTopLevel(specClean, " ORDER BY ") match {
+    val obIdx = indexOfCode(specClean, " ORDER BY ") match {
       case -1 => if ("""(?is)^\s*ORDER\s+BY\s.*""".r.matches(specClean)) 0 else -1
       case i => i
     }
@@ -3221,7 +2631,7 @@ object Dialect {
     val afterOb = specClean.substring(obIdx)
       .replaceAll("""(?is)^\s*ORDER\s+BY\s+""", "")
     val frameIdx = Seq(" ROWS ", " RANGE ", " GROUPS ")
-      .map(k => indexOfTopLevel(afterOb, k)).filter(_ >= 0)
+      .map(k => indexOfCode(afterOb, k)).filter(_ >= 0)
       .sorted.headOption.getOrElse(afterOb.length)
     val orderPart = afterOb.substring(0, frameIdx).trim
     val frame = afterOb.substring(frameIdx).trim
@@ -3285,7 +2695,7 @@ object Dialect {
       while (k >= 0 && sql.charAt(k).isWhitespace) k -= 1
       k - 3
     }
-    val aggStart = operandStart(sql, overStart)
+    val aggStart = operandBefore(sql, overStart)
     if (aggStart < 0) return None
     val aggText = sql.substring(aggStart, overStart).trim
     val (fn, arg0) = aggCallRe.findFirstMatchIn(aggText) match {
@@ -3312,7 +2722,7 @@ object Dialect {
       return None
     val isStar = arg == "*"
     if (isStar && fn != "COUNT") return None
-    val obIdx = indexOfTopLevel(specClean, " ORDER BY ") match {
+    val obIdx = indexOfCode(specClean, " ORDER BY ") match {
       case -1 => if ("""(?is)^\s*ORDER\s+BY\s.*""".r.matches(specClean)) 0 else -1
       case i => i
     }
@@ -3320,7 +2730,7 @@ object Dialect {
     val afterOb = specClean.substring(obIdx)
       .replaceAll("""(?is)^\s*ORDER\s+BY\s+""", "")
     val frameIdx = Seq(" ROWS ", " RANGE ", " GROUPS ")
-      .map(k => indexOfTopLevel(afterOb, k)).filter(_ >= 0)
+      .map(k => indexOfCode(afterOb, k)).filter(_ >= 0)
       .sorted.headOption.getOrElse(afterOb.length)
     val orderKeys = splitTopLevel(afterOb.substring(0, frameIdx), ',')
       .map(_.trim)
@@ -3436,7 +2846,7 @@ object Dialect {
     var searchFrom = 0
     while (searchFrom < sql.length) {
       val gi = {
-        val idx = indexOfAnyDepth(sql.substring(searchFrom), " GROUPS ")
+        val idx = indexOfCode(sql.substring(searchFrom), " GROUPS ", anyDepth = true)
         if (idx < 0) return None else searchFrom + idx
       }
       searchFrom = gi + 1
@@ -3447,11 +2857,11 @@ object Dialect {
         val beforeParen = sql.substring(0, sb0 - 1)
         val spec = sql.substring(sb0, se0)
         val overOk = """(?is).*\bOVER\s*$""".r.matches(beforeParen)
-        val obIdx = indexOfTopLevel(spec, " ORDER BY ") match {
+        val obIdx = indexOfCode(spec, " ORDER BY ") match {
           case -1 => if ("""(?is)^\s*ORDER\s+BY\s.*""".r.matches(spec)) 0 else -1
           case i => i
         }
-        val gIdx = indexOfTopLevel(spec, " GROUPS ")
+        val gIdx = indexOfCode(spec, " GROUPS ")
         if (overOk && obIdx >= 0 && gIdx > obIdx) {
           val frame = spec.substring(gIdx + " GROUPS ".length).trim
           val frameOk = """(?is)^(BETWEEN|UNBOUNDED|CURRENT|\d).*""".r.matches(frame) &&
@@ -3494,7 +2904,7 @@ object Dialect {
     // bail: aggregation scopes (windows run post-GROUP BY there) and
     // named-window scopes
     if (Seq(" GROUP BY ", " HAVING ", " WINDOW ")
-        .exists(k => indexOfTopLevel(scope, k) >= 0)) return None
+        .exists(k => indexOfCode(scope, k) >= 0)) return None
     // the OVER clause must sit in the select list, before the FROM —
     // the RELATION-clause FROM, not the one inside IS DISTINCT FROM
     // (the EXCLUDE general fold emits those in the select list)
@@ -3505,7 +2915,7 @@ object Dialect {
     val afterFrom = fi + " FROM ".length
     val tailIdx = Seq(" ORDER BY ", " LIMIT ", " OFFSET ",
       " UNION ", " INTERSECT ", " EXCEPT ")
-      .map(k => indexOfTopLevel(scope, k)).filter(_ >= afterFrom)
+      .map(k => indexOfCode(scope, k)).filter(_ >= afterFrom)
       .sorted.headOption.getOrElse(scope.length)
     // REUSE an already-injected rank for the same (partition, order):
     // a select list can hold dozens of GROUPS windows over one spec
@@ -3585,54 +2995,12 @@ object Dialect {
   private def fromClauseIdx(scope: String): Int = {
     var from = 0
     while (from < scope.length) {
-      val rel = indexOfTopLevel(scope.substring(from), " FROM ")
+      val rel = indexOfCode(scope.substring(from), " FROM ")
       if (rel < 0) return -1
       val i = from + rel
       val before = scope.substring(0, i).trim.toUpperCase
       if (!before.endsWith(" DISTINCT")) return i
       from = i + 1
-    }
-    -1
-  }
-
-  /** First index of `needle` (case-insensitive) outside literals at any
-    * paren depth; -1 if absent.
-    */
-  private def indexOfAnyDepth(sql: String, needle: String): Int = {
-    val up = sql.toUpperCase
-    val n = needle.toUpperCase
-    var i = 0
-    while (i < sql.length) {
-      val opaque = consumeOpaque(sql, i, null)
-      if (opaque > i) i = opaque
-      else {
-        if (up.startsWith(n, i)) return i
-        i += 1
-      }
-    }
-    -1
-  }
-
-  /** First index of `needle` (case-insensitive) at paren depth 0 and
-    * outside literals; -1 if absent.
-    */
-  private def indexOfTopLevel(sql: String, needle: String): Int = {
-    val up = sql.toUpperCase
-    val n = needle.toUpperCase
-    var depth = 0
-    var i = 0
-    while (i < sql.length) {
-      val opaque = consumeOpaque(sql, i, null)
-      if (opaque > i) i = opaque
-      else {
-        sql.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ =>
-            if (depth == 0 && up.startsWith(n, i)) return i
-        }
-        i += 1
-      }
     }
     -1
   }

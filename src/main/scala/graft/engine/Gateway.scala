@@ -692,7 +692,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     */
   private def readCall(sql: String, i: Int, m: Regex.Match,
       sb: StringBuilder): Option[Int] =
-    Dialect.splitCallArgsPublic(sql, i + m.end).collect {
+    Dialect.splitCallArgs(sql, i + m.end).collect {
       case (args, end) if args.nonEmpty =>
         val kind = Option(m.group(2)).getOrElse("parquet").toLowerCase match {
           case "csv_auto" | "csv" => "csv"
@@ -702,40 +702,18 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
           case _ => "parquet" // read_parquet and the parquet_scan alias
         }
         val litRe = """'((?:[^']|'')*)'""".r
-        // splitCallArgs tracks parens but not {}/[]: re-merge args
-        // the columns={'a':'T','b':'U'} struct and ['p1','p2']
-        // list forms split at their inner commas (balance count
-        // outside literals)
-        def braceBalance(s: String): Int = {
-          var d = 0
-          Dialect.scanCode(s) { (j, _) =>
-            s.charAt(j) match {
-              case '{' | '[' => d += 1
-              case '}' | ']' => d -= 1
-              case _ =>
-            }
-            j
-          }
-          d
-        }
-        val merged = args.foldLeft(List.empty[String]) { (acc, a) =>
-          acc match {
-            case h :: t if braceBalance(h) > 0 => (h + "," + a) :: t
-            case _ => a :: acc
-          }
-        }.reverse
         val paths = {
-          val a0 = merged.head.trim
+          val a0 = args.head.trim
           if (a0.startsWith("["))
             litRe.findAllMatchIn(a0).map(_.group(1)).toSeq
           else litRe.findPrefixMatchOf(a0).map(_.group(1)).toSeq
         }
         val optRe = """(?s)^\s*([A-Za-z_]+)\s*=\s*(.*)$""".r
-        val opts = merged.tail.flatMap {
+        val opts = args.tail.flatMap {
           case optRe(k, v) => Some(k.toLowerCase -> v.trim)
           case _ => None
         }
-        if (paths.isEmpty || opts.length != merged.tail.length)
+        if (paths.isEmpty || opts.length != args.tail.length)
           sb.append(sql.substring(i, end))
         else sb.append(s"${m.group(1)} ${fileView(paths, Some(kind), opts)}")
         end
@@ -911,7 +889,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     val body = Option(prepared.get(name.toLowerCase)).getOrElse(
       throw new GatewayException(s"prepared statement not found: $name"))
     val args: Seq[String] = argList.map { at =>
-      Dialect.splitCallArgsPublic("(" + at + ")", 0) match {
+      Dialect.splitCallArgs("(" + at + ")", 0) match {
         case Some((as, _)) => as.map(_.trim).filter(_.nonEmpty)
         case None =>
           throw new GatewayException(s"EXECUTE $name: malformed argument list")
@@ -993,7 +971,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
             var k = j
             while (k < text.length && text.charAt(k).isWhitespace) k += 1
             if (k < text.length && text.charAt(k) == '(')
-              Dialect.splitCallArgsPublic(text, k).map(m -> _)
+              Dialect.splitCallArgs(text, k).map(m -> _)
             else None
           }
           call match {
@@ -1057,10 +1035,10 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     val listStart = selAt + "SELECT".length
     val selectList = sql.substring(listStart, fromAt)
     if (!columnsCallRe.findFirstIn(selectList).isDefined) return sql
-    val items = Dialect.splitTopLevelPublic(selectList, ',').map { item =>
+    val items = Dialect.splitTopLevel(selectList, ',').map { item =>
       columnsCallRe.findFirstMatchIn(item) match {
         case Some(m) =>
-          Dialect.splitCallArgsPublic(item, m.end - 1) match {
+          Dialect.splitCallArgs(item, m.end - 1) match {
             case Some((args, end)) if args.length == 1 =>
               val arg = args.head.trim
               val names: Seq[String] =
@@ -1691,6 +1669,10 @@ object Gateway {
     // TIME literals/casts freely, so the dialect session turns it on
     // (closes the round-6 "TIME round-trips as VARCHAR" divergence)
     sess.conf.set("spark.sql.timeType.enabled", "true")
+    // DuckDB reads "…" as an identifier, never a string; Spark does so
+    // only with this flag, which takes effect under ANSI mode
+    // (spark.sql.ansi.enabled, the default)
+    sess.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
     // parser-level enforcement flag (ReadOnlyGuard): Thrift/JDBC clients
     // execute on this session directly, never through Gateway.sql
     if (readOnly) sess.conf.set("spark.graft.readOnly", "true")

@@ -20,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * shape); statements whose recursion is UNION ALL, or with no
   * self-reference at all, are NOT handled here — the caller passes them
   * to Spark's native path. The split runs on Dialect.scanCode, which
-  * skips literals, quoted identifiers and comments and tracks paren
+  * skips literals, quoted identifiers and comments and tracks bracket
   * depth, so none of those can derail it on `UNION` or a paren.
   */
 object RecursiveSql {

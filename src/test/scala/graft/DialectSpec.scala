@@ -289,6 +289,57 @@ class DialectSpec extends AnyFunSuite {
     assert(squash(powFwd).contains(squash("power(2, /* c */ 3)")), powFwd)
   }
 
+  test("property: postfix operators and casts wrap exactly the operand before them") {
+    // one operand finder serves `::JSON`, `::BIT`, `**`, `!`, `[i]` and
+    // `->>`: whatever the operand's shape — a name chain, a quoted
+    // identifier, a literal with '' inside, a call or group whose
+    // comment holds brackets — the rewrite wraps that operand and
+    // nothing before it
+    def word(prefix: String) =
+      Gen.chooseNum(1, 5).flatMap(n => Gen.stringOfN(n, Gen.alphaLowerChar))
+        .map(prefix + _)
+    val bracketText = Gen.chooseNum(0, 6).flatMap(n => Gen.stringOfN(n,
+      Gen.oneOf(Gen.alphaNumChar,
+        Gen.oneOf('(', ')', '[', ']', '{', '}', ' ', ',', '\'', '"'))))
+    val quotedId = bracketText.map(t => "\"" + t.replace("\"", "\"\"") + "\"")
+    val literal = bracketText.map(t => "'" + t.replace("'", "''") + "'")
+    val comment = bracketText.map(t => s"/* $t */")
+    val number = Gen.oneOf(Gen.chooseNum(0, 99).map(_.toString), Gen.const("1.5"))
+    val chain = for {
+      head <- word("t_")
+      tail <- Gen.oneOf(word("col_"), quotedId)
+    } yield s"$head.$tail"
+    def operand(depth: Int): Gen[String] =
+      if (depth == 0) Gen.oneOf(word("col_"), quotedId, literal, number, chain)
+      else Gen.frequency(
+        3 -> operand(0),
+        1 -> (for { f <- word("fn_"); a <- operand(depth - 1); c <- comment }
+          yield s"$f($a $c)"),
+        1 -> (for { a <- operand(depth - 1); b <- operand(depth - 1); c <- comment }
+          yield s"($a + $b $c)"),
+        1 -> (for { a <- chain; c <- comment } yield s"$a[2 $c]"))
+    val postfix = Seq(
+      "::JSON" -> ((o: String) => s"graft_json_cast($o)"),
+      "::BIT" -> ((o: String) => s"graft_bit($o)"),
+      " ** 2" -> ((o: String) => s"power($o, 2)"),
+      "!" -> ((o: String) => s"factorial($o)"),
+      "[1]" -> ((o: String) => s"graft_subscript($o, 1)"),
+      " ->> 'k'" -> ((o: String) => s"get_json_object($o, '$$.k')"))
+    val before = Seq("1 + " -> "", "(" -> ")", "col_p, " -> "")
+    val cases = for {
+      op <- operand(2); p <- Gen.oneOf(postfix); b <- Gen.oneOf(before)
+    } yield (op, p, b)
+    def squash(s: String): String = s.replaceAll("\\s+", "")
+    TestProps.forAll(cases) { case (op, (post, wrap), (open, close)) =>
+      val sql = s"SELECT $open$op$post$close AS v FROM t"
+      // the operand as the rest of the pipeline renders it on its own
+      val opOut = Dialect.rewrite(s"SELECT $op").stripPrefix("SELECT ")
+      val out = Dialect.rewrite(sql)
+      assert(squash(out).contains(squash(s"$open${wrap(opOut)}$close AS v")),
+        s"\n  in:  $sql\n  out: $out\n  operand: $opOut")
+    }
+  }
+
   test("property: jaro/jaro-winkler bounds, identity, symmetry") {
     import graft.engine.expressions.StringSim
     import org.apache.spark.unsafe.types.UTF8String.{fromString => u}

@@ -106,6 +106,11 @@ class FlightSpec extends AnyFunSuite {
     assert(r.rows.map(_.head.toString) == Seq("1"))
   }
 
+  test("DoGet: a double-quoted name reads the column, as in DuckDB") {
+    val r = client.doGetSql("SELECT \"a\" FROM (SELECT 7 AS a) t")
+    assert(r.rows.map(_.head.toString) == Seq("7"))
+  }
+
   test("invalid SQL surfaces INVALID_ARGUMENT, not a broken stream") {
     val e = intercept[Exception](client.doGetSql("SELECT FROM WHERE"))
     assert(e.getMessage.contains("INVALID_ARGUMENT") ||

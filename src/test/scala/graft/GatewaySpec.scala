@@ -2203,4 +2203,45 @@ class GatewaySpec extends AnyFunSuite {
     assert(ints("SELECT 1 AS a -- FROM 'missing.parquet'") == Seq(1))
     assert(ints("SELECT 1 AS a /* JOIN read_csv('missing.csv') */") == Seq(1))
   }
+
+  test("operands and bracket depth follow one scanner (DuckDB 1.0 pinned)") {
+    def one(q: String) = gw.sql(q).collect().head
+    // a bracket inside a comment is not part of the operand's depth
+    assert(one("SELECT 2 ** (1 /* ) */ + 1) AS v").getDouble(0) == 4.0)
+    assert(one("SELECT @(-3 /* ) */) AS v").getInt(0) == 3)
+    assert(one("SELECT 3 /* ( */ ! AS v").get(0).toString == "6")
+    // a macro argument holding a list literal is one argument
+    gw.sql("CREATE MACRO scan_f(a, b) AS len(a) + b")
+    assert(one("SELECT scan_f([1,2], 3) AS v").get(0).toString == "5")
+    // a call or a parenthesized group is a JSON-arrow operand
+    assert(one("SELECT json_object('k', 'x') ->> 'k' AS v").getString(0) == "x")
+    assert(one("""SELECT ('{"k": 1}') ->> 'k' AS v""").getString(0) == "1")
+    // `AS BIT` inside a comment is not the cast's type; TRY_CAST to BIT
+    // answers NULL on bad input
+    assert(one("SELECT CAST(3 AS INT -- AS BIT\n) AS v").getInt(0) == 3)
+    assert(one("SELECT TRY_CAST('2' AS BIT) AS v").isNullAt(0))
+  }
+
+  test("double-quoted names are identifiers, not strings (DuckDB 1.0 pinned)") {
+    // a fresh gateway: the flag needs ANSI mode, which an earlier test
+    // turns off on the shared one
+    val g = Gateway.open(spark, sf)
+    def one(q: String) = g.sql(q).collect().head
+    val a3 = "(SELECT 3 AS a) t"
+    assert(one(s"SELECT \"a\" FROM $a3").getInt(0) == 3)
+    assert(one("SELECT n_name FROM nation WHERE \"n_nationkey\" = 3")
+      .getString(0) == "NATION_3")
+    intercept[Exception](g.sql("SELECT \"hello\"").collect())
+    // a quoted name is an operand like any other: 1-based subscript,
+    // power (not xor), factorial, JSON cast, JSON arrow
+    assert(one("SELECT \"l\"[1] FROM (SELECT [5,6] AS l) t").getInt(0) == 5)
+    assert(one(s"SELECT \"a\" ^ 2 FROM $a3").getDouble(0) == 9.0)
+    assert(one(s"SELECT \"a\" ** 2 FROM $a3").getDouble(0) == 9.0)
+    assert(one(s"SELECT t.\"a\" ** 2 FROM $a3").getDouble(0) == 9.0)
+    assert(one(s"SELECT \"a\"! FROM $a3").get(0).toString == "6")
+    assert(one(s"SELECT \"a\"::JSON FROM $a3").get(0).toString == "3")
+    assert(one("""SELECT "j" ->> 'k' FROM (SELECT '{"k": "x"}' AS j) t""")
+      .getString(0) == "x")
+    assert(one("SELECT \"x\"\"y\" FROM (SELECT 1 AS \"x\"\"y\") t").getInt(0) == 1)
+  }
 }
