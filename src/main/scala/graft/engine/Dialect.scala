@@ -22,12 +22,12 @@ object Dialect {
     *   - `a // b`        →  `a div b` (integer floor division)
     *   - `x GLOB 'pat'`  →  `x RLIKE '<glob-as-regex>'`
     *   - `j ->> 'path'`  →  `get_json_object(j, '$.path')`
-    *   - `duckdb_tables()` etc. → the same-named Gateway catalog views
-    *     (reference smoke query, /root/reference/main.go:77)
+    *   - `FROM 'x.csv'` and `read_csv('x.csv', header=true)` → the
+    *     table-function calls TableFunctions serves
     */
   private val passes: Seq[String => String] = Seq(
     foldLiterals, // FIRST: later scanners assume '…' string syntax
-    normalizeWs, rewriteBlob, rewriteArrayTypeSuffix,
+    normalizeWs, rewriteFileScans, rewriteBlob, rewriteArrayTypeSuffix,
     rewriteTrailingCommas, rewriteEmptyGroupBy,
     rewriteBraceLiterals, rewriteArrayCtor, rewriteBrackets,
     rewriteNamedArgCalls, rewriteIgnoreNulls,
@@ -39,9 +39,9 @@ object Dialect {
     rewriteBareFilter, rewriteWindowFilter, rewriteAggOrderBy,
     rewritePercentileDisc, rewriteStarModifiers,
     rewriteDistinctOn, rewriteAsOf, rewriteExcludeFrames, rewriteGroupsFrame,
-    rewriteQualify, rewriteCatalogFns,
+    rewriteQualify, rewriteInformationSchema,
     rewriteDateDiff, rewriteCastCalls, rewriteCastTypes, rewriteFetchFirst,
-    rewriteQueryTable, rewriteFillWindow, rewriteIcuCollate)
+    rewriteFillWindow, rewriteIcuCollate)
 
   def rewrite(sql: String): String =
     passes.foldLeft(sql)((s, pass) => pass(s))
@@ -628,6 +628,40 @@ object Dialect {
             case None => i
           }
         case None => i
+      }
+    }
+
+  /** DuckDB file scans, as the table functions TableFunctions serves:
+    *  - `FROM 'dir/x.parquet'` (DuckDB's replacement scan) →
+    *    `FROM graft_read_file('dir/x.parquet')`, which names the relation
+    *    by the file stem `x`; a user alias still wins;
+    *  - `name=value` reader options → `name => value`, the named-argument
+    *    form Spark's parser takes.
+    */
+  private val fileFromRe = java.util.regex.Pattern.compile(
+    """(?i)(FROM|JOIN)\s+('[^']+\.(?:parquet|pq|csv|tsv|json|jsonl|ndjson)(?:\.gz)?')""")
+  private val readerFns = Seq("READ_PARQUET", "PARQUET_SCAN", "READ_CSV",
+    "READ_CSV_AUTO", "READ_JSON", "READ_JSON_AUTO", "READ_NDJSON",
+    "READ_NDJSON_AUTO", "READ_TEXT", "READ_BLOB")
+  private val readerOptRe = """(?s)^(\s*[A-Za-z_]\w*\s*)=(?![=>])(.*)$""".r
+
+  private def rewriteFileScans(sql: String): String =
+    scanOutsideLiterals(sql) { (i, sb) =>
+      Character.toLowerCase(sql.charAt(i)) match {
+        case 'f' | 'j' if wordStart(sql, i) =>
+          val m = fileFromRe.matcher(sql).region(i, sql.length)
+          if (!m.lookingAt()) i
+          else { sb.append(s"${m.group(1)} graft_read_file(${m.group(2)})"); m.end }
+        case 'r' | 'p' => keywordIn(sql, i, readerFns).flatMap { fn =>
+          splitCallArgs(sql, i + fn.length).map { case (args, end) =>
+            sb.append(sql.substring(i, i + fn.length)).append(args.map {
+              case readerOptRe(k, v) => s"$k=>$v"
+              case a => a
+            }.mkString("(", ",", ")"))
+            end
+          }
+        }.getOrElse(i)
+        case _ => i
       }
     }
 
@@ -1700,43 +1734,22 @@ object Dialect {
     if (out != sql) rewriteDateDiff(out) else out
   }
 
-  private val catalogFnRe =
-    ("""(?i)^(duckdb_(?:extensions|tables|functions|views|settings|columns""" +
-      """|keywords|types|schemas|databases|constraints|indexes|sequences""" +
-      """|dependencies|temporary_files|memory|optimizers|secrets)""" +
-      """|pg_timezone_names|icu_calendar_names|checkpoint|force_checkpoint""" +
-      """|pragma_(?:platform|user_agent|collations|metadata_info))\s*\(\s*\)""").r
-
-  /** `duckdb_tables()` → `duckdb_tables`, outside string literals only
-    * (a literal '…duckdb_tables()…' must survive verbatim).
+  /** ANSI `information_schema.{tables,columns,schemata}` → the
+    * `information_schema_tables()` … table functions (a table-function
+    * name cannot be schema-qualified).
     */
-  private def rewriteCatalogFns(sql: String): String = {
-    val noFns = scanOutsideLiterals(sql) { (i, sb) =>
-      val head = Seq("duckdb_", "pg_timezone_names", "icu_calendar_names",
-        "checkpoint", "force_checkpoint", "pragma_")
-        .exists(p => sql.regionMatches(true, i, p, 0, p.length))
-      if (head && wordStart(sql, i)) {
-        catalogFnRe.findPrefixMatchOf(sql.substring(i)) match {
-          case Some(m) => sb.append(m.group(1).toLowerCase); i + m.end
-          case None => i
-        }
-      } else i
-    }
-    // ANSI information_schema.{tables,columns,schemata} → the live
-    // graft_is_* views (Spark temp views cannot be schema-qualified)
-    scanOutsideLiterals(noFns) { (i, sb) =>
-      if (noFns.regionMatches(true, i, "information_schema", 0, 18) &&
-          wordStart(noFns, i)) {
-        infoSchemaRe.findPrefixMatchOf(noFns.substring(i)) match {
+  private def rewriteInformationSchema(sql: String): String =
+    scanOutsideLiterals(sql) { (i, sb) =>
+      if (sql.regionMatches(true, i, "information_schema", 0, 18) &&
+          wordStart(sql, i)) {
+        infoSchemaRe.findPrefixMatchOf(sql.substring(i)) match {
           case Some(m) =>
-            val v = m.group(1).toLowerCase
-            sb.append(if (v == "schemata") "graft_schemata" else s"graft_is_$v")
+            sb.append(s"information_schema_${m.group(1).toLowerCase}()")
             i + m.end
           case None => i
         }
       } else i
     }
-  }
 
   private val infoSchemaRe =
     """(?i)^information_schema\s*\.\s*(tables|columns|schemata)\b""".r
@@ -2060,24 +2073,6 @@ object Dialect {
       (Character.isLetterOrDigit(sql.charAt(j)) || sql.charAt(j) == '_')) j += 1
     j
   }
-
-  /** DuckDB 1.1 `query_table('name')` → the named relation (SURVEY
-    * §5.3). Literal arguments only, and only identifier-shaped names —
-    * a non-literal or non-identifier argument keeps the loud native
-    * error (dynamic SQL stays outside the read-only surface).
-    */
-  private val queryTableRe =
-    """(?is)^QUERY_TABLE\s*\(\s*'([A-Za-z_][\w.]*)'\s*\)""".r
-  private def rewriteQueryTable(sql: String): String =
-    scanOutsideLiterals(sql) { (i, sb) =>
-      if (wordStart(sql, i) &&
-          sql.regionMatches(true, i, "QUERY_TABLE", 0, 11))
-        queryTableRe.findPrefixMatchOf(sql.substring(i)) match {
-          case Some(m) => sb.append(m.group(1)); i + m.end
-          case None => i
-        }
-      else i
-    }
 
   /** DuckDB 1.4 `FILL(x) OVER ([PARTITION BY p] ORDER BY k)` — gap
     * interpolation (SURVEY §5.3): non-NULL values pass through; a NULL

@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.util.matching.Regex
 
 /** The serving surface: SQL-string in → DataFrame / Arrow batches out,
   * mirroring the reference's DoGet contract
@@ -19,9 +18,13 @@ import scala.util.matching.Regex
   *
   * DuckDB-dialect compatibility: the session's parser (GraftExtensions)
   * applies the Dialect.rewrite text shims (QUALIFY, `//`, GLOB, `->>`)
-  * once per statement, + Functions.register name shims, so DuckDB SQL
-  * in the reference's test surface runs unchanged. This class handles
-  * only the statements Spark cannot parse at all, on the pre-parse text.
+  * once per statement, Functions.register installs the scalar name
+  * shims, and TableFunctions.register the table functions (file
+  * readers, `duckdb_*()`, the pragma and parquet families), which the
+  * analyzer resolves wherever a relation may stand, so DuckDB SQL in the
+  * reference's test surface runs unchanged on every entry point of the
+  * session. This class handles only the statements Spark cannot parse
+  * at all, on the pre-parse text.
   */
 final class Gateway private (val session: SparkSession, readOnly: Boolean) {
 
@@ -110,15 +113,14 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
   private def success: DataFrame = session.sql("SELECT true AS Success").limit(0)
 
   /** Register `df` as a temp view under the session lock, analyze
-    * `head <view> tail` (which inlines the view's plan) and drop the
-    * view again: the statement tail runs over a DataFrame result.
+    * `SELECT * FROM <view> tail` (which inlines the view's plan) and drop
+    * the view again: the statement tail runs over a DataFrame result.
     */
-  private def queryOver(df: DataFrame, tail: String,
-      head: String = "SELECT * FROM"): DataFrame = session.synchronized {
+  private def queryOver(df: DataFrame, tail: String): DataFrame = session.synchronized {
     val tmp = s"__graft_view_${java.util.UUID.randomUUID.toString.replace("-", "")}"
     df.createOrReplaceTempView(tmp)
     try {
-      val out = session.sql(s"$head $tmp $tail")
+      val out = session.sql(s"SELECT * FROM $tmp $tail")
       out.queryExecution.assertAnalyzed()
       out
     } finally session.catalog.dropTempView(tmp)
@@ -202,7 +204,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       // (column_name, column_type, null, key, default, extra) with
       // DuckDB type spellings — Spark's native DESCRIBE differs in both
       case describeSelectRe(body) =>
-        return describeSchema(this.sql(body).schema)
+        return TableFunctions.describe(session, this.sql(body).schema)
       case describeTableRe(ident)
           if !showKeywords.contains(ident.toUpperCase) =>
         return describeTable(ident)
@@ -273,54 +275,6 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     expanded match {
       case summarizeRe(table) => return summarize(table)
       case _ =>
-    }
-    // table-function forms of the argumentful PRAGMAs and the parquet
-    // footer introspection family (r10 audit): materialize the
-    // relation, then run the statement tail (ORDER BY / WHERE /
-    // projection) over it
-    locally {
-      val tvfRe =
-        ("""(?is)^(SELECT\s+.*?\s+FROM)\s+(pragma_table_info|pragma_show""" +
-          """|pragma_storage_info|pragma_database_size|parquet_schema""" +
-          """|parquet_metadata|parquet_file_metadata|parquet_kv_metadata)""" +
-          """\s*\(\s*(?:'([^']*)')?\s*\)(.*)""").r
-      expanded match {
-        case tvfRe(head, fn, argOrNull, tail) =>
-          val arg = Option(argOrNull)
-          def need = arg.getOrElse(throw new GatewayException(
-            s"$fn requires a literal argument"))
-          val df = fn.toLowerCase match {
-            case "pragma_table_info" => pragma("table_info", Some(need))
-            case "pragma_show" => describeTable(need)
-            case "pragma_database_size" => pragma("database_size", None)
-            case "pragma_storage_info" =>
-              // parquet-backed views have no DuckDB storage blocks —
-              // typed empty, like a fresh in-memory DuckDB
-              session.sql(
-                """SELECT CAST(NULL AS BIGINT) AS row_group_id,
-                  |  CAST(NULL AS BIGINT) AS row_group_start,
-                  |  CAST(NULL AS BIGINT) AS row_group_count,
-                  |  CAST(NULL AS STRING) AS column_name,
-                  |  CAST(NULL AS BIGINT) AS column_id,
-                  |  CAST(NULL AS STRING) AS column_path,
-                  |  CAST(NULL AS STRING) AS segment_type,
-                  |  CAST(NULL AS BIGINT) AS start,
-                  |  CAST(NULL AS BIGINT) AS count,
-                  |  CAST(NULL AS STRING) AS compression,
-                  |  CAST(NULL AS STRING) AS stats,
-                  |  CAST(NULL AS BOOLEAN) AS has_updates,
-                  |  CAST(NULL AS BOOLEAN) AS persistent,
-                  |  CAST(NULL AS BIGINT) AS block_id,
-                  |  CAST(NULL AS BIGINT) AS block_offset
-                  |LIMIT 0""".stripMargin)
-            case "parquet_schema" => parquetSchemaDf(need)
-            case "parquet_file_metadata" => parquetFileMetaDf(need)
-            case "parquet_kv_metadata" => parquetKvMetaDf(need)
-            case _ => parquetMetadataDf(need)
-          }
-          return queryOver(df, tail, head)
-        case _ =>
-      }
     }
     // DuckDB `PIVOT t ON c USING agg [GROUP BY g] [ORDER BY …] [LIMIT n]`
     // (the dynamic-pivot statement, T4): two passes — collect the pivot
@@ -453,16 +407,15 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     requireReadOnly(expanded)
     // the session's parser (GraftSqlParser) applies Dialect.rewrite; the
     // routing below reads the pre-parse text
-    val stmt = rewriteFileReads(expanded)
     // WITH RECURSIVE … UNION (bare): DuckDB-dialect dedup recursion.
     // Spark 4.1's native recursive CTE covers only UNION ALL, so the
     // bare-UNION shape routes through the engine's semi-naive fixpoint
     // (Recursive.fixpoint — identical semantics: each round's working
     // table is the new distinct rows). UNION ALL recursion falls
     // through to the native path untouched.
-    if (RecursiveSql.isRecursive(stmt)) {
+    if (RecursiveSql.isRecursive(expanded)) {
       val parsed =
-        try RecursiveSql.parse(stmt)
+        try RecursiveSql.parse(expanded)
         catch { case _: IllegalArgumentException => None }
       parsed match {
         case Some(p) if RecursiveSql.needsFixpoint(p) =>
@@ -475,7 +428,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     // rows). Inherently two-pass (DuckDB materializes and counts
     // internally too): run the body, count, limit. The count is one
     // aggregate job, not a collect.
-    pctLimitRe.findFirstMatchIn(stmt) match {
+    pctLimitRe.findFirstMatchIn(expanded) match {
       case Some(m) =>
         val base = session.sql(m.group(1).trim)
         base.queryExecution.assertAnalyzed()
@@ -483,7 +436,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
         return base.limit(math.min(math.max(0L, k), Int.MaxValue.toLong).toInt)
       case None =>
     }
-    val df = session.sql(stmt)
+    val df = session.sql(expanded)
     df.queryExecution.assertAnalyzed() // structured failure before execution
     df
   }
@@ -492,362 +445,6 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
   // expression cannot terminate a LIMIT clause followed by nothing)
   private val pctLimitRe =
     """(?is)^(.*\s)LIMIT\s+(\d+(?:\.\d+)?)\s*%\s*;?\s*$""".r
-
-  // ---- DuckDB direct-file queries ------------------------------------
-  // `FROM 'path.parquet'` / `FROM read_parquet('path')` /
-  // read_csv[_auto] / read_json[_auto] (main.go passes these through to
-  // DuckDB's filesystem scanners). Each distinct path registers a lazy
-  // temp view named after the file's basename (DuckDB's naming, so
-  // `SELECT nation.n_name FROM 'nation.parquet'` resolves), falling
-  // back to a hashed name on collision. Glob paths work — Spark's
-  // readers accept them natively.
-  private val fileFromRe =
-    """(?i)\b(FROM|JOIN)\s+'([^']+\.(?:parquet|pq|csv|tsv|json|jsonl|ndjson)(?:\.gz)?)'""".r
-  private val readFnHeadRe =
-    ("""(?i)\b(FROM|JOIN)\s+(?:read_(parquet|csv_auto|csv|json_auto|json""" +
-      """|ndjson_auto|ndjson|text|blob)|(parquet_scan))\s*(?=\()""").r
-
-  private val fileViews = scala.collection.mutable.HashMap.empty[String, String]
-
-  /** DuckDB's common scanner options, honored on the Spark reader.
-    * DuckDB option spellings → behavior (verified against DuckDB 1.0):
-    * header/delim/sep/quote/escape/nullstr/all_varchar/columns/names/
-    * dateformat/timestampformat/ignore_errors (csv); format='array'
-    * (json); filename=true adds the source path column;
-    * union_by_name=true merges schemas across files. Auto-detection
-    * knobs that don't change RESULTS (auto_detect, sample_size,
-    * compression, hive_partitioning — Spark partition-discovers
-    * natively, normalize_names=false, binary_as_string=false) are
-    * accepted and ignored; anything else raises a diagnostic instead of
-    * silently dropping semantics.
-    */
-  private val ignorableOpts = Set("auto_detect", "sample_size",
-    "compression", "hive_partitioning", "normalize_names",
-    "binary_as_string", "maximum_object_size", "records", "parallel")
-
-  private def duckTypeDdl(t: String): String = t.trim.toUpperCase match {
-    case "VARCHAR" | "TEXT" | "STRING" => "STRING"
-    case "HUGEINT" => "DECIMAL(38,0)"
-    case "INT8" | "LONG" => "BIGINT"
-    case "INT4" | "INT" | "SIGNED" => "INT"
-    case "INT2" => "SMALLINT"
-    case "INT1" => "TINYINT"
-    case "FLOAT8" | "REAL" => "DOUBLE"
-    case "FLOAT4" => "FLOAT"
-    case "BOOL" | "LOGICAL" => "BOOLEAN"
-    case other => other // BIGINT, DOUBLE, DATE, TIMESTAMP, DECIMAL(p,s), …
-  }
-
-  private def fileView(paths: Seq[String], kindHint: Option[String],
-      opts: Seq[(String, String)]): String =
-    session.synchronized {
-      val key = (paths, kindHint, opts).toString
-      fileViews.getOrElseUpdate(key, {
-        val kind = kindHint.getOrElse {
-          val p = paths.head.toLowerCase.stripSuffix(".gz")
-          if (p.endsWith(".csv") || p.endsWith(".tsv")) "csv"
-          else if (p.endsWith(".json") || p.endsWith(".jsonl") ||
-            p.endsWith(".ndjson")) "json"
-          else "parquet"
-        }
-        val om = opts.toMap
-        def str(v: String): String = {
-          val t = v.trim
-          if (t.startsWith("'") && t.endsWith("'") && t.length >= 2)
-            t.substring(1, t.length - 1).replace("''", "'")
-          else t
-        }
-        def bool(v: String): Boolean = str(v).equalsIgnoreCase("true")
-        def unknown = om.keys.filterNot(k =>
-          ignorableOpts(k) || Set("header", "delim", "sep", "quote",
-            "escape", "nullstr", "all_varchar", "columns", "names",
-            "dateformat", "timestampformat", "ignore_errors", "format",
-            "filename", "union_by_name")(k))
-        if (unknown.nonEmpty) throw new GatewayException(
-          s"read_$kind: unsupported option(s) ${unknown.mkString(", ")}")
-        // columns={'n':'TYPE',…} → explicit schema (no inference pass)
-        val colRe = """'((?:[^']|'')*)'\s*:\s*'((?:[^']|'')*)'""".r
-        val schemaDdl = om.get("columns").map { c =>
-          colRe.findAllMatchIn(c)
-            .map(m => s"`${m.group(1)}` ${duckTypeDdl(m.group(2))}")
-            .mkString(", ")
-        }
-        val df0 = kind match {
-          case "csv" =>
-            // header default mirrors DuckDB's auto-detect outcome for
-            // the common cases: headered files unless names= says the
-            // file is headerless
-            var r = session.read
-              .option("header", om.get("header").map(bool)
-                .getOrElse(!om.contains("names")).toString)
-            schemaDdl match {
-              case Some(ddl) if !om.get("all_varchar").exists(bool) =>
-                r = r.schema(ddl)
-              case _ => r = r.option("inferSchema",
-                (!om.get("all_varchar").exists(bool)).toString)
-            }
-            om.get("delim").orElse(om.get("sep"))
-              .foreach(v => r = r.option("sep", str(v)))
-            om.get("quote").foreach(v => r = r.option("quote", str(v)))
-            om.get("escape").foreach(v => r = r.option("escape", str(v)))
-            om.get("nullstr").foreach(v => r = r.option("nullValue", str(v)))
-            om.get("dateformat").foreach(v => r = r.option("dateFormat", str(v)))
-            om.get("timestampformat")
-              .foreach(v => r = r.option("timestampFormat", str(v)))
-            if (om.get("ignore_errors").exists(bool))
-              r = r.option("mode", "DROPMALFORMED")
-            if (om.get("union_by_name").exists(bool))
-              r = r.option("mergeSchema", "true")
-            val read = r.csv(paths: _*)
-            om.get("names").map { n =>
-              val names = """'((?:[^']|'')*)'""".r
-                .findAllMatchIn(n).map(_.group(1)).toSeq
-              read.toDF((names ++ read.columns.drop(names.length)): _*)
-            }.getOrElse(read)
-          case "json" =>
-            var r = session.read
-            schemaDdl.foreach(ddl => r = r.schema(ddl))
-            // DuckDB format='array': one top-level JSON array per file
-            if (om.get("format").map(str).exists(_.equalsIgnoreCase("array")))
-              r = r.option("multiLine", "true")
-            r.json(paths: _*)
-          case "text" | "blob" =>
-            // read_text/read_blob (r10 audit): DuckDB's whole-file
-            // readers — (filename, content, size, last_modified) —
-            // via Spark's binaryFile source; text decodes UTF-8
-            import org.apache.spark.sql.functions.{col, regexp_replace}
-            val raw = session.read.format("binaryFile").load(paths: _*)
-            val content =
-              if (kind == "text") col("content").cast("string")
-              else col("content")
-            raw.select(
-              regexp_replace(col("path"), "^file:", "").as("filename"),
-              content.as("content"),
-              col("length").as("size"),
-              col("modificationTime").cast("timestamp_ntz")
-                .as("last_modified"))
-          case _ =>
-            var r = session.read
-            if (om.get("union_by_name").exists(bool))
-              r = r.option("mergeSchema", "true")
-            r.parquet(paths: _*)
-        }
-        // filename=true: DuckDB appends the source path; strip Spark's
-        // file: URI scheme so local paths match DuckDB's spelling
-        val df = if (om.get("filename").exists(bool))
-          df0.withColumn("filename", org.apache.spark.sql.functions
-            .regexp_replace(org.apache.spark.sql.functions.input_file_name(),
-              "^file:(//)?", ""))
-        else df0
-        val base = paths.head.reverse.takeWhile(c => c != '/' && c != '\\')
-          .reverse.takeWhile(_ != '.').replaceAll("[^A-Za-z0-9_]", "_")
-        val name =
-          if (base.nonEmpty && base.head.isLetter && opts.isEmpty &&
-              paths.sizeIs == 1 && !session.catalog.tableExists(base)) base
-          else "gf_" + java.util.UUID.nameUUIDFromBytes(
-            key.getBytes("UTF-8")).toString.replace("-", "").take(12)
-        df.createOrReplaceTempView(name)
-        name
-      })
-    }
-
-  /** File reads and FROM-position table functions → registered views.
-    * Each route matches only where FROM/JOIN stands in code, never
-    * inside a literal or a comment.
-    */
-  private def rewriteFileReads(sql: String): String =
-    Dialect.scanOutsideLiterals(sql) { (i, sb) =>
-      if (!Dialect.keywordAt(sql, i, "FROM") && !Dialect.keywordAt(sql, i, "JOIN")) i
-      else {
-        val rest = sql.subSequence(i, sql.length)
-        def route(re: Regex)(f: Regex.Match => String): Option[Int] =
-          re.findPrefixMatchOf(rest).map { m => sb.append(f(m)); i + m.end }
-        readFnHeadRe.findPrefixMatchOf(rest).flatMap(m => readCall(sql, i, m, sb))
-          // glob('pattern') table function: one `file` column, driver-side
-          // Hadoop FS listing (works for local paths and any configured
-          // remote FS), memoized per pattern like the file views
-          .orElse(route(globFnRe)(m => s"${m.group(1)} ${globView(m.group(2))}"))
-          // FROM pragma_version() → the registered one-row view
-          .orElse(route(pragmaVersionFnRe)(m => s"${m.group(1)} graft_pragma_version"))
-          // FROM repeat('s', n): n rows of 's', column named by the value
-          // (DuckDB's repeat table function — r10 audit)
-          .orElse(route(repeatFnRe) { m =>
-            val s = m.group(2)
-            val colName = s.replace("''", "'").replace("`", "")
-            s"${m.group(1)} (SELECT '$s' AS `$colName` FROM range(${m.group(3)}))"
-          })
-          .orElse(route(fileFromRe)(m =>
-            s"${m.group(1)} ${fileView(Seq(m.group(2)), None, Nil)}"))
-          .getOrElse(i)
-      }
-    }
-
-  /** A `read_xxx(…)` call whose head `m` matched at `i`: full argument
-    * split (options carry nested ['lists'] and {'structs'} a [^)]*
-    * regex mis-scans). Appends the view (or, for a non-literal path or
-    * an unrecognized argument shape, the call text as-is: it will
-    * surface a resolution error naming the function, not silently
-    * mis-read) and returns the index past the call; None when the head
-    * is not a call.
-    */
-  private def readCall(sql: String, i: Int, m: Regex.Match,
-      sb: StringBuilder): Option[Int] =
-    Dialect.splitCallArgs(sql, i + m.end).collect {
-      case (args, end) if args.nonEmpty =>
-        val kind = Option(m.group(2)).getOrElse("parquet").toLowerCase match {
-          case "csv_auto" | "csv" => "csv"
-          case "json_auto" | "json" | "ndjson_auto" | "ndjson" => "json"
-          case "text" => "text"
-          case "blob" => "blob"
-          case _ => "parquet" // read_parquet and the parquet_scan alias
-        }
-        val litRe = """'((?:[^']|'')*)'""".r
-        val paths = {
-          val a0 = args.head.trim
-          if (a0.startsWith("["))
-            litRe.findAllMatchIn(a0).map(_.group(1)).toSeq
-          else litRe.findPrefixMatchOf(a0).map(_.group(1)).toSeq
-        }
-        val optRe = """(?s)^\s*([A-Za-z_]+)\s*=\s*(.*)$""".r
-        val opts = args.tail.flatMap {
-          case optRe(k, v) => Some(k.toLowerCase -> v.trim)
-          case _ => None
-        }
-        if (paths.isEmpty || opts.length != args.tail.length)
-          sb.append(sql.substring(i, end))
-        else sb.append(s"${m.group(1)} ${fileView(paths, Some(kind), opts)}")
-        end
-    }
-
-  /** Parquet footer introspection (DuckDB's parquet_schema/metadata
-    * family, r10 audit): a bounded driver-side footer read of the NAMED
-    * file — the same work DuckDB does; never a distributed job. Columns
-    * mirror DuckDB 1.0. */
-  private def parquetFooter(path: String) = {
-    val conf = session.sessionState.newHadoopConf()
-    org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path), conf))
-  }
-
-  private def parquetSchemaDf(path: String): DataFrame = {
-    import session.implicits._
-    val r = parquetFooter(path)
-    try {
-      val schema = r.getFooter.getFileMetaData.getSchema
-      val root = (path, schema.getName, "GROUP", Option.empty[Long],
-        "REQUIRED", Option(schema.getFieldCount.toLong),
-        Option.empty[Long], Option.empty[Long], Option.empty[String])
-      val cols = scala.jdk.CollectionConverters
-        .ListHasAsScala(schema.getFields).asScala.toSeq.map { f =>
-          if (f.isPrimitive) {
-            val p = f.asPrimitiveType()
-            val dec = Option(p.getLogicalTypeAnnotation).collect {
-              case d: org.apache.parquet.schema
-                  .LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => d
-            }
-            (path, f.getName, p.getPrimitiveTypeName.toString,
-              Some(p.getTypeLength.toLong), f.getRepetition.toString,
-              Option.empty[Long], dec.map(_.getScale.toLong),
-              dec.map(_.getPrecision.toLong),
-              Option(p.getLogicalTypeAnnotation).map(_.toString))
-          } else
-            (path, f.getName, "GROUP", Option.empty[Long],
-              f.getRepetition.toString,
-              Some(f.asGroupType().getFieldCount.toLong),
-              Option.empty[Long], Option.empty[Long],
-              Option(f.asGroupType().getLogicalTypeAnnotation)
-                .map(_.toString))
-        }
-      (root +: cols)
-        .toDF("file_name", "name", "type", "type_length",
-          "repetition_type", "num_children", "scale", "precision",
-          "logical_type")
-    } finally r.close()
-  }
-
-  private def parquetFileMetaDf(path: String): DataFrame = {
-    import session.implicits._
-    val r = parquetFooter(path)
-    try {
-      val fm = r.getFooter.getFileMetaData
-      Seq((path, fm.getCreatedBy, r.getRecordCount,
-        r.getFooter.getBlocks.size.toLong, "1.0",
-        null.asInstanceOf[String], null.asInstanceOf[String]))
-        .toDF("file_name", "created_by", "num_rows", "num_row_groups",
-          "format_version", "encryption_algorithm",
-          "footer_signing_key_metadata")
-    } finally r.close()
-  }
-
-  private def parquetKvMetaDf(path: String): DataFrame = {
-    import session.implicits._
-    val r = parquetFooter(path)
-    try {
-      scala.jdk.CollectionConverters.MapHasAsScala(
-        r.getFooter.getFileMetaData.getKeyValueMetaData).asScala.toSeq
-        .map { case (k, v) =>
-          (path, k.getBytes("UTF-8"),
-            Option(v).map(_.getBytes("UTF-8")).orNull)
-        }.toDF("file_name", "key", "value")
-    } finally r.close()
-  }
-
-  private def parquetMetadataDf(path: String): DataFrame = {
-    import session.implicits._
-    val r = parquetFooter(path)
-    try {
-      val rows = scala.jdk.CollectionConverters
-        .ListHasAsScala(r.getFooter.getBlocks).asScala.toSeq.zipWithIndex
-        .flatMap { case (blk, gi) =>
-          scala.jdk.CollectionConverters.ListHasAsScala(blk.getColumns)
-            .asScala.toSeq.zipWithIndex.map { case (c, ci) =>
-              val st = c.getStatistics
-              (path, gi.toLong, blk.getRowCount,
-                blk.getColumns.size.toLong, blk.getTotalByteSize,
-                ci.toLong, c.getFirstDataPageOffset, c.getValueCount,
-                c.getPath.toDotString, c.getPrimitiveType.toString,
-                // flatMap: a Statistics object with no min/max (all-null
-                // chunk) must surface SQL NULL, not the string "null"
-                Option(st).flatMap(s => Option(s.minAsString)).orNull,
-                Option(st).flatMap(s => Option(s.maxAsString)).orNull,
-                Option(st).filter(_.isNumNullsSet)
-                  .map(_.getNumNulls).getOrElse(-1L),
-                c.getCodec.toString,
-                c.getEncodings.toString,
-                c.getDictionaryPageOffset, c.getFirstDataPageOffset,
-                c.getTotalSize, c.getTotalUncompressedSize)
-            }
-        }
-      rows.toDF("file_name", "row_group_id", "row_group_num_rows",
-        "row_group_num_columns", "row_group_bytes", "column_id",
-        "file_offset", "num_values", "path_in_schema", "type",
-        "stats_min", "stats_max", "stats_null_count", "compression",
-        "encodings", "dictionary_page_offset", "data_page_offset",
-        "total_compressed_size", "total_uncompressed_size")
-    } finally r.close()
-  }
-
-  private val globFnRe =
-    """(?i)\b(FROM|JOIN)\s+glob\s*\(\s*'([^']+)'\s*\)""".r
-  private val pragmaVersionFnRe =
-    """(?i)\b(FROM|JOIN)\s+pragma_version\s*\(\s*\)""".r
-  private val repeatFnRe =
-    """(?i)\b(FROM|JOIN)\s+repeat\s*\(\s*'((?:[^']|'')*)'\s*,\s*(\d+)\s*\)""".r
-
-  private def globView(pattern: String): String = session.synchronized {
-    fileViews.getOrElseUpdate("glob::" + pattern, {
-      val p = new org.apache.hadoop.fs.Path(pattern)
-      val fs = p.getFileSystem(session.sparkContext.hadoopConfiguration)
-      val files = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
-        .map(_.getPath.toUri.getPath).sorted
-      import session.implicits._
-      val name = "gf_glob_" + java.util.UUID.nameUUIDFromBytes(
-        pattern.getBytes("UTF-8")).toString.replace("-", "").take(12)
-      files.toDF("file").createOrReplaceTempView(name)
-      name
-    })
-  }
 
   // ---- CREATE MACRO (scalar + table) ---------------------------------
   // DuckDB macros are session-scoped SQL templates; the engine expands
@@ -1091,42 +688,16 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
 
   private def pragma(name: String, arg: Option[String]): DataFrame = {
     import session.implicits._
-    import org.apache.spark.sql.functions.col
     name match {
+      // DuckDB lists only the user's relations: the live listing, never
+      // Spark's SHOW TABLES (which adds the duckdb_* views)
       case "show_tables" =>
-        session.sql("SHOW TABLES").select(col("tableName").as("name"))
-          .orderBy("name")
+        session.sql("SELECT table_name AS name FROM duckdb_tables ORDER BY name")
       case "table_info" =>
-        val t = arg.getOrElse(
-          throw new GatewayException("PRAGMA table_info requires a table"))
-        val fields = session.table(t).schema.fields.zipWithIndex.map {
-          case (f, i) =>
-            (i, f.name, graft.sources.LiveCatalog.duckTypeName(f.dataType),
-              !f.nullable, null.asInstanceOf[String], false)
-        }.toSeq
-        fields.toDF("cid", "name", "type", "notnull", "dflt_value", "pk")
-      case "database_size" =>
-        val dir = Tables.dirOf(session)
-        val bytes = dir.map { d =>
-          val f = new java.io.File(d)
-          Option(f.listFiles()).map(_.filter(_.isFile).map(_.length).sum)
-            .getOrElse(0L)
-        }.getOrElse(0L)
-        def human(b: Long): String =
-          if (b >= (1L << 30)) f"${b / (1L << 30).toDouble}%.1f GiB"
-          else if (b >= (1L << 20)) f"${b / (1L << 20).toDouble}%.1f MiB"
-          else if (b >= (1L << 10)) f"${b / (1L << 10).toDouble}%.1f KiB"
-          else s"$b bytes"
-        val rt = Runtime.getRuntime
-        Seq((dir.getOrElse("memory"), human(bytes), 262144L, 0L, 0L, 0L,
-          "0 bytes", human(rt.totalMemory - rt.freeMemory),
-          human(rt.maxMemory)))
-          .toDF("database_name", "database_size", "block_size",
-            "total_blocks", "used_blocks", "free_blocks", "wal_size",
-            "memory_usage", "memory_limit")
-      case "version" =>
-        Seq(("v0.5.0-graft", s"spark-${session.version}"))
-          .toDF("library_version", "source_id")
+        TableFunctions.tableInfo(session, arg.getOrElse(
+          throw new GatewayException("PRAGMA table_info requires a table")))
+      case "database_size" => TableFunctions.databaseSize(session)
+      case "version" => TableFunctions.version(session)
       case "database_list" =>
         Seq((0L, session.catalog.currentCatalog(),
           Tables.dirOf(session).getOrElse("memory")))
@@ -1194,20 +765,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
 
   /** DuckDB `SHOW t` / `DESCRIBE t` column layout. */
   private def describeTable(ident: String): DataFrame =
-    describeSchema(session.table(ident).schema)
-
-  private def describeSchema(
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    import session.implicits._
-    val fields = schema.fields.map { f =>
-      (f.name, graft.sources.LiveCatalog.duckTypeName(f.dataType),
-        if (f.nullable) "YES" else "NO",
-        null.asInstanceOf[String], null.asInstanceOf[String],
-        null.asInstanceOf[String])
-    }.toSeq
-    fields.toDF("column_name", "column_type", "null", "key", "default",
-      "extra")
-  }
+    TableFunctions.describe(session, session.table(ident).schema)
 
   // ---- UNION [ALL] BY NAME -------------------------------------------
   /** Split at the FIRST top-level `UNION [ALL] BY NAME`; the right side
@@ -1407,18 +965,6 @@ object Gateway {
     }
   }
 
-  /** Catalog introspection views named after DuckDB's table functions
-    * (S7 of SURVEY §2.1; the reference's smoke client runs
-    * `SELECT extension_name FROM duckdb_extensions() WHERE installed`,
-    * /root/reference/main.go:77 and client/main.go:27 — Dialect.rewrite
-    * turns the `()` call into these view names). duckdb_tables/views/
-    * functions/settings are LIVE, DuckDB-style: backed by
-    * sources.LiveCatalogSource, a DataSource V2 table whose scan
-    * re-reads the session catalog at planning time, so DDL issued after
-    * open() is visible to the next query. Only duckdb_extensions is a
-    * static local relation — the capability surface it reports IS
-    * static. The introspection views never list themselves.
-    */
   /** The closed statically-linked extension registry: (name, loaded,
     * installed) defaults. core entries ship loaded; httpfs (CREATE
     * SECRET → S3A) and airport (ATTACH → FlightCatalog) are PRESENT in
@@ -1438,208 +984,6 @@ object Gateway {
     import sess.implicits._
     state.toDF("extension_name", "loaded", "installed")
       .createOrReplaceTempView("duckdb_extensions")
-  }
-
-  private def registerCatalogViews(sess: SparkSession): Unit = {
-    // extension lifecycle state starts at the registry defaults; the
-    // Gateway's INSTALL/LOAD statements re-publish this view
-    publishExtensionsView(sess, extensionRegistry)
-    // the rest are LIVE (DuckDB semantics): each query re-reads the
-    // session catalog at scan-planning time via the V2 source, so DDL
-    // after open() — CREATE VIEW, SET — is visible immediately
-    val key = graft.sources.LiveCatalog.registerSession(sess)
-    Seq("tables", "views", "functions", "settings", "columns").foreach { v =>
-      sess.read.format("graft.sources.LiveCatalogSource")
-        .option("view", v).option("session", key)
-        .load().createOrReplaceTempView(s"duckdb_$v")
-    }
-    // information_schema.{tables,columns,schemata} — Dialect rewrites the
-    // qualified names onto these (Spark temp views cannot be schema-
-    // qualified); same live-catalog backing
-    Seq("is_tables", "is_columns", "schemata").foreach { v =>
-      sess.read.format("graft.sources.LiveCatalogSource")
-        .option("view", v).option("session", key)
-        .load().createOrReplaceTempView(s"graft_$v")
-    }
-    // FROM pragma_version() (table-function form of PRAGMA version)
-    locally {
-      import sess.implicits._
-      Seq(("v0.5.0-graft", s"spark-${sess.version}"))
-        .toDF("library_version", "source_id")
-        .createOrReplaceTempView("graft_pragma_version")
-    }
-    // ---- round-10: the REST of DuckDB's zero-arg catalog table
-    // functions (tools iterate these; tools/audit swept them). Columns
-    // mirror DuckDB 1.0 exactly; relations that catalog objects this
-    // engine doesn't HAVE (indexes, sequences, …) are typed EMPTY —
-    // the same answer a fresh DuckDB gives.
-    def view(name: String, q: String): Unit =
-      sess.sql(q).createOrReplaceTempView(name)
-    val mapT = "CAST(map() AS MAP<STRING,STRING>)"
-    // reserved/keyword list: the served dialect's reserved words
-    view("duckdb_keywords",
-      """SELECT col1 AS keyword_name, 'reserved' AS keyword_category
-        |FROM VALUES ('all'),('and'),('any'),('as'),('asc'),('between'),
-        |('by'),('case'),('cast'),('create'),('cross'),('cube'),('current'),
-        |('default'),('delete'),('desc'),('distinct'),('drop'),('else'),
-        |('end'),('except'),('exists'),('false'),('filter'),('from'),('full'),
-        |('group'),('grouping'),('having'),('in'),('inner'),('insert'),
-        |('intersect'),('interval'),('into'),('is'),('join'),('lateral'),
-        |('left'),('like'),('limit'),('natural'),('not'),('null'),('offset'),
-        |('on'),('or'),('order'),('outer'),('over'),('partition'),('pivot'),
-        |('qualify'),('right'),('rollup'),('select'),('semi'),('set'),
-        |('table'),('then'),('true'),('union'),('unique'),('unpivot'),
-        |('update'),('using'),('values'),('when'),('where'),('window'),
-        |('with')""".stripMargin)
-    // the engine's served logical types (SURVEY §1.4 mapping)
-    view("duckdb_types",
-      s"""SELECT 'memory' AS database_name, CAST(0 AS BIGINT) AS database_oid,
-         |  'main' AS schema_name, CAST(0 AS BIGINT) AS schema_oid,
-         |  CAST(row_number() OVER (ORDER BY col1) AS BIGINT) AS type_oid,
-         |  col1 AS type_name, CAST(col2 AS BIGINT) AS type_size,
-         |  col1 AS logical_type, col3 AS type_category,
-         |  CAST(NULL AS STRING) AS comment, $mapT AS tags,
-         |  true AS internal
-         |FROM VALUES ('BOOLEAN',1,'BOOLEAN'),('TINYINT',1,'NUMERIC'),
-         |('SMALLINT',2,'NUMERIC'),('INTEGER',4,'NUMERIC'),
-         |('BIGINT',8,'NUMERIC'),('HUGEINT',16,'NUMERIC'),
-         |('FLOAT',4,'NUMERIC'),('DOUBLE',8,'NUMERIC'),
-         |('DECIMAL',16,'NUMERIC'),('VARCHAR',NULL,'STRING'),
-         |('BLOB',NULL,'STRING'),('BIT',NULL,'STRING'),
-         |('DATE',4,'DATETIME'),('TIME',8,'DATETIME'),
-         |('TIMESTAMP',8,'DATETIME'),('INTERVAL',16,'DATETIME'),
-         |('UUID',16,'STRING'),('JSON',NULL,'STRING'),
-         |('LIST',NULL,'COMPOSITE'),('STRUCT',NULL,'COMPOSITE'),
-         |('MAP',NULL,'COMPOSITE')""".stripMargin)
-    view("duckdb_schemas",
-      s"""SELECT CAST(col1 AS BIGINT) AS oid, col2 AS database_name,
-         |  CAST(col3 AS BIGINT) AS database_oid, col4 AS schema_name,
-         |  CAST(NULL AS STRING) AS comment, $mapT AS tags,
-         |  col5 AS internal, CAST(NULL AS STRING) AS sql
-         |FROM VALUES (0,'memory',0,'main',false),
-         |  (1,'system',1,'main',true),(2,'temp',2,'main',true)""".stripMargin)
-    view("duckdb_databases",
-      s"""SELECT col1 AS database_name, CAST(col2 AS BIGINT) AS database_oid,
-         |  CAST(NULL AS STRING) AS path, CAST(NULL AS STRING) AS comment,
-         |  $mapT AS tags, col3 AS internal, 'duckdb' AS type,
-         |  true AS readonly
-         |FROM VALUES ('memory',0,false),('system',1,true),
-         |  ('temp',2,true)""".stripMargin)
-    view("duckdb_constraints",
-      """SELECT CAST(NULL AS STRING) AS database_name,
-        |  CAST(NULL AS BIGINT) AS database_oid,
-        |  CAST(NULL AS STRING) AS schema_name,
-        |  CAST(NULL AS BIGINT) AS schema_oid,
-        |  CAST(NULL AS STRING) AS table_name,
-        |  CAST(NULL AS BIGINT) AS table_oid,
-        |  CAST(NULL AS BIGINT) AS constraint_index,
-        |  CAST(NULL AS STRING) AS constraint_type,
-        |  CAST(NULL AS STRING) AS constraint_text,
-        |  CAST(NULL AS STRING) AS expression,
-        |  CAST(array() AS ARRAY<BIGINT>) AS constraint_column_indexes,
-        |  CAST(array() AS ARRAY<STRING>) AS constraint_column_names
-        |LIMIT 0""".stripMargin)
-    view("duckdb_indexes",
-      s"""SELECT CAST(NULL AS STRING) AS database_name,
-         |  CAST(NULL AS BIGINT) AS database_oid,
-         |  CAST(NULL AS STRING) AS schema_name,
-         |  CAST(NULL AS BIGINT) AS schema_oid,
-         |  CAST(NULL AS STRING) AS index_name,
-         |  CAST(NULL AS BIGINT) AS index_oid,
-         |  CAST(NULL AS STRING) AS table_name,
-         |  CAST(NULL AS BIGINT) AS table_oid,
-         |  CAST(NULL AS STRING) AS comment, $mapT AS tags,
-         |  CAST(NULL AS BOOLEAN) AS is_unique,
-         |  CAST(NULL AS BOOLEAN) AS is_primary
-         |LIMIT 0""".stripMargin)
-    view("duckdb_sequences",
-      s"""SELECT CAST(NULL AS STRING) AS database_name,
-         |  CAST(NULL AS BIGINT) AS database_oid,
-         |  CAST(NULL AS STRING) AS schema_name,
-         |  CAST(NULL AS BIGINT) AS schema_oid,
-         |  CAST(NULL AS STRING) AS sequence_name,
-         |  CAST(NULL AS BIGINT) AS sequence_oid,
-         |  CAST(NULL AS STRING) AS comment, $mapT AS tags,
-         |  CAST(NULL AS BOOLEAN) AS temporary,
-         |  CAST(NULL AS BIGINT) AS start_value,
-         |  CAST(NULL AS BIGINT) AS min_value,
-         |  CAST(NULL AS BIGINT) AS max_value
-         |LIMIT 0""".stripMargin)
-    view("duckdb_dependencies",
-      """SELECT CAST(NULL AS BIGINT) AS classid,
-        |  CAST(NULL AS BIGINT) AS objid, CAST(NULL AS INT) AS objsubid,
-        |  CAST(NULL AS BIGINT) AS refclassid,
-        |  CAST(NULL AS BIGINT) AS refobjid,
-        |  CAST(NULL AS INT) AS refobjsubid,
-        |  CAST(NULL AS STRING) AS deptype LIMIT 0""".stripMargin)
-    view("duckdb_temporary_files",
-      """SELECT CAST(NULL AS STRING) AS path,
-        |  CAST(NULL AS BIGINT) AS size LIMIT 0""".stripMargin)
-    view("duckdb_memory",
-      """SELECT col1 AS tag, CAST(0 AS BIGINT) AS memory_usage_bytes,
-        |  CAST(0 AS BIGINT) AS temporary_storage_bytes
-        |FROM VALUES ('BASE_TABLE'),('HASH_TABLE'),('PARQUET_READER'),
-        |('CSV_READER'),('ORDER_BY'),('ART_INDEX'),('COLUMN_DATA'),
-        |('METADATA'),('OVERFLOW_STRINGS'),('IN_MEMORY_TABLE'),
-        |('ALLOCATOR'),('EXTENSION')""".stripMargin)
-    // the optimizers THIS engine actually runs (Catalyst batches) —
-    // honest introspection, not a copy of DuckDB's list
-    view("duckdb_optimizers",
-      """SELECT col1 AS name FROM VALUES ('PushDownPredicates'),
-        |('ColumnPruning'),('CollapseProject'),('ConstantFolding'),
-        |('NullPropagation'),('BooleanSimplification'),
-        |('SimplifyCasts'),('ReorderJoin'),('EliminateOuterJoin'),
-        |('InferFiltersFromConstraints'),('PruneFilters'),
-        |('RewritePredicateSubquery'),('DecorrelateInnerQuery'),
-        |('CombineFilters'),('LimitPushDown'),('CollapseWindow'),
-        |('OptimizeSkewedJoin'),('CoalesceShufflePartitions')""".stripMargin)
-    view("duckdb_secrets",
-      """SELECT CAST(NULL AS STRING) AS name, CAST(NULL AS STRING) AS type,
-        |  CAST(NULL AS STRING) AS provider,
-        |  CAST(NULL AS BOOLEAN) AS persistent,
-        |  CAST(NULL AS STRING) AS storage,
-        |  CAST(array() AS ARRAY<STRING>) AS scope,
-        |  CAST(NULL AS STRING) AS secret_string LIMIT 0""".stripMargin)
-    view("checkpoint",
-      "SELECT CAST(NULL AS BOOLEAN) AS Success LIMIT 0")
-    view("force_checkpoint",
-      "SELECT CAST(NULL AS BOOLEAN) AS Success LIMIT 0")
-    view("icu_calendar_names",
-      """SELECT col1 AS name FROM VALUES ('gregorian'),('japanese'),
-        |('buddhist'),('roc'),('persian'),('islamic'),('islamic-civil'),
-        |('islamic-umalqura'),('islamic-tbla'),('islamic-rgsa'),('hebrew'),
-        |('chinese'),('indian'),('coptic'),('ethiopic'),
-        |('ethiopic-amete-alem'),('iso8601'),('dangi')""".stripMargin)
-    view("pragma_platform", "SELECT 'linux_amd64' AS platform")
-    view("pragma_user_agent",
-      s"SELECT 'graft/0.5.0(spark-${sess.version})' AS user_agent")
-    view("pragma_collations",
-      """SELECT col1 AS collname FROM VALUES ('default'),('c'),('posix'),
-        |('nocase'),('noaccent'),('nfc')""".stripMargin)
-    view("pragma_metadata_info",
-      """SELECT CAST(NULL AS BIGINT) AS block_id,
-        |  CAST(NULL AS BIGINT) AS total_blocks,
-        |  CAST(NULL AS BIGINT) AS free_blocks,
-        |  CAST(array() AS ARRAY<BIGINT>) AS free_list LIMIT 0""".stripMargin)
-    // live zone list from the JVM (offsets as day-time intervals)
-    locally {
-      import sess.implicits._
-      import org.apache.spark.sql.functions.{col, expr}
-      val now = java.time.Instant.now()
-      scala.jdk.CollectionConverters
-        .SetHasAsScala(java.time.ZoneId.getAvailableZoneIds).asScala.toSeq
-        .sorted.map { z =>
-          val zone = java.time.ZoneId.of(z)
-          val off = zone.getRules.getOffset(now)
-          (z, zone.getRules.getStandardOffset(now).getId,
-            off.getTotalSeconds.toLong,
-            zone.getRules.isDaylightSavings(now))
-        }.toDF("name", "abbrev", "off_s", "is_dst")
-        .select(col("name"), col("abbrev"),
-          expr("make_dt_interval(0, 0, 0, off_s)").as("utc_offset"),
-          col("is_dst"))
-        .createOrReplaceTempView("pg_timezone_names")
-    }
   }
 
   /** Conf listing remote Flight endpoints (`host:port`, comma-separated)
@@ -1680,7 +1024,7 @@ object Gateway {
       sess.conf.set(attachAllowKey, attachAllow.mkString(","))
     Tables.register(sess, dataDir)
     Functions.register(sess)
-    registerCatalogViews(sess)
+    TableFunctions.register(sess)
     val gw = new Gateway(sess, readOnly)
     initScript.foreach { script =>
       gw.initializing = true // ATTACH allowed only here (operator surface)

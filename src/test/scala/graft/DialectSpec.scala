@@ -170,7 +170,8 @@ class DialectSpec extends AnyFunSuite {
       "SELECT DISTINCT ON (a) b",                 // rewriteDistinctOn
       "ASOF JOIN t ON a.ts >= t.ts",              // rewriteAsOf
       "QUALIFY rn = 1",                           // rewriteQualify
-      "duckdb_tables()", "duckdb_columns()",      // rewriteCatalogFns
+      "duckdb_tables()", "duckdb_columns()",      // table functions
+      "FROM 'a.csv'", "read_csv('a', header=true)", // rewriteFileScans
       "datediff('day', a, b)",                    // rewriteDateDiff
       "x::VARCHAR", "CAST(x AS HUGEINT)",         // rewriteCastTypes
       "5!", "n ! = 120",                          // rewriteFactorial

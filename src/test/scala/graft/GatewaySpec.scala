@@ -409,7 +409,7 @@ class GatewaySpec extends AnyFunSuite {
       .schema.fieldNames.contains("database_size"))
     val sh = gw.sql("SHOW nation").collect()
     assert(sh.map(_.getString(0)).toSeq.contains("n_name"))
-    // SHOW TABLES still routes to Spark's native statement
+    // SHOW TABLES answers from the live listing, like PRAGMA show_tables
     assert(gw.sql("SHOW TABLES").collect().nonEmpty)
     val ubn = gw.sql(
       "SELECT 1 AS a, 2 AS b UNION ALL BY NAME SELECT 4 AS b, 3 AS a ORDER BY a")
@@ -2243,5 +2243,84 @@ class GatewaySpec extends AnyFunSuite {
     assert(one("""SELECT "j" ->> 'k' FROM (SELECT '{"k": "x"}' AS j) t""")
       .getString(0) == "x")
     assert(one("SELECT \"x\"\"y\" FROM (SELECT 1 AS \"x\"\"y\") t").getInt(0) == 1)
+  }
+
+  // ---- table functions resolve in Catalyst (DuckDB 1.0 pinned) -------
+
+  /** A fresh directory holding the given files. */
+  private def fileDir(files: (String, String)*): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tvf")
+    files.foreach { case (n, body) =>
+      java.nio.file.Files.writeString(dir.resolve(n), body)
+    }
+    dir
+  }
+
+  test("catalog listings name only the user's relations, also after file reads") {
+    val g = Gateway.open(spark, sf)
+    val server = graft.flight.FlightServer.start(g, 0)
+    val client = new graft.flight.FlightClientLite("localhost", server.boundPort)
+    try {
+      def names(q: String) = g.sql(q).collect().map(_.getString(0)).toSeq.sorted
+      // an unfiltered Flight SQL CommandGetTables
+      val getTables = graft.flight.FlightProto.AnyMsg(
+        "type.googleapis.com/arrow.flight.protocol.sql.CommandGetTables",
+        Array.emptyByteArray).toBytes
+      def listings = Seq(
+        names("SELECT table_name FROM duckdb_tables()"),
+        names("SELECT table_name FROM information_schema.tables"),
+        names("SHOW TABLES"),
+        client.doGet(getTables).rows.map(_(2).toString).sorted)
+      val user = graft.engine.Tables.names.sorted
+      assert(listings.forall(_ == user), listings)
+      val dir = fileDir("a.csv" -> "x\n1\n")
+      g.sql(s"SELECT count(*) FROM read_parquet('$sf/nation.parquet')").collect()
+      g.sql(s"SELECT count(*) FROM '$sf/region.parquet'").collect()
+      g.sql(s"SELECT count(*) FROM glob('$dir/*.csv')").collect()
+      assert(listings.forall(_ == user), listings)
+    } finally { client.close(); server.stop() }
+  }
+
+  test("file reads see the files as they are now (DuckDB 1.0: 3, 5, 2)") {
+    val dir = fileDir("a.csv" -> "x\n1\n")
+    def count(q: String) = gw.sql(q).collect().head.getLong(0)
+    val reads = Seq(s"SELECT count(*) FROM '$dir/a.csv'",
+      s"SELECT count(*) FROM read_csv('$dir/*.csv')",
+      s"SELECT count(*) FROM glob('$dir/*.csv')")
+    assert(reads.map(count) == Seq(1L, 1L, 1L))
+    java.nio.file.Files.writeString(dir.resolve("a.csv"), "x\n1\n2\n3\n")
+    java.nio.file.Files.writeString(dir.resolve("b.csv"), "x\n4\n5\n")
+    assert(reads.map(count) == Seq(3L, 5L, 2L))
+  }
+
+  test("table functions stand wherever a relation can (DuckDB 1.0)") {
+    def strs(q: String) = gw.sql(q).collect().map(_.get(0).toString).toSeq
+    assert(strs("SELECT t.name FROM region JOIN pragma_table_info('nation') t " +
+      "ON t.cid = r_regionkey ORDER BY 1") == Seq("n_name", "n_nationkey", "n_regionkey"))
+    assert(strs("WITH c AS (SELECT * FROM pragma_table_info('region')) " +
+      "SELECT count(*) FROM c") == Seq("2"))
+    assert(strs("SELECT (SELECT count(*) FROM duckdb_types() WHERE type_name = 'DATE')") ==
+      Seq("1"))
+    // the default relation name: the file stem for a bare path, the
+    // function's name for a reader call; a user alias wins over both
+    val dir = fileDir("a.csv" -> "x\n1\n")
+    val path = s"'$dir/a.csv'"
+    assert(strs(s"SELECT a.x FROM $path") == Seq("1"))
+    assert(strs(s"SELECT read_csv.x FROM read_csv($path, header=true)") == Seq("1"))
+    intercept[Exception](gw.sql(s"SELECT a.x FROM read_csv($path, header=true)").collect())
+    assert(strs(s"SELECT t.x FROM $path t") == Seq("1"))
+    assert(strs(s"SELECT t.x FROM read_csv($path) AS t") == Seq("1"))
+    intercept[Exception](gw.sql(s"SELECT a.x FROM $path t").collect())
+    intercept[Exception](gw.sql(s"SELECT read_csv.x FROM read_csv($path) t").collect())
+    intercept[Exception](gw.sql("SELECT * FROM query_table(r_name)").collect())
+  }
+
+  test("the Thrift path (statements on gw.session) resolves the same table functions") {
+    def count(q: String) = gw.session.sql(q).collect().head.getLong(0)
+    assert(count(s"SELECT count(*) FROM read_parquet('$sf/nation.parquet')") == 25L)
+    assert(count("SELECT count(*) FROM pragma_table_info('nation')") == 3L)
+    assert(count(s"SELECT count(*) FROM glob('$sf/nation.parquet')") == 1L)
+    assert(count("SELECT count(*) FROM repeat('x', 4)") == 4L)
+    assert(count(s"SELECT count(*) FROM '$sf/region.parquet'") == 5L)
   }
 }

@@ -34,6 +34,12 @@ table = client.do_get(flight.Ticket(
 print(table)
 assert "parquet" in table.column("extension_name").to_pylist(), table
 
+# a table function in JOIN position (DuckDB 1.0 answers 3)
+table = client.do_get(flight.Ticket(
+    b"SELECT count(*) AS c FROM nation n "
+    b"JOIN pragma_table_info('nation') t ON t.cid = n.n_nationkey")).read_all()
+assert table.column("c").to_pylist() == [3], table
+
 # a typed fixture query: dates, decimals, strings
 table = client.do_get(flight.Ticket(
     b"SELECT o_orderkey, o_orderdate, o_totalprice, o_orderpriority "
@@ -174,6 +180,15 @@ info = client.get_flight_info(flight.FlightDescriptor.for_command(tables_cmd))
 table = client.do_get(info.endpoints[0].ticket).read_all()
 print(table)
 assert table.column("table_name").to_pylist() == ["orders"], table
+
+# an unfiltered GetTables lists only the user's relations: no engine
+# helper relations, no per-file views (DuckDB 1.0 lists none)
+info = client.get_flight_info(
+    flight.FlightDescriptor.for_command(meta_cmd("CommandGetTables")))
+table = client.do_get(info.endpoints[0].ticket).read_all()
+names = table.column("table_name").to_pylist()
+assert "orders" in names, table
+assert not [n for n in names if n.startswith(("checkpoint", "pragma_", "graft_", "gf_"))], names
 
 # the constraint/type-info commands a stock ADBC GetObjects(depth=all)
 # issues: spec'd schemas, zero rows, no gRPC error
