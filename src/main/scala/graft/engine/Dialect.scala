@@ -1583,126 +1583,40 @@ object Dialect {
       }
     }
 
-  /** DuckDB `ASOF [LEFT] JOIN rel alias ON cond` (reached by the
-    * reference at /root/reference/main.go:229) → a correlated lateral
-    * join Spark's parser accepts:
-    *
-    *   [LEFT] JOIN LATERAL (SELECT alias.* FROM rel alias
-    *                        WHERE cond ORDER BY <right-ts> DESC|ASC
-    *                        LIMIT 1) alias ON true
-    *
-    * The ts inequality conjunct decides the direction: the right-side
-    * operand on the SMALLER side of the comparison means
-    * nearest-predecessor (ORDER BY … DESC), on the larger side
-    * nearest-follower (ASC). Catalyst decorrelates the LIMIT-1 ordered
-    * subquery into a window over an equi-join — the same shape as
-    * engine.AsOfJoin's rewrite; the custom one-shuffle-per-side
-    * streaming-merge plan (plans.AsOfJoinPlan) remains the scale path
-    * for the DataFrame API. Statements that don't match the shape
-    * (missing alias, no ON) are left unchanged for the native parser's
-    * real error message.
+  /** DuckDB `a ASOF [LEFT] JOIN b ON cond` → `a [LEFT] JOIN b ON
+    * graft_asof() AND cond`: the marker conjunct tags the join, and
+    * plans.ResolveAsOfJoin turns the resolved Join into the engine's
+    * ASOF operator (or refuses its shape with a typed error). Only the
+    * join's own ON is marked: the search stops at USING or at the next
+    * JOIN, and a word `asof` not followed by `[kind] JOIN` (a column) is
+    * left alone.
     */
   private def rewriteAsOf(sql: String): String = {
-    val at = scanCode(sql) { (i, _) => if (keywordAt(sql, i, "ASOF")) -1 else i }
-    if (at < 0) return sql
-    var i = at + 4
-    def skipWs(): Unit = { while (i < sql.length && sql.charAt(i).isWhitespace) i += 1 }
-    def word(w: String): Boolean = keywordAt(sql, i, w)
-    skipWs()
-    val isLeft = word("LEFT")
-    if (isLeft) { i += 4; skipWs() }
-    if (!word("JOIN")) return sql
-    i += 4; skipWs()
-    // right relation: balanced paren block or dotted identifier
-    val relStart = i
-    if (i < sql.length && sql.charAt(i) == '(') {
-      val close = closerOf(sql, i)
-      i = if (close < 0) sql.length else close + 1
-    } else {
-      while (i < sql.length && (sql.charAt(i).isLetterOrDigit ||
-        sql.charAt(i) == '_' || sql.charAt(i) == '.')) i += 1
-    }
-    val rel = sql.substring(relStart, i).trim
-    if (rel.isEmpty) return sql
-    skipWs()
-    if (word("AS")) { i += 2; skipWs() }
-    val aliasStart = i
-    while (i < sql.length && (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '_')) i += 1
-    val alias = sql.substring(aliasStart, i)
-    if (alias.isEmpty || alias.equalsIgnoreCase("ON")) return sql
-    skipWs()
-    if (!word("ON")) return sql
-    i += 2
-    // condition runs to the next top-level clause keyword / ')' / ';'
-    val condStart = i
-    val stops = Seq("WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "WINDOW",
-      "UNION", "INTERSECT", "EXCEPT", "QUALIFY", "JOIN", "LEFT", "RIGHT",
-      "FULL", "INNER", "CROSS", "NATURAL", "ASOF", "SEMI", "ANTI", "OFFSET")
-    val condEnd = scanCode(sql, condStart) { (j, depth) =>
-      val c = sql.charAt(j)
-      if (depth == 0 && (c == ')' || c == ';' || stops.exists { w =>
-        keywordAt(sql, j, w) && {
-          // `left(x, 1)` the function and `right.col` the qualifier are
-          // NOT clause boundaries — require the keyword to stand alone
-          // (next non-space char is not '(' or '.')
-          var k = j + w.length
-          while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-          k >= sql.length || (sql.charAt(k) != '(' && sql.charAt(k) != '.')
+    val markedOn = new java.util.BitSet // the ON of each ASOF join seen
+    scanOutsideLiterals(sql) { (i, sb) =>
+      if (markedOn.get(i)) { sb.append("ON graft_asof() AND"); i + 2 }
+      else if (!keywordAt(sql, i, "ASOF")) i
+      else {
+        var j = skipBlank(sql, i + 4)
+        Seq("LEFT", "RIGHT", "FULL", "INNER").find(keywordAt(sql, j, _)).foreach { k =>
+          j = skipBlank(sql, j + k.length)
+          if (keywordAt(sql, j, "OUTER")) j = skipBlank(sql, j + 5)
         }
-      })) -1
-      else j
-    } match {
-      case -1 => sql.length
-      case e => e
-    }
-    val cond = sql.substring(condStart, condEnd).trim
-    if (cond.isEmpty) return sql
-    // the ts inequality conjunct → ORDER BY expr + direction
-    val ord = asofOrder(cond, alias).getOrElse(return sql)
-    val joinKw = if (isLeft) "LEFT JOIN" else "JOIN"
-    val lateral = s"$joinKw LATERAL (SELECT $alias.* FROM $rel $alias " +
-      s"WHERE $cond ORDER BY $ord LIMIT 1) $alias ON true "
-    // recurse for further ASOF joins in the remainder
-    rewriteAsOf(sql.substring(0, at) + lateral + sql.substring(condEnd))
-  }
-
-  /** Find the inequality conjunct of an ASOF condition and derive
-    * `<expr> DESC|ASC` for the lateral's ORDER BY. None when no
-    * top-level inequality references the right alias.
-    */
-  private def asofOrder(cond: String, alias: String): Option[String] = {
-    // split top-level AND conjuncts, outside literals
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    var last = 0
-    scanCode(cond) { (i, depth) =>
-      if (depth == 0 && keywordAt(cond, i, "AND")) {
-        parts += cond.substring(last, i)
-        last = i + 3
-        last
-      } else i
-    }
-    parts += cond.substring(last)
-    val refRe = ("""(?i)(?<![\w"])""" + java.util.regex.Pattern.quote(alias) + """\.""").r
-    parts.iterator.map(_.trim).flatMap { p =>
-      // first top-level comparison operator that is not (in)equality
-      val pos = scanCode(p) { (j, depth) =>
-        if (p.startsWith("<>", j)) j + 2
-        else if (depth == 0 && "<>".indexOf(p.charAt(j)) >= 0) -1
-        else j
+        if (!keywordAt(sql, j, "JOIN")) i
+        else {
+          val on = scanCode(sql, j + 4) { (k, depth) =>
+            if (depth == 0 && (sql.charAt(k) == ')' || sql.charAt(k) == ';' ||
+              Seq("ON", "USING", "JOIN").exists(keywordAt(sql, k, _)))) -1
+            else k
+          }
+          if (on < 0 || !keywordAt(sql, on, "ON"))
+            throw new GatewayException(
+              "ASOF JOIN: only `ON <condition>` is supported (USING is not)")
+          markedOn.set(on)
+          skipBlank(sql, i + 4) // drop ASOF
+        }
       }
-      Option.when(pos >= 0) {
-        val two = p.substring(pos, math.min(pos + 2, p.length))
-        (if (two == ">=" || two == "<=") two else p.charAt(pos).toString, pos)
-      }.flatMap { case (op, pos) =>
-        val lhs = p.substring(0, pos).trim
-        val rhs = p.substring(pos + op.length).trim
-        val rightIsSmaller = op.startsWith(">") // A > B: B is smaller
-        val (smaller, larger) = if (rightIsSmaller) (rhs, lhs) else (lhs, rhs)
-        if (refRe.findFirstIn(smaller).isDefined) Some(s"$smaller DESC")
-        else if (refRe.findFirstIn(larger).isDefined) Some(s"$larger ASC")
-        else None
-      }
-    }.nextOption()
+    }
   }
 
   /** DuckDB `date_diff('part', a, b)` counts part-BOUNDARY CROSSINGS.

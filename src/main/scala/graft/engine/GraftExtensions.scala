@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -11,7 +11,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * (SparkSessionExtensions.injectParser), so every SQL entry point —
   * `spark.sql`, the Gateway, and Thrift/JDBC client sessions that never
   * pass through Gateway.sql — gets the same text rewrites (QUALIFY,
-  * `//`, GLOB, `->>`, catalog table functions; Dialect.rewrite), once.
+  * `//`, GLOB, `->>`, catalog table functions; Dialect.rewrite), once,
+  * and the analyzer rules and operators those rewrites rely on — the
+  * ASOF join among them, so it runs on every session built with this
+  * extension.
   *
   * Activate with
   * `spark.sql.extensions=graft.engine.GraftExtensions` (config-only, the
@@ -25,7 +28,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // point at a sibling session)
     ext.injectParser((session, delegate) => new GraftSqlParser(delegate, Some(session)))
     // whole-operator ASOF join (SURVEY §2.3 J7): custom LogicalPlan +
-    // Strategy + SparkPlan — graft.plans.AsOfJoinPlan
+    // Strategy + SparkPlan — graft.plans.AsOfJoinPlan. Served ASOF SQL
+    // reaches it in three steps, all from here: the parser's
+    // Dialect.rewriteAsOf marks the join's ON with graft_asof(), the
+    // resolution rule turns the marked Join into an AsOfJoinNode, and
+    // the strategy plans that as AsOfJoinExec
+    ext.injectFunction((FunctionIdentifier("graft_asof"),
+      new ExpressionInfo(classOf[graft.plans.AsOfMarker].getName, "graft_asof"),
+      args => {
+        if (args.nonEmpty) throw new GatewayException("graft_asof() takes no arguments")
+        graft.plans.AsOfMarker()
+      }))
+    ext.injectResolutionRule(_ => graft.plans.ResolveAsOfJoin)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     // DuckDB `ts::TIME` (time-of-day of a timestamp): Spark 4.1 has the
     // TIME type but no timestamp→time cast — rewrite it at resolution

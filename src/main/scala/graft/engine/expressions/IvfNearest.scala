@@ -125,8 +125,7 @@ object IvfNearest {
       cn: Array[Double], l2: Boolean, base: Int, blockLen: Int,
       outN: Int): Array[Int] = {
     // outN == 0 would index scores(-1) in the displacement arm below;
-    // the pre-r12 repeated-argmin loop returned an empty array here,
-    // and ProbeKernel can feed n straight from CLI args
+    // the pre-r12 repeated-argmin loop returned an empty array here
     if (outN <= 0) return Array.emptyIntArray
     val dim = x.length
     val scores = new Array[Double](outN)

@@ -1,17 +1,17 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.engine.{AsOfJoin, Q}
+import graft.engine.Q
+import graft.plans.AsOfJoinPlan
 
 /** J7: ASOF join queries (SURVEY.md §2.3 J7) — time-series alignment:
   * for each click event, the most recent purchase by the same user at or
   * before the click. Oracle = DuckDB's native ASOF JOIN.
   *
-  * Two engine paths, both oracle-gated: j7_asof_join runs the custom
-  * physical operator (graft.plans.AsOfJoinExec — LogicalPlan + Strategy
+  * Both queries, and their oracle texts when served, run the engine's
+  * one ASOF operator (graft.plans.AsOfJoinExec — LogicalPlan + Strategy
   * + streaming-merge SparkPlan, one shuffle per side, O(1) state);
-  * j7_asof_inner runs the union+window rewrite (engine.AsOfJoin). The
-  * two are also differential-tested against each other in OperatorSpec.
+  * j7_asof_inner drops the clicks with no match (its `inner` flag).
   */
 object AsOfQueries {
 
@@ -26,7 +26,7 @@ object AsOfQueries {
   ) { s =>
     val clicks = s.table("events").filter(col("event_type") === "click")
     val purchases = s.table("events").filter(col("event_type") === "purchase")
-    graft.plans.AsOfJoinPlan.asof(s, clicks, purchases, "user_id", "ts",
+    AsOfJoinPlan.asof(s, clicks, purchases, "user_id", "ts",
       Seq("event_id" -> "purchase_id", "value" -> "purchase_value"))
       .select(col("event_id"), col("user_id"), col("purchase_id"), col("purchase_value"))
       // preSort (r19): no range-sampling re-exec of the asof merge
@@ -45,11 +45,10 @@ object AsOfQueries {
   ) { s =>
     val clicks = s.table("events").filter(col("event_type") === "click")
     val purchases = s.table("events").filter(col("event_type") === "purchase")
-    AsOfJoin.asofLeft(clicks, purchases, "user_id", "ts",
-      Seq("event_id" -> "purchase_id"))
-      .filter(col("purchase_id").isNotNull)
+    AsOfJoinPlan.asof(s, clicks, purchases, "user_id", "ts",
+      Seq("event_id" -> "purchase_id"), inner = true)
       .select(col("event_id"), col("purchase_id"))
-      // preSort (r19): no range-sampling re-exec of the union+window rewrite
+      // preSort (r19): no range-sampling re-exec of the asof merge
       .transform(graft.engine.Par.preSort(_, col("event_id")))
       .orderBy(col("event_id").asc_nulls_last)
   }

@@ -3,49 +3,123 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Descending, EqualTo, Expression, GenericInternalRow, GreaterThan, GreaterThanOrEqual, JoinedRow, LeafExpression, LessThan, LessThanOrEqual, PredicateHelper, RowOrdering, SortOrder, Unevaluable, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.JOIN
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.types.{BooleanType, DataType}
+import graft.engine.GatewayException
 
-/** Whole-operator ASOF join — SURVEY.md §2.3 J7, tier (c) of the
+/** The engine's one ASOF join — SURVEY.md §2.3 J7, tier (c) of the
   * custom-operator preference order: a Catalyst LogicalPlan +
   * SparkStrategy + SparkPlan, registered through
-  * SparkSessionExtensions (graft.engine.GraftExtensions).
+  * SparkSessionExtensions (graft.engine.GraftExtensions). Served SQL
+  * reaches it through ResolveAsOfJoin, the DataFrame API through
+  * AsOfJoinPlan.asof.
   *
-  * Semantics (DuckDB `l ASOF LEFT JOIN r ON l.k = r.k AND l.ts >= r.ts`,
+  * Semantics (DuckDB `l ASOF [LEFT] JOIN r ON l.k = r.k AND l.ts >= r.ts`,
   * reached by the reference at /root/reference/main.go:229): every left
-  * row joins the LATEST right row with equal key and right.ts ≤ left.ts;
-  * unmatched left rows null-extend. NULL keys never match.
+  * row joins the LATEST right row with equal keys and right.ts ≤ left.ts
+  * (`>` excludes equal ts; `<=`/`<` take the EARLIEST right row at or
+  * after left.ts instead); unmatched left rows null-extend, or are
+  * dropped when `inner`. A key with any NULL part, and a NULL ts, never
+  * match. No keys means one candidate stream for the whole relation.
   *
-  * Physical form: both sides hash-clustered on the key and sorted by
-  * (key, ts) — Spark inserts the exchanges/sorts from
-  * requiredChildDistribution/Ordering — then a single streaming merge
-  * per partition holds ONE candidate right row. One shuffle per side,
-  * O(1) state: strictly better than the union+window rewrite
-  * (engine.AsOfJoin), which carries both sides through one union-wide
-  * window with a held payload struct.
+  * Physical form: both sides hash-clustered on the keys and sorted by
+  * (keys, ts) — ts descending for the nearest follower — Spark inserts
+  * the exchanges/sorts from requiredChildDistribution/Ordering; then a
+  * single streaming merge per partition holds ONE candidate right row.
+  * One shuffle per side, O(1) state.
   */
 case class AsOfJoinNode(
     left: LogicalPlan,
     right: LogicalPlan,
-    leftKey: Expression,
+    leftKeys: Seq[Expression],
+    rightKeys: Seq[Expression],
     leftTs: Expression,
-    rightKey: Expression,
     rightTs: Expression,
+    forward: Boolean,
+    strict: Boolean,
+    inner: Boolean,
     payload: Seq[Attribute]) extends BinaryNode {
   override def output: Seq[Attribute] =
-    left.output ++ payload.map(_.withNullability(true))
+    left.output ++ (if (inner) payload else payload.map(_.withNullability(true)))
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): AsOfJoinNode =
     copy(left = newLeft, right = newRight)
 }
 
+/** `graft_asof()`: the conjunct Dialect.rewriteAsOf puts first in an
+  * ASOF join's ON condition. It only tags the Join for
+  * ResolveAsOfJoin, which removes it; it is never evaluated.
+  */
+case class AsOfMarker() extends LeafExpression with Unevaluable {
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_asof"
+}
+
+/** A resolved `Join(l, r, Inner | LeftOuter, graft_asof() AND cond)`
+  * becomes an AsOfJoinNode: the `l = r` equalities are the keys, the one
+  * `>=`/`>`/`<=`/`<` between the two sides sets direction and
+  * strictness. Every other shape is refused with a typed error naming
+  * it — DuckDB 1.0 rejects several of them ("Missing/Multiple ASOF JOIN
+  * inequalities") and gives extra predicates semantics of its own.
+  */
+object ResolveAsOfJoin extends Rule[LogicalPlan] with PredicateHelper {
+  private def refuse(what: String): Nothing =
+    throw new GatewayException(s"ASOF JOIN: $what is not supported; " +
+      "the condition must be key equalities AND one inequality between the two sides")
+
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.resolveOperatorsUpWithPruning(_.containsPattern(JOIN)) {
+      case j @ Join(l, r, joinType, Some(cond), _)
+          if j.resolved && cond.exists(_.isInstanceOf[AsOfMarker]) =>
+        if (joinType != Inner && joinType != LeftOuter) refuse(s"ASOF ${joinType.sql} JOIN")
+        val (markers, conjuncts) =
+          splitConjunctivePredicates(cond).partition(_.isInstanceOf[AsOfMarker])
+        if (markers.isEmpty) refuse("OR")
+        // (left-side operand, right-side operand, swapped) of l/r operands
+        def sides(a: Expression, b: Expression): Option[(Expression, Expression, Boolean)] = {
+          def from(e: Expression, p: LogicalPlan) =
+            e.references.nonEmpty && e.references.subsetOf(p.outputSet)
+          if (from(a, l) && from(b, r)) Some((a, b, false))
+          else if (from(a, r) && from(b, l)) Some((b, a, true))
+          else None
+        }
+        val keys = Seq.newBuilder[(Expression, Expression)]
+        var ineq: Option[(Expression, Expression, Expression, Boolean)] = None
+        conjuncts.foreach { c =>
+          (c, c.children match { case Seq(a, b) => sides(a, b); case _ => None }) match {
+            case (_: EqualTo, Some((lk, rk, _))) => keys += (lk -> rk)
+            case (_: GreaterThanOrEqual | _: GreaterThan | _: LessThanOrEqual | _: LessThan,
+                Some((lts, rts, swapped))) =>
+              if (ineq.nonEmpty) refuse("a second inequality")
+              ineq = Some((lts, rts, c, swapped))
+            case _ => refuse(s"the predicate `${c.sql}`")
+          }
+        }
+        val (lts, rts, cmp, swapped) = ineq.getOrElse(refuse("a condition without an inequality"))
+        val greater = cmp.isInstanceOf[GreaterThanOrEqual] || cmp.isInstanceOf[GreaterThan]
+        val (lks, rks) = keys.result().unzip
+        // `l.ts >= r.ts` looks back (the latest right row at or before
+        // l.ts); `l.ts <= r.ts`, or the same written `r.ts >= l.ts`, ahead
+        AsOfJoinNode(l, r, lks, rks, lts, rts,
+          forward = greater == swapped,
+          strict = cmp.isInstanceOf[GreaterThan] || cmp.isInstanceOf[LessThan],
+          inner = joinType == Inner, payload = r.output)
+    }
+}
+
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoinNode(l, r, lk, lts, rk, rts, payload) =>
-      AsOfJoinExec(planLater(l), planLater(r), lk, lts, rk, rts, payload) :: Nil
+    case j: AsOfJoinNode =>
+      AsOfJoinExec(planLater(j.left), planLater(j.right), j.leftKeys, j.rightKeys,
+        j.leftTs, j.rightTs, j.forward, j.strict, j.inner, j.payload) :: Nil
     case _ => Nil
   }
 }
@@ -53,113 +127,116 @@ object AsOfJoinStrategy extends SparkStrategy {
 case class AsOfJoinExec(
     left: SparkPlan,
     right: SparkPlan,
-    leftKey: Expression,
+    leftKeys: Seq[Expression],
+    rightKeys: Seq[Expression],
     leftTs: Expression,
-    rightKey: Expression,
     rightTs: Expression,
+    forward: Boolean,
+    strict: Boolean,
+    inner: Boolean,
     payload: Seq[Attribute]) extends BinaryExecNode {
 
-  // keyOrd/tsOrd below are built from the LEFT side's types; mixed-type
-  // sides would compare garbage (or throw ClassCastException mid-merge)
-  require(leftKey.dataType == rightKey.dataType,
-    s"ASOF key types differ: ${leftKey.dataType} vs ${rightKey.dataType}")
+  // the key and ts orderings below are built from the LEFT side's types;
+  // mixed-type sides would compare garbage (or throw ClassCastException
+  // mid-merge)
+  require(leftKeys.map(_.dataType) == rightKeys.map(_.dataType),
+    s"ASOF key types differ: ${leftKeys.map(_.dataType)} vs ${rightKeys.map(_.dataType)}")
   require(leftTs.dataType == rightTs.dataType,
     s"ASOF ts types differ: ${leftTs.dataType} vs ${rightTs.dataType}")
 
   override def output: Seq[Attribute] =
-    left.output ++ payload.map(_.withNullability(true))
+    left.output ++ (if (inner) payload else payload.map(_.withNullability(true)))
 
-  // co-partition on the key, merge-order by (key, ts): Catalyst inserts
-  // the shuffles and sorts to satisfy these
+  // co-partition on the keys, merge-order by (keys, ts): Catalyst
+  // inserts the shuffles and sorts to satisfy these
   override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(Seq(leftKey)) ::
-      ClusteredDistribution(Seq(rightKey)) :: Nil
+    if (leftKeys.isEmpty) AllTuples :: AllTuples :: Nil
+    else ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
 
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    Seq(SortOrder(leftKey, org.apache.spark.sql.catalyst.expressions.Ascending),
-      SortOrder(leftTs, org.apache.spark.sql.catalyst.expressions.Ascending)),
-    Seq(SortOrder(rightKey, org.apache.spark.sql.catalyst.expressions.Ascending),
-      SortOrder(rightTs, org.apache.spark.sql.catalyst.expressions.Ascending)))
+  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
+    Seq(leftKeys -> leftTs, rightKeys -> rightTs).map { case (keys, ts) =>
+      keys.map(SortOrder(_, Ascending)) :+
+        SortOrder(ts, if (forward) Descending else Ascending)
+    }
 
   override def outputOrdering: Seq[SortOrder] = requiredChildOrdering.head
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val keyOrd = TypeUtils.getInterpretedOrdering(leftKey.dataType)
+    val keyTypes = leftKeys.map(_.dataType)
     val tsOrd = TypeUtils.getInterpretedOrdering(leftTs.dataType)
-    val lKeyGen = leftKey
-    val lTsGen = leftTs
-    val rKeyGen = rightKey
-    val rTsGen = rightTs
-    val payloadAttrs = payload
-    // capture child outputs as plain locals: referencing left.output
-    // inside the task closure would serialize the plan node itself,
-    // whose output is empty after deserialization
+    // capture fields and child outputs as plain locals: referencing
+    // left.output inside the task closure would serialize the plan node
+    // itself, whose output is empty after deserialization
+    val (lKeys, rKeys, lTs, rTs, payloadAttrs) = (leftKeys, rightKeys, leftTs, rightTs, payload)
+    val (fwd, strictCmp, innerOnly) = (forward, strict, inner)
     val leftOutput = left.output
     val rightOutput = right.output
     val outAttrs = output
-    val numPayload = payloadAttrs.length
     left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
-      // bind expressions to each side's schema inside the task
-      val boundLk = org.apache.spark.sql.catalyst.expressions.BindReferences
-        .bindReference(lKeyGen, leftOutput)
-      val boundLts = org.apache.spark.sql.catalyst.expressions.BindReferences
-        .bindReference(lTsGen, leftOutput)
-      val boundRk = org.apache.spark.sql.catalyst.expressions.BindReferences
-        .bindReference(rKeyGen, rightOutput)
-      val boundRts = org.apache.spark.sql.catalyst.expressions.BindReferences
-        .bindReference(rTsGen, rightOutput)
+      // bind expressions to each side's schema, and generate the key
+      // ordering (not serializable), inside the task
+      val keyOrd = RowOrdering.createNaturalAscendingOrdering(keyTypes)
+      val lKeyProj = UnsafeProjection.create(lKeys, leftOutput)
+      val rKeyProj = UnsafeProjection.create(rKeys, rightOutput)
+      val boundLts = BindReferences.bindReference(lTs, leftOutput)
+      val boundRts = BindReferences.bindReference(rTs, rightOutput)
       val payloadProj = UnsafeProjection.create(payloadAttrs, rightOutput)
-      val nullPayload = new GenericInternalRow(numPayload)
+      val nullPayload = new GenericInternalRow(payloadAttrs.length)
       val joined = new JoinedRow
       // bind against the output attrs (payload forced nullable), NOT
       // the raw payload attrs: a non-nullable payload column would bind
       // a non-nullable BoundReference that reads the null-extension
       // row's null slot as 0
       val out = UnsafeProjection.create(outAttrs, outAttrs)
+      // a right ts is a candidate for a left ts when it comes no later in
+      // merge order (strictly earlier when `strict`)
+      def candidate(rts: Any, lts: Any): Boolean = {
+        val c = tsOrd.compare(rts, lts)
+        val d = if (fwd) -c else c
+        d < 0 || (d == 0 && !strictCmp)
+      }
 
       val rBuf = rIter.buffered
-      // held = payload of the latest right row ≤ current position, for
-      // the key `heldKey`
-      var heldKey: Any = null
+      // held = payload of the last candidate right row consumed, for the
+      // key `heldKey`; both are copies — the sorter reuses its row
+      // buffers (a string key held by reference changes under a spill)
+      var heldKey: UnsafeRow = null
       var heldPayload: InternalRow = null
 
-      lIter.map { lRow =>
-        val lk = boundLk.eval(lRow)
+      val rows = lIter.map { lRow =>
+        val lk = lKeyProj(lRow)
         val lts = boundLts.eval(lRow)
-        if (lk == null || lts == null) {
-          // NULL key or NULL ts never matches (DuckDB: l.ts >= NULL is
-          // never true); don't enter the advance loop — tsOrd.compare
-          // would NPE on a null lts
-          joined(lRow, nullPayload)
-        } else {
-          // advance the right side to the last row with
-          // (rk < lk) or (rk == lk && rts <= lts)
+        // a NULL key part or NULL ts never matches (DuckDB: l.ts >= NULL
+        // is never true); don't enter the advance loop — tsOrd.compare
+        // would NPE on a null lts
+        val matched = !lk.anyNull && lts != null && {
+          // advance the right side past every row with (rk < lk) or
+          // (rk == lk && candidate(rts, lts))
           var advancing = true
           while (advancing && rBuf.hasNext) {
-            val rk = boundRk.eval(rBuf.head)
-            if (rk == null) { rBuf.next(); advancing = true } // never matches
-            else {
-              val c = keyOrd.compare(rk, lk)
-              if (c < 0) { rBuf.next() } // behind: drop, clear any held
-              else if (c == 0) {
-                val rts = boundRts.eval(rBuf.head)
-                if (rts == null) {
-                  // NULL ts never matches; nulls-first ordering puts these
-                  // at the head of the key group, so consume — stopping
-                  // here would stall the merge for the whole key
-                  rBuf.next()
-                } else if (tsOrd.compare(rts, lts) <= 0) {
-                  heldKey = rk
-                  heldPayload = payloadProj(rBuf.next()).copy()
-                } else advancing = false
+            val rk = rKeyProj(rBuf.head)
+            val c = if (rk.anyNull) -1 else keyOrd.compare(rk, lk)
+            if (c < 0) rBuf.next() // behind, or never matches: drop
+            else if (c == 0) {
+              val rts = boundRts.eval(rBuf.head)
+              if (rts == null) {
+                // NULL ts never matches; it sorts at one end of the key
+                // group, so consume — stopping here would stall the
+                // merge for the whole key
+                rBuf.next()
+              } else if (candidate(rts, lts)) {
+                heldKey = rk.copy()
+                heldPayload = payloadProj(rBuf.next()).copy()
               } else advancing = false
-            }
+            } else advancing = false
           }
-          val matched = heldKey != null && keyOrd.compare(heldKey, lk) == 0
-          joined(lRow, if (matched) heldPayload else nullPayload)
+          heldKey != null && keyOrd.compare(heldKey, lk) == 0
         }
-        out(joined)
+        if (matched) out(joined(lRow, heldPayload))
+        else if (innerOnly) null
+        else out(joined(lRow, nullPayload))
       }
+      if (innerOnly) rows.filter(_ != null) else rows
     }
   }
 
@@ -169,9 +246,11 @@ case class AsOfJoinExec(
 }
 
 object AsOfJoinPlan {
-  /** DataFrame API: left ASOF join with payload columns from the
-    * matched right row (aliased). Requires the strategy to be
-    * registered (GraftExtensions) — or injects it on the fly.
+  /** DataFrame API: ASOF join with payload columns (aliased) from the
+    * latest `right` row with the same `key` and `right.ts <= left.ts`;
+    * unmatched left rows get NULL payload, or are dropped when `inner`.
+    * Requires the strategy to be registered (GraftExtensions) — or
+    * injects it on the fly.
     */
   def asof(
       spark: SparkSession,
@@ -179,7 +258,8 @@ object AsOfJoinPlan {
       right: org.apache.spark.sql.DataFrame,
       key: String,
       ts: String,
-      payload: Seq[(String, String)]): org.apache.spark.sql.DataFrame = {
+      payload: Seq[(String, String)],
+      inner: Boolean = false): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.GraftPlans
     import org.apache.spark.sql.functions.col
     val lPlan = GraftPlans.analyzed(left)
@@ -197,9 +277,9 @@ object AsOfJoinPlan {
       attr(rPlan, src).withName(alias)
     }
     val node = AsOfJoinNode(lPlan, rPlan,
-      attr(lPlan, key), attr(lPlan, ts),
-      attr(rPlan, key), attr(rPlan, ts),
-      payloadAttrs)
+      Seq(attr(lPlan, key)), Seq(attr(rPlan, key)),
+      attr(lPlan, ts), attr(rPlan, ts),
+      forward = false, strict = false, inner = inner, payload = payloadAttrs)
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     if (!classic.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
       classic.experimental.extraStrategies =

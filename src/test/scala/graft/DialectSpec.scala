@@ -118,30 +118,41 @@ class DialectSpec extends AnyFunSuite {
   }
 
   test("rewriteAsOf edge cases: literals, identifiers, functions, fall-through") {
-    import graft.engine.Dialect
-    // ASOF inside a string literal or as part of an identifier: untouched
-    assert(Dialect.rewrite("SELECT 'ASOF JOIN' AS s FROM t")
-      .contains("'ASOF JOIN'"))
-    assert(!Dialect.rewrite("SELECT asof_col FROM t").contains("LATERAL"))
-    // left()/right() functions inside the ON condition do not truncate it
+    import graft.engine.{Dialect, GatewayException}
+    // ASOF inside a string literal, or a column named asof: untouched
+    val lit = Dialect.rewrite("SELECT 'ASOF JOIN' AS s FROM t")
+    assert(lit.contains("'ASOF JOIN'") && !lit.contains("graft_asof"), lit)
+    assert(!Dialect.rewrite("SELECT asof, t.asof, asof_col FROM t").contains("graft_asof"))
+    // ASOF is dropped and the marker leads this join's ON; left()/right()
+    // functions inside the condition survive
     val f = Dialect.rewrite(
       "SELECT * FROM a ASOF JOIN b r ON left(a.k, 2) = left(r.k, 2) AND a.ts >= r.ts")
-    assert(f.contains("LATERAL") &&
-      f.contains("left(a.k, 2) = left(r.k, 2)") &&
-      f.contains("ORDER BY r.ts DESC"), f)
-    // forward direction: right operand on the larger side → ASC
+    assert(f.contains("FROM a JOIN b r ON graft_asof() AND left(a.k, 2) = left(r.k, 2)") &&
+      !f.contains("ASOF"), f)
     val fwd = Dialect.rewrite(
       "SELECT * FROM a ASOF LEFT JOIN b r ON a.k = r.k AND r.ts >= a.ts")
-    assert(fwd.contains("ORDER BY r.ts ASC"), fwd)
-    // no alias on a subquery right side → left unchanged for the native
-    // parser's error (we cannot name the lateral)
-    val bad = "SELECT * FROM a ASOF JOIN (SELECT * FROM b) ON a.k = b.k"
-    assert(Dialect.rewrite(bad) == bad)
-    // two ASOF joins in one statement both rewrite
+    assert(fwd.contains("LEFT JOIN b r ON graft_asof() AND a.k = r.k AND r.ts >= a.ts"), fwd)
+    // no alias on a subquery right side: DuckDB accepts it, so it rewrites
+    val noAlias = Dialect.rewrite(
+      "SELECT * FROM a ASOF JOIN (SELECT * FROM b) ON a.k = b.k AND a.ts >= b.ts")
+    assert(noAlias.contains("JOIN (SELECT * FROM b) ON graft_asof() AND a.k = b.k"), noAlias)
+    // two ASOF joins in one statement both get a marker, each on its own
+    // ON; a plain join between them gets none
     val two = Dialect.rewrite(
       "SELECT * FROM a ASOF JOIN b r ON a.k = r.k AND a.ts >= r.ts " +
-        "ASOF JOIN c s ON a.k = s.k AND a.ts >= s.ts")
-    assert("LATERAL".r.findAllIn(two).size == 2, two)
+        "JOIN d ON d.k = a.k ASOF JOIN c s ON a.k = s.k AND a.ts >= s.ts")
+    assert("graft_asof".r.findAllIn(two).size == 2 &&
+      two.contains("JOIN d ON d.k = a.k JOIN c s ON graft_asof() AND a.k = s.k"), two)
+    // an ASOF join inside the right side's subquery is marked too
+    val nested = Dialect.rewrite(
+      "SELECT * FROM a ASOF JOIN (SELECT * FROM b ASOF JOIN c ON b.ts >= c.ts) x " +
+        "ON a.ts >= x.ts")
+    assert(nested.contains("JOIN c ON graft_asof() AND b.ts >= c.ts) x ON graft_asof() AND a.ts"),
+      nested)
+    // USING (or no ON at all) is refused, never marked onto a later join
+    intercept[GatewayException](Dialect.rewrite("SELECT * FROM a ASOF JOIN b USING (k, ts)"))
+    intercept[GatewayException](
+      Dialect.rewrite("SELECT * FROM a ASOF JOIN b JOIN c ON a.k = c.k"))
   }
 
   test("property: every rewrite trigger embedded in a literal or quoted identifier survives verbatim") {

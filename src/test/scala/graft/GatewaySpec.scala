@@ -54,8 +54,7 @@ class GatewaySpec extends AnyFunSuite {
 
   test("ASOF JOIN SQL runs through the gateway, differential vs custom plan") {
     // the j7/j7b oracle texts VERBATIM — the DuckDB-dialect statements a
-    // reference client would send — vs the engine's two DataFrame paths
-    // (custom streaming-merge exec and union+window rewrite)
+    // reference client would send — vs the engine's DataFrame queries
     for (name <- Seq("j7_asof_join", "j7_asof_inner")) {
       val viaSql = gw.sql(SparkEntry.oracleSql(name)).collect().toSeq
       val viaPlan = SparkEntry.queries(name)(spark, sf).collect().toSeq
@@ -77,6 +76,79 @@ class GatewaySpec extends AnyFunSuite {
         |FROM events l WHERE l.event_type = 'click'
         |ORDER BY l.event_id ASC NULLS LAST""".stripMargin).collect().toSeq
     assert(fwd == oracle)
+  }
+
+  test("served ev_attribution (alias-less ASOF right side) equals its DataFrame query") {
+    val viaSql = gw.sql(SparkEntry.oracleSql("ev_attribution")).collect().toSeq
+    val viaPlan = SparkEntry.queries("ev_attribution")(spark, sf).collect().toSeq
+    assert(viaSql.nonEmpty && viaSql == viaPlan)
+    // the Thrift/JDBC path: statements run on the gateway session directly
+    assert(gw.session.sql(SparkEntry.oracleSql("ev_attribution")).collect().toSeq == viaPlan)
+  }
+
+  test("served ASOF matches DuckDB 1.0 on sf0.01 events: direction, inner, no key") {
+    // the sibling sf0.01 fixture: (count, matched, sum of matched
+    // event_id) of clicks ASOF purchases, each triple read from DuckDB 1.0
+    val gw01 = Gateway.open(spark,
+      new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath)
+    def stats(join: String, cond: String): (Long, Long, Long) = {
+      val r = gw01.sql(
+        s"""SELECT count(*), count(r.event_id), sum(r.event_id)
+           |FROM (SELECT * FROM events WHERE event_type = 'click') l
+           |$join (SELECT * FROM events WHERE event_type = 'purchase') r
+           |  ON $cond""".stripMargin).collect()(0)
+      (r.getLong(0), r.getLong(1), r.getLong(2))
+    }
+    assert(stats("ASOF LEFT JOIN", "l.user_id = r.user_id AND l.ts >= r.ts") ==
+      ((2006L, 1865L, 8661770L)))
+    assert(stats("ASOF JOIN", "l.user_id = r.user_id AND l.ts >= r.ts") ==
+      ((1865L, 1865L, 8661770L)))
+    assert(stats("ASOF LEFT JOIN", "l.user_id = r.user_id AND r.ts >= l.ts") ==
+      ((2006L, 1858L, 10014121L)))
+    assert(stats("ASOF LEFT JOIN", "l.ts >= r.ts") == ((2006L, 2004L, 9991265L)))
+  }
+
+  test("served ASOF: strict vs inclusive both ways, two keys, no key (DuckDB 1.0 pinned)") {
+    // left and right timestamps tie (L1/R1 at 10, L6/R4 at 12), which
+    // the sf data never does; right timestamps are unique, so every
+    // answer is engine-independent. Expected strings read from DuckDB 1.0.
+    val l = "(VALUES (1, 'a', 10, 'L1'), (1, 'a', 20, 'L2'), (1, 'b', 20, 'L3'), " +
+      "(2, 'a', 5, 'L4'), (NULL, 'a', 20, 'L5'), (1, 'b', 12, 'L6')) l(k, g, ts, id)"
+    val r = "(VALUES (1, 'a', 10, 'R1'), (1, 'a', 15, 'R2'), (1, 'a', 20, 'R3'), " +
+      "(1, 'b', 12, 'R4'), (1, 'b', 25, 'R5'), (2, 'a', 5, 'R6'), (NULL, 'a', 1, 'R7')) r(k, g, ts, v)"
+    def asof(join: String, cond: String): String =
+      gw.sql(s"SELECT l.id, r.v FROM $l $join $r ON $cond ORDER BY l.id").collect()
+        .map(x => s"${x.getString(0)}:${Option(x.getString(1)).getOrElse("-")}").mkString(" ")
+    assert(asof("ASOF LEFT JOIN", "l.k = r.k AND l.ts >= r.ts") ==
+      "L1:R1 L2:R3 L3:R3 L4:R6 L5:- L6:R4")
+    assert(asof("ASOF LEFT JOIN", "l.k = r.k AND l.ts > r.ts") ==
+      "L1:- L2:R2 L3:R2 L4:- L5:- L6:R1")
+    assert(asof("ASOF LEFT JOIN", "l.k = r.k AND l.ts <= r.ts") ==
+      "L1:R1 L2:R3 L3:R3 L4:R6 L5:- L6:R4")
+    assert(asof("ASOF LEFT JOIN", "l.k = r.k AND r.ts > l.ts") ==
+      "L1:R4 L2:R5 L3:R5 L4:- L5:- L6:R2")
+    assert(asof("ASOF LEFT JOIN", "l.k = r.k AND l.g = r.g AND l.ts >= r.ts") ==
+      "L1:R1 L2:R3 L3:R4 L4:R6 L5:- L6:R4")
+    assert(asof("ASOF JOIN", "r.g = l.g AND r.k = l.k AND r.ts < l.ts") == "L2:R2 L3:R4")
+    assert(asof("ASOF LEFT JOIN", "l.ts >= r.ts") == "L1:R1 L2:R3 L3:R3 L4:R6 L5:R3 L6:R4")
+    assert(asof("ASOF JOIN", "l.ts < r.ts") == "L1:R4 L2:R5 L3:R5 L4:R1 L5:R5 L6:R2")
+  }
+
+  test("served ASOF: unsupported shapes raise a typed error naming the shape") {
+    val from = "FROM (SELECT * FROM events WHERE event_type = 'click') l " +
+      "%s (SELECT * FROM events WHERE event_type = 'purchase') r %s"
+    def err(join: String, tail: String): String =
+      intercept[GatewayException](
+        gw.sql("SELECT count(*) " + from.format(join, tail)).collect()).getMessage
+    val on = "ON l.user_id = r.user_id AND l.ts >= r.ts"
+    assert(err("ASOF RIGHT JOIN", on).contains("RIGHT"))
+    assert(err("ASOF FULL JOIN", on).contains("FULL"))
+    assert(err("ASOF JOIN", "USING (user_id, ts)").contains("USING"))
+    assert(err("ASOF JOIN", "ON l.user_id = r.user_id").contains("without an inequality"))
+    assert(err("ASOF JOIN", "ON l.user_id = r.user_id AND l.ts >= r.ts OR l.event_id > 3")
+      .contains("OR"))
+    assert(err("ASOF JOIN", on + " AND l.event_id >= r.event_id").contains("second inequality"))
+    assert(err("ASOF LEFT JOIN", on + " AND r.props LIKE '%a%'").contains("LIKE"))
   }
 
   test("round-5 dialect batch: brackets, json arrows, agg ORDER BY, shims") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.AsOfJoin
+import graft.plans.AsOfJoinPlan
 import graft.llm.KMeans
 
 /** Semantics tests for the custom operators, on hand-built inputs with
@@ -20,7 +20,7 @@ class OperatorSpec extends AnyFunSuite {
     val right = Seq((1L, 10L, "r@10"), (1L, 15L, "r@15"), (1L, 30L, "r@30"),
       (3L, 1L, "r-other"))
       .toDF("k", "ts", "rv")
-    val out = AsOfJoin.asofLeft(left, right, "k", "ts", Seq("rv" -> "matched"))
+    val out = AsOfJoinPlan.asof(spark, left, right, "k", "ts", Seq("rv" -> "matched"))
       .orderBy($"k", $"ts")
       .select($"lv", $"matched").collect().toSeq
     assert(out == Seq(
@@ -34,7 +34,7 @@ class OperatorSpec extends AnyFunSuite {
     val left = Seq((1L, 100L)).toDF("k", "ts")
     val right = Seq((1L, 50L, "a", 1.0), (1L, 60L, "b", 2.0))
       .toDF("k", "ts", "name", "score")
-    val out = AsOfJoin.asofLeft(left, right, "k", "ts",
+    val out = AsOfJoinPlan.asof(spark, left, right, "k", "ts",
       Seq("name" -> "name", "score" -> "score")).collect()
     assert(out.length == 1)
     assert(out(0).getAs[String]("name") == "b" && out(0).getAs[Double]("score") == 2.0)
@@ -514,8 +514,8 @@ class OperatorSpec extends AnyFunSuite {
       .toDF("k", "ts", "tag")
     val right = Seq((Option(1L), 5L, "R1"), (None: Option[Long], 5L, "R2"))
       .toDF("k", "ts", "v")
-    val out = graft.engine.AsOfJoin
-      .asofLeft(left, right, "k", "ts", Seq("v" -> "matched_v"))
+    val out = AsOfJoinPlan
+      .asof(spark, left, right, "k", "ts", Seq("v" -> "matched_v"))
       .collect().map(r => r.getAs[String]("tag") -> r.getAs[String]("matched_v")).toMap
     assert(out("L1") == "R1")
     assert(out("L2") == null, "NULL-keyed left row must not match NULL-keyed right")
@@ -558,9 +558,40 @@ class OperatorSpec extends AnyFunSuite {
     assert(rows.nonEmpty)
   }
 
-  test("AsOfJoinExec (custom strategy) matches the union+window rewrite") {
+  /** The reference ASOF, by brute force over collected rows: for each row of
+    * `left` (key, ts, id), the payloads of the `right` rows (key, ts,
+    * payload) with an equal non-NULL key and the latest non-NULL ts at
+    * or before the left ts — several on a ts tie, none when no row
+    * qualifies. Keyed by the left id.
+    */
+  private def bruteAsOf(left: org.apache.spark.sql.DataFrame,
+      right: org.apache.spark.sql.DataFrame): Map[Any, Set[Any]] = {
+    def le(a: Any, b: Any) = a.asInstanceOf[Comparable[Any]].compareTo(b) <= 0
+    val byKey = right.collect().toSeq
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1)).groupBy(_.get(0))
+    left.collect().map { l =>
+      val cands = if (l.isNullAt(0) || l.isNullAt(1)) Nil
+        else byKey.getOrElse(l.get(0), Nil).filter(r => le(r.get(1), l.get(1)))
+      val latest = cands.map(_.get(1)).reduceOption((a, b) => if (le(a, b)) b else a)
+      l.get(2) -> cands.filter(r => latest.contains(r.get(1))).map(_.get(2)).toSet
+    }.toMap
+  }
+
+  /** Assert that every exec row (left id, payload or NULL) carries a
+    * payload the brute-force reference allows.
+    */
+  private def assertMatchesBrute(out: Array[Row], ref: Map[Any, Set[Any]]): Unit = {
+    assert(out.length == ref.size)
+    val wrong = out.toSeq.collect {
+      case r if (if (r.isNullAt(1)) ref(r.get(0)).nonEmpty
+                 else !ref(r.get(0)).contains(r.get(1))) => r.get(0)
+    }
+    assert(wrong.isEmpty, s"${wrong.size} of ${out.length} rows wrong, left ids " +
+      wrong.take(10).mkString(", "))
+  }
+
+  test("AsOfJoinExec matches a brute-force scan") {
     import org.apache.spark.sql.functions._
-    import spark.implicits._
     graft.engine.Tables.register(spark, sf)
     val left = spark.table("events")
       .select(col("user_id").as("k"), col("ts"), col("event_id"))
@@ -568,17 +599,34 @@ class OperatorSpec extends AnyFunSuite {
       .select((col("o_custkey") % 50).as("k"),
         col("o_orderdate").cast("timestamp_ntz").as("ts"),
         col("o_orderkey"))
-    val viaExec = graft.plans.AsOfJoinPlan
+    val out = AsOfJoinPlan
       .asof(spark, left, right, "k", "ts", Seq("o_orderkey" -> "matched"))
       .select("event_id", "matched").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
-    val viaRewrite = graft.engine.AsOfJoin
-      .asofLeft(left, right, "k", "ts", Seq("o_orderkey" -> "matched"))
-      .select("event_id", "matched").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
-    assert(viaExec.size == viaRewrite.size)
-    assert(viaExec == viaRewrite)
-    assert(viaExec.valuesIterator.exists(_ != -1L), "no matches at all?")
+    assertMatchesBrute(out, bruteAsOf(left, right))
+    assert(out.exists(!_.isNullAt(1)), "no matches at all?")
+  }
+
+  test("AsOfJoinExec: string keys stay right when the sort spills") {
+    import org.apache.spark.sql.functions._
+    // the merge holds the last candidate's key across rows; a key held
+    // by reference into the sorter's reused buffer changes once the
+    // sort spills and merges its runs
+    val left = spark.range(3000).select(
+      format_string("key%02d", col("id") % 40).as("k"),
+      ((col("id") * 7919) % 100000).as("ts"), col("id").as("lid"))
+    val right = spark.range(6000).select(
+      format_string("key%02d", (col("id") * 13) % 40).as("k"),
+      ((col("id") * 104729) % 100000).as("ts"), col("id").as("v"))
+    val conf = org.apache.spark.SparkEnv.get.conf
+    val key = "spark.shuffle.spill.numElementsForceSpillThreshold"
+    val saved = conf.getOption(key)
+    conf.set(key, "50")
+    val out = try {
+      AsOfJoinPlan.asof(spark, left, right, "k", "ts", Seq("v" -> "mv"))
+        .select("lid", "mv").collect()
+    } finally saved.fold(conf.remove(key))(conf.set(key, _))
+    assertMatchesBrute(out, bruteAsOf(left, right))
+    assert(out.count(!_.isNullAt(1)) > 2000, "too few matches to test the merge")
   }
 
   test("AsOfJoinExec: null keys, empty right, ties") {
@@ -590,7 +638,7 @@ class OperatorSpec extends AnyFunSuite {
     val right = Seq((Option(1L), 5L, 7L), (Option(1L), 10L, 8L),
       (None: Option[Long], 1L, 9L))
       .toDF("k", "ts", "v")
-    val out = graft.plans.AsOfJoinPlan
+    val out = AsOfJoinPlan
       .asof(spark, left, right, "k", "ts", Seq("v" -> "mv"))
       .collect().map(r => r.getAs[Long]("id") ->
         (if (r.isNullAt(3)) -1L else r.getAs[Long]("mv"))).toMap
@@ -600,11 +648,11 @@ class OperatorSpec extends AnyFunSuite {
     assert(out(103L) == -1L) // no right rows for key 2
   }
 
-  test("ASOF: NULL timestamps never match and never stall (both paths)") {
+  test("ASOF: NULL timestamps never match and never stall") {
     import spark.implicits._
     // right has a NULL-ts row AT THE HEAD of key 1 (nulls sort first):
     // a merge that stops without consuming it would stall the whole key;
-    // a window rewrite that keeps it would carry its payload as -infinity
+    // one that kept it would carry its payload as -infinity
     val left = Seq(
       (Option(1L), Option(20L), 100L),  // should match r@10
       (Option(1L), Option(5L), 101L),   // before any real right row → null
@@ -614,18 +662,13 @@ class OperatorSpec extends AnyFunSuite {
       (Option(1L), None: Option[Long], 666L), // NULL ts: must never match
       (Option(1L), Option(10L), 7L))
       .toDF("k", "ts", "v")
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getAs[Long]("id") ->
-        (if (r.isNullAt(3)) -1L else r.getAs[Long]("mv"))).toMap
-    val viaExec = toMap(graft.plans.AsOfJoinPlan
-      .asof(spark, left, right, "k", "ts", Seq("v" -> "mv")))
-    val viaRewrite = toMap(graft.engine.AsOfJoin
-      .asofLeft(left, right, "k", "ts", Seq("v" -> "mv")))
-    for ((out, path) <- Seq(viaExec -> "exec", viaRewrite -> "rewrite")) {
-      assert(out(100L) == 7L, s"$path: merge stalled on the NULL-ts right row")
-      assert(out(101L) == -1L, s"$path: NULL-ts right row matched as -infinity")
-      assert(out(102L) == -1L, s"$path: NULL left ts must not match")
-    }
+    val out = AsOfJoinPlan.asof(spark, left, right, "k", "ts", Seq("v" -> "mv"))
+      .select("id", "mv").collect()
+    assertMatchesBrute(out, bruteAsOf(left, right))
+    val byId = out.map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
+    assert(byId(100L) == 7L, "merge stalled on the NULL-ts right row")
+    assert(byId(101L) == -1L, "NULL-ts right row matched as -infinity")
+    assert(byId(102L) == -1L, "NULL left ts must not match")
   }
 
   test("components: transitive merge a pairwise dedup would miss") {

@@ -75,13 +75,17 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("asof join runs the custom exec, not a join explosion") {
-    val p = plan("j7_asof_join")
-    assert(p.contains("AsOfJoin"), p) // graft.plans.AsOfJoinExec
-    assert(!p.contains("CartesianProduct") && !p.contains("NestedLoop"), p)
-    // the rewrite path (engine.AsOfJoin): one shuffle, window-based
-    val p2 = plan("j7_asof_inner")
-    assert(p2.contains("Window"), p2)
-    assert(!p2.contains("CartesianProduct") && !p2.contains("NestedLoop"), p2)
+    // the DataFrame queries and the served oracle texts (the marked ON
+    // that GraftExtensions resolves) plan the same operator
+    val gw = graft.engine.Gateway.open(spark, sf)
+    val plans = Seq("j7_asof_join", "j7_asof_inner").map(plan) ++
+      Seq("j7_asof_join", "ev_attribution").map(n =>
+        gw.sql(SparkEntry.oracleSql(n)).queryExecution.executedPlan.toString)
+    plans.foreach { p =>
+      assert(p.contains("AsOfJoin"), p) // graft.plans.AsOfJoinExec
+      assert(!p.contains("CartesianProduct") && !p.contains("NestedLoop") &&
+        !p.contains("Window"), p)
+    }
   }
 
   test("dd_exact is a single shuffle (window on digest), no self-join") {

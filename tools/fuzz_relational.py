@@ -90,7 +90,36 @@ def main():
               " RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"]
 
     def gen(rng):
-        shape = pin_shape if pin_shape is not None else rng.randrange(19)
+        shape = pin_shape if pin_shape is not None else rng.randrange(20)
+        if shape == 19:  # ASOF: {LEFT, inner} x {>=, >, <=, <} x {0, 1, 2
+            # keys}. The right ts is n_nationkey, unique, so no tie between
+            # right rows can make the match engine-dependent; left ts values
+            # do tie with right ones, which separates strict from inclusive
+            if rng.random() < 0.5:
+                lsrc = ("SELECT n_nationkey AS id, n_regionkey AS k1, "
+                        "length(n_name) % 2 AS k2, "
+                        f"{rng.choice(['(n_nationkey * 7) % 25', '24 - n_nationkey', '(n_nationkey * 3) % 25'])}"
+                        " AS t FROM nation")
+            else:
+                lsrc = ("SELECT r_regionkey AS id, r_regionkey AS k1, "
+                        "length(r_name) % 2 AS k2, r_regionkey * 6 AS t FROM region")
+            rsrc = ("SELECT n_nationkey AS m, n_regionkey AS k1, n_nationkey % 2 AS k2, "
+                    "n_nationkey AS t, n_name FROM nation")
+            cte = rng.random() < 0.3
+            r = "rr" if cte else "r"
+            on_keys = [f"l.k1 = {r}.k1", f"{r}.k2 = l.k2"][:rng.randint(0, 2)]
+            op = rng.choice([">=", ">", "<=", "<"])
+            flip = {">=": "<=", ">": "<", "<=": ">=", "<": ">"}
+            ineq = (f"l.t {op} {r}.t" if rng.random() < 0.5
+                    else f"{r}.t {flip[op]} l.t")
+            conds = on_keys + [ineq]
+            rng.shuffle(conds)
+            join = rng.choice(["ASOF LEFT JOIN", "ASOF JOIN"])
+            right = r if cte else f"({rsrc}) r"
+            return ((f"WITH rr AS ({rsrc}) " if cte else "") +
+                    f"SELECT l.id, l.t, {r}.m, {r}.n_name FROM ({lsrc}) l "
+                    f"{join} {right} ON {' AND '.join(conds)} "
+                    f"ORDER BY l.id ASC NULLS LAST")
         if shape == 18:  # r11: list_* stat sugar + pragma TVFs composed
             # relationally (VERDICT r10 item 7 — the stage-3/4 shims were
             # audited as isolated calls only)
