@@ -923,7 +923,6 @@ object ScaleBench {
   }
 
   private def writeMd(path: String, dir: String, rows: Seq[Row]): Unit = {
-    val counts = Seq("documents", "embeddings", "events", "lineitem")
     val loadavg = try {
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg")), "UTF-8").trim

@@ -27,7 +27,7 @@ object Dialect {
     */
   private val passes: Seq[String => String] = Seq(
     foldLiterals, // FIRST: later scanners assume '…' string syntax
-    normalizeWs, rewriteFileScans, rewriteBlob, rewriteArrayTypeSuffix,
+    normalizeWs, rewriteStatements, rewriteFileScans, rewriteBlob, rewriteArrayTypeSuffix,
     rewriteTrailingCommas, rewriteEmptyGroupBy,
     rewriteBraceLiterals, rewriteArrayCtor, rewriteBrackets,
     rewriteNamedArgCalls, rewriteIgnoreNulls,
@@ -1667,6 +1667,94 @@ object Dialect {
 
   private val infoSchemaRe =
     """(?i)^information_schema\s*\.\s*(tables|columns|schemata)\b""".r
+
+  /** DuckDB's stateless statements as the queries DuckDB binds them as
+    * (SIGMOD 2019), where they start the statement or open a subquery:
+    *  - `PRAGMA x[(arg)]` → `SELECT * FROM pragma_x('arg')`; `SHOW
+    *    TABLES` and `PRAGMA show_tables` → DuckDB's one `name` column;
+    *  - `SHOW ALL TABLES` → `SELECT * FROM duckdb_tables()`;
+    *  - `DESCRIBE t`, `DESC t`, `SHOW t` → `SELECT * FROM pragma_show('t')`;
+    *  - `SUMMARIZE t` → `SELECT * FROM summarize('t')`;
+    *  - `UNPIVOT rel ON c [AS l], … INTO NAME n VALUE v` → Spark's clause
+    *    `SELECT * FROM rel UNPIVOT (v FOR n IN (c [AS l], …))`, which
+    *    drops NULL cells as DuckDB does; a tail (ORDER BY …) stays;
+    *  - BEGIN/COMMIT/ROLLBACK/ABORT/ANALYZE/VACUUM/[FORCE] CHECKPOINT,
+    *    which clients send reflexively (database/sql wraps work in
+    *    BEGIN/COMMIT) → the empty `Success BOOLEAN` relation DuckDB 1.0
+    *    answers on a read-only database; at statement start only
+    *    (DuckDB reads `(begin)` as a column).
+    * Spark's own forms (`SHOW TABLES IN x`, `SHOW FUNCTIONS`, `DESCRIBE
+    * FUNCTION f`, `DESCRIBE SELECT …`) stay as they are.
+    */
+  private def rewriteStatements(sql: String): String = {
+    var prev = '(' // the last code char before i; the text start counts as `(`
+    var atStart = true // no code yet before i
+    scanOutsideLiterals(sql) { (i, sb) =>
+      val c = sql.charAt(i)
+      val lowered =
+        if (prev != '(' || keywordIn(sql, i, statementWords).isEmpty) None
+        else {
+          // the statement runs to the `)` closing its subquery, or to the end
+          val close = scanCode(sql, i) { (k, depth) =>
+            if (depth == 0 && sql.charAt(k) == ')') -1 else k
+          }
+          val end = if (close < 0) sql.length else close
+          lowerStatement(sql.substring(i, end), atStart).map { case (text, used) =>
+            sb.append(text); i + used
+          }
+        }
+      if (!c.isWhitespace) { prev = c; atStart = false }
+      lowered.getOrElse(i)
+    }
+  }
+
+  private val statementWords = Seq("PRAGMA", "SHOW", "DESCRIBE", "DESC",
+    "SUMMARIZE", "UNPIVOT", "BEGIN", "COMMIT", "ROLLBACK", "ABORT",
+    "ANALYZE", "VACUUM", "CHECKPOINT", "FORCE")
+  /** Words after SHOW/DESCRIBE that name Spark's own statements. */
+  private val showKeywords = Set(
+    "TABLES", "DATABASES", "SCHEMAS", "VIEWS", "FUNCTIONS", "CATALOGS",
+    "NAMESPACES", "COLUMNS", "PARTITIONS", "TBLPROPERTIES", "ALL")
+  private val stmtEnd = """\s*;?\s*$"""
+  private val pragmaRe = ("""(?is)^PRAGMA\s+(\w+)\s*(?:\(\s*'?([\w./]+)'?\s*\))?""" + stmtEnd).r
+  private val showTablesRe = ("""(?is)^(?:SHOW\s+TABLES|PRAGMA\s+show_tables)""" + stmtEnd).r
+  private val showAllTablesRe = ("""(?is)^SHOW\s+ALL\s+TABLES""" + stmtEnd).r
+  private val describeTableRe = ("""(?is)^(?:DESC(?:RIBE)?|SHOW)\s+([\w.]+)""" + stmtEnd).r
+  private val summarizeRe = ("""(?is)^SUMMARIZE\s+([\w.]+)""" + stmtEnd).r
+  private val noOpRe = ("""(?is)^(?:BEGIN(?:\s+TRANSACTION)?|COMMIT|ROLLBACK|ABORT|""" +
+    """ANALYZE|VACUUM(?:\s+ANALYZE)?|(?:FORCE\s+)?CHECKPOINT(?:\s+\w+)?)""" + stmtEnd).r
+  private val unpivotTailRe =
+    """(?is)^\s+ON\s+(.+?)\s+INTO\s+NAME\s+(\w+)\s+VALUE\s+(\w+)\b""".r
+  private val unpivotEntryRe = """(?is)^[\w.]+(?:\s+AS\s+\w+)?$""".r
+
+  /** The query `stmt` lowers to and the length of `stmt` it replaces. */
+  private def lowerStatement(stmt: String, atStart: Boolean): Option[(String, Int)] = {
+    def all(q: String) = Some((q, stmt.length))
+    stmt match {
+      case showTablesRe() => all("SELECT table_name AS name FROM duckdb_tables() ORDER BY name")
+      case pragmaRe(name, arg) =>
+        all(s"SELECT * FROM pragma_${name.toLowerCase}(${Option(arg).fold("")(a => s"'$a'")})")
+      case showAllTablesRe() => all("SELECT * FROM duckdb_tables()")
+      case describeTableRe(t) if !showKeywords(t.toUpperCase) =>
+        all(s"SELECT * FROM pragma_show('$t')")
+      case summarizeRe(t) => all(s"SELECT * FROM summarize('$t')")
+      case noOpRe() if atStart => all("SELECT CAST(NULL AS BOOLEAN) AS Success LIMIT 0")
+      case _ if keywordAt(stmt, 0, "UNPIVOT") =>
+        val relAt = skipBlank(stmt, 7)
+        var relEnd = relAt // a parenthesized query or a (qualified) name
+        if (relAt < stmt.length && stmt.charAt(relAt) == '(') relEnd = closerOf(stmt, relAt) + 1
+        else while (relEnd < stmt.length &&
+            (isWordChar(stmt.charAt(relEnd)) || stmt.charAt(relEnd) == '.')) relEnd += 1
+        if (relEnd <= relAt) None
+        else unpivotTailRe.findPrefixMatchOf(stmt.substring(relEnd)).collect {
+          case m if splitTopLevel(m.group(1), ',').forall(e =>
+              unpivotEntryRe.matches(e.trim)) =>
+            (s"SELECT * FROM ${stmt.substring(relAt, relEnd)} UNPIVOT " +
+              s"(${m.group(3)} FOR ${m.group(2)} IN (${m.group(1)}))", relEnd + m.end)
+        }
+      case _ => None
+    }
+  }
 
   /** Postgres-style `ARRAY[1, 2, 3]` constructor (DuckDB accepts it) →
     * `array(1, 2, 3)`. Must run BEFORE the bracket rewrite, which would

@@ -23,8 +23,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * readers, `duckdb_*()`, the pragma and parquet families), which the
   * analyzer resolves wherever a relation may stand, so DuckDB SQL in the
   * reference's test surface runs unchanged on every entry point of the
-  * session. This class handles only the statements Spark cannot parse
-  * at all, on the pre-parse text.
+  * session. The parser also lowers DuckDB's stateless statements (PRAGMA,
+  * SHOW, DESCRIBE t, SUMMARIZE, UNPIVOT, the transaction and maintenance
+  * no-ops) to queries. This class handles only what needs session state
+  * or a second pass, on the pre-parse text: session variables, secrets,
+  * extensions, prepared statements, macros, ATTACH, dynamic PIVOT, UNION
+  * BY NAME, `LIMIT n%`, bare-UNION recursion, `DESCRIBE <query>` and
+  * EXPLAIN ANALYZE.
   */
 final class Gateway private (val session: SparkSession, readOnly: Boolean) {
 
@@ -39,16 +44,20 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
 
   /** Statements allowed in read-only mode (reference serves its DB with
     * access_mode=read_only, main.go:61; D6/D3 of SURVEY §2.12 stay
-    * allowed like the reference's init surface).
+    * allowed like the reference's init surface). The DuckDB statements
+    * the parser lowers to queries (Dialect.rewriteStatements) pass this
+    * gate on their first word; ReadOnlyGuard still classifies what they
+    * parse to, so `ANALYZE TABLE t COMPUTE STATISTICS` stays refused.
     */
   private val readOnlyAllowed =
     Seq("SELECT", "WITH", "VALUES", "SET", "RESET", "SHOW", "DESCRIBE",
       "DESC", "EXPLAIN", "CREATE VIEW", "CREATE OR REPLACE VIEW",
       "CREATE TEMP VIEW", "CREATE TEMPORARY VIEW",
       "CREATE OR REPLACE TEMP VIEW", "CREATE OR REPLACE TEMPORARY VIEW",
-      "DROP VIEW", "TABLE", "FROM", "ATTACH")
+      "DROP VIEW", "TABLE", "FROM", "ATTACH", "PRAGMA", "SUMMARIZE",
+      "UNPIVOT", "BEGIN", "COMMIT", "ROLLBACK", "ABORT", "ANALYZE", "VACUUM",
+      "CHECKPOINT", "FORCE CHECKPOINT")
 
-  private val summarizeRe = """(?is)SUMMARIZE\s+([\w.]+)\s*;?\s*""".r
   // quote marks must MATCH (backreference): INSTALL 'airport" falls
   // through to the parser's error instead of silently succeeding
   private val installRe =
@@ -101,9 +110,6 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       """\s+GROUP\s+BY\s+([\w.\s,]+?)\s*(ORDER\s+BY[\w.\s,]+?)?\s*(LIMIT\s+\d+)?\s*;?\s*$""").r
   private val pivotNoGroupRe =
     ("""(?is)^PIVOT\s+([\w.]+)\s+ON\s+([\w.]+)\s+USING\s+(.+?)""" +
-      """\s*(ORDER\s+BY[\w.\s,]+?)?\s*(LIMIT\s+\d+)?\s*;?\s*$""").r
-  private val unpivotRe =
-    ("""(?is)^UNPIVOT\s+([\w.]+)\s+ON\s+(.+?)\s+INTO\s+NAME\s+(\w+)\s+VALUE\s+(\w+)""" +
       """\s*(ORDER\s+BY[\w.\s,]+?)?\s*(LIMIT\s+\d+)?\s*;?\s*$""").r
   private val attachRe =
     """(?is)ATTACH\s+'(\w+)'\s*\(\s*TYPE\s+AIRPORT\s*,\s*location\s+'([^']+)'\s*\)\s*;?\s*""".r
@@ -172,12 +178,6 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       case Some(props) => return applySecret(props)
       case None =>
     }
-    // DuckDB PRAGMA surface (read-only introspection pragmas only)
-    trimmed match {
-      case pragmaRe(name, arg) =>
-        return pragma(name.toLowerCase, Option(arg))
-      case _ =>
-    }
     // extension lifecycle — session-scoped state over the closed
     // statically-linked registry (no bytes move; see extState)
     trimmed match {
@@ -185,29 +185,12 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       case loadRe(_, name) => return loadExtension(name)
       case _ =>
     }
-    // transaction + maintenance statements clients emit reflexively
-    // (database/sql wraps work in BEGIN/COMMIT): read-path no-ops here,
-    // like DuckDB read-only sessions. CHECKPOINT included: DuckDB 1.0
-    // runs it successfully on a read-only database (nothing to flush,
-    // empty `Success BOOLEAN` relation — verified against the oracle),
-    // so rejecting it was a needless divergence (probe batch 5).
     trimmed match {
-      case txnRe(_*) | maintRe(_*) =>
-        return success
-      case showAllTablesRe() =>
-        return this.sql("SELECT * FROM duckdb_tables")
-      // DuckDB SHOW TABLES is a single 'name' column (Spark's native
-      // three-column layout is a client-visible shape divergence)
-      case showTablesRe() =>
-        return pragma("show_tables", None)
-      // DESCRIBE <query> / DESCRIBE <table>: DuckDB's six-column layout
-      // (column_name, column_type, null, key, default, extra) with
-      // DuckDB type spellings — Spark's native DESCRIBE differs in both
+      // DESCRIBE <query>: DuckDB's six-column layout (column_name,
+      // column_type, null, key, default, extra) of the query's schema;
+      // `DESCRIBE t` lowers in the parser (Dialect.rewriteStatements)
       case describeSelectRe(body) =>
         return TableFunctions.describe(session, this.sql(body).schema)
-      case describeTableRe(ident)
-          if !showKeywords.contains(ident.toUpperCase) =>
-        return describeTable(ident)
       case explainAnalyzeRe(body) =>
         // DuckDB EXPLAIN ANALYZE runs the query; report the EXECUTED
         // physical plan (AQE-final) in DuckDB's two-column shape
@@ -249,13 +232,6 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       case _ =>
     }
     val expanded = expandColumnsExpr(expandMacros(trimmed))
-    // DuckDB `SHOW <table>` = describe-table (column_name/column_type/…)
-    expanded match {
-      case showTableRe(ident)
-          if !showKeywords.contains(ident.toUpperCase) =>
-        return describeTable(ident)
-      case _ =>
-    }
     // `a UNION [ALL] BY NAME b [ORDER BY … LIMIT …]`: Spark has
     // unionByName only in the DataFrame API — split at the top level,
     // run each side through the full gateway path, and re-apply any
@@ -268,13 +244,6 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
         if (!keepAll) df = df.distinct()
         return if (tail.isEmpty) df else queryOver(df, tail)
       case None =>
-    }
-    // DuckDB `SUMMARIZE t` (T7 of SURVEY §2.9) → per-column stats in
-    // DuckDB's exact column layout (one ROW per column; pre-r9 this
-    // answered Spark's transposed .summary() table, a different shape)
-    expanded match {
-      case summarizeRe(table) => return summarize(table)
-      case _ =>
     }
     // DuckDB `PIVOT t ON c USING agg [GROUP BY g] [ORDER BY …] [LIMIT n]`
     // (the dynamic-pivot statement, T4): two passes — collect the pivot
@@ -316,35 +285,6 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
           // the stricter pattern rejected — let the parser error speak
           if !using.toUpperCase.contains("GROUP BY") =>
         return runPivot(tbl, onCol, using, None, orderBy, limit)
-      case _ =>
-    }
-    // DuckDB `UNPIVOT t ON c1 [AS l1], … INTO NAME n VALUE v` — wide →
-    // long. Pinned semantics (GatewaySpec, DuckDB 1.0): NULL cells are
-    // dropped; output columns are the kept (non-ON) columns in table
-    // order, then NAME, then VALUE; an AS alias relabels the NAME cell.
-    expanded match {
-      case unpivotRe(tbl, onList, nameCol, valueCol, orderBy, limit) =>
-        import org.apache.spark.sql.functions.col
-        val base = session.table(tbl)
-        val entries = onList.split(",").map(_.trim).filter(_.nonEmpty).map { e =>
-          val m = """(?is)^([\w.]+)(?:\s+AS\s+(\w+))?$""".r
-          e match {
-            case m(c, alias) => (c, Option(alias).getOrElse(c))
-            case _ => throw new GatewayException(
-              s"UNPIVOT: cannot parse ON entry '$e'")
-          }
-        }
-        val onCols = entries.map(_._1.toLowerCase).toSet
-        val ids = base.columns.filterNot(c => onCols.contains(c.toLowerCase))
-        val df = base
-          .unpivot(
-            ids.map(col),
-            entries.map { case (c, alias) => col(c).as(alias) },
-            nameCol, valueCol)
-          .filter(col(valueCol).isNotNull)
-        val tailText = Seq(Option(orderBy), Option(limit)).flatten
-          .map(_.trim).mkString(" ")
-        return if (tailText.isEmpty) df else queryOver(df, tailText)
       case _ =>
     }
     // `ATTACH 'name' (TYPE AIRPORT, location 'grpc://host:port')` — the
@@ -445,6 +385,9 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
   // expression cannot terminate a LIMIT clause followed by nothing)
   private val pctLimitRe =
     """(?is)^(.*\s)LIMIT\s+(\d+(?:\.\d+)?)\s*%\s*;?\s*$""".r
+  private val describeSelectRe =
+    """(?is)^DESC(?:RIBE)?\s+((?:SELECT|WITH|VALUES|FROM|TABLE)\b.+)$""".r
+  private val explainAnalyzeRe = """(?is)^EXPLAIN\s+ANALYZE\s+(.+)$""".r
 
   // ---- CREATE MACRO (scalar + table) ---------------------------------
   // DuckDB macros are session-scoped SQL templates; the engine expands
@@ -453,16 +396,6 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
   // positionally; `name := default` params bind only by name
   // (DuckDB-verified). Table macros expand to parenthesized subqueries
   // in FROM position.
-  private val txnRe =
-    """(?is)^(?:BEGIN(?:\s+TRANSACTION)?|COMMIT|ROLLBACK|ABORT)\s*;?\s*$""".r
-  private val maintRe =
-    """(?is)^(?:ANALYZE|VACUUM(?:\s+ANALYZE)?|(?:FORCE\s+)?CHECKPOINT(?:\s+\w+)?)\s*;?\s*$""".r
-  private val showAllTablesRe = """(?is)^SHOW\s+ALL\s+TABLES\s*;?\s*$""".r
-  private val showTablesRe = """(?is)^SHOW\s+TABLES\s*;?\s*$""".r
-  private val describeSelectRe =
-    """(?is)^DESC(?:RIBE)?\s+((?:SELECT|WITH|VALUES|FROM|TABLE)\b.+)$""".r
-  private val describeTableRe = """(?is)^DESC(?:RIBE)?\s+([\w.]+)\s*;?\s*$""".r
-  private val explainAnalyzeRe = """(?is)^EXPLAIN\s+ANALYZE\s+(.+)$""".r
 
   // ---- session variables (SET VARIABLE / getvariable, DuckDB 1.1) ----
   // name → SQL literal text of the eagerly-evaluated value
@@ -677,95 +610,6 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     Dialect.scanCode(sql) { (i, depth) =>
       if (depth == 0 && kws.exists(Dialect.keywordAt(sql, i, _))) -1 else i
     }
-
-  // ---- PRAGMA / SHOW <table> -----------------------------------------
-  private val pragmaRe =
-    """(?is)^PRAGMA\s+(\w+)\s*(?:\(\s*'?([\w./]+)'?\s*\))?\s*;?\s*$""".r
-  private val showTableRe = """(?is)^SHOW\s+([\w.]+)\s*;?\s*$""".r
-  private val showKeywords = Set(
-    "TABLES", "DATABASES", "SCHEMAS", "VIEWS", "FUNCTIONS", "CATALOGS",
-    "NAMESPACES", "COLUMNS", "PARTITIONS", "TBLPROPERTIES", "ALL")
-
-  private def pragma(name: String, arg: Option[String]): DataFrame = {
-    import session.implicits._
-    name match {
-      // DuckDB lists only the user's relations: the live listing, never
-      // Spark's SHOW TABLES (which adds the duckdb_* views)
-      case "show_tables" =>
-        session.sql("SELECT table_name AS name FROM duckdb_tables ORDER BY name")
-      case "table_info" =>
-        TableFunctions.tableInfo(session, arg.getOrElse(
-          throw new GatewayException("PRAGMA table_info requires a table")))
-      case "database_size" => TableFunctions.databaseSize(session)
-      case "version" => TableFunctions.version(session)
-      case "database_list" =>
-        Seq((0L, session.catalog.currentCatalog(),
-          Tables.dirOf(session).getOrElse("memory")))
-          .toDF("seq", "name", "file")
-      case other =>
-        throw new GatewayException(s"unsupported PRAGMA: $other")
-    }
-  }
-
-  /** DuckDB `SUMMARIZE t`: one row per column — (column_name,
-    * column_type, min, max, approx_unique, avg, std, q25, q50, q75,
-    * count, null_percentage), the stat cells as VARCHAR like DuckDB.
-    * ONE aggregate job over the table (all per-column stats in a single
-    * agg row, partial/final combined), then a driver-side reshape
-    * bounded by the COLUMN count — scale-safe by construction.
-    */
-  private def summarize(table: String): DataFrame = {
-    import session.implicits._
-    import org.apache.spark.sql.functions._
-    val df = session.table(table)
-    val fields = df.schema.fields
-    def strNull = lit(null).cast(org.apache.spark.sql.types.StringType)
-    val aggs: Seq[org.apache.spark.sql.Column] =
-      count(lit(1)).as("__total") +: fields.toSeq.flatMap { f =>
-        val c = col(f.name)
-        val isNum = f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
-        val orderable = !f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType]
-        def q(p: Double) =
-          if (isNum) percentile_approx(c.cast("double"), lit(p), lit(10000))
-            .cast(f.dataType).cast("string")
-          else strNull
-        Seq(
-          (if (orderable) min(c).cast("string") else strNull).as(s"${f.name}!min"),
-          (if (orderable) max(c).cast("string") else strNull).as(s"${f.name}!max"),
-          approx_count_distinct(c).as(s"${f.name}!uniq"),
-          (if (isNum) avg(c.cast("double")).cast("string") else strNull).as(s"${f.name}!avg"),
-          (if (isNum) stddev_samp(c.cast("double")).cast("string") else strNull).as(s"${f.name}!std"),
-          q(0.25).as(s"${f.name}!q25"), q(0.5).as(s"${f.name}!q50"),
-          q(0.75).as(s"${f.name}!q75"),
-          count(c).as(s"${f.name}!cnt"))
-      }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val total = row.getAs[Long]("__total")
-    def s(n: String): String = Option(row.getAs[Any](n)).map(_.toString).orNull
-    val out = fields.toSeq.map { f =>
-      val cnt = row.getAs[Long](s"${f.name}!cnt")
-      val nullPct = if (total == 0) java.math.BigDecimal.ZERO
-        else new java.math.BigDecimal(100.0 * (total - cnt) / total)
-          .setScale(2, java.math.RoundingMode.HALF_UP)
-      (f.name, graft.sources.LiveCatalog.duckTypeName(f.dataType),
-        s(s"${f.name}!min"), s(s"${f.name}!max"),
-        row.getAs[Long](s"${f.name}!uniq"),
-        s(s"${f.name}!avg"), s(s"${f.name}!std"),
-        s(s"${f.name}!q25"), s(s"${f.name}!q50"), s(s"${f.name}!q75"),
-        total, nullPct)
-    }
-    out.toDF("column_name", "column_type", "min", "max", "approx_unique",
-      "avg", "std", "q25", "q50", "q75", "count", "null_percentage")
-      // pin DuckDB's DECIMAL(9,2) — toDF's inferred (38,18) renders 0
-      // as 0E-18 to clients
-      .withColumn("null_percentage", org.apache.spark.sql.functions
-        .col("null_percentage")
-        .cast(org.apache.spark.sql.types.DecimalType(9, 2)))
-  }
-
-  /** DuckDB `SHOW t` / `DESCRIBE t` column layout. */
-  private def describeTable(ident: String): DataFrame =
-    TableFunctions.describe(session, session.table(ident).schema)
 
   // ---- UNION [ALL] BY NAME -------------------------------------------
   /** Split at the FIRST top-level `UNION [ALL] BY NAME`; the right side

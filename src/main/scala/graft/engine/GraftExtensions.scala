@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * (SparkSessionExtensions.injectParser), so every SQL entry point —
   * `spark.sql`, the Gateway, and Thrift/JDBC client sessions that never
   * pass through Gateway.sql — gets the same text rewrites (QUALIFY,
-  * `//`, GLOB, `->>`, catalog table functions; Dialect.rewrite), once,
+  * `//`, GLOB, `->>`, catalog table functions, PRAGMA/SHOW/DESCRIBE/
+  * SUMMARIZE/UNPIVOT statements; Dialect.rewrite), once,
   * and the analyzer rules and operators those rewrites rely on — the
   * ASOF join among them, so it runs on every session built with this
   * extension.
@@ -32,7 +33,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // reaches it in three steps, all from here: the parser's
     // Dialect.rewriteAsOf marks the join's ON with graft_asof(), the
     // resolution rule turns the marked Join into an AsOfJoinNode, and
-    // the strategy plans that as AsOfJoinExec
+    // the strategy plans that as AsOfJoinExec; in between, the optimizer
+    // rule drops the payload columns nothing above the node reads
     ext.injectFunction((FunctionIdentifier("graft_asof"),
       new ExpressionInfo(classOf[graft.plans.AsOfMarker].getName, "graft_asof"),
       args => {
@@ -40,6 +42,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         graft.plans.AsOfMarker()
       }))
     ext.injectResolutionRule(_ => graft.plans.ResolveAsOfJoin)
+    ext.injectOptimizerRule(_ => graft.plans.PruneAsOfPayload)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     // DuckDB `ts::TIME` (time-of-day of a timestamp): Spark 4.1 has the
     // TIME type but no timestamp→time cast — rewrite it at resolution

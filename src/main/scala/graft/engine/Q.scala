@@ -39,11 +39,6 @@ object Q {
       Tables.register(s, dir); body(s)
     }, Some(oracle))
 
-  def noOracle(name: String)(body: SparkSession => DataFrame): Q =
-    Q(name, (s: SparkSession, dir: String) => {
-      Tables.register(s, dir); body(s)
-    }, None)
-
   /** A query whose oracle SQL is rendered lazily at dump time (see
     * [[Q.oracleValue]]); `oracleFn` must be a pure function of the
     * active session's registered dataset.

@@ -263,10 +263,16 @@ object TableFunctions {
       constFunctions.map { case (n, q) => noArgs(n)(sess.sql(q)) } ++ Seq(
       noArgs("pragma_version")(version(sess)),
       noArgs("pragma_database_size")(databaseSize(sess)),
+      noArgs("pragma_database_list") {
+        import sess.implicits._
+        Seq((0L, sess.catalog.currentCatalog(), Tables.dirOf(sess).getOrElse("memory")))
+          .toDF("seq", "name", "file")
+      },
       noArgs("pg_timezone_names")(timezones(sess)),
       frame("pragma_storage_info") { a => a.str(0); sess.sql(storageInfo) },
       frame("pragma_table_info")(a => tableInfo(sess, a.str(0))),
       frame("pragma_show")(a => describe(sess, sess.table(a.str(0)).schema)),
+      frame("summarize")(a => summarize(sess, a.str(0))),
       frame("parquet_schema")(a => parquetSchema(sess, a.str(0))),
       frame("parquet_metadata")(a => parquetMetadata(sess, a.str(0))),
       frame("parquet_file_metadata")(a => parquetFileMeta(sess, a.str(0))),
@@ -360,6 +366,62 @@ object TableFunctions {
         null.asInstanceOf[String], null.asInstanceOf[String],
         null.asInstanceOf[String])
     }.toDF("column_name", "column_type", "null", "key", "default", "extra")
+  }
+
+  /** DuckDB `SUMMARIZE t`: one row per column — (column_name,
+    * column_type, min, max, approx_unique, avg, std, q25, q50, q75,
+    * count, null_percentage), the stat cells as VARCHAR like DuckDB.
+    * ONE aggregate job over the table (all per-column stats in a single
+    * agg row, partial/final combined), then a driver-side reshape
+    * bounded by the COLUMN count — scale-safe by construction.
+    */
+  private def summarize(sess: SparkSession, table: String): DataFrame = {
+    import sess.implicits._
+    import org.apache.spark.sql.functions._
+    val df = sess.table(table)
+    val fields = df.schema.fields
+    def strNull = lit(null).cast(org.apache.spark.sql.types.StringType)
+    val aggs: Seq[org.apache.spark.sql.Column] =
+      count(lit(1)).as("__total") +: fields.toSeq.flatMap { f =>
+        val c = col(f.name)
+        val isNum = f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
+        val orderable = !f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType]
+        def q(p: Double) =
+          if (isNum) percentile_approx(c.cast("double"), lit(p), lit(10000))
+            .cast(f.dataType).cast("string")
+          else strNull
+        Seq(
+          (if (orderable) min(c).cast("string") else strNull).as(s"${f.name}!min"),
+          (if (orderable) max(c).cast("string") else strNull).as(s"${f.name}!max"),
+          approx_count_distinct(c).as(s"${f.name}!uniq"),
+          (if (isNum) avg(c.cast("double")).cast("string") else strNull).as(s"${f.name}!avg"),
+          (if (isNum) stddev_samp(c.cast("double")).cast("string") else strNull).as(s"${f.name}!std"),
+          q(0.25).as(s"${f.name}!q25"), q(0.5).as(s"${f.name}!q50"),
+          q(0.75).as(s"${f.name}!q75"),
+          count(c).as(s"${f.name}!cnt"))
+      }
+    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val total = row.getAs[Long]("__total")
+    def s(n: String): String = Option(row.getAs[Any](n)).map(_.toString).orNull
+    val out = fields.toSeq.map { f =>
+      val cnt = row.getAs[Long](s"${f.name}!cnt")
+      val nullPct = if (total == 0) java.math.BigDecimal.ZERO
+        else new java.math.BigDecimal(100.0 * (total - cnt) / total)
+          .setScale(2, java.math.RoundingMode.HALF_UP)
+      (f.name, graft.sources.LiveCatalog.duckTypeName(f.dataType),
+        s(s"${f.name}!min"), s(s"${f.name}!max"),
+        row.getAs[Long](s"${f.name}!uniq"),
+        s(s"${f.name}!avg"), s(s"${f.name}!std"),
+        s(s"${f.name}!q25"), s(s"${f.name}!q50"), s(s"${f.name}!q75"),
+        total, nullPct)
+    }
+    out.toDF("column_name", "column_type", "min", "max", "approx_unique",
+      "avg", "std", "q25", "q50", "q75", "count", "null_percentage")
+      // pin DuckDB's DECIMAL(9,2) — toDF's inferred (38,18) renders 0
+      // as 0E-18 to clients
+      .withColumn("null_percentage", org.apache.spark.sql.functions
+        .col("null_percentage")
+        .cast(org.apache.spark.sql.types.DecimalType(9, 2)))
   }
 
   /** The JVM's zone list, offsets as day-time intervals. */

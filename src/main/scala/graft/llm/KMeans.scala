@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -31,9 +31,6 @@ import org.apache.spark.sql.types._
   * same clustering, run to run, any partitioning.
   */
 object KMeans {
-
-  private def dot(x: Column, y: Column): Column =
-    graft.engine.expressions.VectorMath.dot(x, y)
 
   /** `iters` Lloyd rounds from the given initial centroids.
     *

@@ -3,12 +3,12 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Descending, EqualTo, Expression, GenericInternalRow, GreaterThan, GreaterThanOrEqual, JoinedRow, LeafExpression, LessThan, LessThanOrEqual, PredicateHelper, RowOrdering, SortOrder, Unevaluable, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, BindReferences, Descending, EqualTo, Expression, GenericInternalRow, GreaterThan, GreaterThanOrEqual, JoinedRow, LeafExpression, LessThan, LessThanOrEqual, PredicateHelper, RowOrdering, SortOrder, Unevaluable, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.TreePattern.JOIN
+import org.apache.spark.sql.catalyst.trees.TreePattern.{JOIN, PROJECT}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.{BooleanType, DataType}
@@ -112,6 +112,23 @@ object ResolveAsOfJoin extends Rule[LogicalPlan] with PredicateHelper {
           forward = greater == swapped,
           strict = cmp.isInstanceOf[GreaterThan] || cmp.isInstanceOf[LessThan],
           inner = joinType == Inner, payload = r.output)
+    }
+}
+
+/** Keeps only the payload columns the projection above an AsOfJoinNode
+  * reads, and narrows the right child to them plus the keys and ts, so
+  * the right side's exchange carries no unread column. ColumnPruning
+  * cannot do this through the node: its payload, ResolveAsOfJoin's
+  * whole right side, is among its references.
+  */
+object PruneAsOfPayload extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformWithPruning(_.containsPattern(PROJECT)) {
+      case p @ Project(_, n: AsOfJoinNode) if !n.payload.forall(p.references.contains) =>
+        val payload = n.payload.filter(p.references.contains)
+        val read = AttributeSet(payload ++ (n.rightKeys :+ n.rightTs).flatMap(_.references))
+        p.copy(child = n.copy(payload = payload,
+          right = Project(n.right.output.filter(read.contains), n.right)))
     }
 }
 

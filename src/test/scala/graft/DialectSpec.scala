@@ -193,6 +193,7 @@ class DialectSpec extends AnyFunSuite {
       "x ~~* 'p%'", "x !~~* 'p%'", "x ~~~ 'g*'",  // tilde operators
       "COLLATE NOCASE",                           // collation mapping
       "information_schema.tables",                // info-schema views
+      "(SHOW TABLES)", "(DESCRIBE t)", "(SUMMARIZE t)", // rewriteStatements
       "any_value(x ORDER BY y)")                  // ordered any_value
     val noise = Gen.chooseNum(0, 8).flatMap(n =>
       Gen.stringOfN(n, Gen.oneOf(Gen.alphaNumChar, Gen.const(' '))))
@@ -215,6 +216,37 @@ class DialectSpec extends AnyFunSuite {
         s"embedded ${if (e == 0) "literal" else "identifier"} was rewritten:" +
           s"\n  in:  $sql\n  out: $out")
     }
+  }
+
+  test("rewriteStatements: DuckDB statements lower, Spark's own forms stay") {
+    // Spark's statements, columns named like the keywords, literals, and
+    // the no-op words in subquery position (DuckDB reads `(begin)` as a
+    // column) come out as they went in
+    Seq("SHOW TABLES IN remote.main", "SHOW FUNCTIONS", "DESCRIBE FUNCTION f",
+      "DESCRIBE SELECT a FROM t", "SELECT pragma, summarize FROM t",
+      "SELECT (begin), (analyze) FROM t", "SELECT 'SHOW TABLES' AS s, \"DESC t\" FROM t",
+      "SELECT a FROM t ORDER BY (a) DESC", "SELECT * FROM (BEGIN)").foreach { s =>
+      assert(Dialect.rewrite(s) == s, s)
+    }
+    val show = "SELECT * FROM pragma_show('t')"
+    val lowered = Seq(
+      "DESC t" -> show,
+      "SHOW s.t;" -> "SELECT * FROM pragma_show('s.t')",
+      "/* lead */ DESCRIBE t" -> s"/* lead */ $show",
+      "-- lead\nSUMMARIZE t ;" -> "-- lead\nSELECT * FROM summarize('t')",
+      "PRAGMA table_info('t')" -> "SELECT * FROM pragma_table_info('t')",
+      "PRAGMA Version" -> "SELECT * FROM pragma_version()",
+      "PRAGMA show_tables" -> "SELECT table_name AS name FROM duckdb_tables() ORDER BY name",
+      "SHOW TABLES" -> "SELECT table_name AS name FROM duckdb_tables() ORDER BY name",
+      "SHOW ALL TABLES" -> "SELECT * FROM duckdb_tables()",
+      "FORCE CHECKPOINT;" -> "SELECT CAST(NULL AS BOOLEAN) AS Success LIMIT 0",
+      "SELECT * FROM (DESC t) d JOIN (SUMMARIZE u) s ON true" ->
+        s"SELECT * FROM ($show) d JOIN (SELECT * FROM summarize('u')) s ON true",
+      "UNPIVOT t ON a AS x, b INTO NAME k VALUE v ORDER BY v LIMIT 2" ->
+        "SELECT * FROM t UNPIVOT (v FOR k IN (a AS x, b)) ORDER BY v LIMIT 2",
+      "SELECT * FROM (UNPIVOT (SELECT 1 AS a) ON a INTO NAME k VALUE v) u" ->
+        "SELECT * FROM (SELECT * FROM (SELECT 1 AS a) UNPIVOT (v FOR k IN (a))) u")
+    lowered.foreach { case (in, out) => assert(Dialect.rewrite(in) == out, in) }
   }
 
   test("property: operand-recovery scanners round-trip nested brackets/quotes/comments") {

@@ -2395,4 +2395,81 @@ class GatewaySpec extends AnyFunSuite {
     assert(count("SELECT count(*) FROM repeat('x', 4)") == 4L)
     assert(count(s"SELECT count(*) FROM '$sf/region.parquet'") == 5L)
   }
+
+  // ---- DuckDB statements lower in the parser (DuckDB 1.0 pinned) -----
+
+  /** Statements that lower to a relation: they also stand as subqueries. */
+  private val relationStatements = Seq("SHOW region", "DESCRIBE region",
+    "DESC region", "SUMMARIZE region", "PRAGMA table_info('region')",
+    "PRAGMA version", "PRAGMA show_tables", "PRAGMA database_list",
+    "SHOW TABLES", "SHOW ALL TABLES",
+    "UNPIVOT (SELECT r_regionkey, r_name, 'x' AS c FROM region) " +
+      "ON r_name AS nm, c INTO NAME k VALUE v")
+  /** The transaction and maintenance no-ops: statement start only. */
+  private val noOpStatements = Seq("BEGIN TRANSACTION", "COMMIT", "ROLLBACK",
+    "ABORT", "ANALYZE", "VACUUM", "CHECKPOINT", "FORCE CHECKPOINT;")
+
+  test("lowered DuckDB statements answer the same on Flight, gw.sql, Thrift and as subqueries") {
+    val g = Gateway.open(spark, sf)
+    val server = graft.flight.FlightServer.start(g, 0)
+    val client = new graft.flight.FlightClientLite("localhost", server.boundPort)
+    def answer(columns: Seq[String], rows: Seq[Seq[Any]]) =
+      (columns, rows.map(_.map(String.valueOf)).sortBy(_.mkString("|")))
+    def local(df: org.apache.spark.sql.DataFrame) =
+      answer(df.columns.toSeq, df.collect().toSeq.map(_.toSeq))
+    try {
+      (relationStatements ++ noOpStatements).foreach { q =>
+        val expected = local(g.sql(q))
+        val flight = client.doGetSql(q)
+        withClue(q) {
+          assert(local(g.session.sql(q)) == expected)
+          assert(answer(flight.columns, flight.rows) == expected)
+          if (relationStatements.contains(q))
+            assert(local(g.session.sql(s"SELECT * FROM ($q)")) == expected)
+          else assert(expected == ((Seq("Success"), Nil)))
+        }
+      }
+    } finally { client.close(); server.stop() }
+  }
+
+  test("FROM (DESCRIBE | SUMMARIZE | SHOW TABLES | UNPIVOT …) answer DuckDB 1.0's layouts") {
+    for (run <- Seq[String => org.apache.spark.sql.DataFrame](gw.sql, gw.session.sql)) {
+      def rows(q: String) = run(q).collect().toSeq.map(_.toSeq.map(String.valueOf))
+      assert(run("SELECT * FROM (DESCRIBE region)").columns.toSeq ==
+        Seq("column_name", "column_type", "null", "key", "default", "extra"))
+      assert(rows("SELECT * FROM (DESCRIBE region)") == Seq(
+        Seq("r_regionkey", "INTEGER", "YES", "null", "null", "null"),
+        Seq("r_name", "VARCHAR", "YES", "null", "null", "null")))
+      assert(run("SELECT * FROM (SUMMARIZE region)").columns.toSeq == Seq("column_name",
+        "column_type", "min", "max", "approx_unique", "avg", "std", "q25", "q50",
+        "q75", "count", "null_percentage"))
+      assert(rows("SELECT * FROM (SUMMARIZE region)") == Seq(
+        Seq("r_regionkey", "INTEGER", "0", "4", "5", "2.0", "1.5811388300841898",
+          "1", "2", "3", "5", "0.00"),
+        Seq("r_name", "VARCHAR", "AFRICA", "MIDDLE EAST", "5", "null", "null",
+          "null", "null", "null", "5", "0.00")))
+      assert(run("SELECT * FROM (SHOW TABLES)").columns.toSeq == Seq("name"))
+      assert(rows("SELECT name FROM (SHOW TABLES) WHERE name LIKE 'n%'") == Seq(Seq("nation")))
+      // NULL cells dropped; kept columns, then NAME, then VALUE
+      val up = run("SELECT * FROM (UNPIVOT (SELECT * FROM (VALUES (1, 10, NULL), " +
+        "(2, NULL, 50)) t(id, jan, feb)) ON jan, feb INTO NAME m VALUE s) ORDER BY id, m")
+      assert(up.columns.toSeq == Seq("id", "m", "s"))
+      assert(up.collect().toSeq.map(_.toSeq.map(String.valueOf)) ==
+        Seq(Seq("1", "jan", "10"), Seq("2", "feb", "50")))
+      // an AS label, and an ORDER BY/LIMIT tail inside the subquery
+      assert(rows("SELECT * FROM (UNPIVOT (SELECT r_regionkey, r_name, 'x' AS c " +
+        "FROM region) ON r_name AS nm, c INTO NAME k VALUE v " +
+        "ORDER BY r_regionkey DESC, k LIMIT 3)") == Seq(
+        Seq("4", "c", "x"), Seq("4", "nm", "MIDDLE EAST"), Seq("3", "c", "x")))
+    }
+  }
+
+  test("read-only: a lowered statement's first word admits no write") {
+    // ANALYZE is a no-op; ANALYZE TABLE … COMPUTE STATISTICS writes
+    // catalog statistics and stays refused on both paths
+    for (run <- Seq[String => Any](gw.sql, gw.session.sql)) {
+      val e = intercept[GatewayException](run("ANALYZE TABLE region COMPUTE STATISTICS"))
+      assert(e.getMessage.contains("read-only"))
+    }
+  }
 }

@@ -88,6 +88,25 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("served ASOF shuffles only the right-side columns the query reads") {
+    // the right exchange carries the key, ts and the two payload columns
+    // the SELECT reads, as in the DataFrame twin — not all six of events
+    val gw = graft.engine.Gateway.open(spark, sf)
+    val stages = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def rightExchangeWidth(df: org.apache.spark.sql.DataFrame): Int = {
+      df.collect()
+      val asof = stages.collectFirst(df.queryExecution.executedPlan) {
+        case a: graft.plans.AsOfJoinExec => a
+      }.get
+      stages.collectFirst(asof.right) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e.output.size
+      }.get
+    }
+    val served = rightExchangeWidth(gw.sql(SparkEntry.oracleSql("j7_asof_join")))
+    val twin = rightExchangeWidth(SparkEntry.queries("j7_asof_join")(spark, sf))
+    assert((served, twin) == ((4, 4)))
+  }
+
   test("dd_exact is a single shuffle (window on digest), no self-join") {
     val df = SparkEntry.queries("dd_exact")(spark, sf)
     df.collect()
