@@ -1672,7 +1672,7 @@ object Dialect {
     * (SIGMOD 2019), where they start the statement or open a subquery:
     *  - `PRAGMA x[(arg)]` → `SELECT * FROM pragma_x('arg')`; `SHOW
     *    TABLES` and `PRAGMA show_tables` → DuckDB's one `name` column;
-    *  - `SHOW ALL TABLES` → `SELECT * FROM duckdb_tables()`;
+    *  - `SHOW ALL TABLES` → DuckDB's six columns over `duckdb_columns()`;
     *  - `DESCRIBE t`, `DESC t`, `SHOW t` → `SELECT * FROM pragma_show('t')`;
     *  - `SUMMARIZE t` → `SELECT * FROM summarize('t')`;
     *  - `UNPIVOT rel ON c [AS l], … INTO NAME n VALUE v` → Spark's clause
@@ -1727,6 +1727,17 @@ object Dialect {
     """(?is)^\s+ON\s+(.+?)\s+INTO\s+NAME\s+(\w+)\s+VALUE\s+(\w+)\b""".r
   private val unpivotEntryRe = """(?is)^[\w.]+(?:\s+AS\s+\w+)?$""".r
 
+  /** DuckDB 1.0's `SHOW ALL TABLES`: one row per relation with its
+    * columns' names and types in column order; the engine's relations
+    * are not temporary in DuckDB's sense (the fixture tables are views).
+    */
+  private val showAllTables =
+    "SELECT database_name AS database, schema_name AS schema, table_name AS name, " +
+      "array_sort(collect_list(struct(column_index, column_name))).column_name AS column_names, " +
+      "array_sort(collect_list(struct(column_index, data_type))).data_type AS column_types, " +
+      "false AS temporary FROM duckdb_columns() " +
+      "GROUP BY database_name, schema_name, table_name ORDER BY database, schema, name"
+
   /** The query `stmt` lowers to and the length of `stmt` it replaces. */
   private def lowerStatement(stmt: String, atStart: Boolean): Option[(String, Int)] = {
     def all(q: String) = Some((q, stmt.length))
@@ -1734,7 +1745,7 @@ object Dialect {
       case showTablesRe() => all("SELECT table_name AS name FROM duckdb_tables() ORDER BY name")
       case pragmaRe(name, arg) =>
         all(s"SELECT * FROM pragma_${name.toLowerCase}(${Option(arg).fold("")(a => s"'$a'")})")
-      case showAllTablesRe() => all("SELECT * FROM duckdb_tables()")
+      case showAllTablesRe() => all(showAllTables)
       case describeTableRe(t) if !showKeywords(t.toUpperCase) =>
         all(s"SELECT * FROM pragma_show('$t')")
       case summarizeRe(t) => all(s"SELECT * FROM summarize('$t')")

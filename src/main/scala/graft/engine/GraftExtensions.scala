@@ -66,6 +66,39 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // UBIGINT counters wrap under negation in DuckDB; the engine
     // refuses loudly instead of silently answering -n
     ext.injectResolutionRule(_ => UnsignedWrapGuard)
+    // per-statement fixed cost: a constant statement becomes rows the
+    // driver holds (no Spark job), and statements that differ only in a
+    // filter constant share one compiled class
+    ext.injectOptimizerRule(_ => FoldConstantSelect)
+    ext.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
+      override def preColumnarTransitions: org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.execution.SparkPlan] = graft.engine.expressions.ParamLiterals
+    })
+  }
+}
+
+/** `SELECT 1 AS a` — a Project of constants over OneRowRelation at the
+  * plan's root — becomes a LocalRelation, planned as LocalTableScanExec:
+  * its row is collected and Arrow-encoded on the driver, with no Spark
+  * job. Injected optimizer rules run after ConstantFolding in the same
+  * batch, so `SELECT 1 + 1 AS a` folds too; an expression ConstantFolding
+  * leaves alone (one that would raise) is no Literal and keeps its
+  * error. Root only: the optimizer runs a scalar subquery's plan under a
+  * `Subquery` root, and Spark inlines `(SELECT 1)` itself
+  * (OptimizeOneRowRelationSubquery).
+  */
+object FoldConstantSelect
+    extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+  import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, OneRowRelation, Project}
+
+  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+    case p @ Project(items, OneRowRelation()) =>
+      val values = items.collect { case Alias(l: Literal, _) => l.value }
+      if (values.length < items.length) plan
+      else LocalRelation(p.output, Seq(InternalRow.fromSeq(values)))
+    case _ => plan
   }
 }
 

@@ -545,15 +545,19 @@ final class FlightServer(gateway: Gateway, port: Int) {
     override def onCompleted(): Unit = ()
   }
 
-  private def toStatus(e: Throwable): Status = e match {
-    case ge: GatewayException if ge.getMessage.contains("read-only") =>
-      Status.PERMISSION_DENIED.withDescription(ge.getMessage)
-    case ge: GatewayException =>
-      Status.INVALID_ARGUMENT.withDescription(ge.getMessage)
-    case ae: org.apache.spark.sql.AnalysisException =>
-      Status.INVALID_ARGUMENT.withDescription(ae.getMessage)
-    case other =>
-      Status.INTERNAL.withDescription(String.valueOf(other.getMessage))
+  /** The typed status a failure reaches the client as. Descriptions are
+    * trimmed: Spark's ParseException message starts with a newline, which
+    * clients print as an empty message.
+    */
+  private def toStatus(e: Throwable): Status = {
+    val status = e match {
+      case ge: GatewayException if ge.getMessage.contains("read-only") =>
+        Status.PERMISSION_DENIED
+      case _: GatewayException | _: org.apache.spark.sql.AnalysisException =>
+        Status.INVALID_ARGUMENT
+      case _ => Status.INTERNAL
+    }
+    status.withDescription(String.valueOf(e.getMessage).trim)
   }
 
   private def ipcSchema(df: org.apache.spark.sql.DataFrame): Array[Byte] =

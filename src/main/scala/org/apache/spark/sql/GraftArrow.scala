@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame}
+import org.apache.spark.sql.execution.arrow.ArrowConverters
 
 /** Package-private-access bridge into Spark's Arrow serialization (the
   * same machinery PySpark's collect path uses). Lives in
@@ -16,19 +17,34 @@ object GraftArrow {
     Array(0xff.toByte, 0xff.toByte, 0xff.toByte, 0xff.toByte, 0, 0, 0, 0)
 
   /** Serialize a DataFrame result as an Arrow IPC stream: schema message
-    * first, then record batches, then the end-of-stream marker, pulled
-    * partition-at-a-time (incremental delivery like the reference's
-    * DoGet loop, main.go:241-243).
+    * first, then record batches of at most `maxRecordsPerBatch` rows,
+    * then the end-of-stream marker. Rows the driver already holds (a
+    * LocalTableScanExec or CommandResultExec root: constants, catalog
+    * listings, command output) are encoded on the driver with no Spark
+    * job, as Spark Connect's SparkConnectPlanExecution does; any other
+    * plan is pulled partition-at-a-time (incremental delivery like the
+    * reference's DoGet loop, main.go:241-243). The batch size goes
+    * straight to the encoder: the session conf, which Flight and Thrift
+    * share, is not touched.
     */
   def stream(df: Dataset[Row], maxRecordsPerBatch: Int): Iterator[Array[Byte]] = {
     val classic = df.asInstanceOf[ClassicDataFrame]
-    // toArrowBatchRdd sizes batches from the session conf — honor the
-    // caller's request. This is session-wide state: graft.Serve shares
-    // one gateway session across all Flight clients and Thrift's
-    // singleSession, and every served caller asks for 10000 rows.
-    classic.sparkSession.conf.set(
-      "spark.sql.execution.arrow.maxRecordsPerBatch", maxRecordsPerBatch.toString)
-    val batches = classic.toArrowBatchRdd.toLocalIterator
+    val conf = classic.sparkSession.sessionState.conf
+    val schema = classic.schema
+    val timeZoneId = conf.sessionLocalTimeZone
+    val largeVarTypes = conf.arrowUseLargeVarTypes
+    val batches = classic.queryExecution.executedPlan match {
+      case p @ (_: execution.LocalTableScanExec | _: execution.CommandResultExec) =>
+        ArrowConverters.toBatchIterator(p.executeCollect().iterator, schema,
+          maxRecordsPerBatch, timeZoneId, errorOnDuplicatedFieldNames = true,
+          largeVarTypes, context = null)
+      case p =>
+        p.execute().mapPartitionsInternal { rows =>
+          ArrowConverters.toBatchIterator(rows, schema, maxRecordsPerBatch,
+            timeZoneId, errorOnDuplicatedFieldNames = true, largeVarTypes,
+            org.apache.spark.TaskContext.get())
+        }.toLocalIterator
+    }
     Iterator(schemaIpc(df)) ++ batches ++ Iterator(EOS)
   }
 
@@ -75,7 +91,7 @@ object GraftArrow {
       batches: Iterator[Array[Byte]],
       schema: types.StructType,
       timeZoneId: String): Iterator[org.apache.spark.sql.catalyst.InternalRow] =
-    org.apache.spark.sql.execution.arrow.ArrowConverters.fromBatchIterator(
+    ArrowConverters.fromBatchIterator(
       batches, schema, timeZoneId, errorOnDuplicatedFieldNames = true,
       largeVarTypes = false, org.apache.spark.TaskContext.get())
 

@@ -238,7 +238,11 @@ class DialectSpec extends AnyFunSuite {
       "PRAGMA Version" -> "SELECT * FROM pragma_version()",
       "PRAGMA show_tables" -> "SELECT table_name AS name FROM duckdb_tables() ORDER BY name",
       "SHOW TABLES" -> "SELECT table_name AS name FROM duckdb_tables() ORDER BY name",
-      "SHOW ALL TABLES" -> "SELECT * FROM duckdb_tables()",
+      "SHOW ALL TABLES" -> ("SELECT database_name AS database, schema_name AS schema, " +
+        "table_name AS name, array_sort(collect_list(struct(column_index, column_name)))" +
+        ".column_name AS column_names, array_sort(collect_list(struct(column_index, " +
+        "data_type))).data_type AS column_types, false AS temporary FROM duckdb_columns() " +
+        "GROUP BY database_name, schema_name, table_name ORDER BY database, schema, name"),
       "FORCE CHECKPOINT;" -> "SELECT CAST(NULL AS BOOLEAN) AS Success LIMIT 0",
       "SELECT * FROM (DESC t) d JOIN (SUMMARIZE u) s ON true" ->
         s"SELECT * FROM ($show) d JOIN (SELECT * FROM summarize('u')) s ON true",

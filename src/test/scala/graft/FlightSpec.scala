@@ -117,6 +117,15 @@ class FlightSpec extends AnyFunSuite {
       e.getMessage.contains("INTERNAL"))
   }
 
+  test("a parse error reaches the client as INVALID_ARGUMENT with its error class") {
+    // Spark's ParseException message starts with a newline
+    val e = intercept[org.sparkproject.connect.grpc.StatusRuntimeException](
+      client.doGetSql(SparkEntry.oracleSql("j10_positional_join")))
+    assert(e.getStatus.getCode == org.sparkproject.connect.grpc.Status.Code.INVALID_ARGUMENT)
+    assert(e.getStatus.getDescription.startsWith("[PARSE_SYNTAX_ERROR]"),
+      e.getStatus.getDescription)
+  }
+
   test("ATTACH AIRPORT: remote Flight tables resolve through the catalog") {
     // a SECOND gateway attaches the first one's Flight server as a
     // remote catalog — the reference's k8s/main.yaml:155 deployment

@@ -1504,7 +1504,7 @@ class GatewaySpec extends AnyFunSuite {
     assert(gw.sql("COMMIT").collect().isEmpty)
     assert(gw.sql("VACUUM").collect().isEmpty)
     val ea = one("EXPLAIN ANALYZE SELECT 1 AS x")
-    assert(ea.getString(0) == "analyzed_plan" && ea.getString(1).contains("Project"))
+    assert(ea.getString(0) == "analyzed_plan" && ea.getString(1).contains("LocalTableScan"))
     val sat = gw.sql("SHOW ALL TABLES").collect()
     assert(sat.exists(_.toSeq.exists(v => v != null && v.toString == "orders")))
   }
@@ -2413,8 +2413,14 @@ class GatewaySpec extends AnyFunSuite {
     val g = Gateway.open(spark, sf)
     val server = graft.flight.FlightServer.start(g, 0)
     val client = new graft.flight.FlightClientLite("localhost", server.boundPort)
+    // a list cell is a java.util.List from Arrow, a Seq from Spark
+    def cell(v: Any): String = v match {
+      case l: java.util.List[_] => cell(scala.jdk.CollectionConverters.ListHasAsScala(l).asScala)
+      case l: scala.collection.Seq[_] => l.map(cell).mkString("[", ", ", "]")
+      case v => String.valueOf(v)
+    }
     def answer(columns: Seq[String], rows: Seq[Seq[Any]]) =
-      (columns, rows.map(_.map(String.valueOf)).sortBy(_.mkString("|")))
+      (columns, rows.map(_.map(cell)).sortBy(_.mkString("|")))
     def local(df: org.apache.spark.sql.DataFrame) =
       answer(df.columns.toSeq, df.collect().toSeq.map(_.toSeq))
     try {
@@ -2470,6 +2476,99 @@ class GatewaySpec extends AnyFunSuite {
     for (run <- Seq[String => Any](gw.sql, gw.session.sql)) {
       val e = intercept[GatewayException](run("ANALYZE TABLE region COMPUTE STATISTICS"))
       assert(e.getMessage.contains("read-only"))
+    }
+  }
+
+  // ---- per-statement fixed cost ---------------------------------------
+
+  /** `f`'s result and the Spark jobs it started, counted by a listener. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftPlans.flushListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = f
+      org.apache.spark.sql.GraftPlans.flushListenerBus(spark)
+      (r, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** (columns, rows as strings, batch count) of an Arrow IPC stream. */
+  private def decode(chunks: Iterator[Array[Byte]]): (Seq[String], Seq[Seq[String]], Int) = {
+    import scala.jdk.CollectionConverters._
+    val alloc = new org.apache.arrow.memory.RootAllocator()
+    val rdr = new org.apache.arrow.vector.ipc.ArrowStreamReader(
+      new java.io.ByteArrayInputStream(chunks.reduce(_ ++ _)), alloc)
+    try {
+      val root = rdr.getVectorSchemaRoot
+      val rows = Seq.newBuilder[Seq[String]]
+      var batches = 0
+      while (rdr.loadNextBatch()) {
+        batches += 1
+        val vs = root.getFieldVectors.asScala.toSeq
+        (0 until root.getRowCount).foreach(i => rows += vs.map(v => String.valueOf(v.getObject(i))))
+      }
+      (root.getSchema.getFields.asScala.map(_.getName).toSeq, rows.result(), batches)
+    } finally { rdr.close(); alloc.close() }
+  }
+
+  private def strings(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    df.collect().toSeq.map(_.toSeq.map(String.valueOf))
+
+  test("constant and catalog statements run no Spark job, with the same rows") {
+    val extensions = "SELECT extension_name FROM duckdb_extensions() WHERE installed"
+    for (q <- Seq("SELECT 1 AS a", extensions, "PRAGMA version")) {
+      val expected = (gw.sql(q).columns.toSeq, strings(gw.sql(q)))
+      val ((columns, rows, _), jobs) = jobsOf(decode(gw.arrowStream(q)))
+      withClue(q) { assert(((columns, rows), jobs) == ((expected, 0))) }
+    }
+    assert(strings(gw.sql("SELECT 1 AS a")) == Seq(Seq("1")))
+    assert(strings(gw.sql(extensions)).nonEmpty)
+    val server = graft.flight.FlightServer.start(gw, 0)
+    val client = new graft.flight.FlightClientLite("localhost", server.boundPort)
+    try {
+      val (info, jobs) = jobsOf(client.doGet("CommandGetSqlInfo".getBytes("UTF-8")))
+      assert(jobs == 0)
+      assert(info.rows.map(_.map(String.valueOf)) == strings(gw.sqlInfo))
+    } finally { client.close(); server.stop() }
+  }
+
+  test("arrowStream sizes batches from its argument and leaves the session conf alone") {
+    val key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    gw.session.conf.set(key, "777")
+    try {
+      // a partition-at-a-time plan and a driver-resident one
+      for (q <- Seq("SELECT r_regionkey FROM region",
+          "SELECT * FROM VALUES (0), (1), (2), (3), (4) AS t(r_regionkey)")) {
+        val (columns, rows, batches) = decode(gw.arrowStream(q, 2))
+        withClue(q) {
+          assert(gw.session.conf.get(key) == "777")
+          assert(columns == Seq("r_regionkey") && rows.map(_.head.toInt).sorted == (0 to 4))
+          assert(batches == 3)
+        }
+      }
+    } finally gw.session.conf.unset(key)
+  }
+
+  test("SHOW ALL TABLES answers DuckDB 1.0's layout") {
+    // read from duckdb 1.0.0 over the same parquet (CREATE VIEW per table)
+    for (run <- Seq[String => org.apache.spark.sql.DataFrame](gw.sql, gw.session.sql)) {
+      val df = run("SHOW ALL TABLES")
+      assert(df.schema.fields.toSeq.map(f => f.name -> f.dataType.sql) == Seq(
+        "database" -> "STRING", "schema" -> "STRING", "name" -> "STRING",
+        "column_names" -> "ARRAY<STRING>", "column_types" -> "ARRAY<STRING>",
+        "temporary" -> "BOOLEAN"))
+      val orders = df.collect().filter(_.getString(2) == "orders").map(_.toSeq)
+      assert(orders.toSeq == Seq(Seq("memory", "main", "orders",
+        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate",
+          "o_orderpriority"),
+        Seq("BIGINT", "BIGINT", "VARCHAR", "DOUBLE", "TIMESTAMP", "VARCHAR"), false)))
+      val names = df.collect().map(_.getString(2)).toSeq
+      assert(names == names.sorted && names.contains("region"))
     }
   }
 }

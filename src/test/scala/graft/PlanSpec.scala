@@ -685,4 +685,146 @@ class PlanSpec extends AnyFunSuite {
     assert("Exchange hashpartitioning".r.findAllIn(p).size <= 3, p)
     assert(!p.contains("CartesianProduct"), p)
   }
+
+  // ---- per-statement fixed cost: literal-stable codegen ----------------
+
+  private lazy val gw = graft.engine.Gateway.open(spark, sf)
+
+  /** Rows of `q` and the Janino compile time its run added. */
+  private def compiled(q: String): (Seq[org.apache.spark.sql.Row], Long) = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val before = CodeGenerator.compileTime
+    val rows = gw.sql(q).collect().toSeq
+    (rows, CodeGenerator.compileTime - before)
+  }
+
+  private def paramLiterals(p: org.apache.spark.sql.execution.SparkPlan) =
+    p.collect { case f: org.apache.spark.sql.execution.FilterExec =>
+      f.condition.collect { case x: graft.engine.expressions.ParamLiteral => x }
+    }.flatten
+
+  test("statements that differ only in a filter constant reuse one compiled class") {
+    val orders = gw.sql("SELECT * FROM orders").collect().toSeq
+    def key(r: org.apache.spark.sql.Row) = r.getAs[Long]("o_orderkey")
+    val keys = orders.map(key).sorted
+    val point = "SELECT * FROM orders WHERE o_orderkey = %d"
+    val range = "SELECT * FROM orders WHERE o_orderkey >= %d ORDER BY o_orderkey LIMIT 5"
+    for (k <- Seq(keys(3), keys(10), keys(20))) {
+      val (rows, _) = compiled(point.format(k))
+      assert(rows == orders.filter(key(_) == k), k)
+      val (top, _) = compiled(range.format(k))
+      assert(top == orders.filter(key(_) >= k).sortBy(key).take(5), k)
+    }
+    val k = keys(30)
+    val (rows, pointMs) = compiled(point.format(k))
+    val (top, rangeMs) = compiled(range.format(k))
+    assert(rows == orders.filter(key(_) == k) && top == orders.filter(key(_) >= k).sortBy(key).take(5))
+    assert((pointMs, rangeMs) == ((0L, 0L)))
+    assert(paramLiterals(gw.sql(point.format(k)).queryExecution.executedPlan).nonEmpty)
+
+    // the nation-region aggregate is an AQE plan: its stages are planned
+    // one at a time, and the rule runs in each
+    val nation = gw.sql("SELECT n_nationkey, n_regionkey FROM nation").collect()
+      .map(r => (r.get(0).toString.toLong, r.get(1).toString.toLong))
+    val region = gw.sql("SELECT r_regionkey, r_name FROM region").collect()
+      .map(r => r.get(0).toString.toLong -> r.getString(1)).toMap
+    val agg = "SELECT r_name, count(*) AS nations, max(n_nationkey) AS max_key " +
+      "FROM nation JOIN region ON n_regionkey = r_regionkey " +
+      "WHERE n_nationkey >= %d GROUP BY r_name ORDER BY r_name"
+    def expected(k: Long) = nation.filter(_._1 >= k).groupBy(n => region(n._2)).toSeq
+      .sortBy(_._1).map { case (r, ns) => Seq(r, ns.length.toLong, ns.map(_._1).max) }
+    def answer(rows: Seq[org.apache.spark.sql.Row]) =
+      rows.map(r => Seq(r.getString(0), r.getLong(1), r.get(2).toString.toLong))
+    assert(gw.sql(agg.format(3)).queryExecution.executedPlan
+      .isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec])
+    for (k <- Seq(3, 7)) assert(answer(compiled(agg.format(k))._1) == expected(k), k)
+    val (aggRows, aggMs) = compiled(agg.format(11))
+    assert(answer(aggRows) == expected(11) && aggMs == 0L)
+  }
+
+  test("ParamLiteral prints like Literal: a point lookup's executed plan text is unchanged") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.engine.expressions.ParamLiteral
+    val p = gw.sql("SELECT * FROM orders WHERE o_orderkey = 42").queryExecution.executedPlan
+    assert(paramLiterals(p).map(_.toString) == Seq("42"))
+    val asLiterals = p.transformAllExpressions { case x: ParamLiteral => Literal(x.value, x.dataType) }
+    assert(paramLiterals(asLiterals).isEmpty)
+    assert(p.toString == asLiterals.toString)
+    assert(p.toString.contains("= 42)"), p)
+    // and compares like Literal: NaN equals NaN
+    val nan = ParamLiteral(Double.NaN, org.apache.spark.sql.types.DoubleType)
+    assert(nan == nan.copy() && nan.hashCode == nan.copy().hashCode)
+  }
+
+  test("ParamLiteral covers exactly the types Literal writes into generated source") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+    import org.apache.spark.sql.types._
+    val types = Seq(BooleanType, ByteType, ShortType, IntegerType, LongType, FloatType,
+      DoubleType, DateType, TimestampType, TimestampNTZType, YearMonthIntervalType(),
+      DayTimeIntervalType(), TimeType(6), StringType, DecimalType(10, 2), BinaryType,
+      CalendarIntervalType)
+    for (t <- types) {
+      val ctx = new CodegenContext
+      Literal.default(t).genCode(ctx)
+      assert(graft.engine.expressions.ParamLiteral.inlinedByLiteral(t) == ctx.references.isEmpty, t)
+    }
+  }
+
+  test("ParamLiteral filters answer like Literal at the edge values, with and without codegen") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.types._
+    val s = spark.newSession()
+    // FilterExec alone decides: no parquet row-group skipping
+    s.conf.set("spark.sql.parquet.filterPushdown", "false")
+    val date = Seq("1970-01-01", "2024-02-29", "2024-03-01", "1999-12-31", "2100-01-01")
+      .map(java.sql.Date.valueOf)
+    val ts = (1 to 5).map(i => java.sql.Timestamp.valueOf(s"2024-01-0$i 10:00:00.123456"))
+    val ntz = (1 to 5).map(i => java.time.LocalDateTime.of(2024, 1, i, 10, 0))
+    val cols = Seq[(Int, Long, Int, Double, Float, Byte, Short, Boolean)](
+      (0, Long.MinValue, Int.MinValue, Double.NaN, Float.NaN, Byte.MinValue, Short.MinValue, true),
+      (1, 0L, 0, -0.0, -0.0f, 0, 0, false),
+      (2, 42L, 42, 0.0, 1.5f, Byte.MaxValue, Short.MaxValue, false),
+      (3, Long.MaxValue, Int.MaxValue, Double.PositiveInfinity, Float.PositiveInfinity, 1, 1, true),
+      (4, -1L, -1, Double.NegativeInfinity, Float.NegativeInfinity, -1, -1, false))
+    val rows = cols.map { case (id, l, i, d, f, t, sh, b) =>
+      Row(id, l, i, d, f, t, sh, b, date(id), ts(id), ntz(id))
+    }
+    val schema = StructType(Seq("id" -> IntegerType, "l" -> LongType, "i" -> IntegerType,
+      "d" -> DoubleType, "f" -> FloatType, "t" -> ByteType, "s" -> ShortType,
+      "b" -> BooleanType, "dt" -> DateType, "ts" -> TimestampType, "ntz" -> TimestampNTZType)
+      .map { case (n, t) => StructField(n, t) })
+    val dir = java.nio.file.Files.createTempDirectory("paramlit").resolve("t").toString
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1).write.parquet(dir)
+    val t = s.read.parquet(dir)
+    def c(cond: org.apache.spark.sql.Column, ids: Int*) = (cond, ids.toSet)
+    val cases = Seq(
+      c(col("l") === lit(Long.MinValue), 0), c(col("l") > lit(Long.MinValue), 1, 2, 3, 4),
+      c(col("i") === lit(Int.MaxValue), 3), c(col("i") < lit(Int.MaxValue), 0, 1, 2, 4),
+      c(col("d") === lit(Double.NaN), 0), c(col("d") === lit(-0.0), 1, 2),
+      c(col("d") > lit(0.0), 0, 3), c(col("d") === lit(Double.PositiveInfinity), 3),
+      c(col("d") < lit(Double.NegativeInfinity)),
+      c(col("d") >= lit(Double.NegativeInfinity), 0, 1, 2, 3, 4),
+      c(col("f") === lit(Float.NaN), 0), c(col("f") === lit(1.5f), 2),
+      c(col("f") <=> lit(-0.0f), 1), c(col("f") < lit(Float.PositiveInfinity), 1, 2, 4),
+      c(col("t") === lit(Byte.MinValue), 0), c(col("s") === lit(Short.MaxValue), 2),
+      c(col("dt") === lit(date(1)), 1), c(col("dt") > lit(date(1)), 2, 4),
+      c(col("ts") === lit(ts(1)), 1), c(col("ntz") <= lit(ntz(1)), 0, 1),
+      c(col("b") > lit(false), 0, 3), c(col("l").isin(42L, Long.MaxValue, 7L), 2, 3),
+      c(col("dt").isin(date(0), date(4)), 0, 4))
+    val modes = Seq(Map.empty[String, String],
+      Map("spark.sql.codegen.wholeStage" -> "false"),
+      Map("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for (mode <- modes; (cond, ids) <- cases) {
+      mode.foreach { case (k, v) => s.conf.set(k, v) }
+      try {
+        val df = t.where(cond).select("id")
+        withClue(s"$cond under $mode: ") {
+          assert(paramLiterals(df.queryExecution.executedPlan).nonEmpty)
+          assert(df.collect().map(_.getInt(0)).toSet == ids)
+        }
+      } finally mode.keys.foreach(s.conf.unset)
+    }
+  }
 }
