@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlans, SparkSession}
 
 /** The serving surface: SQL-string in → DataFrame / Arrow batches out,
   * mirroring the reference's DoGet contract
@@ -118,19 +118,14 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     * returns no rows. */
   private def success: DataFrame = session.sql("SELECT true AS Success").limit(0)
 
-  /** Register `df` as a temp view under the session lock, analyze
-    * `SELECT * FROM <view> tail` (which inlines the view's plan) and drop
-    * the view again: the statement tail runs over a DataFrame result.
+  /** `SELECT * FROM <df> tail`: the statement tail runs over a DataFrame
+    * result, whose plan stands in for the placeholder relation (no temp
+    * view, no lock).
     */
-  private def queryOver(df: DataFrame, tail: String): DataFrame = session.synchronized {
-    val tmp = s"__graft_view_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    df.createOrReplaceTempView(tmp)
-    try {
-      val out = session.sql(s"SELECT * FROM $tmp $tail")
-      out.queryExecution.assertAnalyzed()
-      out
-    } finally session.catalog.dropTempView(tmp)
-  }
+  private def queryOver(df: DataFrame, tail: String): DataFrame =
+    GraftPlans.ofRows(session, RecursiveSql.substitute(
+      GraftPlans.parsePlan(session, s"SELECT * FROM __graft_over $tail"),
+      Map("__graft_over" -> GraftPlans.analyzed(df))))
 
   /** The read-only gateway's first gate, on the statement's leading
     * keyword (past comments and any opening parentheses, as in
@@ -345,46 +340,52 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       case _ =>
     }
     requireReadOnly(expanded)
-    // the session's parser (GraftSqlParser) applies Dialect.rewrite; the
-    // routing below reads the pre-parse text
-    // WITH RECURSIVE … UNION (bare): DuckDB-dialect dedup recursion.
-    // Spark 4.1's native recursive CTE covers only UNION ALL, so the
-    // bare-UNION shape routes through the engine's semi-naive fixpoint
-    // (Recursive.fixpoint — identical semantics: each round's working
-    // table is the new distinct rows). UNION ALL recursion falls
-    // through to the native path untouched.
-    if (RecursiveSql.isRecursive(expanded)) {
-      val parsed =
-        try RecursiveSql.parse(expanded)
-        catch { case _: IllegalArgumentException => None }
-      parsed match {
-        case Some(p) if RecursiveSql.needsFixpoint(p) =>
-          requireReadOnly(p.outer)
-          return RecursiveSql.run(session, p)
-        case _ => // native parser handles it (or reports the real error)
+    // the session's parser (GraftSqlParser) applies Dialect.rewrite and
+    // ReadOnlyGuard. WITH RECURSIVE … UNION (bare): DuckDB-dialect dedup
+    // recursion. Spark 4.1's native recursive CTE covers only UNION ALL,
+    // so RecursiveSql runs the bare-UNION shape through the engine's
+    // semi-naive fixpoint (Recursive.fixpoint — identical semantics:
+    // each round's working table is the new distinct rows) and hands
+    // every other shape to Spark as parsed.
+    def query(text: String): DataFrame =
+      if (RecursiveSql.isRecursive(text)) RecursiveSql.sql(session, text)
+      else {
+        val df = session.sql(text)
+        df.queryExecution.assertAnalyzed() // structured failure before execution
+        df
       }
-    }
     // DuckDB percentage LIMIT — `LIMIT n%` keeps floor(n% of the result
     // rows). Inherently two-pass (DuckDB materializes and counts
     // internally too): run the body, count, limit. The count is one
     // aggregate job, not a collect.
-    pctLimitRe.findFirstMatchIn(expanded) match {
-      case Some(m) =>
-        val base = session.sql(m.group(1).trim)
-        base.queryExecution.assertAnalyzed()
-        val k = math.floor(base.count() * m.group(2).toDouble / 100.0).toLong
-        return base.limit(math.min(math.max(0L, k), Int.MaxValue.toLong).toInt)
-      case None =>
+    pctLimit(expanded) match {
+      case Some((body, pct)) =>
+        val base = query(body)
+        val k = math.floor(base.count() * pct / 100.0).toLong
+        base.limit(math.min(math.max(0L, k), Int.MaxValue.toLong).toInt)
+      case None => query(expanded)
     }
-    val df = session.sql(expanded)
-    df.queryExecution.assertAnalyzed() // structured failure before execution
-    df
   }
 
-  // `… LIMIT n%` at statement end ('%' is unambiguous there: a modulo
-  // expression cannot terminate a LIMIT clause followed by nothing)
-  private val pctLimitRe =
-    """(?is)^(.*\s)LIMIT\s+(\d+(?:\.\d+)?)\s*%\s*;?\s*$""".r
+  /** `… LIMIT n%` at statement end: the body before the last LIMIT
+    * that stands in code at depth 0, and n ('%' is unambiguous there: a
+    * modulo expression cannot terminate a LIMIT clause followed by
+    * nothing). */
+  private def pctLimit(sql: String): Option[(String, Double)] = {
+    var at = -1
+    if (sql.contains('%')) Dialect.scanCode(sql) { (i, depth) =>
+      if (depth == 0 && Dialect.keywordAt(sql, i, "LIMIT")) at = i
+      i
+    }
+    def blank(s: String) = Dialect.dropLeadingComments(s).isEmpty
+    if (at < 0) None
+    else pctClauseRe.findPrefixMatchOf(sql.substring(at)).collect {
+      // only comments and one ';' may follow the clause
+      case m if blank(Dialect.dropLeadingComments(m.after.toString).stripPrefix(";")) =>
+        (sql.substring(0, at).trim, m.group(1).toDouble)
+    }
+  }
+  private val pctClauseRe = """(?i)^LIMIT\s+(\d+(?:\.\d+)?)\s*%""".r
   private val describeSelectRe =
     """(?is)^DESC(?:RIBE)?\s+((?:SELECT|WITH|VALUES|FROM|TABLE)\b.+)$""".r
   private val explainAnalyzeRe = """(?is)^EXPLAIN\s+ANALYZE\s+(.+)$""".r

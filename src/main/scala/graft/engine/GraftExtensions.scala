@@ -462,7 +462,17 @@ object ReadOnlyGuard {
       catch { case _: Throwable => false }
     }
 
-  def enforce(plan: LogicalPlan): Unit = {
+  /** The statement under any leading WITH clauses: a CTE list makes
+    * `UnresolvedWith` the root, over a query or a write. */
+  @annotation.tailrec
+  private def statement(plan: LogicalPlan): LogicalPlan = plan match {
+    case w: org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith =>
+      statement(w.child)
+    case p => p
+  }
+
+  def enforce(parsed: LogicalPlan): Unit = {
+    val plan = statement(parsed)
     plan match {
       case s: org.apache.spark.sql.execution.command.SetCommand =>
         s.kv.foreach { case (k, _) =>

@@ -39,51 +39,33 @@ object Recursive {
       sys.props.get("graft.warm.fixpointCap").flatMap(_.toIntOption)
     else None
 
-  /** UNION-semantics fixpoint (matches `WITH RECURSIVE … UNION`):
-    * accumulated = seed ∪ step(frontier) ∪ …, all distinct; rows already
-    * accumulated never re-enter the frontier (cycle-safe).
+  /** How a fixpoint materializes its state, one instance per fixpoint.
     *
-    * `unroll` composes that many step applications LAZILY between
-    * materializations — s₁ = step(f), s₂ = step(s₁), … — then ONE
-    * `(s₁ ∪ … ∪ sᵤ) EXCEPT acc` + ONE materialization job covers u
-    * logical iterations. Per-round fixed cost (job submit, AQE stage
-    * scheduling) dominates deep fixpoints on all but huge frontiers, so
-    * this cuts wall time ≈u×. The next frontier is the
-    * whole materialized delta: new rows surfaced by early sub-steps are
-    * re-expanded next round and EXCEPT discards the re-derivations —
-    * correct, mildly redundant. Pick unroll > 1 when frontiers are small
-    * relative to per-job overhead (path/graph closures); use unroll = 1
-    * when a single expansion is already a large distributed job.
-    *
-    * CONTRACT: with unroll > 1 the frontier passed to `step` keeps plan
-    * lineage, so `step` must resolve columns BY NAME (col("x"), Seq-key
-    * joins) — parent-bound refs like capturedDf("x") become ambiguous
-    * self-joins once capturedDf also appears inside the frontier plan.
+    * Micro-state fast path: state estimated under the
+    * broadcast-threshold-sized gate materializes as a driver-LOCAL
+    * relation (collect + LocalRelation) instead of a checkpointed RDD.
+    * That is the same size-class judgment every broadcast join makes —
+    * this state would ride to every executor as a broadcast anyway in
+    * the next round's anti-join — and it makes a micro round exactly
+    * ONE job: the anti-join's build side is a LocalRelation (broadcast
+    * built driver-side, no collect job), the frontier branches are
+    * projections over LocalRelation, and the count is the collected
+    * length. Estimates lie (filter/generator selectivity guesses), so
+    * the collect is HARD-CAPPED by limit(maxMicroRows + 1): an under-
+    * estimated delta falls back to the distributed path instead of
+    * OOMing the driver. That path is localCheckpointWithCount (one
+    * job, count ridden, origin stats carried so `except(acc)` keeps
+    * auto-broadcasting small acc instead of degenerating to sort-merge
+    * against a stats-less LogicalRDD; not persist — the context-shared
+    * CacheManager's canonicalization lookups grow with entries and
+    * plan depth, measured 3.7→13s across repeated runs).
     */
-  def fixpoint(seed: DataFrame, maxIter: Int = 100, unroll: Int = 4)(
-      step: DataFrame => DataFrame): DataFrame = {
-    // Micro-state fast path: fixpoint state estimated under the
-    // broadcast-threshold-sized gate materializes as a driver-LOCAL
-    // relation (collect + LocalRelation) instead of a checkpointed RDD.
-    // That is the same size-class judgment every broadcast join makes —
-    // this state would ride to every executor as a broadcast anyway in
-    // the next round's anti-join — and it makes a micro round exactly
-    // ONE job: the anti-join's build side is a LocalRelation (broadcast
-    // built driver-side, no collect job), the frontier branches are
-    // projections over LocalRelation, and the count is the collected
-    // length. Estimates lie (filter/generator selectivity guesses), so
-    // the collect is HARD-CAPPED by limit(maxMicroRows + 1): an under-
-    // estimated delta falls back to the distributed path instead of
-    // OOMing the driver. That path is localCheckpointWithCount (one
-    // job, count ridden, origin stats carried so `except(acc)` keeps
-    // auto-broadcasting small acc instead of degenerating to sort-merge
-    // against a stats-less LogicalRDD; not persist — the context-shared
-    // CacheManager's canonicalization lookups grow with entries and
-    // plan depth, measured 3.7→13s across repeated runs).
-    val microBytes = 8L << 20
-    val bigBytes = 64L << 20
-    val maxMicroRows = 100000
-    var microState = true // all deltas so far were driver-local-sized
+  private[engine] final class Materializer {
+    private val microBytes = 8L << 20
+    private val bigBytes = 64L << 20
+    private val maxMicroRows = 100000
+    /** All relations materialized so far were driver-local-sized. */
+    var micro = true
     // Estimates lie BOTH ways: a plan estimated under microBytes can
     // collect wide rows (large strings/arrays sized at default column
     // widths) far past it. So the gate is belt-and-braces: the collect
@@ -92,9 +74,9 @@ object Recursive {
     // to the distributed path. The budget is CUMULATIVE (microBudget):
     // acc unions every micro delta's LocalRelation, so the cap bounds
     // total driver-held fixpoint state across rounds, not one delta.
-    var microBudget = bigBytes
-    def checkpoint(df: DataFrame): (DataFrame, Long) = {
-      microState = false
+    private var microBudget = bigBytes
+    private def checkpoint(df: DataFrame): (DataFrame, Long) = {
+      micro = false
       val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
       val out = org.apache.spark.sql.GraftPlans.localCheckpointWithCount(
         if (est < bigBytes) df.coalesce(1) else df)
@@ -105,7 +87,8 @@ object Recursive {
         .foreach(CacheOnce.deferRelease)
       out
     }
-    def materialize(df: DataFrame): (DataFrame, Long) = {
+    /** `df` materialized once, with its row count. */
+    def apply(df: DataFrame): (DataFrame, Long) = {
       val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
       if (est < microBytes && microBudget > 0) {
         val rows = df.limit(maxMicroRows + 1).collect()
@@ -126,6 +109,35 @@ object Recursive {
         }
       } else checkpoint(df)
     }
+  }
+
+  /** UNION-semantics fixpoint (matches `WITH RECURSIVE … UNION`):
+    * accumulated = seed ∪ step(frontier) ∪ …, all distinct; rows already
+    * accumulated never re-enter the frontier (cycle-safe).
+    *
+    * `unroll` composes that many step applications LAZILY between
+    * materializations — s₁ = step(f), s₂ = step(s₁), … — then ONE
+    * `(s₁ ∪ … ∪ sᵤ) EXCEPT acc` + ONE materialization job covers u
+    * logical iterations. Per-round fixed cost (job submit, AQE stage
+    * scheduling) dominates deep fixpoints on all but huge frontiers, so
+    * this cuts wall time ≈u×. The next frontier is the
+    * whole materialized delta: new rows surfaced by early sub-steps are
+    * re-expanded next round and EXCEPT discards the re-derivations —
+    * correct, mildly redundant. Pick unroll > 1 when frontiers are small
+    * relative to per-job overhead (path/graph closures); use unroll = 1
+    * when a single expansion is already a large distributed job.
+    *
+    * CONTRACT: with unroll > 1 the frontier passed to `step` keeps plan
+    * lineage, so `step` must resolve columns BY NAME (col("x"), Seq-key
+    * joins) — parent-bound refs like capturedDf("x") become ambiguous
+    * self-joins once capturedDf also appears inside the frontier plan.
+    *
+    * `materialize` may be shared with the caller, which then materializes
+    * the step's inputs under the same driver-memory budget.
+    */
+  def fixpoint(seed: DataFrame, maxIter: Int = 100, unroll: Int = 4,
+      materialize: Materializer = new Materializer)(
+      step: DataFrame => DataFrame): DataFrame = {
     val (first, n0) = materialize(seed.distinct())
     var acc = first
     var frontier = first
@@ -151,7 +163,7 @@ object Recursive {
       // anti-join's required distributions, so the round plans with no
       // exchange at all
       val pre =
-        if (microState) chainU.coalesce(1).except(acc)
+        if (materialize.micro) chainU.coalesce(1).except(acc)
         else chainU.except(acc)
       val (delta, n) = materialize(pre)
       iters += u

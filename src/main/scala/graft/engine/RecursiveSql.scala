@@ -1,182 +1,123 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlans, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation, UnresolvedSubqueryColumnAliases}
+import org.apache.spark.sql.catalyst.plans.logical.{Distinct, LogicalPlan, SubqueryAlias, Union, UnresolvedWith}
 
-/** Text path for `WITH RECURSIVE … UNION …` statements.
+/** `WITH RECURSIVE` statements, from Spark's own parse tree.
   *
   * Spark 4.1 ships native recursive CTEs but only for UNION ALL
-  * recursion ([UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE]); the reference's
-  * dialect (DuckDB, /root/reference/main.go:229) also accepts bare
-  * UNION, whose semantics — the working table is each round's NEW
-  * distinct rows, recursion stops when a round adds nothing — are
-  * exactly the semi-naive fixpoint `Recursive.fixpoint` already runs
-  * for the DataFrame form. This object parses the statement just enough
-  * to drive that fixpoint from SQL text:
+  * recursion ([UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE]); DuckDB also
+  * accepts bare UNION, whose semantics — the working table is each
+  * round's NEW distinct rows, recursion stops when a round adds nothing
+  * — are exactly the semi-naive fixpoint `Recursive.fixpoint` runs for
+  * the DataFrame form. The statement is parsed once by the session's
+  * parser (GraftSqlParser: dialect rewrite and ReadOnlyGuard), and
   *
   *   WITH RECURSIVE a AS (…), r(cols) AS (seed UNION step), b AS (…)
   *   outer-select
   *
-  * One self-referencing CTE is supported (the common linear-recursion
-  * shape); statements whose recursion is UNION ALL, or with no
-  * self-reference at all, are NOT handled here — the caller passes them
-  * to Spark's native path. The split runs on Dialect.scanCode, which
-  * skips literals, quoted identifiers and comments and tracks bracket
-  * depth, so none of those can derail it on `UNION` or a paren.
+  * runs as that fixpoint when exactly one CTE reads itself and its body
+  * is a bare UNION. Everything else — UNION ALL recursion, no or several
+  * self-references — runs as Spark parsed it. The CTEs compose by plan
+  * substitution, in order: a CTE the step reads is materialized once per
+  * statement, the step reads each round's frontier, and CTEs after the
+  * recursive one and the outer query read its result. No name is
+  * registered on the session, so concurrent statements share nothing.
   */
 object RecursiveSql {
-
-  final case class Cte(name: String, cols: Seq[String], body: String) {
-    def selfRefs: Boolean = RecursiveSql.refs(body, name)
-  }
-  final case class Parsed(ctes: Seq[Cte], outer: String)
 
   private val prefixRe = """(?is)^\s*WITH\s+RECURSIVE\s""".r
 
   def isRecursive(sql: String): Boolean = prefixRe.findFirstIn(sql).isDefined
 
-  /** Whole-word, quote-unaware reference check — CTE names are plain
-    * identifiers and a false positive inside a string literal only
-    * costs routing a statement down the (still correct) fixpoint path.
-    */
-  private def refs(sql: String, name: String): Boolean =
-    ("""(?i)(?<![\w"])""" + java.util.regex.Pattern.quote(name) + """(?![\w"])""").r
-      .findFirstIn(sql).isDefined
+  private def isName(r: UnresolvedRelation, name: String): Boolean =
+    r.multipartIdentifier match {
+      case Seq(one) => one.equalsIgnoreCase(name)
+      case _ => false
+    }
 
-  /** Parse the CTE list and outer query. Returns None when the text
-    * doesn't scan as a WITH RECURSIVE statement (caller falls back to
-    * the native parser, which will produce the real error message).
+  /** Whether `plan`, its subqueries included, reads relation `name`. */
+  private def reads(plan: LogicalPlan, name: String): Boolean =
+    plan.collectWithSubqueries {
+      case r: UnresolvedRelation if isName(r, name) => r
+    }.nonEmpty
+
+  /** `plan` with each one-part relation named in `defs` (lower-cased
+    * name → plan) replaced by `SubqueryAlias(name, that plan)`,
+    * subqueries included: a CTE, or a DataFrame's plan, read as a table.
     */
-  def parse(sql: String): Option[Parsed] = prefixRe.findFirstIn(sql).map { m =>
-    var i = m.length
-    val n = sql.length
-    def skipWs(): Unit = { while (i < n && sql(i).isWhitespace) i += 1 }
-    def ident(): String = {
-      skipWs()
-      val start = i
-      if (i < n && sql(i) == '"') { // quoted identifier
-        i += 1; while (i < n && sql(i) != '"') i += 1; i += 1
-        sql.substring(start + 1, i - 1)
-      } else {
-        while (i < n && (sql(i).isLetterOrDigit || sql(i) == '_')) i += 1
-        sql.substring(start, i)
-      }
+  private[engine] def substitute(plan: LogicalPlan,
+      defs: Map[String, LogicalPlan]): LogicalPlan =
+    plan.transformUpWithSubqueries {
+      case r: UnresolvedRelation if r.multipartIdentifier.length == 1 =>
+        val name = r.multipartIdentifier.head
+        defs.get(name.toLowerCase).fold[LogicalPlan](r)(SubqueryAlias(name, _))
     }
-    // scan from an opening paren to its match
-    def parenBlock(): String = {
-      skipWs()
-      require(i < n && sql(i) == '(', s"expected '(' at $i")
-      val close = Dialect.scanCode(sql, i) { (j, depth) =>
-        if (depth == 1 && sql(j) == ')') -1 else j
-      }
-      require(close > i, "unbalanced parens in WITH RECURSIVE")
-      val body = sql.substring(i + 1, close)
-      i = close + 1
-      body
-    }
-    val ctes = scala.collection.mutable.ArrayBuffer.empty[Cte]
-    var more = true
-    while (more) {
-      val name = ident()
-      require(name.nonEmpty, "expected CTE name")
-      skipWs()
-      val cols =
-        if (i < n && sql(i) == '(')
-          parenBlock().split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
-        else Seq.empty
-      skipWs()
-      require(sql.regionMatches(true, i, "AS", 0, 2), s"expected AS after CTE $name")
-      i += 2
-      val body = parenBlock()
-      ctes += Cte(name, cols, body)
-      skipWs()
-      if (i < n && sql(i) == ',') { i += 1 } else more = false
-    }
-    Parsed(ctes.toSeq, sql.substring(i).trim)
+
+  /** The branches of a bare-UNION body: nested `Distinct(Union)` is
+    * flattened, a UNION ALL inside a branch stays one branch. */
+  private def branches(p: LogicalPlan): Seq[LogicalPlan] = p match {
+    case Distinct(u: Union) if !u.byName => u.children.flatMap(branches)
+    case other => Seq(other)
   }
 
-  /** Split a CTE body at top-level bare `UNION` boundaries (UNION ALL
-    * stays inside a branch — it's plain set union within seed or step).
-    */
-  private[engine] def unionBranches(body: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var last = 0
-    Dialect.scanCode(body) { (i, depth) =>
-      if (depth != 0 || !Dialect.keywordAt(body, i, "UNION")) i
-      else {
-        // peek past whitespace for ALL — that's a branch-internal union
-        var j = i + 5
-        while (j < body.length && body(j).isWhitespace) j += 1
-        if (Dialect.keywordAt(body, j, "ALL")) j + 3
-        else {
-          out += body.substring(last, i)
-          last = i + 5
-          last
-        }
-      }
-    }
-    out += body.substring(last)
-    out.map(_.trim).toSeq
-  }
+  private def union(ps: Seq[LogicalPlan]): LogicalPlan =
+    if (ps.length == 1) ps.head else Union(ps)
 
-  /** True when this statement needs the fixpoint path: exactly one
-    * self-referencing CTE whose body splits on a top-level bare UNION.
-    */
-  def needsFixpoint(p: Parsed): Boolean = {
-    val rec = p.ctes.filter(_.selfRefs)
-    rec.length == 1 && unionBranches(rec.head.body).length > 1
-  }
-
-  /** Execute via Recursive.fixpoint on the given session. Non-recursive
-    * CTEs and the accumulated recursive relation are registered as temp
-    * views for the duration of ANALYSIS only — plans are inlined at
-    * analysis time, so views are dropped (and any shadowed temp views
-    * restored) before the result is returned. Synchronized per session:
-    * two concurrent statements defining the same CTE name must not race
-    * on the shared temp-view namespace.
-    */
-  def run(session: SparkSession, p: Parsed, maxIter: Int = 200): DataFrame =
-    session.synchronized {
-      val rec = p.ctes.filter(_.selfRefs) match {
-        case Seq(one) => one
-        case many => throw new GatewayException(
-          s"WITH RECURSIVE: expected exactly one self-referencing CTE, " +
-            s"found ${many.map(_.name).mkString("[", ", ", "]")}")
-      }
-      val branches = unionBranches(rec.body)
-      val (stepSqls, seedSqls) = branches.partition(refs(_, rec.name))
-      if (seedSqls.isEmpty)
-        throw new GatewayException(
-          s"WITH RECURSIVE ${rec.name}: no non-recursive seed branch")
-      val names = p.ctes.map(_.name)
-      val shadowed = names.flatMap { nm =>
-        if (session.catalog.tableExists(nm) &&
-            session.catalog.getTable(nm).isTemporary)
-          Some(nm -> session.table(nm))
-        else None
-      }
-      try {
-        // non-recursive CTEs first, in order (later ones may read earlier)
-        p.ctes.filterNot(_.selfRefs).foreach { c =>
-          val df0 = session.sql(c.body)
-          val df = if (c.cols.nonEmpty) df0.toDF(c.cols: _*) else df0
-          df.createOrReplaceTempView(c.name)
+  /** The one CTE that reads itself, when its body is a bare UNION with
+    * a seed: its name, column aliases, seed and step branches. */
+  private def bareUnion(ctes: Seq[(String, SubqueryAlias, Option[Int])])
+      : Option[(String, Seq[String], Seq[LogicalPlan], Seq[LogicalPlan])] =
+    ctes.filter { case (name, alias, _) => reads(alias.child, name) } match {
+      case Seq((name, alias, _)) =>
+        val (cols, body) = alias.child match {
+          case UnresolvedSubqueryColumnAliases(cols, q) => (cols, q)
+          case q => (Nil, q)
         }
-        def named(df: DataFrame): DataFrame =
-          if (rec.cols.nonEmpty) df.toDF(rec.cols: _*) else df
-        val seed = named(seedSqls.map(session.sql).reduce(_ union _))
-        val result = Recursive.fixpoint(seed, maxIter = maxIter) { frontier =>
-          // analysis inlines the frontier's plan into each step — the
-          // view is re-pointed per application, never read lazily
-          frontier.createOrReplaceTempView(rec.name)
-          named(stepSqls.map(session.sql).reduce(_ union _))
+        body match {
+          case Distinct(u: Union) if !u.byName =>
+            val (steps, seeds) = branches(body).partition(reads(_, name))
+            if (seeds.isEmpty) None else Some((name, cols, seeds, steps))
+          case _ => None
         }
-        result.createOrReplaceTempView(rec.name)
-        val out = session.sql(p.outer)
-        out.queryExecution.assertAnalyzed()
-        out
-      } finally {
-        names.foreach(session.catalog.dropTempView)
-        shadowed.foreach { case (nm, df) => df.createOrReplaceTempView(nm) }
-      }
+      case _ => None
     }
+
+  /** Run a statement that starts `WITH RECURSIVE` (see the object doc). */
+  def sql(session: SparkSession, text: String, maxIter: Int = 200): DataFrame = {
+    val parsed = GraftPlans.parsePlan(session, text)
+    val (outer, ctes, (rec, cols, seeds, steps)) = parsed match {
+      case UnresolvedWith(outer, ctes, true) => bareUnion(ctes) match {
+        case Some(r) => (outer, ctes, r)
+        case None => return GraftPlans.ofRows(session, parsed)
+      }
+      case _ => return GraftPlans.ofRows(session, parsed)
+    }
+    def run(plan: LogicalPlan): DataFrame = GraftPlans.ofRows(session,
+      if (cols.isEmpty) plan else UnresolvedSubqueryColumnAliases(cols, plan))
+    val materialize = new Recursive.Materializer
+    val recAt = ctes.indexWhere(_._1 == rec)
+    var defs = Map.empty[String, LogicalPlan]
+    for (((name, alias, _), i) <- ctes.zipWithIndex) {
+      val plan =
+        if (i == recAt) {
+          val step = union(steps)
+          val result = Recursive.fixpoint(run(substitute(union(seeds), defs)),
+            maxIter = maxIter, materialize = materialize) { frontier =>
+            run(substitute(step,
+              defs + (rec.toLowerCase -> GraftPlans.analyzed(frontier))))
+          }
+          GraftPlans.analyzed(result)
+        } else {
+          val p = substitute(alias.child, defs)
+          // an input of the step: materialized once, not re-run per round
+          if (i < recAt && steps.exists(reads(_, name)))
+            GraftPlans.analyzed(materialize(GraftPlans.ofRows(session, p))._1)
+          else p
+        }
+      defs += name.toLowerCase -> plan
+    }
+    GraftPlans.ofRows(session, substitute(outer, defs))
+  }
 }

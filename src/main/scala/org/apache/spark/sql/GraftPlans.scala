@@ -11,6 +11,12 @@ object GraftPlans {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
 
+  /** The session's parser over `sqlText`, with the session active (as
+    * `spark.sql` parses): the parser reads its conf through SQLConf.get. */
+  def parsePlan(spark: SparkSession, sqlText: String): LogicalPlan =
+    spark.asInstanceOf[ClassicSparkSession].withActive(
+      spark.sessionState.sqlParser.parsePlan(sqlText))
+
   def analyzed(df: Dataset[Row]): LogicalPlan =
     df.asInstanceOf[ClassicDataFrame].queryExecution.analyzed
 

@@ -2259,6 +2259,69 @@ class GatewaySpec extends AnyFunSuite {
       Seq((1, "it's (x"), (2, "it's (x"), (3, "it's (x")))
   }
 
+  // ---- WITH RECURSIVE from the parse tree (answers from DuckDB 1.0) ----
+
+  test("WITH RECURSIVE … UNION: a column named like its CTE does not hide the recursion") {
+    val rows = gw.sql(
+      """WITH RECURSIVE s AS (SELECT 1 AS s),
+        |r(n) AS (SELECT 1 UNION SELECT n + 1 FROM r WHERE n < 3)
+        |SELECT n FROM r ORDER BY n""".stripMargin).collect()
+    assert(rows.map(_.getInt(0)).toSeq == Seq(1, 2, 3))
+  }
+
+  test("WITH RECURSIVE … UNION: CTE names stay inside the statement") {
+    // the recursive CTE shadows the fixture table `region` (5 rows) for
+    // its own statement only: a concurrent statement on the same
+    // gateway reads the table throughout
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val polls = new java.util.concurrent.ConcurrentLinkedQueue[Any]()
+    val poller = new Thread(() =>
+      do {
+        polls.add(try gw.sql("SELECT count(*) FROM region").collect()(0).getLong(0)
+          catch { case e: Exception => e })
+      } while (!done.get))
+    poller.start()
+    val n =
+      try gw.sql(
+        """WITH RECURSIVE region(k) AS (
+          |  SELECT 0 UNION SELECT k + 1 FROM region WHERE k < 150)
+          |SELECT count(*) FROM region""".stripMargin).collect()(0).getLong(0)
+      finally { done.set(true); poller.join() }
+    assert(n == 151L)
+    import scala.jdk.CollectionConverters._
+    val seen = polls.asScala.toSeq
+    assert(seen.nonEmpty && seen.forall(_ == 5L), seen.distinct)
+  }
+
+  test("read-only: a write behind a WITH clause is refused") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ro")
+    val out = dir.resolve("out")
+    try {
+      for (stmt <- Seq(
+          s"WITH x AS (SELECT 1 AS a) INSERT OVERWRITE DIRECTORY '$out' " +
+            "USING parquet SELECT * FROM x",
+          "WITH RECURSIVE r(n) AS (SELECT 1 UNION SELECT n + 1 FROM r WHERE n < 3) " +
+            s"INSERT OVERWRITE DIRECTORY '$out' USING parquet SELECT * FROM r");
+          run <- Seq[String => Any](gw.sql(_).collect(), gw.session.sql(_).collect())) {
+        val e = intercept[GatewayException](run(stmt))
+        assert(e.getMessage.contains("read-only"), e.getMessage)
+        assert(!java.nio.file.Files.exists(out), stmt)
+      }
+    } finally dir.toFile.delete()
+  }
+
+  test("LIMIT n%: only a LIMIT in code is a percentage") {
+    assert(gw.sql("SELECT * FROM range(10) -- LIMIT 50%").collect().length == 10)
+    assert(gw.sql("SELECT * FROM range(10) LIMIT 50%").collect().length == 5)
+    assert(gw.sql("SELECT * FROM range(10) LIMIT 50% -- note").collect().length == 5)
+    // over a recursive body, native (UNION ALL) or fixpoint (UNION)
+    def ints(q: String) = gw.sql(q).collect().map(_.getInt(0)).toSeq
+    assert(ints("WITH RECURSIVE t(n) AS (SELECT 1 UNION ALL SELECT n + 1 FROM t " +
+      "WHERE n < 10) SELECT n FROM t ORDER BY n LIMIT 50%") == Seq(1, 2, 3, 4, 5))
+    assert(ints("WITH RECURSIVE t(n) AS (SELECT 1 UNION SELECT n + 1 FROM t " +
+      "WHERE n < 10) SELECT n FROM t ORDER BY n LIMIT 30%") == Seq(1, 2, 3))
+  }
+
   test("a leading comment or parenthesis does not hide the statement's first word") {
     def ints(q: String) = gw.sql(q).collect().map(_.getInt(0)).toSeq
     assert(ints("/* tag */ SELECT 1 AS a") == Seq(1))

@@ -26,17 +26,17 @@ class ServedOracleSpec extends AnyFunSuite {
   private val knownFailures: Set[String] = Set(
     // graft_subscript inside a lambda: "cannot resolve the runtime
     // replaceable expression"
-    "dd_containment", "dd_incremental", "dd_incremental_indexed",
-    "dd_incremental_lookup", "dd_minhash_lsh", "dd_ngram_jaccard",
-    "pipe_compact", "tx_bigram_lm", "tx_decontaminate", "tx_repetition",
-    "tx_span_dedup",
+    "dd_components", "dd_containment", "dd_incremental",
+    "dd_incremental_indexed", "dd_incremental_lookup", "dd_minhash_lsh",
+    "dd_ngram_jaccard", "pipe_compact", "tx_bigram_lm", "tx_decontaminate",
+    "tx_repetition", "tx_span_dedup",
     // a generator nested in an expression
     "a17_histogram", "mm_phash_dedup", "pipe_leakage", "t1_date_series", "tx_chunk",
     // POSITIONAL JOIN does not parse
     "j10_positional_join",
-    // one each: UNION in a recursive CTE, timestampdiff, a posexplode
-    // alias, a lambda's type, a correlated scalar subquery in an aggregate
-    "dd_components", "f_time", "t2_posexplode", "tx_quality_score", "tx_source_stats",
+    // one each: timestampdiff, a posexplode alias, a lambda's type, a
+    // correlated scalar subquery in an aggregate
+    "f_time", "t2_posexplode", "tx_quality_score", "tx_source_stats",
     // wrong results: TIMESTAMP vs TIMESTAMP_NTZ, '' for text, 223 vs 224
     "f_datetime", "f_string", "mm_resize")
 

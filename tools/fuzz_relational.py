@@ -90,7 +90,55 @@ def main():
               " RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"]
 
     def gen(rng):
-        shape = pin_shape if pin_shape is not None else rng.randrange(20)
+        shape = pin_shape if pin_shape is not None else rng.randrange(21)
+        if shape == 20:  # WITH RECURSIVE over an edge set derived from nation:
+            # bare-UNION closure (the edges wrap mod 25, so the graph is
+            # cyclic and only convergence stops it), bare UNION or UNION
+            # ALL with a depth bound; the step reads the edge CTE and
+            # sometimes a second CTE in an IN-subquery; sometimes an edge
+            # column is named like the recursive CTE, and sometimes a CTE
+            # after the recursive one reads it
+            mul, add = rng.choice([(1, 1), (2, 3), (3, 1), (7, 2), (4, 5)])
+            extra = ", n_regionkey AS r" if rng.random() < 0.3 else ""
+            edges = (f"SELECT n_nationkey AS a, (n_nationkey * {mul} + {add}) % 25 "
+                     f"AS b{extra} FROM nation")
+            if rng.random() < 0.5:
+                edges += (" UNION ALL SELECT n_nationkey AS a, (n_nationkey + 5) % 25 "
+                          f"AS b{extra} FROM nation")
+            ctes = [f"e AS ({edges})"]
+            conds = []
+            if rng.random() < 0.5:
+                ctes.append("k AS (SELECT n_nationkey AS id FROM nation "
+                            f"WHERE n_regionkey <> {rng.randrange(5)})")
+                conds.append("e.b IN (SELECT id FROM k)")
+            start = rng.randrange(25)
+            kind = rng.choice(["closure", "depth", "all"])
+            if kind == "closure":
+                where = f" WHERE {' AND '.join(conds)}" if conds else ""
+                ctes.append(f"r(node) AS (SELECT {start} UNION SELECT e.b "
+                            f"FROM r JOIN e ON e.a = r.node{where})")
+            else:
+                conds.insert(0, f"r.d < {rng.randint(1, 6)}")
+                op = "UNION" if kind == "depth" else "UNION ALL"
+                ctes.append(f"r(node, d) AS (SELECT {start}, 0 {op} SELECT e.b, "
+                            f"r.d + 1 FROM r JOIN e ON e.a = r.node "
+                            f"WHERE {' AND '.join(conds)})")
+            src = "r"
+            if rng.random() < 0.3:
+                ctes.append("t AS (SELECT * FROM r)")
+                src = "t"
+            if kind == "closure":
+                outer = rng.choice([
+                    f"SELECT node FROM {src} ORDER BY node",
+                    f"SELECT count(*) AS c, sum(node) AS s FROM {src}",
+                    f"SELECT n_name FROM nation JOIN {src} ON n_nationkey = node "
+                    "ORDER BY n_name"])
+            else:
+                outer = rng.choice([
+                    f"SELECT node, min(d) AS d, count(*) AS c FROM {src} "
+                    "GROUP BY node ORDER BY node",
+                    f"SELECT d, count(*) AS c FROM {src} GROUP BY d ORDER BY d"])
+            return f"WITH RECURSIVE {', '.join(ctes)} {outer}"
         if shape == 19:  # ASOF: {LEFT, inner} x {>=, >, <=, <} x {0, 1, 2
             # keys}. The right ts is n_nationkey, unique, so no tie between
             # right rows can make the match engine-dependent; left ts values
