@@ -123,9 +123,12 @@ object Recursive {
     * this cuts wall time ≈u×. The next frontier is the
     * whole materialized delta: new rows surfaced by early sub-steps are
     * re-expanded next round and EXCEPT discards the re-derivations —
-    * correct, mildly redundant. Pick unroll > 1 when frontiers are small
-    * relative to per-job overhead (path/graph closures); use unroll = 1
-    * when a single expansion is already a large distributed job.
+    * correct, mildly redundant. Sub-steps are not deduplicated, so a
+    * step of fan-out d reads f·dᵏ⁻¹ rows in its k-th application from
+    * a frontier of f. Pick unroll > 1 when frontiers are small relative
+    * to per-job overhead and the step's fan-out is known small (path
+    * closures); use unroll = 1 when a single expansion is already a
+    * large distributed job or the fan-out is unknown.
     *
     * CONTRACT: with unroll > 1 the frontier passed to `step` keeps plan
     * lineage, so `step` must resolve columns BY NAME (col("x"), Seq-key

@@ -103,8 +103,12 @@ object RecursiveSql {
       val plan =
         if (i == recAt) {
           val step = union(steps)
+          // unroll 1: a statement's fan-out is unknown, and unrolled
+          // steps multiply it (dd_components' first round would read
+          // 1.8 billion rows from 1,000 at sf0.01); one step per round
+          // reads each new row once, as DuckDB's own iteration does
           val result = Recursive.fixpoint(run(substitute(union(seeds), defs)),
-            maxIter = maxIter, materialize = materialize) { frontier =>
+            maxIter = maxIter, unroll = 1, materialize = materialize) { frontier =>
             run(substitute(step,
               defs + (rec.toLowerCase -> GraftPlans.analyzed(frontier))))
           }

@@ -2,7 +2,7 @@ package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{
-  Add, Cast, EqualTo, Expression, Greatest, If, LessThan, Length, Literal,
+  Add, Cast, EqualTo, EvalMode, Expression, Greatest, If, LessThan, Length, Literal,
   RuntimeReplaceable, Size, Slice, Subtract, Substring}
 import org.apache.spark.sql.types._
 
@@ -91,7 +91,18 @@ case class SubscriptAny(child: Expression, index: Expression)
     // failOnError=false: DuckDB's out-of-bounds subscript is NULL
     // (`([10,20])[3]` → NULL even under its strict typing; fuzz-found —
     // Spark's ANSI element_at raises INVALID_ARRAY_INDEX instead)
-    case _ => ElementAt(child, index, None, false)
+    case _ => ElementAt(child, intIndex, None, false)
+  }
+
+  /** The list index as the INT ElementAt needs (no analyzer pass casts
+    * inside a replacement). A TRY cast: a BIGINT outside the INT range
+    * is NULL, as in DuckDB 1.0 (`(['a'])[5000000000]`), where a non-ANSI
+    * cast would wrap it to a valid-looking index and an ANSI one would
+    * raise. */
+  private def intIndex: Expression = index.dataType match {
+    case ByteType | ShortType | LongType =>
+      Cast(index, IntegerType, evalMode = EvalMode.TRY)
+    case _ => index
   }
 
   override protected def withNewChildrenInternal(

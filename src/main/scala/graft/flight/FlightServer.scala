@@ -135,44 +135,54 @@ final class FlightServer(gateway: Gateway, port: Int) {
     // one call are serialized by gRPC, so no locking is needed. The
     // batch iterator stays lazy (partition-at-a-time), bounding server
     // memory to one in-flight batch per call.
-    var chunks: Iterator[Array[Byte]] = null // built on first drain: query
-    var done = false //                         errors surface via onError
+    var stream: Iterator[Array[Byte]] = null // built on first drain: query
+    var chunks: Iterator[Array[Byte]] = null // errors surface via onError
+    var done = false
+    // Ends the drain and closes the stream: a statement running on this
+    // call's thread (GraftArrow's inline task) releases its memory and
+    // block locks now; a Spark-job stream's close does nothing, and its
+    // lazy iterator is abandoned.
+    def cancel(): Unit = {
+      done = true
+      stream match {
+        case c: AutoCloseable => c.close()
+        case _ =>
+      }
+    }
     val drain: Runnable = () =>
       if (!done) {
         try {
           if (chunks == null) {
             val ticketBytes = Ticket.fromBytes(reqBytes).ticket
-            chunks = metaDf(anyOf(ticketBytes)) match {
-              case Some(df) =>
-                org.apache.spark.sql.GraftArrow.stream(df, 10000).filterNot(isEos)
+            stream = metaDf(anyOf(ticketBytes)) match {
+              case Some(df) => org.apache.spark.sql.GraftArrow.stream(df, 10000)
               case None =>
                 val sqlText = new String(ticketBytes, "UTF-8")
-                (if (sqlText == SqlInfoTicket)
+                if (sqlText == SqlInfoTicket)
                   org.apache.spark.sql.GraftArrow.stream(gateway.sqlInfo, 10000)
-                else gateway.arrowStream(sqlText)).filterNot(isEos)
+                else gateway.arrowStream(sqlText)
             }
+            chunks = stream.filterNot(isEos)
           }
           while (call.isReady && !call.isCancelled && chunks.hasNext) {
             val (header, body) = splitIpc(chunks.next())
             call.onNext(FlightData(header, body).toBytes)
           }
-          if (call.isCancelled) done = true
+          if (call.isCancelled) cancel()
           else if (!chunks.hasNext) {
             done = true
             call.onCompleted()
           }
         } catch {
           case e: Throwable =>
-            done = true
-            call.onError(toStatus(e).asRuntimeException())
+            try cancel() finally call.onError(toStatus(e).asRuntimeException())
         }
       }
     // a cancelled call never fires onReady again — without this handler a
     // drain suspended on flow control would leave the stream unfinalized
     // forever (and grpc-java only suppresses onNext-after-cancel throws
-    // when a cancel handler is registered). The lazy iterator is simply
-    // abandoned; its session-scoped resources go with the gateway.
-    call.setOnCancelHandler(() => done = true)
+    // when a cancel handler is registered)
+    call.setOnCancelHandler(() => cancel())
     call.setOnReadyHandler(drain)
     drain.run()
   }

@@ -21,11 +21,21 @@ object GraftArrow {
     * then the end-of-stream marker. Rows the driver already holds (a
     * LocalTableScanExec or CommandResultExec root: constants, catalog
     * listings, command output) are encoded on the driver with no Spark
-    * job, as Spark Connect's SparkConnectPlanExecution does; any other
-    * plan is pulled partition-at-a-time (incremental delivery like the
+    * job, as Spark Connect's SparkConnectPlanExecution does. Any other
+    * plan becomes an Arrow RDD. On a local master, an RDD of one
+    * partition with no shuffle in its lineage (a point lookup, a LIMIT
+    * scan over one file) runs on the calling thread as an
+    * [[InlineTask]]: it would be one task on this JVM anyway, so it
+    * skips only the job's scheduling round trip. Every other RDD is pulled
+    * partition-at-a-time by Spark's jobs (incremental delivery like the
     * reference's DoGet loop, main.go:241-243). The batch size goes
     * straight to the encoder: the session conf, which Flight and Thrift
     * share, is not touched.
+    *
+    * The iterator is also `AutoCloseable`. A caller that stops before
+    * the end must close it: an unfinished inline run holds its task's
+    * memory and block locks until then, and close releases it. On the
+    * other paths close does nothing.
     */
   def stream(df: Dataset[Row], maxRecordsPerBatch: Int): Iterator[Array[Byte]] = {
     val classic = df.asInstanceOf[ClassicDataFrame]
@@ -39,13 +49,27 @@ object GraftArrow {
           maxRecordsPerBatch, timeZoneId, errorOnDuplicatedFieldNames = true,
           largeVarTypes, context = null)
       case p =>
-        p.execute().mapPartitionsInternal { rows =>
+        val rdd = p.execute().mapPartitionsInternal { rows =>
           ArrowConverters.toBatchIterator(rows, schema, maxRecordsPerBatch,
             timeZoneId, errorOnDuplicatedFieldNames = true, largeVarTypes,
             org.apache.spark.TaskContext.get())
-        }.toLocalIterator
+        }
+        if (InlineTask.fits(rdd)) new InlineTask(rdd) else rdd.toLocalIterator
     }
-    Iterator(schemaIpc(df)) ++ batches ++ Iterator(EOS)
+    new IpcStream(schemaIpc(df), batches)
+  }
+
+  /** The schema message, `batches`, then EOS; closing it closes
+    * `batches` when that is an [[InlineTask]]. */
+  private final class IpcStream(schema: Array[Byte], batches: Iterator[Array[Byte]])
+      extends Iterator[Array[Byte]] with AutoCloseable {
+    private val all = Iterator(schema) ++ batches ++ Iterator(EOS)
+    override def hasNext: Boolean = all.hasNext
+    override def next(): Array[Byte] = all.next()
+    override def close(): Unit = batches match {
+      case t: InlineTask => t.close()
+      case _ =>
+    }
   }
 
   /** Decode an IPC-encapsulated Schema message (what schemaIpc /
@@ -114,5 +138,114 @@ object GraftArrow {
     org.apache.arrow.vector.ipc.message.MessageSerializer.serialize(
       new org.apache.arrow.vector.ipc.WriteChannel(ch), arrowSchema)
     out.toByteArray
+  }
+}
+
+/** The one partition of `rdd` run on the calling thread, as Executor's
+  * TaskRunner would run it: a `TaskContextImpl` with a fresh
+  * `TaskMemoryManager` and `TaskMetrics`, the calling thread's local
+  * properties (what a job's task receives) and a task-attempt id
+  * registered with the block manager (broadcast reads take block locks
+  * under it). No SparkListener event is posted; the task's metrics stay
+  * on the context.
+  *
+  * The context is the thread's `TaskContext` only inside each
+  * `hasNext`/`next`/`close` call: the caller may pull from a different
+  * thread each time (gRPC's onReady), and a context left behind would
+  * make `SQLConf.get` on that thread read the task's properties instead
+  * of the session's conf. The thread's input-file block (what
+  * `input_file_name()` reads) travels with the run the same way.
+  *
+  * The task is released exactly once, when the partition is exhausted,
+  * throws, or the iterator is closed: completion (and, on an error,
+  * failure) listeners run first (the Parquet reader and the Arrow
+  * encoder's allocator close there), then the task's memory is freed,
+  * then its block locks are released. A caller never closes during a
+  * pull (gRPC serializes a call's callbacks), so close has no running
+  * scan to stop; every later pull sees the task released.
+  */
+private[sql] final class InlineTask(rdd: org.apache.spark.rdd.RDD[Array[Byte]])
+    extends Iterator[Array[Byte]] with AutoCloseable {
+  import org.apache.spark.{SparkEnv, TaskContext, TaskContextImpl}
+  import org.apache.spark.rdd.InputFileBlockHolder
+
+  private val env = SparkEnv.get
+  private val taskId = InlineTask.nextId.getAndIncrement()
+  env.blockManager.registerTask(taskId)
+  private val ctx = new TaskContextImpl(
+    stageId = 0, stageAttemptNumber = 0, partitionId = 0,
+    taskAttemptId = taskId, attemptNumber = 0, numPartitions = 1,
+    taskMemoryManager = new org.apache.spark.memory.TaskMemoryManager(
+      env.memoryManager, taskId),
+    localProperties = org.apache.spark.util.Utils.cloneProperties(
+      rdd.sparkContext.getLocalProperties),
+    metricsSystem = env.metricsSystem,
+    taskMetrics = org.apache.spark.executor.TaskMetrics.empty)
+
+  private var rows: Iterator[Array[Byte]] = _ // opened on the first pull
+  private var fileBlock: AnyRef = _
+  private var released = false
+
+  /** `f` with the task's context (and input-file block) on this thread. */
+  private def inTask[T](f: => T): T = {
+    TaskContext.setTaskContext(ctx)
+    if (fileBlock == null) InputFileBlockHolder.unset()
+    else InputFileBlockHolder.setThreadLocalValue(fileBlock)
+    try f
+    finally {
+      fileBlock = InputFileBlockHolder.getThreadLocalValue()
+      InputFileBlockHolder.unset()
+      TaskContext.unset()
+    }
+  }
+
+  /** `f` over the partition; an error releases the task, then rethrows. */
+  private def pull[T](f: Iterator[Array[Byte]] => T): T = inTask {
+    try {
+      if (rows == null) rows = rdd.iterator(rdd.partitions(0), ctx)
+      f(rows)
+    } catch {
+      case e: Throwable =>
+        try release(Some(e)) catch { case r: Throwable => e.addSuppressed(r) }
+        throw e
+    }
+  }
+
+  private def release(error: Option[Throwable]): Unit =
+    if (!released) {
+      released = true
+      try {
+        error.foreach(ctx.markTaskFailed)
+        ctx.markTaskCompleted(error)
+      } finally try {
+        ctx.taskMemoryManager.cleanUpAllAllocatedMemory()
+      } finally env.blockManager.releaseAllLocksForTask(taskId)
+    }
+
+  override def hasNext: Boolean =
+    !released && pull(r => r.hasNext || { release(None); false })
+
+  override def next(): Array[Byte] =
+    if (released) Iterator.empty.next() else pull(_.next())
+
+  override def close(): Unit = if (!released) inTask(release(None))
+}
+
+private[sql] object InlineTask {
+
+  /** Task-attempt ids counted up from Long.MinValue: the scheduler's
+    * count up from 0, and BlockInfoManager's non-task writer is -1024. */
+  private val nextId = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+
+  /** On a local master (the driver is the executor), an RDD of one
+    * partition whose lineage holds no shuffle runs as one task either
+    * way; AQE's final stage and TakeOrderedAndProject over several
+    * partitions read a shuffle, so they keep Spark's job path. */
+  def fits(rdd: org.apache.spark.rdd.RDD[_]): Boolean = {
+    def shuffles(r: org.apache.spark.rdd.RDD[_]): Boolean = r.dependencies.exists {
+      case _: org.apache.spark.ShuffleDependency[_, _, _] => true
+      case d => shuffles(d.rdd)
+    }
+    rdd.sparkContext.isLocal && rdd.partitions.length == 1 && !shuffles(rdd)
   }
 }

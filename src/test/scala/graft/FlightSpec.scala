@@ -332,6 +332,17 @@ class FlightSpec extends AnyFunSuite {
     } finally channel.shutdownNow()
   }
 
+  test("a statement that fails while it streams answers INTERNAL with its error class") {
+    // one partition, no shuffle: the scan runs on the call's own thread
+    val e = intercept[org.sparkproject.connect.grpc.StatusRuntimeException](
+      client.doGetSql("SELECT CAST(o_orderstatus AS INT) FROM orders"))
+    assert(e.getStatus.getCode == org.sparkproject.connect.grpc.Status.Code.INTERNAL)
+    assert(e.getStatus.getDescription.contains("CAST_INVALID_INPUT"),
+      e.getStatus.getDescription)
+    assert(client.doGetSql("SELECT o_orderkey FROM orders WHERE o_orderkey = 7")
+      .rows.map(_.head.toString) == Seq("7"))
+  }
+
   test("Flight SQL prepared statement: $0 fails the NULL-bound schema probe") {
     // placeholders number from 1; the unbound GetFlightInfo must answer
     // with an error, not bind without end

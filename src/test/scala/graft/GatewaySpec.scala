@@ -161,6 +161,17 @@ class GatewaySpec extends AnyFunSuite {
     assert(br.getAs[scala.collection.Seq[scala.collection.Seq[Int]]]("n").map(_.toSeq).toSeq
       == Seq(Seq(1), Seq(2)))
     assert(br.getAs[Int]("s") == 2)
+    // a list index of any integral type; a BIGINT outside INT is NULL
+    // (duckdb 1.0.0, where generate_series yields BIGINT)
+    def v(sql: String) = one(sql).get(0)
+    assert(v("SELECT (['a','b','c'])[CAST(2 AS BIGINT)]") == "b")
+    assert(v("SELECT (['a','b','c'])[CAST(2 AS SMALLINT)]") == "b")
+    assert(v("SELECT (['a','b','c'])[CAST(-2 AS TINYINT)]") == "b")
+    assert(v("SELECT (['a','b','c'])[5000000000]") == null)
+    assert(v("SELECT (['a','b','c'])[CAST(-5000000000 AS BIGINT)]") == null)
+    assert(v("SELECT (['a','b','c'])[-1]") == "c")
+    assert(v("SELECT list_transform(generate_series(1, 3), i -> (['a','b','c'])[i])")
+      .asInstanceOf[scala.collection.Seq[String]] == Seq("a", "b", "c"))
 
     // json arrow chains, literal and identifier LHS; lambda arrows survive
     val js = one("""SELECT '{"a": {"b": 7}}' -> 'a' ->> 'b' AS v,
@@ -2293,6 +2304,29 @@ class GatewaySpec extends AnyFunSuite {
     assert(seen.nonEmpty && seen.forall(_ == 5L), seen.distinct)
   }
 
+  test("WITH RECURSIVE … UNION: the step reads each new row once, whatever its fan-out") {
+    // closure of a 20-node clique: 400 pairs, and each step multiplies
+    // its input by 20. One step per round reads the 20 seed rows, then
+    // the 380 new ones; four unrolled steps would read 168,420 rows in
+    // the first round alone (dd_components read billions that way)
+    val read = spark.sparkContext.longAccumulator("step input rows")
+    gw.session.udf.register("graft_test_counted",
+      org.apache.spark.sql.functions.udf { (b: Long) => read.add(1); b }
+        .asNondeterministic())
+    val n = gw.sql(
+      """WITH RECURSIVE n(v) AS (SELECT unnest(generate_series(0, 19))),
+        |e(src, dst) AS (SELECT a.v, b.v FROM n a, n b),
+        |r(a, b) AS (
+        |  SELECT v, v FROM n
+        |  UNION
+        |  SELECT r.a, e.dst
+        |  FROM (SELECT a, graft_test_counted(b) AS b FROM r) r
+        |  JOIN e ON r.b = e.src)
+        |SELECT count(*) FROM r""".stripMargin).collect()(0).getLong(0)
+    assert(n == 400L)
+    assert(read.value <= 800L, s"the step read ${read.value} rows")
+  }
+
   test("read-only: a write behind a WITH clause is refused") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ro")
     val out = dir.resolve("out")
@@ -2560,23 +2594,21 @@ class GatewaySpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  /** (columns, rows as strings, batch count) of an Arrow IPC stream. */
+  /** (columns, rows as strings, batch count) of an Arrow IPC stream,
+    * decoded by Spark's own Arrow reader so each cell renders as in
+    * `collect()`. */
   private def decode(chunks: Iterator[Array[Byte]]): (Seq[String], Seq[Seq[String]], Int) = {
-    import scala.jdk.CollectionConverters._
-    val alloc = new org.apache.arrow.memory.RootAllocator()
-    val rdr = new org.apache.arrow.vector.ipc.ArrowStreamReader(
-      new java.io.ByteArrayInputStream(chunks.reduce(_ ++ _)), alloc)
-    try {
-      val root = rdr.getVectorSchemaRoot
-      val rows = Seq.newBuilder[Seq[String]]
-      var batches = 0
-      while (rdr.loadNextBatch()) {
-        batches += 1
-        val vs = root.getFieldVectors.asScala.toSeq
-        (0 until root.getRowCount).foreach(i => rows += vs.map(v => String.valueOf(v.getObject(i))))
-      }
-      (root.getSchema.getFields.asScala.map(_.getName).toSeq, rows.result(), batches)
-    } finally { rdr.close(); alloc.close() }
+    import org.apache.spark.sql.GraftArrow
+    val all = chunks.toSeq
+    val schema = GraftArrow.sparkSchemaFromIpc(all.head)
+    val batches = all.tail.filterNot(java.util.Arrays.equals(_, GraftArrow.EOS))
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    val rows = GraftArrow.rowsFromBatches(batches.iterator, schema,
+      gw.session.sessionState.conf.sessionLocalTimeZone).map { r =>
+      toRow(r).asInstanceOf[org.apache.spark.sql.Row].toSeq.map(String.valueOf)
+    }.toSeq
+    (schema.fieldNames.toSeq, rows, batches.length)
   }
 
   private def strings(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
@@ -2584,11 +2616,21 @@ class GatewaySpec extends AnyFunSuite {
 
   test("constant and catalog statements run no Spark job, with the same rows") {
     val extensions = "SELECT extension_name FROM duckdb_extensions() WHERE installed"
-    for (q <- Seq("SELECT 1 AS a", extensions, "PRAGMA version")) {
+    // the point lookup and the LIMIT scan read one partition with no
+    // shuffle, so GraftArrow runs that partition on the calling thread
+    for (q <- Seq("SELECT 1 AS a", extensions, "PRAGMA version",
+        "SELECT * FROM orders WHERE o_orderkey = 7",
+        "SELECT * FROM part WHERE p_partkey >= 3 ORDER BY p_partkey LIMIT 5")) {
       val expected = (gw.sql(q).columns.toSeq, strings(gw.sql(q)))
       val ((columns, rows, _), jobs) = jobsOf(decode(gw.arrowStream(q)))
-      withClue(q) { assert(((columns, rows), jobs) == ((expected, 0))) }
+      withClue(q) { assert(((columns, rows), jobs) == ((expected, 0)) && rows.nonEmpty) }
     }
+    // micro's nation⋈region aggregate shuffles: it keeps Spark's jobs
+    val agg = "SELECT r_name, count(*) AS nations, max(n_nationkey) AS max_key " +
+      "FROM nation JOIN region ON n_regionkey = r_regionkey " +
+      "WHERE n_nationkey >= 3 GROUP BY r_name ORDER BY r_name"
+    val ((_, aggRows, _), aggJobs) = jobsOf(decode(gw.arrowStream(agg)))
+    assert(aggRows == strings(gw.sql(agg)) && aggJobs >= 1)
     assert(strings(gw.sql("SELECT 1 AS a")) == Seq(Seq("1")))
     assert(strings(gw.sql(extensions)).nonEmpty)
     val server = graft.flight.FlightServer.start(gw, 0)
@@ -2604,17 +2646,59 @@ class GatewaySpec extends AnyFunSuite {
     val key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     gw.session.conf.set(key, "777")
     try {
-      // a partition-at-a-time plan and a driver-resident one
-      for (q <- Seq("SELECT r_regionkey FROM region",
-          "SELECT * FROM VALUES (0), (1), (2), (3), (4) AS t(r_regionkey)")) {
-        val (columns, rows, batches) = decode(gw.arrowStream(q, 2))
+      // a plan that runs inline (one partition, no shuffle), one that
+      // runs as Spark jobs (GROUP BY shuffles) and a driver-resident one
+      for ((q, jobs) <- Seq("SELECT r_regionkey FROM region" -> 0,
+          "SELECT r_regionkey FROM region GROUP BY r_regionkey" -> 1,
+          "SELECT * FROM VALUES (0), (1), (2), (3), (4) AS t(r_regionkey)" -> 0)) {
+        val ((columns, rows, batches), ran) = jobsOf(decode(gw.arrowStream(q, 2)))
         withClue(q) {
           assert(gw.session.conf.get(key) == "777")
           assert(columns == Seq("r_regionkey") && rows.map(_.head.toInt).sorted == (0 to 4))
-          assert(batches == 3)
+          assert(batches == 3 && (ran > 0) == (jobs > 0))
         }
       }
     } finally gw.session.conf.unset(key)
+  }
+
+  test("an inline run leaves no task context or Arrow memory behind, however it ends") {
+    import org.apache.spark.TaskContext
+    import org.apache.spark.sql.ArrowAllocation
+    /** `end` leaves this thread without a TaskContext and the Arrow
+      * allocator where it was. */
+    def settled(end: => Unit): Unit = {
+      val before = ArrowAllocation.bytes
+      end
+      assert(TaskContext.get() == null)
+      assert(ArrowAllocation.bytes == before)
+    }
+    // drained
+    val point = "SELECT * FROM orders WHERE o_orderkey = 7"
+    gw.sql(point) // opens the gateway outside the count
+    settled {
+      val (_, jobs) = jobsOf(gw.arrowStream(point).foreach(_ => ()))
+      assert(jobs == 0)
+    }
+    // closed after its first batch: the encoder's allocator is open then
+    settled {
+      val it = gw.arrowStream("SELECT * FROM orders", 2)
+      it.next() // the schema
+      it.next()
+      assert(TaskContext.get() == null && ArrowAllocation.bytes > 0)
+      it.asInstanceOf[AutoCloseable].close()
+      // the rest of the partition is dropped; only the end marker is left
+      assert(it.toSeq.map(_.toSeq) == Seq(org.apache.spark.sql.GraftArrow.EOS.toSeq))
+    }
+    // failed: ANSI casts 'F' to INT with an error (set here: an earlier
+    // test may leave the shared session non-ANSI)
+    val ansi = "spark.sql.ansi.enabled"
+    val wasAnsi = gw.session.conf.getOption(ansi)
+    gw.session.conf.set(ansi, "true")
+    try settled {
+      val e = intercept[Exception](
+        gw.arrowStream("SELECT CAST(o_orderstatus AS INT) FROM orders").foreach(_ => ()))
+      assert(e.getMessage.contains("CAST_INVALID_INPUT"), e.getMessage)
+    } finally wasAnsi.fold(gw.session.conf.unset(ansi))(gw.session.conf.set(ansi, _))
   }
 
   test("SHOW ALL TABLES answers DuckDB 1.0's layout") {

@@ -24,12 +24,6 @@ class ServedOracleSpec extends AnyFunSuite {
   import TestSpark._
 
   private val knownFailures: Set[String] = Set(
-    // graft_subscript inside a lambda: "cannot resolve the runtime
-    // replaceable expression"
-    "dd_components", "dd_containment", "dd_incremental",
-    "dd_incremental_indexed", "dd_incremental_lookup", "dd_minhash_lsh",
-    "dd_ngram_jaccard", "pipe_compact", "tx_bigram_lm", "tx_decontaminate",
-    "tx_repetition", "tx_span_dedup",
     // a generator nested in an expression
     "a17_histogram", "mm_phash_dedup", "pipe_leakage", "t1_date_series", "tx_chunk",
     // POSITIONAL JOIN does not parse
