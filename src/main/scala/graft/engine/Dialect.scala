@@ -27,7 +27,7 @@ object Dialect {
     */
   private val passes: Seq[String => String] = Seq(
     foldLiterals, // FIRST: later scanners assume '…' string syntax
-    normalizeWs, rewriteStatements, rewriteFileScans, rewriteBlob, rewriteArrayTypeSuffix,
+    normalizeWs, rewriteStatements, rewriteMarkers, rewriteFileScans, rewriteBlob, rewriteArrayTypeSuffix,
     rewriteTrailingCommas, rewriteEmptyGroupBy,
     rewriteBraceLiterals, rewriteArrayCtor, rewriteBrackets,
     rewriteNamedArgCalls, rewriteIgnoreNulls,
@@ -1683,8 +1683,22 @@ object Dialect {
     *    BEGIN/COMMIT) → the empty `Success BOOLEAN` relation DuckDB 1.0
     *    answers on a read-only database; at statement start only
     *    (DuckDB reads `(begin)` as a column).
+    * DuckDB's session statements become Spark's session variables, at
+    * statement start only, so every entry point keeps them alike:
+    *  - `SET VARIABLE x = e` → `DECLARE OR REPLACE VARIABLE x DEFAULT e`
+    *    (evaluated once, typed by its value; Spark refuses a subquery
+    *    there) and `RESET VARIABLE x` → `DROP TEMPORARY VARIABLE IF EXISTS
+    *    x`; `getvariable('x')` reads it (Functions.register);
+    *  - `PREPARE p AS body` stores the body's text in the variable
+    *    `preparedVariable(p)`, `EXECUTE p(a, k := v)` →
+    *    `EXECUTE IMMEDIATE <variable> USING a AS _1, v AS k` (the body's
+    *    `$1` and `$k` are `:_1` and `:k`, rewriteMarkers; its `?` bind
+    *    by position) and `DEALLOCATE [PREPARE] p` drops the variable. The
+    *    body is parsed at EXECUTE, so the gateway's two-pass forms
+    *    (Gateway.sql) do not apply inside it.
     * Spark's own forms (`SHOW TABLES IN x`, `SHOW FUNCTIONS`, `DESCRIBE
-    * FUNCTION f`, `DESCRIBE SELECT …`) stay as they are.
+    * FUNCTION f`, `DESCRIBE SELECT …`, `SET VAR x = e`, `EXECUTE
+    * IMMEDIATE …`) stay as they are.
     */
   private def rewriteStatements(sql: String): String = {
     var prev = '(' // the last code char before i; the text start counts as `(`
@@ -1710,7 +1724,8 @@ object Dialect {
 
   private val statementWords = Seq("PRAGMA", "SHOW", "DESCRIBE", "DESC",
     "SUMMARIZE", "UNPIVOT", "BEGIN", "COMMIT", "ROLLBACK", "ABORT",
-    "ANALYZE", "VACUUM", "CHECKPOINT", "FORCE")
+    "ANALYZE", "VACUUM", "CHECKPOINT", "FORCE", "SET", "RESET", "PREPARE",
+    "EXECUTE", "DEALLOCATE")
   /** Words after SHOW/DESCRIBE that name Spark's own statements. */
   private val showKeywords = Set(
     "TABLES", "DATABASES", "SCHEMAS", "VIEWS", "FUNCTIONS", "CATALOGS",
@@ -1723,6 +1738,17 @@ object Dialect {
   private val summarizeRe = ("""(?is)^SUMMARIZE\s+([\w.]+)""" + stmtEnd).r
   private val noOpRe = ("""(?is)^(?:BEGIN(?:\s+TRANSACTION)?|COMMIT|ROLLBACK|ABORT|""" +
     """ANALYZE|VACUUM(?:\s+ANALYZE)?|(?:FORCE\s+)?CHECKPOINT(?:\s+\w+)?)""" + stmtEnd).r
+  private val setVariableRe = ("""(?is)^SET\s+VARIABLE\s+(\w+)\s*=\s*(.+?)""" + stmtEnd).r
+  private val resetVariableRe = ("""(?is)^RESET\s+VARIABLE\s+(\w+)""" + stmtEnd).r
+  private val prepareRe = ("""(?is)^PREPARE\s+(\w+)\s+AS\s+(.+?)""" + stmtEnd).r
+  private val executeRe = ("""(?is)^EXECUTE\s+(\w+)\s*(?:\((.*)\))?""" + stmtEnd).r
+  private val deallocateRe = ("""(?is)^DEALLOCATE\s+(?:PREPARE\s+)?(\w+)""" + stmtEnd).r
+  private val namedArgRe = """(?s)(\w+)\s*:=(.*)""".r
+
+  /** The session variable holding prepared statement `name`'s text. */
+  private[graft] def preparedVariable(name: String): String =
+    "graft_prepared_" + name.toLowerCase
+
   private val unpivotTailRe =
     """(?is)^\s+ON\s+(.+?)\s+INTO\s+NAME\s+(\w+)\s+VALUE\s+(\w+)\b""".r
   private val unpivotEntryRe = """(?is)^[\w.]+(?:\s+AS\s+\w+)?$""".r
@@ -1750,6 +1776,21 @@ object Dialect {
         all(s"SELECT * FROM pragma_show('$t')")
       case summarizeRe(t) => all(s"SELECT * FROM summarize('$t')")
       case noOpRe() if atStart => all("SELECT CAST(NULL AS BOOLEAN) AS Success LIMIT 0")
+      case setVariableRe(name, e) if atStart =>
+        all(s"DECLARE OR REPLACE VARIABLE $name DEFAULT $e")
+      case resetVariableRe(name) if atStart => all(s"DROP TEMPORARY VARIABLE IF EXISTS $name")
+      case prepareRe(name, body) if atStart =>
+        all(s"DECLARE OR REPLACE VARIABLE ${preparedVariable(name)} STRING " +
+          s"DEFAULT '${body.replace("'", "''")}'")
+      case executeRe(name, args) if atStart =>
+        val values = Option(args).flatMap(a => splitCallArgs(s"($a)", 0))
+          .fold(Seq.empty[String])(_._1).map(_.trim).filter(_.nonEmpty)
+        val (named, positional) = values.partition(namedArgRe.matches)
+        val using = positional.zipWithIndex.map { case (v, i) => s"$v AS _${i + 1}" } ++
+          named.collect { case namedArgRe(k, v) => s"$v AS ${k.toLowerCase}" }
+        all(s"EXECUTE IMMEDIATE ${preparedVariable(name)}" +
+          (if (using.isEmpty) "" else using.mkString(" USING ", ", ", "")))
+      case deallocateRe(name) if atStart => all(s"DROP TEMPORARY VARIABLE ${preparedVariable(name)}")
       case _ if keywordAt(stmt, 0, "UNPIVOT") =>
         val relAt = skipBlank(stmt, 7)
         var relEnd = relAt // a parenthesized query or a (qualified) name
@@ -2181,11 +2222,8 @@ object Dialect {
     * pass; the substituted literal is opaque to later scans. */
   private val currentQueryRe = """(?is)^CURRENT_QUERY\s*\(\s*\)""".r
 
-  /** `original` is the statement text to REPORT — DuckDB returns the
-    * text as the user typed it, so the gateway passes the pre-
-    * getvariable-substitution form while scanning the expanded form. */
-  def substituteCurrentQuery(sql: String, original: String): String = {
-    lazy val lit = "'" + original.replace("'", "''") + "'"
+  def substituteCurrentQuery(sql: String): String = {
+    lazy val lit = "'" + sql.replace("'", "''") + "'"
     scanOutsideLiterals(sql) { (i, sb) =>
       if (!(wordStart(sql, i) &&
           sql.regionMatches(true, i, "CURRENT_QUERY", 0, 13))) i
@@ -2196,26 +2234,63 @@ object Dialect {
     }
   }
 
-  /** DuckDB 1.1 `getvariable('name')` — resolved by the GATEWAY (the
-    * variable store is per-session state), substituting the stored SQL
-    * literal text, or NULL when unset (DuckDB's behavior). Literal
-    * argument only; runs before every other rewrite so the substituted
-    * literal flows through raw-string doubling like user text.
+  /** DuckDB's placeholders as Spark's parameter markers, outside
+    * literals and comments: `$n` → `:_n`, `$name` → `:name`, and `?`
+    * stays Spark's positional marker. Spark binds the values
+    * (`spark.sql(text, values, names)`, EXECUTE IMMEDIATE … USING). Each
+    * marker is parenthesized, so the operand finders of later passes
+    * (`$1::INT`, `?[2]`) see one operand. `$0` is refused: DuckDB numbers
+    * from 1.
     */
-  private val getVarRe =
-    """(?is)^GETVARIABLE\s*\(\s*'([^']*)'\s*\)""".r
-  def substituteGetVariable(sql: String,
-      resolve: String => Option[String]): String =
+  private def rewriteMarkers(sql: String): String =
+    if (sql.indexOf('$') < 0 && sql.indexOf('?') < 0) sql
+    else markers(sql, numberPositional = false)(_ => ())
+
+  /** `sql` with every placeholder named — a `?` as `:_n`, n being one
+    * past the highest number before it (DuckDB 1.0's numbering: `$1, ?`
+    * is `$1, $2`, `?, $1` is `$1, $1`), the rest as rewriteMarkers
+    * writes them — and the names in order of first use: the form a value
+    * list named `_1`, `_2`, … binds to, also in a statement the gateway
+    * splits, and the names a NULL-bound schema probe needs.
+    */
+  private[graft] def namedMarkers(sql: String): (String, Seq[String]) = {
+    val names = scala.collection.mutable.LinkedHashSet.empty[String]
+    val text = markers(foldLiterals(sql), numberPositional = true)(names += _)
+    (text, names.toSeq)
+  }
+
+  private def markers(sql: String, numberPositional: Boolean)(
+      named: String => Unit): String = {
+    var highest = 0
     scanOutsideLiterals(sql) { (i, sb) =>
-      if (wordStart(sql, i) &&
-          sql.regionMatches(true, i, "GETVARIABLE", 0, 11))
-        getVarRe.findPrefixMatchOf(sql.substring(i)) match {
-          case Some(m) =>
-            sb.append(resolve(m.group(1)).getOrElse("NULL")); i + m.end
-          case None => i
+      val c = sql.charAt(i)
+      val marker =
+        if (c == '?') {
+          highest += 1
+          Some((if (numberPositional) s":_$highest" else "?", i + 1))
+        } else if (c != '$' || !wordStart(sql, i)) None
+        else {
+          val end = wordEnd(sql, i + 1)
+          val word = sql.substring(i + 1, end)
+          if (word.isEmpty) None
+          else if (word.forall(_.isDigit)) {
+            val n = word.toIntOption.getOrElse(0)
+            if (n < 1) throw new GatewayException(
+              s"invalid prepared statement parameter $$$word: parameters number from $$1")
+            highest = math.max(highest, n)
+            Some((s":_$n", end))
+          } else if (word.head.isDigit) None
+          else Some((":" + word.toLowerCase, end))
         }
-      else i
+      marker match {
+        case Some((m, end)) =>
+          if (m != "?") named(m.tail)
+          sb.append('(').append(m).append(')')
+          end
+        case None => i
+      }
     }
+  }
 
   private val globRe =
     """(?i)^GLOB\s+'([^']*)'""".r

@@ -2673,6 +2673,16 @@ object Functions {
         }
       reg.createOrReplaceTempFunction(name, combined, "internal")
     }
+    // DuckDB 1.1 `getvariable('x')`: this session's variable x (SET
+    // VARIABLE lowers to DECLARE OR REPLACE VARIABLE), NULL when unset
+    reg.createOrReplaceTempFunction("getvariable", {
+      case Seq(Literal(name: org.apache.spark.unsafe.types.UTF8String, _)) =>
+        val key = if (spark.sessionState.conf.caseSensitiveAnalysis) name.toString
+          else name.toString.toLowerCase(java.util.Locale.ROOT)
+        spark.sessionState.catalogManager.tempVariableManager.get(Seq(key))
+          .fold(Literal(null))(_.currentValue)
+      case _ => throw new GatewayException("getvariable: the argument must be a string literal")
+    }, "internal")
     registeredSessions.add(spark)
   }
 }

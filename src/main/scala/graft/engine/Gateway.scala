@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, GraftPlans, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 
 /** The serving surface: SQL-string in → DataFrame / Arrow batches out,
   * mirroring the reference's DoGet contract
@@ -25,11 +26,13 @@ import org.apache.spark.sql.{DataFrame, GraftPlans, SparkSession}
   * reference's test surface runs unchanged on every entry point of the
   * session. The parser also lowers DuckDB's stateless statements (PRAGMA,
   * SHOW, DESCRIBE t, SUMMARIZE, UNPIVOT, the transaction and maintenance
-  * no-ops) to queries. This class handles only what needs session state
-  * or a second pass, on the pre-parse text: session variables, secrets,
-  * extensions, prepared statements, macros, ATTACH, dynamic PIVOT, UNION
-  * BY NAME, `LIMIT n%`, bare-UNION recursion, `DESCRIBE <query>` and
-  * EXPLAIN ANALYZE.
+  * no-ops) to queries, and session variables and PREPARE/EXECUTE to
+  * Spark's session variables and EXECUTE IMMEDIATE. This class handles
+  * only what needs other session state or a second pass, on the
+  * pre-parse text: secrets, extensions, macros, ATTACH, dynamic PIVOT,
+  * UNION BY NAME, `LIMIT n%`, bare-UNION recursion, `DESCRIBE <query>`
+  * and EXPLAIN ANALYZE. Values bind through Spark (`sql(text, params)`),
+  * never as text.
   */
 final class Gateway private (val session: SparkSession, readOnly: Boolean) {
 
@@ -56,7 +59,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       "CREATE OR REPLACE TEMP VIEW", "CREATE OR REPLACE TEMPORARY VIEW",
       "DROP VIEW", "TABLE", "FROM", "ATTACH", "PRAGMA", "SUMMARIZE",
       "UNPIVOT", "BEGIN", "COMMIT", "ROLLBACK", "ABORT", "ANALYZE", "VACUUM",
-      "CHECKPOINT", "FORCE CHECKPOINT")
+      "CHECKPOINT", "FORCE CHECKPOINT", "PREPARE", "EXECUTE", "DEALLOCATE")
 
   // quote marks must MATCH (backreference): INSTALL 'airport" falls
   // through to the parser's error instead of silently succeeding
@@ -122,9 +125,10 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     * result, whose plan stands in for the placeholder relation (no temp
     * view, no lock).
     */
-  private def queryOver(df: DataFrame, tail: String): DataFrame =
+  private def queryOver(df: DataFrame, tail: String,
+      params: Seq[(String, Literal)]): DataFrame =
     GraftPlans.ofRows(session, RecursiveSql.substitute(
-      GraftPlans.parsePlan(session, s"SELECT * FROM __graft_over $tail"),
+      GraftPlans.parsePlan(session, s"SELECT * FROM __graft_over $tail", params),
       Map("__graft_over" -> GraftPlans.analyzed(df))))
 
   /** The read-only gateway's first gate, on the statement's leading
@@ -140,35 +144,23 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
         s"read-only gateway: statement rejected (${up.takeWhile(_ != ' ')})")
   }
 
-  def sql(text: String): DataFrame = {
+  def sql(text: String): DataFrame = sql(text, Nil)
+
+  /** `text` with `params` bound by Spark: the values bind to `?` by
+    * position and to `:name` markers by name — DuckDB's `$1` and `$name`
+    * are `:_1` and `:name` (Dialect.rewriteMarkers), so the i-th of a
+    * positional value list is named `_i`.
+    */
+  def sql(text: String, params: Seq[(String, Literal)]): DataFrame = {
     // fold `$$…$$` and `e'…'` strings first: every scan below
-    // (Dialect.scanCode) knows only plain '…' literals. Then drop leading
-    // comments, so the anchored routes below see the statement's first word
-    val preVar = Dialect.dropLeadingComments(Dialect.foldLiterals(text.trim))
-    // DuckDB 1.1 session variables (SURVEY §5.3): SET VARIABLE
-    // evaluates its expression EAGERLY through the full pipeline and
-    // stores the result as SQL literal text; getvariable('x') is then
-    // substituted before any other processing, so the literal flows
-    // through raw-string doubling exactly like user-typed text.
-    preVar match {
-      case Gateway.setVarRe(name, ex) =>
-        val df = this.sql(s"SELECT (${ex.trim.stripSuffix(";").trim}) AS v")
-        val rows = df.limit(2).collect()
-        if (rows.length != 1)
-          throw new GatewayException(
-            s"SET VARIABLE: expression must yield exactly one row, got ${rows.length}")
-        sessionVars.put(name.toLowerCase, Gateway.varLiteral(rows.head.get(0)))
-        return success
-      case Gateway.resetVarRe(name) =>
-        sessionVars.remove(name.toLowerCase)
-        return success
-      case _ =>
-    }
-    // current_query() reports the ORIGINAL text (pre variable
-    // expansion), matching DuckDB's statement-text semantics
-    val trimmed = Dialect.substituteCurrentQuery(
-      Dialect.substituteGetVariable(preVar,
-        n => Option(sessionVars.get(n.toLowerCase))), text.trim)
+    // (Dialect.scanCode) knows only plain '…' literals. current_query()
+    // reports the statement as sent. With values to bind, each `?` takes
+    // its number (`:_k`), so a statement split below keeps it. Then drop
+    // leading comments, so the anchored routes below see the statement's
+    // first word
+    val stated = Dialect.substituteCurrentQuery(Dialect.foldLiterals(text.trim))
+    val trimmed = Dialect.dropLeadingComments(
+      if (params.isEmpty) stated else Dialect.namedMarkers(stated)._1)
     secretStatement(trimmed) match {
       case Some(props) => return applySecret(props)
       case None =>
@@ -185,33 +177,15 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       // column_type, null, key, default, extra) of the query's schema;
       // `DESCRIBE t` lowers in the parser (Dialect.rewriteStatements)
       case describeSelectRe(body) =>
-        return TableFunctions.describe(session, this.sql(body).schema)
+        return TableFunctions.describe(session, this.sql(body, params).schema)
       case explainAnalyzeRe(body) =>
         // DuckDB EXPLAIN ANALYZE runs the query; report the EXECUTED
         // physical plan (AQE-final) in DuckDB's two-column shape
-        val df = this.sql(body)
+        val df = this.sql(body, params)
         df.write.format("noop").mode("overwrite").save()
         import session.implicits._
         return Seq(("analyzed_plan", df.queryExecution.executedPlan.toString))
           .toDF("explain_key", "explain_value")
-      case _ =>
-    }
-    // PREPARE / EXECUTE / DEALLOCATE — session-scoped prepared
-    // statements ($1/$name/? placeholders). Every flightsql/ADBC client
-    // that parameterizes queries prepares under the hood (the
-    // reference's Go client path, client/main.go:21-27, via
-    // database/sql). EXECUTE re-enters the full gateway pipeline, so
-    // read-only classification applies to the BOUND statement.
-    trimmed match {
-      case prepareRe(name, body) =>
-        prepared.put(name.toLowerCase, body.trim)
-        return success
-      case executeRe(name, argText) =>
-        return this.sql(bindPrepared(name, Option(argText)))
-      case deallocRe(name) =>
-        if (prepared.remove(name.toLowerCase) == null)
-          throw new GatewayException(s"prepared statement not found: $name")
-        return success
       case _ =>
     }
     // CREATE/DROP MACRO — session-scoped like CREATE VIEW (D6), so the
@@ -227,6 +201,9 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       case _ =>
     }
     val expanded = expandColumnsExpr(expandMacros(trimmed))
+    // PREPARE keeps its body as text for EXECUTE (the parser lowers both
+    // onto a session variable): the two-pass forms below do not apply
+    if (Dialect.keywordAt(expanded, 0, "PREPARE")) return query(expanded, params)
     // `a UNION [ALL] BY NAME b [ORDER BY … LIMIT …]`: Spark has
     // unionByName only in the DataFrame API — split at the top level,
     // run each side through the full gateway path, and re-apply any
@@ -234,10 +211,10 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
     splitUnionByName(expanded) match {
       case Some((left, right, keepAll)) =>
         val (rightBody, tail) = splitTopLevelTail(right)
-        var df = this.sql(left).unionByName(
-          this.sql(rightBody), allowMissingColumns = true)
+        var df = this.sql(left, params).unionByName(
+          this.sql(rightBody, params), allowMissingColumns = true)
         if (!keepAll) df = df.distinct()
-        return if (tail.isEmpty) df else queryOver(df, tail)
+        return if (tail.isEmpty) df else queryOver(df, tail, params)
       case None =>
     }
     // DuckDB `PIVOT t ON c USING agg [GROUP BY g] [ORDER BY …] [LIMIT n]`
@@ -269,7 +246,7 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
       if (using.trim.toLowerCase.startsWith("count")) df = df.na.fill(0L)
       val tailText = Seq(Option(orderBy), Option(limit)).flatten
         .map(_.trim).mkString(" ")
-      if (tailText.isEmpty) df else queryOver(df, tailText)
+      if (tailText.isEmpty) df else queryOver(df, tailText, params)
     }
     expanded match {
       case pivotRe(tbl, onCol, using, groupBy, orderBy, limit) =>
@@ -339,31 +316,35 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
         return Seq((name, location)).toDF("attached", "location")
       case _ =>
     }
-    requireReadOnly(expanded)
-    // the session's parser (GraftSqlParser) applies Dialect.rewrite and
-    // ReadOnlyGuard. WITH RECURSIVE … UNION (bare): DuckDB-dialect dedup
-    // recursion. Spark 4.1's native recursive CTE covers only UNION ALL,
-    // so RecursiveSql runs the bare-UNION shape through the engine's
-    // semi-naive fixpoint (Recursive.fixpoint — identical semantics:
-    // each round's working table is the new distinct rows) and hands
-    // every other shape to Spark as parsed.
-    def query(text: String): DataFrame =
-      if (RecursiveSql.isRecursive(text)) RecursiveSql.sql(session, text)
-      else {
-        val df = session.sql(text)
-        df.queryExecution.assertAnalyzed() // structured failure before execution
-        df
-      }
     // DuckDB percentage LIMIT — `LIMIT n%` keeps floor(n% of the result
     // rows). Inherently two-pass (DuckDB materializes and counts
     // internally too): run the body, count, limit. The count is one
     // aggregate job, not a collect.
     pctLimit(expanded) match {
       case Some((body, pct)) =>
-        val base = query(body)
+        val base = query(body, params)
         val k = math.floor(base.count() * pct / 100.0).toLong
         base.limit(math.min(math.max(0L, k), Int.MaxValue.toLong).toInt)
-      case None => query(expanded)
+      case None => query(expanded, params)
+    }
+  }
+
+  /** The statement as the session parses it (GraftSqlParser applies
+    * Dialect.rewrite and ReadOnlyGuard), `params` bound by Spark, past
+    * the read-only gateway's first gate. WITH RECURSIVE … UNION (bare):
+    * DuckDB-dialect dedup recursion. Spark 4.1's native recursive CTE
+    * covers only UNION ALL, so RecursiveSql runs the bare-UNION shape
+    * through the engine's semi-naive fixpoint (Recursive.fixpoint —
+    * identical semantics: each round's working table is the new distinct
+    * rows) and hands every other shape to Spark as parsed.
+    */
+  private def query(text: String, params: Seq[(String, Literal)]): DataFrame = {
+    requireReadOnly(text)
+    if (RecursiveSql.isRecursive(text)) RecursiveSql.sql(session, text, params)
+    else {
+      val df = GraftPlans.sql(session, text, params)
+      df.queryExecution.assertAnalyzed() // structured failure before execution
+      df
     }
   }
 
@@ -397,42 +378,6 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
   // positionally; `name := default` params bind only by name
   // (DuckDB-verified). Table macros expand to parenthesized subqueries
   // in FROM position.
-
-  // ---- session variables (SET VARIABLE / getvariable, DuckDB 1.1) ----
-  // name → SQL literal text of the eagerly-evaluated value
-  private val sessionVars =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // ---- prepared statements (PREPARE / EXECUTE / DEALLOCATE) ----------
-  private val prepared =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val prepareRe = """(?is)^PREPARE\s+(\w+)\s+AS\s+(.+?);?\s*$""".r
-  private val executeRe =
-    """(?is)^EXECUTE\s+(\w+)\s*(?:\((.*)\))?\s*;?\s*$""".r
-  private val deallocRe =
-    """(?is)^DEALLOCATE\s+(?:PREPARE\s+)?(\w+)\s*;?\s*$""".r
-
-  /** The stored statement with EXECUTE's arguments bound (textually, at
-    * identifier/placeholder boundaries outside string literals — the
-    * same hygiene as macro expansion).
-    */
-  private def bindPrepared(name: String, argList: Option[String]): String = {
-    val body = Option(prepared.get(name.toLowerCase)).getOrElse(
-      throw new GatewayException(s"prepared statement not found: $name"))
-    val args: Seq[String] = argList.map { at =>
-      Dialect.splitCallArgs("(" + at + ")", 0) match {
-        case Some((as, _)) => as.map(_.trim).filter(_.nonEmpty)
-        case None =>
-          throw new GatewayException(s"EXECUTE $name: malformed argument list")
-      }
-    }.getOrElse(Seq.empty)
-    val (named, positional) = args.partition(_.matches("(?s)\\w+\\s*:=.*"))
-    val namedBind = named.map { a =>
-      val Array(k, v) = a.split(":=", 2)
-      (k.trim.toLowerCase, v.trim)
-    }.toMap
-    Gateway.bindPlaceholders(body, positional, namedBind)
-  }
 
   private case class SqlMacro(
       positional: Seq[String],
@@ -717,98 +662,6 @@ final class Gateway private (val session: SparkSession, readOnly: Boolean) {
 final class GatewayException(msg: String) extends RuntimeException(msg)
 
 object Gateway {
-
-  private[engine] val setVarRe =
-    """(?is)^SET\s+VARIABLE\s+(\w+)\s*=\s*(.+)$""".r
-  private[engine] val resetVarRe =
-    """(?is)^RESET\s+VARIABLE\s+(\w+)\s*;?\s*$""".r
-
-  /** Render an evaluated variable value as SQL literal text for
-    * substitution into later statements. Strings use standard ''
-    * doubling ONLY — substitution happens before the raw-literal
-    * backslash pass, so backslashes get doubled downstream like any
-    * user-typed literal. Complex types are refused loudly (DuckDB
-    * stores them; this engine's variable surface is scalar). */
-  private[engine] def varLiteral(v: Any): String = v match {
-    case null => "NULL"
-    case s: String => "'" + s.replace("'", "''") + "'"
-    case b: Boolean => if (b) "true" else "false"
-    case n @ (_: Int | _: Long | _: Short | _: Byte) => n.toString
-    case d: Double =>
-      if (d.isNaN) "CAST('NaN' AS DOUBLE)"
-      else if (d == Double.PositiveInfinity) "CAST('Infinity' AS DOUBLE)"
-      else if (d == Double.NegativeInfinity) "CAST('-Infinity' AS DOUBLE)"
-      else s"CAST($d AS DOUBLE)"
-    case f: Float => varLiteral(f.toDouble)
-    case bd: java.math.BigDecimal => bd.toPlainString
-    case bd: BigDecimal => bd.underlying.toPlainString
-    case d: java.sql.Date => s"DATE '$d'"
-    case d: java.time.LocalDate => s"DATE '$d'"
-    case t: java.sql.Timestamp =>
-      s"TIMESTAMP '${t.toString.stripSuffix(".0")}'"
-    case t: java.time.LocalDateTime =>
-      s"TIMESTAMP '${t.toString.replace('T', ' ')}'"
-    case other => throw new GatewayException(
-      s"SET VARIABLE: unsupported value type ${other.getClass.getSimpleName}" +
-        " (scalar variables only)")
-  }
-
-  /** Substitute prepared-statement placeholders with argument SQL text,
-    * outside literals and comments: `$1`-style positionals, `$name`
-    * named parameters, and `?` in left-to-right order. Each value is
-    * parenthesized (textual binding hygiene, like macro expansion).
-    * Shared by EXECUTE and the Flight prepared-statement path.
-    */
-  private[graft] def bindPlaceholders(
-      text: String,
-      positional: Seq[String],
-      named: Map[String, String]): String =
-    bindWith(text, named) { (n, what) =>
-      if (n > positional.length)
-        throw new GatewayException(
-          s"prepared statement expects parameter $what but EXECUTE " +
-            s"supplied ${positional.length} argument(s)")
-      positional(n - 1)
-    }
-
-  /** The Flight pre-bind schema probe: every positional placeholder
-    * bound to NULL.
-    */
-  private[graft] def bindNulls(text: String): String =
-    bindWith(text, Map.empty)((_, _) => "NULL")
-
-  /** bindPlaceholders' scan: `positional(n, what)` gives the value of
-    * positional placeholder n >= 1 (`what` is its text, `$n` or `?`).
-    */
-  private def bindWith(text: String, named: Map[String, String])(
-      positional: (Int, String) => String): String = {
-    val body = Dialect.foldLiterals(text)
-    var qmark = 0
-    def positionalAt(n: Int, what: String): String = {
-      if (n < 1)
-        throw new GatewayException(s"invalid prepared statement parameter $what")
-      positional(n, what)
-    }
-    Dialect.scanOutsideLiterals(body) { (i, sb) =>
-      val c = body.charAt(i)
-      val next = if (i + 1 < body.length) body.charAt(i + 1) else ' '
-      val (end, value) =
-        if (c == '?') { qmark += 1; (i + 1, positionalAt(qmark, "?")) }
-        else if (c == '$' && next.isDigit) {
-          var j = i + 1
-          while (j < body.length && body.charAt(j).isDigit) j += 1
-          val what = body.substring(i, j)
-          (j, positionalAt(what.tail.toIntOption.getOrElse(0), what))
-        } else if (c == '$' && (next.isLetter || next == '_')) {
-          val j = Dialect.wordEnd(body, i + 1)
-          val name = body.substring(i + 1, j).toLowerCase
-          (j, named.getOrElse(name, throw new GatewayException(
-            s"prepared statement parameter $$$name was not supplied")))
-        } else (i, "")
-      if (end > i) sb.append(s"($value)")
-      end
-    }
-  }
 
   /** The closed statically-linked extension registry: (name, loaded,
     * installed) defaults. core entries ship loaded; httpfs (CREATE

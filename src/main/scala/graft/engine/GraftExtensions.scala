@@ -69,7 +69,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // per-statement fixed cost: a constant statement becomes rows the
     // driver holds (no Spark job), and statements that differ only in a
     // filter constant share one compiled class
-    ext.injectOptimizerRule(_ => FoldConstantSelect)
+    ext.injectPlannerStrategy(_ => FoldConstantSelect)
     ext.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
       override def preColumnarTransitions: org.apache.spark.sql.catalyst.rules.Rule[
         org.apache.spark.sql.execution.SparkPlan] = graft.engine.expressions.ParamLiterals
@@ -77,28 +77,28 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-/** `SELECT 1 AS a` — a Project of constants over OneRowRelation at the
-  * plan's root — becomes a LocalRelation, planned as LocalTableScanExec:
-  * its row is collected and Arrow-encoded on the driver, with no Spark
-  * job. Injected optimizer rules run after ConstantFolding in the same
-  * batch, so `SELECT 1 + 1 AS a` folds too; an expression ConstantFolding
-  * leaves alone (one that would raise) is no Literal and keeps its
-  * error. Root only: the optimizer runs a scalar subquery's plan under a
-  * `Subquery` root, and Spark inlines `(SELECT 1)` itself
-  * (OptimizeOneRowRelationSubquery).
+/** `SELECT 1 AS a` — a Project of constants over OneRowRelation — is
+  * planned as LocalTableScanExec: its row is collected and Arrow-encoded
+  * on the driver, with no Spark job. ConstantFolding has run by then, so
+  * `SELECT 1 + 1 AS a` plans so too; an expression ConstantFolding leaves
+  * alone (one that would raise) is no Literal and keeps its error. A
+  * planner strategy, not an optimizer rule: the optimized plan stays a
+  * Project, which Spark's parameter binding
+  * (`SparkSession.resolveAndValidateParameters`) casts its optimized
+  * argument list to.
   */
-object FoldConstantSelect
-    extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
+object FoldConstantSelect extends org.apache.spark.sql.execution.SparkStrategy {
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
-  import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, OneRowRelation, Project}
+  import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Project}
+  import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p @ Project(items, OneRowRelation()) =>
       val values = items.collect { case Alias(l: Literal, _) => l.value }
-      if (values.length < items.length) plan
-      else LocalRelation(p.output, Seq(InternalRow.fromSeq(values)))
-    case _ => plan
+      if (values.length < items.length) Nil
+      else LocalTableScanExec(p.output, Seq(InternalRow.fromSeq(values)), None) :: Nil
+    case _ => Nil
   }
 }
 
@@ -441,7 +441,8 @@ object ReadOnlyGuard {
 
   private val allowedCommandPrefixes = Seq(
     "SetCommand", "ResetCommand", "Show", "Describe", "Explain",
-    "CreateView", "DropView", "SetNamespace", "SetCatalog")
+    "CreateView", "DropView", "SetNamespace", "SetCatalog",
+    "CreateVariable", "DropVariable", "SetVariable")
 
   /** DML writes parse to plain query-shaped plans, NOT Command /
     * ParsedStatement (InsertIntoDir is a bare UnaryNode; UPDATE/DELETE/
@@ -507,20 +508,43 @@ object ReadOnlyGuard {
   * Identifier/expression/type fragments pass through untouched — the
   * dialect shims are statement-level constructs. Also the read-only
   * enforcement point (ReadOnlyGuard): every statement from every entry
-  * path — spark.sql, Gateway, Thrift/JDBC — parses here.
+  * path — spark.sql, Gateway, Thrift/JDBC, EXECUTE IMMEDIATE — parses
+  * here. Every method that takes statement text is overridden (pinned by
+  * GatewaySpec): a default method of ParserInterface would reach the
+  * delegate without the rewrite or the guard.
   */
 class GraftSqlParser(
     delegate: ParserInterface,
     session: Option[org.apache.spark.sql.SparkSession] = None)
   extends ParserInterface {
+  import org.apache.spark.sql.catalyst.parser.{
+    HybridParameterContext, NamedParameterContext, ParameterContext, PositionalParameterContext}
+
   // rawifyLiterals LAST and exactly once (it is not idempotent):
   // restores DuckDB's raw-literal semantics against Spark's lexer
   private def toSpark(sqlText: String): String =
     Dialect.rawifyLiterals(Dialect.rewrite(sqlText))
-  override def parsePlan(sqlText: String): LogicalPlan = {
-    val plan = delegate.parsePlan(toSpark(sqlText))
+  private def guarded(plan: LogicalPlan): LogicalPlan = {
     if (ReadOnlyGuard.active(session)) ReadOnlyGuard.enforce(plan)
     plan
+  }
+  override def parsePlan(sqlText: String): LogicalPlan =
+    guarded(delegate.parsePlan(toSpark(sqlText)))
+  /** `spark.sql(text, args)` and EXECUTE IMMEDIATE … USING: the delegate
+    * binds the values. `spark.sql(text)` arrives here too, with no
+    * values: it parses as parsePlan does, without Spark's marker scan.
+    */
+  override def parsePlanWithParameters(
+      sqlText: String, context: ParameterContext): LogicalPlan = {
+    val bound = context match {
+      case NamedParameterContext(params) => params.nonEmpty
+      case PositionalParameterContext(params) => params.nonEmpty
+      case HybridParameterContext(args, _) => args.nonEmpty
+      case _ => true
+    }
+    guarded(
+      if (bound) delegate.parsePlanWithParameters(toSpark(sqlText), context)
+      else delegate.parsePlan(toSpark(sqlText)))
   }
   override def parseQuery(sqlText: String): LogicalPlan =
     delegate.parseQuery(toSpark(sqlText))

@@ -85,8 +85,10 @@ object RecursiveSql {
     }
 
   /** Run a statement that starts `WITH RECURSIVE` (see the object doc). */
-  def sql(session: SparkSession, text: String, maxIter: Int = 200): DataFrame = {
-    val parsed = GraftPlans.parsePlan(session, text)
+  def sql(session: SparkSession, text: String,
+      params: Seq[(String, org.apache.spark.sql.catalyst.expressions.Literal)],
+      maxIter: Int = 200): DataFrame = {
+    val parsed = GraftPlans.parsePlan(session, text, params)
     val (outer, ctes, (rec, cols, seeds, steps)) = parsed match {
       case UnresolvedWith(outer, ctes, true) => bareUnion(ctes) match {
         case Some(r) => (outer, ctes, r)

@@ -6,7 +6,10 @@ import org.sparkproject.connect.grpc.{MethodDescriptor, Server, ServerServiceDef
 import org.sparkproject.connect.grpc.netty.NettyServerBuilder
 import org.sparkproject.connect.grpc.stub.{ServerCallStreamObserver, ServerCalls, StreamObserver}
 
-import graft.engine.{Gateway, GatewayException}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Literal
+
+import graft.engine.{Dialect, Gateway, GatewayException}
 import FlightProto._
 
 /** Arrow Flight (SQL) endpoint over the [[graft.engine.Gateway]] — the
@@ -42,27 +45,27 @@ final class FlightServer(gateway: Gateway, port: Int) {
 
   /** Server-side prepared statements (Flight SQL
     * ActionCreatePreparedStatement → DoPut param bind → GetFlightInfo →
-    * DoGet): handle → (query, bound positional parameter literals).
+    * DoGet): handle → (query, the values DoPut bound, named `_1`, `_2`, …).
     * The reference's Go client path reaches this via database/sql
     * (client/main.go:21-27), which prepares every parameterized query.
     */
   private final class PreparedEntry(val query: String) {
-    @volatile var params: Seq[String] = Nil
+    @volatile var params: Seq[(String, Literal)] = Nil
   }
   private val preparedStmts =
     new java.util.concurrent.ConcurrentHashMap[String, PreparedEntry]()
 
-  /** Resolve a prepared handle to executable SQL: bound params if the
-    * client DoPut them, else NULLs (the pre-bind GetFlightInfo schema
-    * probe).
+  /** A prepared handle's statement, analyzed, with the values the client
+    * bound over DoPut; before any bind (the schema probe), NULL binds to
+    * every placeholder.
     */
-  private def preparedSql(handle: Array[Byte]): String = {
+  private def preparedDf(handle: Array[Byte]): DataFrame = {
     val key = new String(handle, "UTF-8")
     val entry = Option(preparedStmts.get(key)).getOrElse(
       throw new GatewayException(s"unknown prepared statement handle: $key"))
-    if (entry.params.nonEmpty)
-      Gateway.bindPlaceholders(entry.query, entry.params, Map.empty)
-    else Gateway.bindNulls(entry.query)
+    gateway.sql(entry.query,
+      if (entry.params.nonEmpty) entry.params
+      else Dialect.namedMarkers(entry.query)._2.map(_ -> Literal(null)))
   }
 
   /** Bound port after start (differs from the requested when port=0). */
@@ -96,16 +99,19 @@ final class FlightServer(gateway: Gateway, port: Int) {
             endpoints = Seq(FlightEndpoint(Ticket(desc.cmd))),
             totalRecords = -1L, totalBytes = -1L).toBytes
         case None =>
-          val (query, isSqlInfo) = parseCommand(any, desc.cmd)
-          val schemaBytes =
-            if (isSqlInfo) ipcSchema(gateway.sqlInfo)
-            else ipcSchema(gateway.sql(query)) // analyzed only — never executed
-          val ticket = Ticket(
-            (if (isSqlInfo) SqlInfoTicket else query).getBytes("UTF-8"))
+          // a statement's ticket is its SQL text, as the reference's
+          // (main.go:161); a prepared statement's is its command bytes,
+          // which DoGet resolves to the handle's bound statement
+          val ticket = any match {
+            case Some(a) if a.typeUrl == StatementQueryUrl =>
+              CommandStatementQuery.fromBytes(a.value).sqlText.getBytes("UTF-8")
+            case Some(a) if a.typeUrl == GetSqlInfoUrl => SqlInfoTicket.getBytes("UTF-8")
+            case _ => desc.cmd
+          }
           FlightInfo(
-            schema = schemaBytes,
+            schema = ipcSchema(statementDf(any, desc.cmd)), // analyzed only — never executed
             descriptor = desc,
-            endpoints = Seq(FlightEndpoint(ticket)),
+            endpoints = Seq(FlightEndpoint(Ticket(ticket))),
             // the reference's exact cosmetics for statement infos
             // (main.go:164-165): records 0 (unknown-until-run), bytes -1
             totalRecords = 0L, totalBytes = -1L).toBytes
@@ -117,10 +123,7 @@ final class FlightServer(gateway: Gateway, port: Int) {
     respond(obs) {
       val desc = FlightDescriptor.fromBytes(reqBytes)
       val any = anyOf(desc.cmd)
-      val df = metaDf(any).getOrElse {
-        val (query, isSqlInfo) = parseCommand(any, desc.cmd)
-        if (isSqlInfo) gateway.sqlInfo else gateway.sql(query)
-      }
+      val df = metaDf(any).getOrElse(statementDf(any, desc.cmd))
       SchemaResult(ipcSchema(df)).toBytes
     }
 
@@ -154,14 +157,9 @@ final class FlightServer(gateway: Gateway, port: Int) {
         try {
           if (chunks == null) {
             val ticketBytes = Ticket.fromBytes(reqBytes).ticket
-            stream = metaDf(anyOf(ticketBytes)) match {
-              case Some(df) => org.apache.spark.sql.GraftArrow.stream(df, 10000)
-              case None =>
-                val sqlText = new String(ticketBytes, "UTF-8")
-                if (sqlText == SqlInfoTicket)
-                  org.apache.spark.sql.GraftArrow.stream(gateway.sqlInfo, 10000)
-                else gateway.arrowStream(sqlText)
-            }
+            val any = anyOf(ticketBytes)
+            stream = org.apache.spark.sql.GraftArrow.stream(
+              metaDf(any).getOrElse(statementDf(any, ticketBytes)), 10000)
             chunks = stream.filterNot(isEos)
           }
           while (call.isReady && !call.isCancelled && chunks.hasNext) {
@@ -211,23 +209,23 @@ final class FlightServer(gateway: Gateway, port: Int) {
     try Some(AnyMsg.fromBytes(bytes))
     catch { case _: Exception => None }
 
-  /** Descriptor.cmd → (sql, isSqlInfo): a proper Flight SQL Any-wrapped
-    * command (`any`, decoded once by the caller), or raw SQL bytes.
+  /** The statement a descriptor command or a ticket names, analyzed: a
+    * Flight SQL statement (`any`, decoded once by the caller), the
+    * server-metadata table, a prepared statement with its bound values,
+    * or raw SQL bytes from a plain Flight client.
     */
-  private def parseCommand(any: Option[AnyMsg], cmd: Array[Byte]): (String, Boolean) =
+  private def statementDf(any: Option[AnyMsg], cmd: Array[Byte]): DataFrame =
     any match {
       case Some(a) if a.typeUrl == StatementQueryUrl =>
         // sqlText also honors the Go flightsql driver's pack-the-SQL-
         // into-transaction_id quirk (/root/reference/main.go:138-139)
-        (CommandStatementQuery.fromBytes(a.value).sqlText, false)
-      case Some(a) if a.typeUrl == GetSqlInfoUrl => ("", true)
+        gateway.sql(CommandStatementQuery.fromBytes(a.value).sqlText)
+      case Some(a) if a.typeUrl == GetSqlInfoUrl => gateway.sqlInfo
       case Some(a) if a.typeUrl == PreparedStatementQueryUrl =>
-        // resolved HERE (params are already bound server-side), so the
-        // returned ticket is plain SQL text and DoGet needs no
-        // prepared-statement awareness
-        (preparedSql(CommandPreparedStatementQuery.fromBytes(a.value).handle),
-          false)
-      case _ => (new String(cmd, "UTF-8"), false)
+        preparedDf(CommandPreparedStatementQuery.fromBytes(a.value).handle)
+      case _ =>
+        val text = new String(cmd, "UTF-8")
+        if (text == SqlInfoTicket) gateway.sqlInfo else gateway.sql(text)
     }
 
   // ---- Flight SQL catalog metadata commands ---------------------------
@@ -359,7 +357,7 @@ final class FlightServer(gateway: Gateway, port: Int) {
           // executed); a statement whose schema needs real param values
           // reports no schema, which clients treat as deferred
           val datasetSchema =
-            try ipcSchema(gateway.sql(preparedSql(handle.getBytes("UTF-8"))))
+            try ipcSchema(preparedDf(handle.getBytes("UTF-8")))
             catch { case _: Throwable => Array.emptyByteArray }
           ActionResult(AnyMsg(CreatePreparedStatementResultUrl,
             ActionCreatePreparedStatementResult(
@@ -424,7 +422,7 @@ final class FlightServer(gateway: Gateway, port: Int) {
             throw new GatewayException(
               "DoPut stream carried no prepared-statement descriptor")
           if (messages.nonEmpty)
-            entry.params = decodeParamLiterals(messages.toSeq)
+            entry.params = decodeParams(messages.toSeq)
           obs.onNext(PutResult(Array.emptyByteArray).toBytes)
           obs.onCompleted()
         } catch {
@@ -434,9 +432,10 @@ final class FlightServer(gateway: Gateway, port: Int) {
     }
 
   /** Decode the client's Arrow parameter stream (schema message +
-    * record batches) into SQL literal texts, first row = the binding.
+    * record batches): the first row's values, typed as the client sent
+    * them, named `_1`, `_2`, … for Gateway.sql.
     */
-  private def decodeParamLiterals(messages: Seq[FlightData]): Seq[String] = {
+  private def decodeParams(messages: Seq[FlightData]): Seq[(String, Literal)] = {
     import org.apache.spark.sql.{GraftArrow => GA}
     val encapsulated = messages.map(FlightResult.encapsulate)
       .filterNot(isEos)
@@ -448,42 +447,9 @@ final class FlightServer(gateway: Gateway, port: Int) {
     val rows = GA.rowsFromBatches(encapsulated.tail.iterator, schema, tz)
     if (!rows.hasNext)
       throw new GatewayException("parameter stream contained no rows")
-    val row = rows.next()
-    schema.fields.zipWithIndex.map { case (f, i) =>
-      sqlLiteral(row.get(i, f.dataType), f.dataType)
-    }.toSeq
-  }
-
-  /** A decoded Arrow parameter value as SQL literal text. */
-  private def sqlLiteral(
-      v: Any, dt: org.apache.spark.sql.types.DataType): String = {
-    import org.apache.spark.sql.types._
-    if (v == null) return "NULL"
-    dt match {
-      case StringType =>
-        "'" + v.toString.replace("'", "''") + "'"
-      case BinaryType =>
-        "X'" + v.asInstanceOf[Array[Byte]].map("%02x".format(_)).mkString + "'"
-      case BooleanType => if (v.asInstanceOf[Boolean]) "TRUE" else "FALSE"
-      case DateType =>
-        s"DATE '${java.time.LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong)}'"
-      case TimestampType | TimestampNTZType =>
-        val micros = v.asInstanceOf[Long]
-        val inst = java.time.Instant.ofEpochSecond(
-          Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L) * 1000L)
-        s"TIMESTAMP '${java.time.LocalDateTime.ofInstant(inst, java.time.ZoneOffset.UTC)}'"
-      case FloatType | DoubleType =>
-        // bare NaN/Infinity is not valid SQL text — render the non-finite
-        // values as casts the parser accepts
-        val d = v match { case f: Float => f.toDouble; case d: Double => d }
-        if (d.isNaN) "CAST('NaN' AS DOUBLE)"
-        else if (d.isInfinite)
-          s"CAST('${if (d > 0) "Infinity" else "-Infinity"}' AS DOUBLE)"
-        else v.toString
-      case _: DecimalType | _: NumericType => v.toString
-      case other =>
-        throw new GatewayException(
-          s"unsupported prepared-statement parameter type: ${other.simpleString}")
+    val row = rows.next().copy() // its strings point into the batch
+    schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      s"_${i + 1}" -> Literal(row.get(i, f.dataType), f.dataType)
     }
   }
 

@@ -1,5 +1,7 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.parser.HybridParameterContext
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 
@@ -12,10 +14,25 @@ object GraftPlans {
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
 
   /** The session's parser over `sqlText`, with the session active (as
-    * `spark.sql` parses): the parser reads its conf through SQLConf.get. */
-  def parsePlan(spark: SparkSession, sqlText: String): LogicalPlan =
-    spark.asInstanceOf[ClassicSparkSession].withActive(
-      spark.sessionState.sqlParser.parsePlan(sqlText))
+    * `spark.sql` parses): the parser reads its conf through SQLConf.get.
+    * `params` bind as in [[sql]]. */
+  def parsePlan(spark: SparkSession, sqlText: String,
+      params: Seq[(String, Literal)]): LogicalPlan =
+    spark.asInstanceOf[ClassicSparkSession].withActive {
+      val parser = spark.sessionState.sqlParser
+      if (params.isEmpty) parser.parsePlan(sqlText)
+      else parser.parsePlanWithParameters(sqlText,
+        HybridParameterContext(params.map(_._2), params.map(_._1)))
+    }
+
+  /** Spark's own binding, `spark.sql(text, values, names)` (private in
+    * the public API): `?` markers take the values by position, `:name`
+    * markers by name. No values: `spark.sql(text)`. */
+  def sql(spark: SparkSession, sqlText: String,
+      params: Seq[(String, Literal)]): DataFrame =
+    if (params.isEmpty) spark.sql(sqlText)
+    else spark.asInstanceOf[ClassicSparkSession].sql(sqlText,
+      params.map(_._2).toArray, params.map(_._1).toArray)
 
   def analyzed(df: Dataset[Row]): LogicalPlan =
     df.asInstanceOf[ClassicDataFrame].queryExecution.analyzed

@@ -360,4 +360,53 @@ class FlightSpec extends AnyFunSuite {
       assert(e.getMessage.contains("$0"), e.getMessage)
     } finally channel.shutdownNow()
   }
+
+  /** DoPut `params`' first row as the handle's bound values: one Arrow
+    * schema message, then the record batches. */
+  private def bind(channel: org.sparkproject.connect.grpc.Channel,
+      desc: FlightProto.FlightDescriptor, params: org.apache.spark.sql.DataFrame): Unit = {
+    import FlightProto._
+    import org.sparkproject.connect.grpc.CallOptions
+    import org.sparkproject.connect.grpc.stub.{ClientCalls, StreamObserver}
+    val messages = org.apache.spark.sql.GraftArrow.stream(params, 10000)
+      .filterNot(FlightServer.isEos).map(FlightServer.splitIpc).toSeq
+    val put = scala.concurrent.Promise[Unit]()
+    val upload = ClientCalls.asyncBidiStreamingCall(
+      channel.newCall(FlightServer.Methods.doPut, CallOptions.DEFAULT),
+      new StreamObserver[Array[Byte]] {
+        override def onNext(v: Array[Byte]): Unit = ()
+        override def onError(t: Throwable): Unit = put.tryFailure(t)
+        override def onCompleted(): Unit = put.trySuccess(())
+      })
+    messages.zipWithIndex.foreach { case ((header, body), i) =>
+      upload.onNext(FlightData(header, body, if (i == 0) Some(desc) else None).toBytes)
+    }
+    upload.onCompleted()
+    scala.concurrent.Await.result(put.future, scala.concurrent.duration.Duration(60, "s"))
+  }
+
+  test("Flight SQL prepared statement: a TIMESTAMP binds its instant, whatever the session zone") {
+    import FlightProto._
+    import org.sparkproject.connect.grpc.CallOptions
+    import org.sparkproject.connect.grpc.netty.NettyChannelBuilder
+    import org.sparkproject.connect.grpc.stub.ClientCalls
+    val zone = "spark.sql.session.timeZone"
+    val was = gw.session.conf.get(zone)
+    val channel = NettyChannelBuilder.forAddress("localhost", server.boundPort)
+      .usePlaintext().build()
+    gw.session.conf.set(zone, "America/New_York")
+    try {
+      val ts = "TIMESTAMP '2024-07-01 12:00:00'"
+      val desc = prepare(channel, "SELECT ? AS t")
+      bind(channel, desc, gw.session.sql(s"SELECT $ts AS p1"))
+      val info = FlightInfo.fromBytes(ClientCalls.blockingUnaryCall(channel,
+        FlightServer.Methods.getFlightInfo, CallOptions.DEFAULT, desc.toBytes))
+      val bound = client.doGet(info).rows
+      val direct = client.doGetSql(s"SELECT $ts AS t").rows
+      assert(bound.nonEmpty && bound == direct, (bound, direct))
+    } finally {
+      gw.session.conf.set(zone, was)
+      channel.shutdownNow()
+    }
+  }
 }

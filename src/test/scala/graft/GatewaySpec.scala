@@ -639,7 +639,12 @@ class GatewaySpec extends AnyFunSuite {
     gw.session.sql("RESET spark.sql.ansi.enabled")
     // queries, SET of other keys, views, and metadata stay allowed
     assert(gw.session.sql("SELECT 1 AS a").collect()(0).getInt(0) == 1)
-    gw.session.sql("SET spark.sql.ansi.enabled=false")
+    val ansi = "spark.sql.ansi.enabled"
+    val wasAnsi = gw.session.conf.getOption(ansi)
+    try {
+      gw.session.sql(s"SET $ansi=false")
+      assert(gw.session.conf.get(ansi) == "false")
+    } finally wasAnsi.fold(gw.session.conf.unset(ansi))(gw.session.conf.set(ansi, _))
     gw.session.sql("CREATE OR REPLACE TEMP VIEW ro_ok AS SELECT 2 AS b")
     assert(gw.session.sql("EXPLAIN SELECT 1").collect().nonEmpty)
     assert(gw.session.sql("SHOW TABLES").collect().nonEmpty)
@@ -2717,5 +2722,119 @@ class GatewaySpec extends AnyFunSuite {
       val names = df.collect().map(_.getString(2)).toSeq
       assert(names == names.sorted && names.contains("region"))
     }
+  }
+
+  // ---- values bind through Spark --------------------------------------
+
+  test("variables and PREPARE/EXECUTE answer the same on gw.sql, Thrift and Flight") {
+    val g = Gateway.open(spark, sf)
+    val server = graft.flight.FlightServer.start(g, 0)
+    val client = new graft.flight.FlightClientLite("localhost", server.boundPort)
+    val script = Seq(
+      "SET VARIABLE ep_who = 'ann''s'",
+      "SELECT getvariable('ep_who') AS v",
+      "SET VARIABLE ep_n = 6 * 7",
+      "SELECT getvariable('ep_n') + 0 AS v, getvariable('ep_unset') IS NULL AS u",
+      "PREPARE ep_p AS SELECT r_name FROM region WHERE r_regionkey = $1 OR r_name = $nm " +
+        "ORDER BY r_name",
+      "EXECUTE ep_p(2, nm := 'AFRICA')",
+      "PREPARE ep_q AS SELECT ? * 10 + ? AS v -- why?",
+      "EXECUTE ep_q(4, 2)",
+      "DEALLOCATE ep_p",
+      "DEALLOCATE PREPARE ep_q",
+      "RESET VARIABLE ep_who",
+      "SELECT getvariable('ep_who') IS NULL AS v")
+    def rows(columns: Seq[String], rows: Seq[Seq[Any]]) =
+      (columns, rows.map(_.map(String.valueOf)))
+    val runs = Seq[(String, String => (Seq[String], Seq[Seq[String]]))](
+      "gw.sql" -> { q => val df = g.sql(q); rows(df.columns.toSeq, df.collect().toSeq.map(_.toSeq)) },
+      "Thrift" -> { q => val df = g.session.sql(q); rows(df.columns.toSeq, df.collect().toSeq.map(_.toSeq)) },
+      "Flight" -> { q => val r = client.doGetSql(q); rows(r.columns, r.rows) })
+    try {
+      val answers = runs.map { case (path, run) =>
+        val out = script.map(run)
+        // the statement is gone on every path
+        withClue(path) { intercept[Exception](run("EXECUTE ep_p(1, nm := 'x')")) }
+        out
+      }
+      val queries = script.zip(answers.head).collect { case (q, (_, r)) if r.nonEmpty => r }
+      assert(queries == Seq(Seq(Seq("ann's")), Seq(Seq("42", "true")),
+        Seq(Seq("AFRICA"), Seq("ASIA")), Seq(Seq("42")), Seq(Seq("true"))))
+      answers.tail.zip(runs.tail).foreach { case (a, (path, _)) =>
+        withClue(path) { assert(a == answers.head) }
+      }
+    } finally { client.close(); server.stop() }
+  }
+
+  test("bound values: DuckDB's placeholder numbering, and a statement the gateway splits") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    // DuckDB 1.0: a `?` takes the number after the highest before it
+    // (`$1, ?` is `$1, $2`; `?, $1` is `$1, $1`)
+    val two = Seq("_1" -> Literal("41"), "_2" -> Literal(3))
+    assert(strings(gw.sql("SELECT $1::INT + 1 AS v, ?::VARCHAR AS w", two)) ==
+      Seq(Seq("42", "3")))
+    assert(strings(gw.sql("SELECT ? AS a, $1 AS b", two.take(1))) == Seq(Seq("41", "41")))
+    // UNION BY NAME runs each side on its own: each `?` keeps its value
+    assert(strings(gw.sql("SELECT ? AS a UNION ALL BY NAME SELECT ? AS a ORDER BY a",
+      Seq("_1" -> Literal(7), "_2" -> Literal(5)))) == Seq(Seq("5"), Seq("7")))
+    val e = intercept[GatewayException](gw.sql("SELECT $0 AS a"))
+    assert(e.getMessage.contains("$0"), e.getMessage)
+  }
+
+  test("Spark's parameter API binds on a graft session; a constant SELECT still runs no job") {
+    for (s <- Seq(spark, gw.session)) {
+      assert(s.sql("SELECT v FROM (VALUES (1), (3), (5)) t(v) WHERE v = ?", Array(3))
+        .collect().map(_.getInt(0)).toSeq == Seq(3))
+      assert(s.sql("SELECT :a || '-' || :b AS v", Map("a" -> "x", "b" -> "y"))
+        .collect().head.getString(0) == "x-y")
+      assert(s.sql("EXECUTE IMMEDIATE 'SELECT ? + 1 AS v' USING 41").collect()
+        .head.getInt(0) == 42)
+    }
+    val ((rows, plan), jobs) = jobsOf {
+      val df = gw.sql("SELECT 1 AS a")
+      (df.collect().toSeq.map(_.getInt(0)), df.queryExecution.executedPlan)
+    }
+    assert(rows == Seq(1) && jobs == 0)
+    assert(plan.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec], plan)
+  }
+
+  test("GraftSqlParser overrides every ParserInterface method that takes statement text") {
+    import scala.reflect.runtime.universe._
+    def signature(m: MethodSymbol) =
+      (m.name.toString, m.paramLists.flatten.map(_.typeSignature.erasure.typeSymbol.fullName))
+    val declared = typeOf[graft.engine.GraftSqlParser].decls.collect {
+      case m: MethodSymbol => signature(m)
+    }.toSet
+    val textMethods = typeOf[org.apache.spark.sql.catalyst.parser.ParserInterface].members
+      .collect { case m: MethodSymbol if m.owner.fullName.startsWith("org.apache.spark") &&
+          m.paramLists.flatten.exists(_.typeSignature =:= typeOf[String]) => signature(m) }
+      .toSet
+    assert(textMethods.map(_._1).contains("parsePlanWithParameters"))
+    assert(textMethods -- declared == Set.empty)
+  }
+
+  test("read-only: writes behind EXECUTE IMMEDIATE, bound values and PREPARE are refused") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ro")
+    val out = dir.resolve("out")
+    val write = s"INSERT OVERWRITE DIRECTORY '$out' USING parquet SELECT"
+    try {
+      import org.apache.spark.sql.catalyst.expressions.Literal
+      // (path, plain statement, statement with the value 1 bound)
+      val runs = Seq[(String, String => Any, String => Any)](
+        ("gw.sql", gw.sql(_).collect(), gw.sql(_, Seq("_1" -> Literal(1))).collect()),
+        ("Thrift", gw.session.sql(_).collect(), gw.session.sql(_, Array(1)).collect()))
+      for ((path, run, bound) <- runs) withClue(path) {
+        val refused = Seq[() => Any](
+          () => run(s"EXECUTE IMMEDIATE '${write.replace("'", "''")} 1'"),
+          () => bound(s"$write ?"),
+          () => { run(s"PREPARE ro_w AS $write $$1"); run("EXECUTE ro_w(1)") })
+        refused.foreach { f =>
+          val e = intercept[GatewayException](f())
+          assert(e.getMessage.contains("read-only"), e.getMessage)
+          assert(!java.nio.file.Files.exists(out))
+        }
+        run("DEALLOCATE ro_w")
+      }
+    } finally dir.toFile.delete()
   }
 }
