@@ -73,4 +73,31 @@ object Par {
     val dp = ds.sparkSession.sparkContext.defaultParallelism
     ds.repartition(math.max(2, dp / 4), key)
   }
+
+  /** Partitions the single file scan under `ds` reads, counted from its
+    * file listing with FileSourceScanExec's own split rule (largest
+    * splits first, packed to `maxSplitBytes`). `ds.rdd.getNumPartitions`
+    * gives the same number but builds the scan's reader to get it, and
+    * that broadcasts the Hadoop conf. Any other plan falls back to it.
+    */
+  def scanWidth(ds: Dataset[_]): Int = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, PartitionedFileUtil}
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    ds.queryExecution.sparkPlan.collectLeaves() match {
+      case Seq(scan: FileSourceScanExec) if !scan.bucketedScan =>
+        val rel = scan.relation
+        val dirs = rel.location.listFiles(scan.partitionFilters, scan.dataFilters)
+        val maxSplit = FilePartition.maxSplitBytes(rel.sparkSession, dirs)
+        val splits = dirs.flatMap { d =>
+          d.files.flatMap { f =>
+            val path = f.getPath
+            PartitionedFileUtil.splitFiles(f, path,
+              rel.fileFormat.isSplitable(rel.sparkSession, rel.options, path),
+              maxSplit, d.values)
+          }
+        }.sortBy(-_.length)
+        FilePartition.getFilePartitions(rel.sparkSession, splits, maxSplit).size
+      case _ => ds.rdd.getNumPartitions
+    }
+  }
 }

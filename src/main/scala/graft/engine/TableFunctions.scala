@@ -560,9 +560,9 @@ object TableFunctions {
           col("length").as("size"),
           col("modificationTime").cast("timestamp_ntz").as("last_modified"))
       case _ =>
-        var r = sess.read
+        var r = Tables.parquet(sess)
         if (bool("union_by_name")) r = r.option("mergeSchema", "true")
-        r.parquet(paths: _*)
+        r.load(paths: _*)
     }
     // filename=true: DuckDB appends the source path; strip Spark's file:
     // URI scheme so local paths match DuckDB's spelling

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
   * database opened read-only (/root/reference/main.go:31,61). Each table
   * becomes a temp view in the SparkSession catalog.
   *
-  * Scale note: `spark.read.parquet` partitions by file/row-group, so the
+  * Scale note: a Parquet read partitions by file/row-group, so the
   * same registration works unchanged on a 100 TB multi-file dataset; no
   * data is materialized here (views are lazy logical plans).
   */
@@ -28,7 +28,7 @@ object Tables {
     val path = s"$dir/$name.parquet"
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(path)
+      val raw = parquet(spark).load(path)
       raw.schema("ts").dataType match {
         case LongType =>
           // integer div, NOT `/` (double division loses precision on
@@ -38,8 +38,14 @@ object Tables {
             timestamp_micros(expr("ts div 1000")).cast(TimestampNTZType))
         case _ => raw // future Spark versions may read ns natively
       }
-    } else spark.read.parquet(path)
+    } else parquet(spark).load(path)
   }
+
+  /** Every fixture table and `read_parquet` file scans through
+    * [[graft.sources.GraftParquet]]: Spark's Parquet reader with a
+    * smaller per-scan conf broadcast. */
+  def parquet(spark: SparkSession): DataFrameReader =
+    spark.read.format(classOf[graft.sources.GraftParquet].getName)
 
   /** Weak keys: per-client gateway sessions must be collectable once the
     * client is gone — a strong session→dir map would pin every session

@@ -281,6 +281,29 @@ object AggQueries {
       |FROM lineitem GROUP BY l_returnflag
       |ORDER BY l_returnflag ASC NULLS LAST""".stripMargin
   ) { s =>
+    val out = quantileSketch(s).select(col("l_returnflag"),
+      round(element_at(col("ex"), 1), 6).as("p50"),
+      round(element_at(col("ex"), 2), 6).as("p95"),
+      ((abs(element_at(col("ap"), 1) - element_at(col("ex"), 1)) <=
+        lit(0.01) * element_at(col("ex"), 1)) &&
+        (abs(element_at(col("ap"), 2) - element_at(col("ex"), 2)) <=
+          lit(0.01) * element_at(col("ex"), 2))).as("approx_ok"))
+    // preSort (r18; keys widened r19): the final ORDER BY's range
+    // sampling otherwise re-runs the percentile buffer merge a second
+    // time. With the key = the grouping key alone, Catalyst elided the
+    // planted exchange as redundant against the aggregate's
+    // hash(l_returnflag) partitioning and the double-merge stayed
+    // (r18's documented caveat); p50 joins the key purely to defeat
+    // that elision — row order is pinned by the final sort either way.
+    graft.engine.Par.preSort(out, col("l_returnflag"), col("p50"))
+      .orderBy(col("l_returnflag").asc_nulls_last)
+  }
+
+  /** a9_quantiles_sketch's grouped aggregate: per l_returnflag, the
+    * exact `ex` and sketched `ap` percentile arrays at (0.5, 0.95).
+    */
+  private[graft] def quantileSketch(s: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.DataFrame = {
     // ONE exact-percentile buffer and ONE sketch per group (array-arg
     // forms), not four: the four-buffer formulation ran 3.0 s at sf0.1
     // — slowest in the suite — vs ~1 s for this shape.
@@ -308,28 +331,12 @@ object AggQueries {
     val src = s.table("lineitem")
       .select(col("l_returnflag"), col("l_extendedprice"))
     val w = math.max(2, s.sparkContext.defaultParallelism / 4)
-    val spread = if (src.rdd.getNumPartitions >= w) src
+    val spread = if (graft.engine.Par.scanWidth(src) >= w) src
       else src.repartition(w, col("l_extendedprice"))
-    val agged = spread.groupBy(col("l_returnflag")).agg(
+    spread.groupBy(col("l_returnflag")).agg(
       expr("percentile(l_extendedprice, array(0.5D, 0.95D))").as("ex"),
       expr("percentile_approx(l_extendedprice, array(0.5D, 0.95D), 2000)")
         .as("ap"))
-    val out = agged.select(col("l_returnflag"),
-      round(element_at(col("ex"), 1), 6).as("p50"),
-      round(element_at(col("ex"), 2), 6).as("p95"),
-      ((abs(element_at(col("ap"), 1) - element_at(col("ex"), 1)) <=
-        lit(0.01) * element_at(col("ex"), 1)) &&
-        (abs(element_at(col("ap"), 2) - element_at(col("ex"), 2)) <=
-          lit(0.01) * element_at(col("ex"), 2))).as("approx_ok"))
-    // preSort (r18; keys widened r19): the final ORDER BY's range
-    // sampling otherwise re-runs the percentile buffer merge a second
-    // time. With the key = the grouping key alone, Catalyst elided the
-    // planted exchange as redundant against the aggregate's
-    // hash(l_returnflag) partitioning and the double-merge stayed
-    // (r18's documented caveat); p50 joins the key purely to defeat
-    // that elision — row order is pinned by the final sort either way.
-    graft.engine.Par.preSort(out, col("l_returnflag"), col("p50"))
-      .orderBy(col("l_returnflag").asc_nulls_last)
   }
 
   /** A11: arg_min/arg_max ≡ min_by/max_by (unique ordering col ⇒ deterministic). */
